@@ -20,7 +20,12 @@ over the live file list; partition columns are injected via a broadcast
 join on `_metadata.file_path` (one row per file — never a per-partition
 plan union, never a driver loop over data). Partition pruning happens in
 the LOG (the add-action partitionValues), before Spark ever lists a file
-— the same mechanics Delta uses.
+— the same mechanics Delta uses. A MERGE reads only the files holding
+a matched key and derives their rewrite and, on change-data-feed
+tables, the change images from ONE full outer join with the source,
+landed by ONE Spark write; change files of partitioned tables keep the
+table's hive layout under `_change_data/<col>=<v>/`, their partition
+values in the `cdc` actions (older flat change files still read).
 
 Distinct from `table_log.py`: TableLog is this engine's own bespoke
 transactional layer (richer: CHECK constraints, column mapping, CDC,
@@ -359,10 +364,15 @@ def _current_meta(path: str) -> dict | None:
 def _delta_stats(file_path: str) -> str:
     """Delta-style per-file stats JSON STRING for the add action:
     numRecords from the parquet footer plus the same min/max/nullCount
-    envelope TableLog harvests (footer-only — no data scan)."""
+    envelope TableLog harvests (footer-only — no data scan). Stats cover
+    table columns only: a CDF merge's data files also carry the feed's
+    all-null `_change_type` column (a name the protocol reserves on CDF
+    tables), which is left out."""
     import pyarrow.parquet as pq
 
     st = TableLog._file_stats(file_path)
+    for per_col in st.values():
+        per_col.pop("_change_type", None)
     try:
         st["numRecords"] = pq.ParquetFile(file_path).metadata.num_rows
     except Exception:
@@ -376,98 +386,81 @@ def _cdf_enabled(meta: dict | None) -> bool:
     ) == "true"
 
 
-def _stage_cdc_files(
-    path: str, cdf: DataFrame, now_ms: int, meta: dict | None = None
-) -> list[dict]:
-    """Stage a change-data frame (data columns + _change_type) as
-    parquet under `_change_data/` and return the protocol's `cdc`
-    actions (dataChange=false — CDC files are derived, not table data).
-    On columnMapping tables the change files carry PHYSICAL column
-    names like every other file of the table; `_change_type` is a feed
-    column, not a table column, and stays literal."""
-    mapping = _column_mapping(meta)
+def _write_stage(
+    path: str, df: DataFrame, mapping: dict[str, str], partition_by: list[str]
+) -> str:
+    """Write a LOGICAL DataFrame bound for the table as parquet into a
+    fresh stage dir under `path` (hive dirs per `partition_by`) and
+    return the stage path. Under a logical → physical column `mapping`
+    (columnMapping tables) data files, partition dirs (hence
+    partitionValues) and stats carry PHYSICAL names; names that are not
+    table columns (`_change_type`, `__is_cdc`) stay literal."""
     if mapping:
-        cdf = cdf.select(
-            *[F.col(c).alias(mapping.get(c, c)) for c in cdf.columns]
-        )
-    cdc_dir = os.path.join(path, "_change_data")
-    os.makedirs(cdc_dir, exist_ok=True)
+        df = df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
+        partition_by = [mapping.get(c, c) for c in partition_by]
     stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    cdf.write.mode("overwrite").parquet(stage)
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(stage)
+    return stage
+
+
+def _harvest_stage(
+    path: str,
+    stage: str,
+    now_ms: int,
+    data_change: bool = True,
+    cdc: bool = False,
+) -> list[dict]:
+    """Move every parquet file a Spark write left under `stage` into the
+    table, preserving hive key=value subdirs and decoding them into
+    partitionValues, and return one action per file — the shared tail
+    of every data-writing commit. Data files land under the table root
+    as `add` actions; with `cdc=True` change files land under
+    `_change_data/` as the protocol's `cdc` actions (dataChange=false —
+    change files are derived, not table data; zero-row files skipped).
+    The stage dir is removed whatever happens."""
     import pyarrow.parquet as pq
 
     actions: list[dict] = []
     try:
-        for name in sorted(os.listdir(stage)):
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(stage, name)
-            if pq.ParquetFile(src).metadata.num_rows == 0:
-                continue
-            dest = os.path.join(cdc_dir, f"cdc-{uuid.uuid4().hex}.snappy.parquet")
-            os.rename(src, dest)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": urllib.parse.quote(os.path.relpath(dest, path)),
-                        "partitionValues": {},
-                        "size": os.path.getsize(dest),
-                        "dataChange": False,
-                    }
-                }
-            )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return actions
-
-
-def _harvest_stage_adds(
-    path: str, stage: str, now_ms: int, data_change: bool = True
-) -> list[dict]:
-    """Move every parquet file a Spark write left under `stage` into the
-    table (preserving hive key=value subdirs), decoding the dirs into
-    partitionValues, and return the add actions — the shared tail of
-    every data-writing commit (write/merge/delete-rewrite/optimize).
-    The stage dir is removed whatever happens."""
-    adds: list[dict] = []
-    try:
         for dirpath, _dirs, names in os.walk(stage):
+            reldir = os.path.relpath(dirpath, stage)
+            parts = [] if reldir == "." else reldir.split(os.sep)
+            pvals: dict[str, str | None] = {}
+            for part in parts:
+                if "=" in part:
+                    k, v = part.split("=", 1)
+                    pvals[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+            dest_dir = os.path.join(path, *(["_change_data"] if cdc else []), *parts)
             for name in sorted(names):
                 if not name.endswith(".parquet"):
                     continue
                 src = os.path.join(dirpath, name)
-                reldir = os.path.relpath(dirpath, stage)
-                pvals: dict[str, str | None] = {}
-                parts = [] if reldir == "." else reldir.split(os.sep)
-                for part in parts:
-                    if "=" in part:
-                        k, v = part.split("=", 1)
-                        pvals[k] = (
-                            None
-                            if v == _HIVE_NULL
-                            else urllib.parse.unquote(v)
-                        )
-                new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
-                dest_dir = path if reldir == "." else os.path.join(path, reldir)
+                if cdc and pq.ParquetFile(src).metadata.num_rows == 0:
+                    continue
                 os.makedirs(dest_dir, exist_ok=True)
-                dest = os.path.join(dest_dir, new_name)
-                os.rename(src, dest)
-                rel = os.path.relpath(dest, path)
-                adds.append(
-                    {
-                        "add": {
-                            "path": urllib.parse.quote(rel),
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(dest),
-                            "modificationTime": now_ms,
-                            "dataChange": data_change,
-                            "stats": _delta_stats(dest),
-                        }
-                    }
+                prefix = "cdc" if cdc else "part"
+                dest = os.path.join(
+                    dest_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet"
                 )
+                os.rename(src, dest)
+                entry = {
+                    "path": urllib.parse.quote(os.path.relpath(dest, path)),
+                    "partitionValues": dict(pvals),
+                    "size": os.path.getsize(dest),
+                    "dataChange": data_change and not cdc,
+                }
+                if cdc:
+                    actions.append({"cdc": entry})
+                else:
+                    entry["modificationTime"] = now_ms
+                    entry["stats"] = _delta_stats(dest)
+                    actions.append({"add": entry})
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-    return adds
+    return actions
 
 
 class DeltaConstraintViolation(ValueError):
@@ -627,23 +620,9 @@ def write_delta(
                 new_phys[f.name] = f"col-{uuid.uuid4().hex[:12]}"
         mapping.update(new_phys)
 
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    stage_df = df
-    stage_pby = partition_by
-    if mapping:
-        # protocol: columnMapping tables stage data files, partition
-        # dirs (hence partitionValues) and stats under PHYSICAL names
-        stage_df = df.select(
-            *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-        )
-        stage_pby = [mapping.get(c, c) for c in partition_by]
-    w = stage_df.write.mode("overwrite")
-    if stage_pby:
-        w = w.partitionBy(*stage_pby)
-    w.parquet(stage)
-
+    stage = _write_stage(path, df, mapping, partition_by)
     now_ms = int(time.time() * 1000)
-    adds = _harvest_stage_adds(path, stage, now_ms)
+    adds = _harvest_stage(path, stage, now_ms)
 
     actions: list[dict] = [
         {
@@ -1316,22 +1295,6 @@ def _scan_adds_logical(
     return df
 
 
-def _stage_physical(
-    df: DataFrame, meta: dict | None, pcols: list[str]
-) -> tuple[DataFrame, list[str]]:
-    """(stage_df, stage_partition_by) for a logical DataFrame about to
-    be written into the table: columnMapping tables stage data files,
-    partition dirs (hence partitionValues) and stats under PHYSICAL
-    names — no-op for unmapped tables."""
-    mapping = _column_mapping(meta)
-    if not mapping:
-        return df, pcols
-    return (
-        df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns]),
-        [mapping.get(c, c) for c in pcols],
-    )
-
-
 def read_delta(
     spark: SparkSession,
     path: str,
@@ -1421,12 +1384,25 @@ def merge_delta(
     replacements plus the inserts; a racing writer that superseded any
     affected file trips the ConcurrentDeltaWriteError conflict check.
 
+    The rewrite and the change feed come from ONE full outer join of the
+    affected files with the source, written by ONE Spark write. Each
+    joined row becomes its merged data row (`coalesce(s.c, t.c)`); on
+    CDF tables it also becomes its change images — pre+post image for a
+    matched key, an insert for a source-only key — exploded from an
+    array of structs. A leading `__is_cdc` partition column splits that
+    write: files under `__is_cdc=false` become add actions, files under
+    `__is_cdc=true` move to `_change_data/` as cdc actions. CHECK
+    constraints are enforced on the data rows only.
+
     Partitioned tables merge the same way: the rewrite is still scoped
     to the files that CONTAIN matched keys (whatever partitions they
     sit in), partition columns are reattached from the log's
     partitionValues for the join, and replacements land back in hive
     layout with their partitionValues recorded — a matched row may even
-    move partitions when the source changes its partition column. The
+    move partitions when the source changes its partition column.
+    Change files take the same layout, `_change_data/<col>=<v>/`, with
+    the partition columns in the cdc actions' partitionValues (the
+    protocol's recommended layout for partitioned change data). The
     merge key must be a data column (merging ON a partition column
     would make the semi-join scan metadata-blind; route that shape
     through read-side partition pruning instead)."""
@@ -1440,10 +1416,6 @@ def merge_delta(
         )
     adds_live = delta_live_files(path, v)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    abs_of = {
-        a["path"]: os.path.join(path, urllib.parse.unquote(a["path"]))
-        for a in adds_live
-    }
     base = _scan_adds_logical(
         spark, adds_live, meta, path, file_col="__file"
     )
@@ -1455,10 +1427,15 @@ def merge_delta(
         .distinct()
         .collect()
     }  # file-count-sized, never row-scale
-    touched_rel = [p for p, ap in abs_of.items() if os.path.abspath(ap) in touched]
+    touched_adds = [
+        a
+        for a in adds_live
+        if os.path.abspath(os.path.join(path, urllib.parse.unquote(a["path"])))
+        in touched
+    ]
     cols = [f.name for f in schema.fields]
-    if touched_rel:
-        touched_adds = [a for a in adds_live if a["path"] in set(touched_rel)]
+    types = {f.name: f.dataType for f in schema.fields}
+    if touched_adds:
         affected = _attach_partition_cols(
             spark,
             _scan_adds_logical(spark, touched_adds, meta, path),
@@ -1468,50 +1445,33 @@ def merge_delta(
         ).select(*cols)
     else:
         affected = spark.createDataFrame([], schema)
-    merged = (
-        affected.alias("t")
-        .join(source.alias("s"), on=key, how="full")
-        .select(
-            *[
-                F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")).alias(c)
-                if c != key
-                else F.col(key)
-                for c in cols
-            ]
-        )
+    joined = (
+        affected.withColumn("__t", F.lit(True))
+        .alias("t")
+        .join(source.withColumn("__s", F.lit(True)).alias("s"), on=key, how="full")
     )
-    now_ms = int(time.time() * 1000)
-    cdc_actions: list[dict] = []
-    if _cdf_enabled(meta):
-        # change data feed for MERGE: matched keys emit pre+post images,
-        # unmatched source keys emit inserts — computed from the same
-        # affected/source join the rewrite already pays for
-        t = affected.withColumn("__t", F.lit(1)).alias("t")
-        s = source.withColumn("__s", F.lit(1)).alias("s")
-        j = t.join(s, on=key, how="full")
-        both = j.where(F.col("__t").isNotNull() & F.col("__s").isNotNull())
-        pre = both.select(
-            F.col(key), *[F.col(f"t.{c}") for c in cols if c != key]
-        ).withColumn("_change_type", F.lit("update_preimage"))
-        post = both.select(
-            F.col(key), *[F.col(f"s.{c}") for c in cols if c != key]
-        ).withColumn("_change_type", F.lit("update_postimage"))
-        ins = (
-            j.where(F.col("__t").isNull())
-            .select(F.col(key), *[F.col(f"s.{c}") for c in cols if c != key])
-            .withColumn("_change_type", F.lit("insert"))
-        )
-        cdf = pre.unionByName(post).unionByName(ins).select(
-            *cols, "_change_type"
-        )
-        cdc_actions = _stage_cdc_files(path, cdf, now_ms, meta)
+
+    def q(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    def row(side: str | None) -> list[str]:
+        # SQL text of the merged data row (side None) or of one side's
+        # image, typed as the table declares: one parse on the JVM
+        # instead of a py4j round trip per column expression
+        exprs = []
+        for c in cols:
+            if c == key:
+                value = q(c)
+            elif side:
+                value = f"{side}.{q(c)}"
+            else:
+                value = f"coalesce(s.{q(c)}, t.{q(c)})"
+            exprs.append(f"CAST({value} AS {types[c].simpleString()}) AS {q(c)}")
+        return exprs
+
+    merged = joined.selectExpr(*row(None))
     _check_delta_constraints(merged, meta)
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    stage_df, stage_pby = _stage_physical(merged, meta, pcols)
-    w = stage_df.write.mode("overwrite")
-    if stage_pby:
-        w = w.partitionBy(*stage_pby)
-    w.parquet(stage)
+    now_ms = int(time.time() * 1000)
     actions: list[dict] = [
         {
             "commitInfo": {
@@ -1521,18 +1481,49 @@ def merge_delta(
             }
         }
     ]
-    actions.extend(cdc_actions)
-    for p in touched_rel:
-        actions.append(
-            {
-                "remove": {
-                    "path": p,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
+    cdc_stage = None
+    if _cdf_enabled(meta):
+
+        def out(side: str | None, change_type: str | None) -> str:
+            if change_type is None:
+                tail = "CAST(NULL AS STRING) AS _change_type, false AS __is_cdc"
+            else:
+                tail = f"'{change_type}' AS _change_type, true AS __is_cdc"
+            return f"struct({', '.join(row(side))}, {tail})"
+
+        matched = "__t IS NOT NULL AND __s IS NOT NULL"
+        rows = joined.selectExpr(
+            f"inline(filter(array({out(None, None)}, "
+            f"CASE WHEN {matched} THEN {out('t', 'update_preimage')} END, "
+            f"CASE WHEN {matched} THEN {out('s', 'update_postimage')} END, "
+            f"CASE WHEN __t IS NULL THEN {out('s', 'insert')} END"
+            "), r -> r IS NOT NULL))"
         )
-    actions.extend(_harvest_stage_adds(path, stage, now_ms))
+        stage = _write_stage(
+            path, rows, _column_mapping(meta), ["__is_cdc", *pcols]
+        )
+        data_stage = os.path.join(stage, "__is_cdc=false")
+        cdc_stage = os.path.join(stage, "__is_cdc=true")
+    else:
+        stage = data_stage = _write_stage(
+            path, merged, _column_mapping(meta), pcols
+        )
+    try:
+        if cdc_stage:
+            actions.extend(_harvest_stage(path, cdc_stage, now_ms, cdc=True))
+        for a in touched_adds:
+            actions.append(
+                {
+                    "remove": {
+                        "path": a["path"],
+                        "deletionTimestamp": now_ms,
+                        "dataChange": True,
+                    }
+                }
+            )
+        actions.extend(_harvest_stage(path, data_stage, now_ms))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -1618,7 +1609,8 @@ def delete_delta_range(
         ).where(F.col(column).between(F.lit(lo), F.lit(hi))).select(
             *[f.name for f in schema.fields]
         ).withColumn("_change_type", F.lit("delete"))
-        actions.extend(_stage_cdc_files(path, deleted, now_ms, meta))
+        stage = _write_stage(path, deleted, _column_mapping(meta), pcols)
+        actions.extend(_harvest_stage(path, stage, now_ms, cdc=True))
     for a in drop_whole + rewrite:
         actions.append(
             {
@@ -1639,13 +1631,8 @@ def delete_delta_range(
         ).where(~F.col(column).between(F.lit(lo), F.lit(hi))).select(
             *[f.name for f in schema.fields]
         )
-        stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-        stage_df, stage_pby = _stage_physical(survivors, meta, pcols)
-        w = stage_df.write.mode("overwrite")
-        if stage_pby:
-            w = w.partitionBy(*stage_pby)
-        w.parquet(stage)
-        actions.extend(_harvest_stage_adds(path, stage, now_ms))
+        stage = _write_stage(path, survivors, _column_mapping(meta), pcols)
+        actions.extend(_harvest_stage(path, stage, now_ms))
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -2092,7 +2079,10 @@ def delete_delta_dv(spark: SparkSession, path: str, predicate: str) -> int:
         cdf = matched.select(*[f.name for f in schema.fields]).withColumn(
             "_change_type", F.lit("delete")
         )
-        actions.extend(_stage_cdc_files(path, cdf, now_ms, meta))
+        stage = _write_stage(
+            path, cdf, _column_mapping(meta), meta.get("partitionColumns") or []
+        )
+        actions.extend(_harvest_stage(path, stage, now_ms, cdc=True))
     for rel, a in by_rel.items():
         if abs_of[rel] not in touched_abs:
             continue
@@ -2150,12 +2140,7 @@ def purge_delta_dv(spark: SparkSession, path: str) -> int:
     if not pcols:
         df = df.coalesce(max(1, len(dv_adds)))
     now_ms = int(time.time() * 1000)
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    stage_df, stage_pby = _stage_physical(df, meta, pcols)
-    w = stage_df.write.mode("overwrite")
-    if stage_pby:
-        w = w.partitionBy(*stage_pby)
-    w.parquet(stage)
+    stage = _write_stage(path, df, _column_mapping(meta), pcols)
     actions: list[dict] = [
         {
             "commitInfo": {
@@ -2175,7 +2160,7 @@ def purge_delta_dv(spark: SparkSession, path: str) -> int:
                 }
             }
         )
-    actions.extend(_harvest_stage_adds(path, stage, now_ms, data_change=False))
+    actions.extend(_harvest_stage(path, stage, now_ms, data_change=False))
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -2300,12 +2285,7 @@ def optimize_delta(
     else:
         df = df.repartition(*pcols) if pcols else df.coalesce(target_files)
     now_ms = int(time.time() * 1000)
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    stage_df, stage_pby = _stage_physical(df, meta, pcols)
-    w = stage_df.write.mode("overwrite")
-    if stage_pby:
-        w = w.partitionBy(*stage_pby)
-    w.parquet(stage)
+    stage = _write_stage(path, df, _column_mapping(meta), pcols)
     op_params: dict = {"targetFiles": target_files}
     if zorder_by:
         op_params["zOrderBy"] = json.dumps(zorder_by)
@@ -2328,7 +2308,7 @@ def optimize_delta(
                 }
             }
         )
-    actions.extend(_harvest_stage_adds(path, stage, now_ms, data_change=False))
+    actions.extend(_harvest_stage(path, stage, now_ms, data_change=False))
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -2500,6 +2480,11 @@ def read_delta_cdf(
     out_schema = T.StructType(
         cdc_schema.fields + [T.StructField("_commit_version", T.LongType())]
     )
+    pcols = meta.get("partitionColumns") or []
+    phys_pcols = {mapping.get(c, c) for c in pcols}
+    cdc_data_schema = T.StructType(
+        [f for f in cdc_schema.fields if f.name not in phys_pcols]
+    )
     frames: list[DataFrame] = []
     for v in vs:
         if v < from_version or v > to_version:
@@ -2516,14 +2501,33 @@ def read_delta_cdf(
             if "remove" in a and a["remove"].get("dataChange")
         ]
         if cdc:
-            df = spark.read.schema(cdc_schema).parquet(
-                *[
-                    os.path.join(path, urllib.parse.unquote(c["path"]))
+            # change files of partitioned tables sit under
+            # _change_data/<col>=<v>/ with the partition columns in
+            # partitionValues only; older commits wrote one flat layout
+            # (partitionValues {}, partition columns inside the file)
+            parts = []
+            for hive in (False, True):
+                files = [
+                    c
                     for c in cdc
+                    if bool(pcols and c.get("partitionValues")) == hive
                 ]
-            )
-            for phys, logical in cdc_renames:
-                df = df.withColumnRenamed(phys, logical)
+                if not files:
+                    continue
+                df = spark.read.schema(
+                    cdc_data_schema if hive else cdc_schema
+                ).parquet(
+                    *[
+                        os.path.join(path, urllib.parse.unquote(c["path"]))
+                        for c in files
+                    ]
+                )
+                for phys, logical in cdc_renames:
+                    df = df.withColumnRenamed(phys, logical)
+                if hive:
+                    df = _attach_partition_cols(spark, df, files, meta, path)
+                parts.append(df.select(*schema.names, "_change_type"))
+            df = reduce(lambda a, b: a.unionByName(b), parts)
         elif removes:
             raise ValueError(
                 f"version {v} contains data-changing removes but no change "

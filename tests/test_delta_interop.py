@@ -751,6 +751,16 @@ def test_cdf_merge_images_and_volume(spark):
     cdc = [a["cdc"] for a in acts if "cdc" in a]
     assert cdc and all(c["dataChange"] is False for c in cdc)
     assert all(c["path"].startswith("_change_data") for c in cdc)
+    # add-action stats cover table columns only, never the feed's
+    # _change_type column
+    table_cols = {"o_orderkey", "o_orderstatus", "o_totalprice"}
+    merge_adds = [a["add"] for a in acts if "add" in a]
+    assert merge_adds
+    for add in merge_adds:
+        st = json.loads(add["stats"])
+        assert st["numRecords"] > 0
+        for part in ("minValues", "maxValues", "nullCount"):
+            assert set(st.get(part) or {}) <= table_cols, (part, st)
 
 
 def test_cdf_disabled_delete_refuses(spark):
@@ -1308,6 +1318,13 @@ def test_cdf_on_partitioned_merge_and_delete(spark):
     assert images[(1, "update_preimage")] == ("p1", 1.0)
     assert images[(1, "update_postimage")] == ("p0", 999.0)
     assert images[(1000, "insert")] == ("p2", 5.0)
+    # change files keep the table's hive layout: partition columns live in
+    # the cdc actions' partitionValues, files under _change_data/part=<v>/
+    cdc_actions = _commit_cdc_actions(root, v_merge)
+    assert {c["partitionValues"]["part"] for c in cdc_actions} == {"p0", "p1", "p2"}
+    for c in cdc_actions:
+        pv = c["partitionValues"]["part"]
+        assert urllib.parse.unquote(c["path"]).startswith(f"_change_data/part={pv}/")
 
     v_del = delete_delta_range(spark, root, "part", "p1", "p1")
     dels = read_delta_cdf(spark, root, v_del).where(
@@ -1316,8 +1333,108 @@ def test_cdf_on_partitioned_merge_and_delete(spark):
     )
     deleted_keys = {r["k"] for r in dels.collect()}
     assert deleted_keys == {k for k, p, _v in rows if p == "p1" and k != 1}
+    assert {c["partitionValues"]["part"] for c in _commit_cdc_actions(root, v_del)} == {
+        "p1"
+    }
     got = {r["k"] for r in read_delta(spark, root).collect()}
     assert got == {k for k, p, _v in rows if p != "p1"} | {1, 1000}
+
+
+def _commit_cdc_actions(root: str, version: int) -> list[dict]:
+    with open(os.path.join(root, "_delta_log", f"{version:020d}.json")) as fh:
+        acts = [json.loads(line) for line in fh if line.strip()]
+    return [a["cdc"] for a in acts if "cdc" in a]
+
+
+def test_cdf_reads_legacy_flat_change_files_next_to_partitioned_ones(spark):
+    """A partitioned table whose history holds a legacy flat `cdc` commit
+    (partitionValues {}, partition column stored in the change file)
+    followed by a merge that writes hive-layout change files reads back
+    through read_delta_cdf with correct partition values for both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from atlas_migration_repo_spark.sources.delta_interop import (
+        _log_dir,
+        _next_version,
+        _publish_commit,
+        merge_delta,
+        read_delta_cdf,
+    )
+
+    root = _fresh("t_delta_cdf_legacy_flat")
+    schema = "k bigint, part string, val double"
+    write_delta(
+        spark.createDataFrame([(i, f"p{i % 3}", float(i)) for i in range(30)], schema),
+        root,
+        partition_by=["part"],
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    # legacy commit: insert k=500 into p1, its change file written flat
+    data_rel = "part=p1/part-legacy.snappy.parquet"
+    cdc_rel = "_change_data/cdc-legacy.snappy.parquet"
+    os.makedirs(os.path.join(root, "_change_data"), exist_ok=True)
+    pq.write_table(
+        pa.table({"k": pa.array([500], pa.int64()), "val": [5.0]}),
+        os.path.join(root, data_rel),
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "k": pa.array([500], pa.int64()),
+                "part": ["p1"],
+                "val": [5.0],
+                "_change_type": ["insert"],
+            }
+        ),
+        os.path.join(root, cdc_rel),
+    )
+    v_legacy = _publish_commit(
+        _log_dir(root),
+        [
+            {"commitInfo": {"timestamp": 0, "operation": "MERGE"}},
+            {
+                "cdc": {
+                    "path": cdc_rel,
+                    "partitionValues": {},
+                    "size": os.path.getsize(os.path.join(root, cdc_rel)),
+                    "dataChange": False,
+                }
+            },
+            {
+                "add": {
+                    "path": data_rel,
+                    "partitionValues": {"part": "p1"},
+                    "size": os.path.getsize(os.path.join(root, data_rel)),
+                    "modificationTime": 0,
+                    "dataChange": True,
+                }
+            },
+        ],
+        _next_version(_log_dir(root)),
+    )
+    # new merge: move k=500 from p1 to p2, insert k=600 into p0
+    v_merge = merge_delta(
+        spark,
+        root,
+        spark.createDataFrame([(500, "p2", 7.0), (600, "p0", 6.0)], schema),
+        key="k",
+    )
+    assert all(c["partitionValues"] for c in _commit_cdc_actions(root, v_merge))
+    got = sorted(
+        (r["_commit_version"], r["_change_type"], r["k"], r["part"], r["val"])
+        for r in read_delta_cdf(spark, root, v_legacy).collect()
+    )
+    assert got == sorted(
+        [
+            (v_legacy, "insert", 500, "p1", 5.0),
+            (v_merge, "update_preimage", 500, "p1", 5.0),
+            (v_merge, "update_postimage", 500, "p2", 7.0),
+            (v_merge, "insert", 600, "p0", 6.0),
+        ]
+    )
+    latest = read_delta(spark, root).where("k >= 500").collect()
+    assert {r["k"]: r["part"] for r in latest} == {500: "p2", 600: "p0"}
 
 
 def test_convert_combined_rename_and_widen(spark, tmp_path):
