@@ -10,8 +10,10 @@ against DuckDB locally before any query is declared.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,9 +48,10 @@ _EXACT_PAIR_SF10 = (
     "prune-then-verify (zero cartesians; sf1 hash-green in the "
     "full-registry log); the sf10-green scale siblings covering the "
     "semantics are dedup_near (MinHash LSH, 311 s) and dedup_simhash "
-    "(174 s). Round-10 candidate: chunked pair materialization "
-    "(partition the posting lists and verify per chunk) to fit "
-    "fixed-disk boxes"
+    "(174 s). Chunked pair materialization (llm/dedup.py "
+    "_chunked_pair_run: partition the posting lists and verify per "
+    "chunk) exists to fit fixed-disk boxes, but no sf10 run has "
+    "measured its bound yet"
 )
 
 DECLARED_PARITY_SKIPS: dict[str, str] = {
@@ -69,59 +72,13 @@ DECLARED_PARITY_SKIPS: dict[str, str] = {
     + " (composite whose dedup stage IS dedup_clusters)",
 }
 
-# The grading driver hash-verifies a PREFIX of the registry (first ~50
-# entries in iteration order). Module import order alone would make that
-# sample 3-4 modules deep, so after loading, the registry is reordered to
-# put one representative of EVERY operator family first — scans, filters,
-# aggregates, joins, windows, set ops, goldens, pivots, sources, ETL,
-# subqueries, analytics, scalars, UDFs, streaming, text, dedup, pipeline,
-# similarity, multimodal. Pure registration order; no semantics change.
-# Round-8 rotation (protocol: VERDICT r3 "next" #4, re-affirmed every
-# round since): ~20 fixed family representatives stay every round; the
-# other ~30 slots rotate to oracle-gated registry keys the driver has
-# NOT hash-verified in any prior round (r1∪…∪r7 covered 211 keys), so
-# successive driver CORRECTNESS artifacts cumulatively cover the
-# registry. This round fills the window with VERDICT r7 "next" #2's
-# named list (join_asof_forward, feature_target_encode,
-# quality_confusion_matrix, the outer stream-stream joins,
-# udtf_analyze_dynamic, iceberg_row_lineage, hudi_metadata_files,
-# delta_checkpoint_v2, lakehouse_uniform_dv_puffin) plus the queued
-# candidate backlog (hudi bloom/async-compaction, the r7 corpus/feature
-# keys, lakehouse sync pair, graph_shortest_cost, travel keys,
-# sink_uniform_stream, geo_nearest_hub).
-# Round-9 rotation: the queued candidate list from round 8,
-# filled with the TPC-H golden tail, the window/setop/scalar batches,
-# join_asof_nearest, and the text-family heads — all oracle-gated and
-# never driver-sampled (verified against the r1-r8 artifact union).
-# Round-10 rotation (this round, VERDICT r9 "next" #2): 30 fresh slots
-# drawn from the queued candidates — remaining scalar batch (hash/array/
-# map/explode/json), the sql_* surface, ts_* analytics, the dedup tail,
-# events/orders analytics, and the text tail. Two fixed-rep slots
-# (agg_grouping_sets, join_asof — both multiply driver-green, and their
-# families keep another rep in the window) are lent to math_funcs and
-# cast_types so the driver RE-verifies the two r9 hash fails with their
-# dtype fixes in the same round.
-# Round-11 rotation (this round, VERDICT r10 "next" #8): 32 fresh slots —
-# the queued candidate list (str_* scalar tail, variant/xml/bitwise
-# funcs, the udf family tail, win_* tail, embed_* family, stream_*
-# leftovers, sink/source format batch) plus FIVE of this round's
-# decimal→mantissa converted keys that the driver has never sampled
-# (win_exclude_current, win_time_range, share_of_total, agg_weighted_avg,
-# func_sql_udf — one per conversion shape: LOO subtraction, window msum,
-# plain msum, decimal division, SQL-text msum), so CORRECTNESS_r11
-# carries driver evidence for the riskiest r11 rewrite classes. The two
-# slots lent to math_funcs/cast_types in r10 (both now driver-green)
-# return to rotation. Cumulative driver coverage after r10: 301 keys.
-# Round-12 rotation candidates (oracle-gated, never driver-sampled):
-# the agg_* tail (agg_count_distinct_exact, agg_histogram_numeric-style
-# keys), remaining ts_*/feature_* analytics, the iceberg/delta/hudi
-# interop tails, graph_*, sketch_*, multimodal_* oracle-gated keys, and
-# whatever this round's conversions leave unsampled (text_lm_score,
-# text_lm_bigram, text_js_divergence, abc_classification, pct_change_mom,
-# ts_time_weighted_avg, feature_zscore_normalize, orders_seasonality_index,
-# xml_funcs if not drawn).
-_DRIVER_SAMPLE_PREFIX = (
-    # -- fixed family representatives (driver-green in r1-r6) -------------
+# The correctness gate behind `__spark_entry__` hash-verifies a PREFIX of
+# the registry (the first ~50 keys in iteration order). load_all_modules orders the registry by
+# one rule: these fixed representatives of the core operator families
+# first, then oracle-gated keys that no committed CORRECTNESS_r*.json
+# has sampled yet (registration order), then the rest. The window so
+# rotates to unseen keys each time a driver artifact lands.
+_FAMILY_REPRESENTATIVES = (
     "scan_parquet",
     "filter_cmp",
     "agg_pricing_summary",
@@ -140,235 +97,17 @@ _DRIVER_SAMPLE_PREFIX = (
     "stream_tumbling",
     "text_tfidf",
     "dedup_exact",
-    # -- rotation (round 11): oracle-verified keys unseen by the driver
-    # in r1-r10 (cumulative 301 keys covered), per VERDICT r10 "next" #8
-    "str_mask",
-    "str_collation",
-    "str_url_funcs",
-    "str_funcs2",
-    "str_regexp_all",
-    "str_printf",
-    "variant_funcs",
-    "xml_funcs",
-    "bitwise_funcs",
-    "udf_scalar",
-    "udf_arrow_map",
-    "udtf_table_arg",
-    "udaf_grouped_arrow",
-    "win_cume_dist",
-    "win_percent_rank_nth",
-    "win_nth_value",
-    "win_lag_default",
-    "embed_norm",
-    "embed_cosine_hist",
-    "embed_truncation_fidelity",
-    "stream_dedup",
-    "stream_global_agg",
-    "stream_upsert_cdc",
-    "sink_jsonl",
-    "sink_csv_quoted",
-    "source_xml",
-    "source_text_lines",
-    # -- r11 decimal→mantissa converted keys, never driver-sampled: one
-    # per conversion shape so the driver re-proves the rewrites
-    "win_exclude_current",
-    "win_time_range",
-    "share_of_total",
-    "agg_weighted_avg",
-    "func_sql_udf",
-    # -- past the ~50-entry driver window. The r10 window block comes
-    # first (kept listed for replay-tooling order stability), then the
-    # earlier rotation blocks.
-    "math_funcs",
-    "cast_types",
-    "hash_funcs",
-    "array_funcs",
-    "map_funcs",
-    "explode_pos",
-    "json_funcs",
-    "sql_entrypoint",
-    "sql_parameterized",
-    "sql_group_by_all",
-    "sql_pivot_clause",
-    "sql_pipe_syntax",
-    "ts_interp_linear",
-    "ts_gap_detect",
-    "ts_seasonal_decompose",
-    "ts_holt_linear",
-    "ts_bollinger_bands",
-    "ts_downsample_ohlc",
-    "dedup_fingerprint",
-    "dedup_chunks",
-    "dedup_keep_best",
-    "dedup_incremental",
-    "dedup_spans",
-    "events_interarrival_histogram",
-    "events_cumulative_unique_users",
-    "orders_yoy_growth",
-    "orders_cohort_ltv",
-    "orders_gini_coefficient",
-    "text_tokens",
-    "text_fingerprint",
-    "text_normalize",
-    "text_pii_redact",
-    "agg_grouping_sets",
-    "join_asof",
-    "q4_priority_check",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q11_important_stock",
-    "q12_priority_lines",
-    "q13_cust_distribution",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_filter",
-    "q20_excess_shipments",
-    "q21_waiting_supplier",
-    "q22_dormant_customers",
-    "join_asof_nearest",
-    "win_moving_avg",
-    "win_range_frame",
-    "win_ntile",
-    "win_first_last",
-    "set_union_distinct",
-    "set_except",
-    "str_basic",
-    "ts_funcs",
-    "cond_expr",
-    "text_stats",
-    "text_ngram",
-    "text_quality",
-    "iceberg_merge_dv",
-    "iceberg_eq_delete_dv",
-    "set_except_all",
-    "set_intersect_all",
-    "join_asof_forward",
-    "feature_target_encode",
-    "quality_confusion_matrix",
-    "stream_stream_left_join",
-    "stream_stream_full_join",
-    "udtf_analyze_dynamic",
-    "iceberg_row_lineage",
-    "hudi_metadata_files",
-    "delta_checkpoint_v2",
-    "lakehouse_uniform_dv_puffin",
-    "hudi_compaction_async",
-    "hudi_bloom_index",
-    "corpus_shard_export",
-    "corpus_shuffle_epochs",
-    "text_gopher_rules",
-    "tokenizer_oov_rate",
-    "feature_winsorize",
-    "ts_backtest_smape",
-    "corpus_curriculum_order",
-    "sample_negative_pairs",
-    "iceberg_promote_evolution",
-    "delta_stats_skipping",
-    "sink_tablelog_txn",
-    "lakehouse_uniform_sync",
-    "lakehouse_uniform_reverse_sync",
-    "graph_shortest_cost",
-    "geo_nearest_hub",
-    "fuzzy_match_banded",
-    "iceberg_delete_dv",
-    "hudi_column_stats",
-    "delta_rename_travel",
-    "delta_widen_travel",
-    "sink_uniform_stream",
-    "hudi_mor_upsert",
-    "hudi_mor_read_optimized",
-    "hudi_mor_delete",
-    "hudi_compaction",
-    "hudi_restore",
-    "hudi_clean",
-    "hudi_adopt_parquet",
-    "hudi_adopt_append",
-    "hudi_adopt_delta",
-    "hudi_mor_incremental",
-    "hudi_timeline_archive",
-    "hudi_clustering_sorted",
-    "sink_hudi_cdc",
-    "stream_hudi",
-    "lakehouse_uniform_hudi",
-    "lakehouse_uniform_hudi_sync",
-    "hudi_partition_pruning",
-    "hudi_delete_cow",
-    "hudi_insert_overwrite",
-    "hudi_sink_txn",
-    "hudi_event_range",
-    "hudi_timeline",
-    "sink_hudi_stream",
-    "sample_importance_dsir",
-    "graph_bfs_hops",
-    "sketch_quantile_bottomk",
-    "sketch_kmv_intersection",
-    "pipeline_migrate_any",
-    "delta_schema_evolution",
-    "iceberg_schema_evolution",
-    # -- family reps that keep the
-    #    family-span invariant for modules already driver-covered, the
-    #    r6-hashed lakehouse window (keeps ordering stable for replay
-    #    tooling), plus rows-only entries (advisor: rows-only goes AFTER
-    #    oracle-verified entries, never displacing them in the sample) ----
-    "delta_roundtrip",
-    "delta_checkpoint_read",
-    "delta_merge",
-    "delta_merge_partitioned",
-    "delta_delete_range",
-    "delta_cdf",
-    "stream_delta_cdf",
-    "delta_optimize",
-    "delta_restore",
-    "delta_convert_tablelog",
-    "delta_sink_txn",
-    "iceberg_roundtrip",
-    "iceberg_partition_pruning",
-    "iceberg_stats_skipping",
-    "iceberg_hidden_partitioning",
-    "iceberg_bucket_partitioning",
-    "iceberg_incremental_scan",
-    "iceberg_rename_travel",
-    "iceberg_sink_txn",
-    "lakehouse_uniform",
-    "lakehouse_uniform_reverse",
-    "delta_delete_dv",
-    "delta_zorder",
-    "delta_stream",
-    "delta_adopt_tablelog",
-    "hudi_roundtrip",
-    "hudi_upsert_cow",
-    "hudi_time_travel",
-    "hudi_incremental",
-    "hudi_clustering",
-    "stream_watermark",
-    "text_wordcount",
-    "dedup_clusters",
-    "source_avro",
-    "merge_versioned",
-    "table_log_changes",
-    "stream_kafka_shaped",
-    "pipeline_lakehouse_sync",
-    "geo_haversine_pairs",
-    "source_python_ds",
-    "ts_ewma",
-    "orders_rfm",
-    "q14_promo_revenue",
-    "graph_triangles",
-    "sketch_countmin_estimate",
-    "stream_stateful",
-    "stream_stateful_ttl",
-    "sink_foreachbatch",
-    "pack_sequences",
-    "multimodal_resize_ppm",
-    "tokenizer_bpe_encode",
-    "quality_logreg_score",
-    "sim_knn_ann",
-    "sim_semdedup",
-    "sim_ann_index_sync",
-    "sim_ann_index_topk",
-    "dedup_containment",
 )
+
+
+def _gate_sampled_keys() -> set[str]:
+    """Keys any committed gate artifact (CORRECTNESS_r*.json at the
+    checkout root) has hash-verified; empty outside a checkout."""
+    root = Path(__file__).resolve().parent.parent
+    seen: set[str] = set()
+    for p in sorted(root.glob("CORRECTNESS_r*.json")):
+        seen |= set(json.loads(p.read_text()))
+    return seen
 
 
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
@@ -445,11 +184,13 @@ def load_all_modules() -> None:
                 raise
 
     # tolerate absent names (modules land incrementally); a test asserts
-    # the full prefix resolves once all modules are in
-    present = [n for n in _DRIVER_SAMPLE_PREFIX if n in QUERIES]
-    ordered = {n: QUERIES[n] for n in present}
+    # every representative resolves once all modules are in
+    seen = _gate_sampled_keys()
+    ordered = {n: QUERIES[n] for n in _FAMILY_REPRESENTATIVES if n in QUERIES}
     for n, qd in QUERIES.items():
-        if n not in ordered:
-            ordered[n] = qd
+        if qd.oracle and n not in seen:
+            ordered.setdefault(n, qd)
+    for n, qd in QUERIES.items():
+        ordered.setdefault(n, qd)
     QUERIES.clear()
     QUERIES.update(ordered)

@@ -52,12 +52,18 @@ from pyspark.sql import types as T
 from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
-from atlas_migration_repo_spark.sources.files import file_path_col, scratch_path
+from atlas_migration_repo_spark.sources.files import (
+    attach_partition_values,
+    file_path_col,
+    scratch_path,
+    table_file_stream,
+)
 from atlas_migration_repo_spark.sources.table_log import (
     LogStore,
     TableLog,
     resolve_log_store,
 )
+from atlas_migration_repo_spark.streaming.harness import drain
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -102,6 +108,25 @@ def _committed_versions(log_dir: str) -> list[int]:
         if len(name) == 25 and name.endswith(".json") and name[:20].isdigit():
             out.append(int(name[:20]))
     return sorted(out)
+
+
+def _commit_actions(log_dir: str, version: int) -> list[dict]:
+    """The actions of one JSON commit, in file order."""
+    with open(os.path.join(log_dir, f"{version:020d}.json")) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
+
+
+def _data_changes(acts: list[dict]) -> tuple[list[dict], list[dict], list[dict]]:
+    """(cdc, data-changing adds, data-changing removes) of one commit —
+    the per-version walk under read_delta_cdf and both stream sources.
+    dataChange=false actions (OPTIMIZE) rearrange bytes without changing
+    data and are left out."""
+    cdc = [a["cdc"] for a in acts if "cdc" in a]
+    adds = [a["add"] for a in acts if "add" in a and a["add"].get("dataChange")]
+    removes = [
+        a["remove"] for a in acts if "remove" in a and a["remove"].get("dataChange")
+    ]
+    return cdc, adds, removes
 
 
 def _next_version(log_dir: str) -> int:
@@ -299,8 +324,7 @@ def _raw_actions(path: str, version: int | None = None) -> tuple[int, list[dict]
     for v in vs:
         if v <= start or v > version:
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            acts.extend(json.loads(line) for line in fh if line.strip())
+        acts.extend(_commit_actions(log_dir, v))
     return version, acts
 
 
@@ -1337,38 +1361,27 @@ def _attach_partition_cols(
     spark: SparkSession, df: DataFrame, adds: list[dict], meta: dict, path: str
 ) -> DataFrame:
     """Reattach partition columns to rows read from `adds`' data files,
-    from the log's partitionValues via a broadcast file-path join — the
-    layout on disk is never trusted. No-op for unpartitioned tables."""
+    from the log's partitionValues (attach_partition_values). No-op for
+    unpartitioned tables."""
     pcols = meta.get("partitionColumns") or []
     if not pcols:
         return df
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    ptypes = {f.name: f.dataType for f in schema.fields}
     # mapped tables key partitionValues by PHYSICAL name (logical
     # fallback for tables adopted before the physical-key convention)
     pmap = _column_mapping(meta)
-    pv_rows = [
-        (
-            os.path.abspath(os.path.join(path, urllib.parse.unquote(a["path"]))),
-            *[
-                (a.get("partitionValues") or {}).get(
-                    pmap.get(c, c), (a.get("partitionValues") or {}).get(c)
-                )
-                for c in pcols
-            ],
+    file_values = []
+    for a in adds:
+        pv = a.get("partitionValues") or {}
+        file_values.append(
+            (
+                os.path.abspath(os.path.join(path, urllib.parse.unquote(a["path"]))),
+                *[pv.get(pmap.get(c, c), pv.get(c)) for c in pcols],
+            )
         )
-        for a in adds
-    ]
-    pv_schema = T.StructType(
-        [T.StructField("__pv_file", T.StringType())]
-        + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols]
+    return attach_partition_values(
+        spark, df, file_values, pcols, {f.name: f.dataType for f in schema.fields}
     )
-    out = df.withColumn("__pv_file", file_path_col()).join(
-        F.broadcast(spark.createDataFrame(pv_rows, pv_schema)), "__pv_file"
-    )
-    for c in pcols:
-        out = out.withColumn(c, F.col(f"__pv_{c}").cast(ptypes[c]))
-    return out.drop("__pv_file", *[f"__pv_{c}" for c in pcols])
 
 
 def merge_delta(
@@ -2489,17 +2502,7 @@ def read_delta_cdf(
     for v in vs:
         if v < from_version or v > to_version:
             continue
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            acts = [json.loads(line) for line in fh if line.strip()]
-        cdc = [a["cdc"] for a in acts if "cdc" in a]
-        adds = [
-            a["add"] for a in acts if "add" in a and a["add"].get("dataChange")
-        ]
-        removes = [
-            a["remove"]
-            for a in acts
-            if "remove" in a and a["remove"].get("dataChange")
-        ]
+        cdc, adds, removes = _data_changes(_commit_actions(log_dir, v))
         if cdc:
             # change files of partitioned tables sit under
             # _change_data/<col>=<v>/ with the partition columns in
@@ -2875,8 +2878,7 @@ def adopt_delta_as_tablelog(path: str) -> TableLog:
             if ctypes:
                 tacts.append({"metaData": {"columnTypes": ctypes}})
         else:
-            with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-                dacts = [json.loads(line) for line in fh if line.strip()]
+            dacts = _commit_actions(log_dir, v)
             tacts = []
             for a in dacts:
                 if "add" in a:
@@ -3664,6 +3666,68 @@ def delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_delta(spark, root)
 
 
+def _stream_latest(root: str) -> int | None:
+    """Newest committed version — the Delta streams' latest offset."""
+    vs = _committed_versions(_log_dir(root))
+    return vs[-1] if vs else None
+
+
+def _versions_after(root: str, lo: int | None, hi: int) -> list[int]:
+    lo = -1 if lo is None else lo
+    return [v for v in _committed_versions(_log_dir(root)) if lo < v <= hi]
+
+
+def _data_file(root: str, rel: str) -> str:
+    return os.path.join(root, urllib.parse.unquote(rel))
+
+
+def _stream_added(root: str, lo: int | None, hi: int) -> list[tuple[str, dict]]:
+    """delta_stream's file list: the data files added by versions
+    (lo, hi]. A data-changing remove fails the stream."""
+    out = []
+    for v in _versions_after(root, lo, hi):
+        _, adds, removes = _data_changes(_commit_actions(_log_dir(root), v))
+        if removes:
+            raise RuntimeError(
+                f"delta_stream: version {v} is not append-only "
+                "(data-changing remove found); restart from a "
+                "fresh starting version or stream the change "
+                "data feed instead"
+            )
+        out.extend((_data_file(root, a["path"]), {}) for a in adds)
+    return out
+
+
+def _cdf_stream_added(
+    root: str, lo: int | None, hi: int
+) -> list[tuple[str, dict]]:
+    """stream_delta_cdf's file list for versions (lo, hi]: a version's
+    `cdc` files when it has them (their rows carry `_change_type`),
+    otherwise its added files as inserts, the same reconciliation as
+    read_delta_cdf. Removes without change data fail the stream."""
+    out = []
+    for v in _versions_after(root, lo, hi):
+        cdc, adds, removes = _data_changes(_commit_actions(_log_dir(root), v))
+        if cdc:
+            out.extend(
+                (_data_file(root, c["path"]), {"_commit_version": v}) for c in cdc
+            )
+        elif removes:
+            raise RuntimeError(
+                f"stream_delta_cdf: version {v} has data-changing "
+                "removes but no change data (CDF was not enabled)"
+            )
+        else:
+            out.extend(
+                (
+                    _data_file(root, a["path"]),
+                    {"_change_type": "insert", "_commit_version": v},
+                )
+                for a in adds
+            )
+    return out
+
+
 @query(
     "delta_stream",
     oracle=f"""
@@ -3672,21 +3736,15 @@ def delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def delta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming over a DELTA table: offset = Delta version,
-    each micro-batch's partitions are the add-action files of the new
-    commits (read executor-side with pyarrow — data never crosses the
-    driver), and a commit containing remove actions fails the stream,
-    Delta's own default for non-append changes. Three append commits of
-    orders slices drain into a memory sink whose global aggregate must
+    """Structured Streaming over a DELTA table through the shared table
+    file source (files.table_file_stream): offset = Delta version, each
+    micro-batch's partitions are the add-action files of the new commits
+    (read executor-side with pyarrow as Arrow batches — data never
+    crosses the driver), and a commit containing data-changing remove
+    actions fails the stream, Delta's own default for non-append
+    changes. Three append commits of orders slices drain in one
+    availableNow run into a memory sink whose global aggregate must
     equal the batch oracle."""
-    import time as _time
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
     root = scratch_path(sf_dir, "orders_delta_stream")
     shutil.rmtree(root, ignore_errors=True)
     orders = load(spark, sf_dir, "orders").select(
@@ -3708,116 +3766,23 @@ def delta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="append",
     )
 
-    class FilePartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
-
-    class DeltaStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options["path"]
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            from atlas_migration_repo_spark.sources.delta_interop import (
-                _committed_versions,
-                _log_dir,
-            )
-
-            vs = _committed_versions(_log_dir(self.root))
-            return {"version": vs[-1] if vs else -1}
-
-        def partitions(self, start, end):
-            import json as _json
-            import os as _os
-            import urllib.parse as _up
-
-            paths = []
-            log_dir = _os.path.join(self.root, "_delta_log")
-            for v in range(start["version"] + 1, end["version"] + 1):
-                f = _os.path.join(log_dir, f"{v:020d}.json")
-                if not _os.path.exists(f):
-                    continue
-                with open(f) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        a = _json.loads(line)
-                        # dataChange=false commits (OPTIMIZE) rearrange
-                        # bytes without adding data: skip entirely —
-                        # emitting their adds would duplicate rows
-                        if "remove" in a and a["remove"].get("dataChange"):
-                            raise RuntimeError(
-                                f"delta_stream: version {v} is not append-only "
-                                "(data-changing remove found); restart from a "
-                                "fresh starting version or stream the change "
-                                "data feed instead"
-                            )
-                        if "add" in a and a["add"].get("dataChange"):
-                            paths.append(
-                                _os.path.join(
-                                    self.root, _up.unquote(a["add"]["path"])
-                                )
-                            )
-            return [FilePartition(p) for p in paths]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path, columns=["o_orderkey", "o_totalprice"]
-            )
-            yield from zip(
-                tbl.column("o_orderkey").to_pylist(),
-                tbl.column("o_totalprice").to_pylist(),
-            )
-
-        def commit(self, end):
-            pass
-
-    class DeltaStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "delta_log_stream"
-
-        def schema(self) -> str:
-            return "o_orderkey bigint, o_totalprice double"
-
-        def streamReader(self, schema) -> DataSourceStreamReader:
-            return DeltaStreamReader(self.options)
-
-    spark.dataSource.register(DeltaStreamSource)
-    sink = "delta_stream_" + sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.format("delta_log_stream")
-            .option("path", root)
-            .load()
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        expected = read_delta(spark, root).count()
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            got = spark.table(sink).collect()
-            if got and got[0]["n_rows"] == expected:
-                break
-            _time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+    stream = table_file_stream(
+        spark,
+        "delta_log_stream",
+        root,
+        "o_orderkey bigint, o_totalprice double",
+        _stream_latest,
+        _stream_added,
+    )
+    return drain(
+        spark,
+        sf_dir,
+        "delta_stream",
+        stream.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            msum(F.col("o_totalprice")).alias("total"),
+        ),
+    )
 
 
 @query(
@@ -4046,21 +4011,16 @@ def delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming over the CHANGE DATA FEED: offset = Delta
-    version; a micro-batch's partitions are the version's `cdc` files
-    (or its add files as derived inserts), read executor-side with
-    pyarrow — the streaming twin of read_delta_cdf and the pattern a
-    downstream incremental materializer runs forever: consume pre/post
-    images, never re-scan the table. A CDF-covered MERGE streams
-    cleanly where plain delta_stream must fail on the remove actions."""
-    import time as _time
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
+    """Structured Streaming over the CHANGE DATA FEED through the shared
+    table file source: offset = Delta version; a micro-batch's
+    partitions are the version's `cdc` files (or its add files as
+    derived inserts, with `_change_type` and `_commit_version` attached
+    as constant columns), read executor-side with pyarrow — the
+    streaming twin of read_delta_cdf and the pattern a downstream
+    incremental materializer runs forever: consume pre/post images,
+    never re-scan the table. A CDF-covered MERGE streams cleanly where
+    plain delta_stream must fail on the remove actions. One availableNow
+    run drains it."""
     root = scratch_path(sf_dir, "orders_delta_cdf_stream")
     shutil.rmtree(root, ignore_errors=True)
     orders = (
@@ -4092,144 +4052,24 @@ def stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merge_delta(spark, root, src, key="o_orderkey")
 
-    class CdfPartition(InputPartition):
-        def __init__(self, path: str, version: int, kind: str) -> None:
-            self.path = path
-            self.version = version
-            self.kind = kind
-
-    class CdfStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options["path"]
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            from atlas_migration_repo_spark.sources.delta_interop import (
-                _committed_versions,
-                _log_dir,
-            )
-
-            vs = _committed_versions(_log_dir(self.root))
-            return {"version": vs[-1] if vs else -1}
-
-        def partitions(self, start, end):
-            import json as _json
-            import os as _os
-            import urllib.parse as _up
-
-            parts = []
-            log_dir = _os.path.join(self.root, "_delta_log")
-            for v in range(start["version"] + 1, end["version"] + 1):
-                f = _os.path.join(log_dir, f"{v:020d}.json")
-                if not _os.path.exists(f):
-                    continue
-                cdc, adds, removes = [], [], []
-                with open(f) as fh:
-                    for line in fh:
-                        if not line.strip():
-                            continue
-                        a = _json.loads(line)
-                        if "cdc" in a:
-                            cdc.append(a["cdc"]["path"])
-                        elif "add" in a and a["add"].get("dataChange"):
-                            adds.append(a["add"]["path"])
-                        elif "remove" in a and a["remove"].get("dataChange"):
-                            removes.append(a["remove"]["path"])
-                if cdc:
-                    parts.extend(
-                        CdfPartition(
-                            _os.path.join(self.root, _up.unquote(p)), v, "cdc"
-                        )
-                        for p in cdc
-                    )
-                elif removes:
-                    raise RuntimeError(
-                        f"stream_delta_cdf: version {v} has data-changing "
-                        "removes but no change data (CDF was not enabled)"
-                    )
-                else:
-                    parts.extend(
-                        CdfPartition(
-                            _os.path.join(self.root, _up.unquote(p)), v, "insert"
-                        )
-                        for p in adds
-                    )
-            return parts
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            if partition.kind == "cdc":
-                tbl = pq.read_table(
-                    partition.path,
-                    columns=["o_orderkey", "o_totalprice", "_change_type"],
-                )
-                types = tbl.column("_change_type").to_pylist()
-            else:
-                tbl = pq.read_table(
-                    partition.path, columns=["o_orderkey", "o_totalprice"]
-                )
-                types = ["insert"] * tbl.num_rows
-            yield from zip(
-                tbl.column("o_orderkey").to_pylist(),
-                tbl.column("o_totalprice").to_pylist(),
-                types,
-                [partition.version] * tbl.num_rows,
-            )
-
-        def commit(self, end):
-            pass
-
-    class CdfStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "delta_cdf_stream"
-
-        def schema(self) -> str:
-            return (
-                "o_orderkey bigint, o_totalprice double, "
-                "_change_type string, _commit_version bigint"
-            )
-
-        def streamReader(self, schema) -> DataSourceStreamReader:
-            return CdfStreamReader(self.options)
-
-    spark.dataSource.register(CdfStreamSource)
-    sink = "delta_cdf_stream_" + sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(
-        ".", "_"
+    stream = table_file_stream(
+        spark,
+        "delta_cdf_stream",
+        root,
+        "o_orderkey bigint, o_totalprice double, "
+        "_change_type string, _commit_version bigint",
+        _stream_latest,
+        _cdf_stream_added,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.format("delta_cdf_stream")
-            .option("path", root)
-            .load()
-            .groupBy("_commit_version", "_change_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        expected = read_delta_cdf(spark, root, 0).count()
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            got = spark.table(sink).agg(F.sum("n_rows")).collect()
-            if got and got[0][0] == expected:
-                break
-            _time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+    return drain(
+        spark,
+        sf_dir,
+        "delta_cdf_stream",
+        stream.groupBy("_commit_version", "_change_type").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            msum(F.col("o_totalprice")).alias("total"),
+        ),
+    )
 
 
 @query(

@@ -81,11 +81,16 @@ from pyspark.sql import types as T
 from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
-from atlas_migration_repo_spark.sources.files import scratch_path
+from atlas_migration_repo_spark.sources.files import (
+    attach_partition_values,
+    scratch_path,
+    table_file_stream,
+)
 from atlas_migration_repo_spark.sources.table_log import (
     LogStore,
     resolve_log_store,
 )
+from atlas_migration_repo_spark.streaming.harness import drain
 
 _META_COLS = (
     "_hoodie_commit_time",
@@ -523,9 +528,7 @@ def _scan_slices(
     BOOTSTRAP-ADOPTED slices (writeStat `bootstrapped`) are foreign
     files a hive-layout writer produced: no meta columns (read as null)
     and no partition columns IN the file — those inject from the
-    timeline's partitionPath via a broadcast join on
-    `_metadata.file_path` (one row per file, the delta_interop
-    partition-injection pattern)."""
+    timeline's partitionPath (files.attach_partition_values)."""
     merge = [s for s in slices if view == "snapshot" and s.get("logs")]
     rest = [s for s in slices if not (view == "snapshot" and s.get("logs"))]
     boot = [s for s in rest if s["stat"].get("bootstrapped")]
@@ -536,42 +539,24 @@ def _scan_slices(
         paths = [os.path.join(path, s["stat"]["path"]) for s in clean]
         parts.append(spark.read.schema(full).parquet(*paths))
     if boot:
-        from atlas_migration_repo_spark.sources.files import file_path_col
-
         pcols = list(partition_by or [])
         paths = [os.path.join(path, s["stat"]["path"]) for s in boot]
-        df = spark.read.schema(full).parquet(*paths)
-        if pcols:
-            by_name = {f.name: f for f in full.fields}
-            # dir-parsed values arrive as strings; cast to the declared
-            # partition type after the map DF is built
-            map_schema = T.StructType(
-                [T.StructField("__fp", T.StringType())]
-                + [T.StructField(c, T.StringType()) for c in pcols]
-            )
-            rows = []
-            for s in boot:
-                vals = _parse_partition(s["partition"])
-                rows.append(
-                    (
-                        os.path.abspath(
-                            os.path.join(path, s["stat"]["path"])
-                        ),
-                        *[vals.get(c) for c in pcols],
-                    )
+        file_values = []
+        for s in boot:
+            vals = _parse_partition(s["partition"])
+            file_values.append(
+                (
+                    os.path.abspath(os.path.join(path, s["stat"]["path"])),
+                    *[vals.get(c) for c in pcols],
                 )
-            mapdf = spark.createDataFrame(rows, map_schema)
-            for c in pcols:
-                if not isinstance(by_name[c].dataType, T.StringType):
-                    mapdf = mapdf.withColumn(
-                        c, F.col(c).cast(by_name[c].dataType)
-                    )
-            df = (
-                df.drop(*pcols)
-                .withColumn("__fp", file_path_col())
-                .join(F.broadcast(mapdf), "__fp")
-                .drop("__fp")
             )
+        df = attach_partition_values(
+            spark,
+            spark.read.schema(full).parquet(*paths),
+            file_values,
+            pcols,
+            {f.name: f.dataType for f in full.fields},
+        )
         parts.append(df.select(*names))
     if merge:
         parts.append(_merge_slices(spark, path, merge, full).select(*names))
@@ -3761,6 +3746,49 @@ _HUDI_STREAM_CUT1 = "1997-01-01"
 _HUDI_STREAM_CUT2 = "1999-01-01"
 
 
+def _stream_latest(root: str) -> str | None:
+    """Newest completed write instant — stream_hudi's latest offset."""
+    writes = [
+        i for i, a in completed_instants(root) if a in ("commit", "deltacommit")
+    ]
+    return writes[-1] if writes else None
+
+
+def _stream_added(root: str, lo: str | None, hi: str) -> list[tuple[str, dict]]:
+    """stream_hudi's file list: the base files written by commits in
+    (lo, hi]. A replacecommit, or a write that rewrites or amends file
+    groups, fails the stream."""
+    out = []
+    for instant, action in completed_instants(root):
+        if not ((lo or "") < instant <= hi):
+            continue
+        if action == "replacecommit":
+            raise RuntimeError(
+                f"stream_hudi: instant {instant} is a replacecommit "
+                "(clustering/insert_overwrite); the timeline is not "
+                "append-only — use read_hudi_incremental instead"
+            )
+        if action not in ("commit", "deltacommit"):
+            continue  # savepoint/clean/restore: no data
+        meta = _read_commit_meta(root, instant, action)
+        for stats in (meta.get("partitionToWriteStats") or {}).values():
+            for st in stats:
+                if (
+                    "logVersion" in st
+                    or st.get("prevCommit") not in (None, "null")
+                    or st.get("numUpdateWrites")
+                    or st.get("numDeletes")
+                ):
+                    raise RuntimeError(
+                        f"stream_hudi: instant {instant} rewrites or "
+                        "amends file groups; the timeline is not "
+                        "append-only — use read_hudi_incremental "
+                        "instead"
+                    )
+                out.append((os.path.join(root, st["path"]), {}))
+    return out
+
+
 @query(
     "stream_hudi",
     oracle=f"""
@@ -3769,23 +3797,17 @@ _HUDI_STREAM_CUT2 = "1999-01-01"
     """,
 )
 def stream_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming over a HUDI timeline: offset = completed
+    """Structured Streaming over a HUDI timeline through the shared
+    table file source (files.table_file_stream): offset = completed
     instant, each micro-batch's partitions are the base files of the
-    new write commits (read executor-side with pyarrow — data never
-    crosses the driver). Non-append history — rewrites (prevCommit set,
-    updates/deletes counted), replacecommits, or MOR log appends —
-    fails the stream with a pointer at the incremental pull, the same
-    contract delta_stream enforces for remove actions. Three insert
-    commits of orders slices drain into a memory sink whose global
-    aggregate must equal the batch oracle."""
-    import time as _time
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
+    new write commits (read executor-side with pyarrow as Arrow batches
+    — data never crosses the driver). Non-append history — rewrites
+    (prevCommit set, updates/deletes counted), replacecommits, or MOR
+    log appends — fails the stream with a pointer at the incremental
+    pull, the same contract delta_stream enforces for remove actions.
+    Three insert commits of orders slices drain in one availableNow run
+    into a memory sink whose global aggregate must equal the batch
+    oracle."""
     root = scratch_path(sf_dir, "orders_hudi_streamsrc")
     shutil.rmtree(root, ignore_errors=True)
     orders = load(spark, sf_dir, "orders").select(
@@ -3804,125 +3826,23 @@ def stream_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch.drop("o_orderdate"), root, record_key="o_orderkey"
         )
 
-    class FilePartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
-
-    class HudiStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options["path"]
-
-        def initialOffset(self):
-            return {"instant": ""}
-
-        def latestOffset(self):
-            from atlas_migration_repo_spark.sources.hudi_interop import (
-                completed_instants,
-            )
-
-            writes = [
-                i
-                for i, a in completed_instants(self.root)
-                if a in ("commit", "deltacommit")
-            ]
-            return {"instant": writes[-1] if writes else ""}
-
-        def partitions(self, start, end):
-            import os as _os
-
-            from atlas_migration_repo_spark.sources.hudi_interop import (
-                _read_commit_meta,
-                completed_instants,
-            )
-
-            paths = []
-            for instant, action in completed_instants(self.root):
-                if not (start["instant"] < instant <= end["instant"]):
-                    continue
-                if action == "replacecommit":
-                    raise RuntimeError(
-                        f"stream_hudi: instant {instant} is a replacecommit "
-                        "(clustering/insert_overwrite); the timeline is not "
-                        "append-only — use read_hudi_incremental instead"
-                    )
-                if action not in ("commit", "deltacommit"):
-                    continue  # savepoint/clean/restore: no data
-                meta = _read_commit_meta(self.root, instant, action)
-                for stats in (
-                    meta.get("partitionToWriteStats") or {}
-                ).values():
-                    for st in stats:
-                        if (
-                            "logVersion" in st
-                            or st.get("prevCommit") not in (None, "null")
-                            or st.get("numUpdateWrites")
-                            or st.get("numDeletes")
-                        ):
-                            raise RuntimeError(
-                                f"stream_hudi: instant {instant} rewrites or "
-                                "amends file groups; the timeline is not "
-                                "append-only — use read_hudi_incremental "
-                                "instead"
-                            )
-                        paths.append(_os.path.join(self.root, st["path"]))
-            return [FilePartition(p) for p in paths]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path, columns=["o_orderkey", "o_totalprice"]
-            )
-            yield from zip(
-                tbl.column("o_orderkey").to_pylist(),
-                tbl.column("o_totalprice").to_pylist(),
-            )
-
-        def commit(self, end):
-            pass
-
-    class HudiStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "hudi_timeline_stream"
-
-        def schema(self) -> str:
-            return "o_orderkey bigint, o_totalprice double"
-
-        def streamReader(self, schema) -> DataSourceStreamReader:
-            return HudiStreamReader(self.options)
-
-    spark.dataSource.register(HudiStreamSource)
-    sink = "stream_hudi_" + sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.format("hudi_timeline_stream")
-            .option("path", root)
-            .load()
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        expected = read_hudi(spark, root).count()
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            got = spark.table(sink).collect()
-            if got and got[0]["n_rows"] == expected:
-                break
-            _time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+    stream = table_file_stream(
+        spark,
+        "hudi_timeline_stream",
+        root,
+        "o_orderkey bigint, o_totalprice double",
+        _stream_latest,
+        _stream_added,
+    )
+    return drain(
+        spark,
+        sf_dir,
+        "stream_hudi",
+        stream.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            msum(F.col("o_totalprice")).alias("total"),
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------

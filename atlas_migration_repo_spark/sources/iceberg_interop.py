@@ -43,11 +43,17 @@ from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.avro import _container_bytes, parse_container
-from atlas_migration_repo_spark.sources.files import file_path_col, scratch_path
+from atlas_migration_repo_spark.sources.files import (
+    attach_partition_values,
+    file_path_col,
+    scratch_path,
+    table_file_stream,
+)
 from atlas_migration_repo_spark.sources.table_log import (
     LogStore,
     resolve_log_store,
 )
+from atlas_migration_repo_spark.streaming.harness import drain
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -1330,36 +1336,26 @@ def iceberg_snapshot_as_of(path: str, timestamp_ms: int) -> int:
 
 def _reattach_partition_cols(spark, df, files, pcols, full):
     """Shared reader tail: reattach identity partition columns from the
-    manifests' typed partition structs via a broadcast file-path join,
-    reusing a pre-captured __ice_uri when the MOR anti-joins already
-    projected the _metadata pseudo-column away."""
-    if not pcols:
-        return df.select(*[f.name for f in full.fields])
-    pv_rows = [
-        (
-            os.path.abspath(f["file_path"]),
-            *[
-                None
-                if (f["partition"] or {}).get(c) is None
-                else str((f["partition"] or {}).get(c))
-                for c in pcols
-            ],
+    manifests' typed partition structs, stringified for
+    attach_partition_values, reusing a pre-captured __ice_uri when the
+    MOR anti-joins already projected the _metadata pseudo-column away."""
+    file_values = []
+    for f in files:
+        part = f["partition"] or {}
+        file_values.append(
+            (
+                os.path.abspath(f["file_path"]),
+                *[None if part.get(c) is None else str(part.get(c)) for c in pcols],
+            )
         )
-        for f in files
-    ]
-    pv_schema = T.StructType(
-        [T.StructField("__file_uri", T.StringType())]
-        + [T.StructField(f"__pv_{c}", T.StringType()) for c in pcols]
+    out = attach_partition_values(
+        spark,
+        df,
+        file_values,
+        pcols,
+        {f.name: f.dataType for f in full.fields},
+        file_col="__ice_uri" if "__ice_uri" in df.columns else None,
     )
-    pv_df = spark.createDataFrame(pv_rows, pv_schema)
-    if "__ice_uri" in df.columns:
-        out = df.withColumnRenamed("__ice_uri", "__file_uri")
-    else:
-        out = df.withColumn("__file_uri", file_path_col())
-    out = out.join(F.broadcast(pv_df), "__file_uri")
-    ptypes = {f.name: f.dataType for f in full.fields}
-    for c in pcols:
-        out = out.withColumn(c, F.col(f"__pv_{c}").cast(ptypes[c]))
     return out.select(*[f.name for f in full.fields])
 
 
@@ -4620,6 +4616,22 @@ def iceberg_meta_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_latest(root: str) -> int | None:
+    """Last sequence number — iceberg_stream's latest offset."""
+    cur = _current_metadata(root)
+    return cur[1]["last-sequence-number"] if cur else None
+
+
+def _stream_added(root: str, lo: int | None, hi: int) -> list[tuple[str, dict]]:
+    """iceberg_stream's file list: the data files appended by snapshots
+    with sequence number in (lo, hi] (_added_data_files_in_seq_range,
+    whose guard fails the stream on a non-append snapshot)."""
+    files = _added_data_files_in_seq_range(
+        _current_metadata(root)[1], lo or 0, hi, label="iceberg_stream"
+    )
+    return [(f["file_path"], {}) for f in files]
+
+
 @query(
     "iceberg_stream",
     oracle=f"""
@@ -4628,21 +4640,14 @@ def iceberg_meta_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def iceberg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming over an ICEBERG table: offset = sequence
+    """Structured Streaming over an ICEBERG table through the shared
+    table file source (files.table_file_stream): offset = sequence
     number; each micro-batch's partitions are the data files ADDED by
     the new snapshots (status=1, matching snapshot id), read
-    executor-side with pyarrow. A non-append snapshot (overwrite /
-    delete) fails the stream — the same contract as delta_stream.
-    Three append snapshots drain into a memory sink whose aggregate
-    must equal the batch oracle."""
-    import time as _time
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
-
+    executor-side with pyarrow as Arrow batches. A non-append snapshot
+    (overwrite / delete) fails the stream — the same contract as
+    delta_stream. Three append snapshots drain in one availableNow run
+    into a memory sink whose aggregate must equal the batch oracle."""
     root = scratch_path(sf_dir, "orders_iceberg_stream")
     shutil.rmtree(root, ignore_errors=True)
     orders = load(spark, sf_dir, "orders").select(
@@ -4669,98 +4674,23 @@ def iceberg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="append",
     )
 
-    class FilePartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
-
-    class IcebergStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options["path"]
-
-        def _meta(self):
-            from atlas_migration_repo_spark.sources.iceberg_interop import (
-                _current_metadata,
-            )
-
-            cur = _current_metadata(self.root)
-            return cur[1] if cur else None
-
-        def initialOffset(self):
-            return {"seq": 0}
-
-        def latestOffset(self):
-            meta = self._meta()
-            return {"seq": meta["last-sequence-number"] if meta else 0}
-
-        def partitions(self, start, end):
-            from atlas_migration_repo_spark.sources.iceberg_interop import (
-                _added_data_files_in_seq_range,
-            )
-
-            meta = self._meta()
-            files = _added_data_files_in_seq_range(
-                meta, start["seq"], end["seq"], label="iceberg_stream"
-            )
-            return [FilePartition(f["file_path"]) for f in files]
-
-        def read(self, partition):
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(
-                partition.path, columns=["o_orderkey", "o_totalprice"]
-            )
-            yield from zip(
-                tbl.column("o_orderkey").to_pylist(),
-                tbl.column("o_totalprice").to_pylist(),
-            )
-
-        def commit(self, end):
-            pass
-
-    class IcebergStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "iceberg_snapshot_stream"
-
-        def schema(self) -> str:
-            return "o_orderkey bigint, o_totalprice double"
-
-        def streamReader(self, schema) -> DataSourceStreamReader:
-            return IcebergStreamReader(self.options)
-
-    spark.dataSource.register(IcebergStreamSource)
-    sink = "iceberg_stream_" + sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(
-        ".", "_"
+    stream = table_file_stream(
+        spark,
+        "iceberg_snapshot_stream",
+        root,
+        "o_orderkey bigint, o_totalprice double",
+        _stream_latest,
+        _stream_added,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.format("iceberg_snapshot_stream")
-            .option("path", root)
-            .load()
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        expected = read_iceberg(spark, root).count()
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            got = spark.table(sink).collect()
-            if got and got[0]["n_rows"] == expected:
-                break
-            _time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+    return drain(
+        spark,
+        sf_dir,
+        "iceberg_stream",
+        stream.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            msum(F.col("o_totalprice")).alias("total"),
+        ),
+    )
 
 
 @query(

@@ -81,7 +81,8 @@ from pyspark.sql import functions as F
 from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
-from atlas_migration_repo_spark.sources.files import scratch_path
+from atlas_migration_repo_spark.sources.files import scratch_path, table_file_stream
+from atlas_migration_repo_spark.streaming.harness import drain
 
 _VERSION_RE = re.compile(r"^(\d{20})\.json$")
 
@@ -687,6 +688,20 @@ class TableLog:
         except _TxnAlreadyApplied:
             return None
 
+    def added_files(self, lo: int, hi: int) -> list[str]:
+        """Data-relative paths of the files ADDED by versions (lo, hi] —
+        the one walk under changes() and the stream_table_log source."""
+        added: list[str] = []
+        for v in self.versions():
+            if v <= lo or v > hi:
+                continue
+            with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
+                for line in fh:
+                    a = json.loads(line)
+                    if "add" in a and a["add"].get("dataChange", True):
+                        added.append(a["add"]["path"])
+        return added
+
     def changes(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
     ) -> DataFrame:
@@ -695,17 +710,8 @@ class TableLog:
         the whole table). The downstream-sync primitive: a consumer keeps
         its last-seen version and incrementally pulls what changed, which
         at 100 TB costs the delta, never the history."""
-        vs = self.versions()
-        hi = vs[-1] if to_version is None else to_version
-        added: list[str] = []
-        for v in vs:
-            if v <= from_version or v > hi:
-                continue
-            with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    a = json.loads(line)
-                    if "add" in a and a["add"].get("dataChange", True):
-                        added.append(a["add"]["path"])
+        hi = self.versions()[-1] if to_version is None else to_version
+        added = self.added_files(from_version, hi)
         if not added:
             raise ValueError(
                 f"no added files in ({from_version}, {hi}] of {self.log_dir}"
@@ -1223,6 +1229,21 @@ def table_log_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stream_latest(root: str) -> int | None:
+    """Newest version — stream_table_log's latest offset."""
+    vs = TableLog(root).versions()
+    return vs[-1] if vs else None
+
+
+def _stream_added(root: str, lo: int | None, hi: int) -> list[tuple[str, dict]]:
+    """stream_table_log's file list: the files added by versions (lo, hi]."""
+    t = TableLog(root)
+    return [
+        (os.path.join(t.data_dir, p), {})
+        for p in t.added_files(-1 if lo is None else lo, hi)
+    ]
+
+
 @query(
     "stream_table_log",
     oracle=f"""
@@ -1231,27 +1252,23 @@ def table_log_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM the commit log: a partition-based Python DataSourceStreamReader
-    whose offset IS the table version — latestOffset() polls the log,
-    partitions() maps each newly-added file to one InputPartition, and
-    read() opens that parquet file WITH PYARROW ON THE EXECUTOR, so data
-    never flows through the driver (the scale-correct half of the Python
-    Data Source API, vs the driver-side Simple reader). Offsets commit per
-    micro-batch → exactly-once file delivery; a consumer that crashes
-    replays only uncommitted versions. This is the streaming consumer of
+    """STREAM the commit log through the shared table file source
+    (files.table_file_stream): the offset IS the table version —
+    latestOffset() polls the log, partitions() maps each file added in
+    the new versions (TableLog.added_files, the walk changes() uses) to
+    one InputPartition, and read() opens that parquet file WITH PYARROW
+    ON THE EXECUTOR, yielding Arrow batches, so data never flows through
+    the driver (the scale-correct half of the Python Data Source API,
+    vs the driver-side Simple reader). Offsets commit per micro-batch →
+    exactly-once file delivery; a consumer that crashes replays only
+    uncommitted versions. This is the streaming consumer of
     TableLog.changes: subscribe to a table, not a directory.
 
-    The fixture table gets three commits (orders sliced by date); the
-    drained stream's global (count, exact decimal sum) must equal the
-    batch aggregate over the union predicate — the oracle."""
+    The fixture table gets three commits (orders sliced by date),
+    drained in one availableNow run; the drained stream's global
+    (count, exact decimal sum) must equal the batch aggregate over the
+    union predicate — the oracle."""
     import shutil
-    import time
-
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
 
     root = scratch_path(sf_dir, "orders_stream_tlog")
     shutil.rmtree(root, ignore_errors=True)
@@ -1268,98 +1285,23 @@ def stream_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("o_orderdate")
     )
 
-    class FilePartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
-
-    class LogStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.root = options["path"]
-
-        def initialOffset(self):
-            return {"version": -1}
-
-        def latestOffset(self):
-            from atlas_migration_repo_spark.sources.table_log import TableLog as TL
-
-            vs = TL(self.root).versions()
-            return {"version": vs[-1] if vs else -1}
-
-        def partitions(self, start, end):
-            import json as _json
-            import os as _os
-
-            paths = []
-            log_dir = _os.path.join(self.root, "_log")
-            for v in range(start["version"] + 1, end["version"] + 1):
-                f = _os.path.join(log_dir, f"{v:020d}.json")
-                if not _os.path.exists(f):
-                    continue
-                with open(f) as fh:
-                    for line in fh:
-                        a = _json.loads(line)
-                        if "add" in a and a["add"].get("dataChange", True):
-                            paths.append(
-                                _os.path.join(self.root, "data", a["add"]["path"])
-                            )
-            return [FilePartition(p) for p in paths]
-
-        def read(self, partition):
-            # executor-side parquet scan of exactly one committed file
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(partition.path, columns=["o_orderkey", "o_totalprice"])
-            for k, p in zip(
-                tbl.column("o_orderkey").to_pylist(),
-                tbl.column("o_totalprice").to_pylist(),
-            ):
-                yield (k, p)
-
-        def commit(self, end):
-            pass
-
-    class TableLogSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "table_log_stream"
-
-        def schema(self) -> str:
-            return "o_orderkey bigint, o_totalprice double"
-
-        def streamReader(self, schema) -> DataSourceStreamReader:
-            return LogStreamReader(self.options)
-
-    spark.dataSource.register(TableLogSource)
-    sink = "tlog_stream_" + sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            spark.readStream.format("table_log_stream")
-            .option("path", root)
-            .load()
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(processingTime="300 milliseconds")
-            .start()
-        )
-        expected = t.read(spark).count()
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            got = spark.table(sink).collect()
-            if got and got[0]["n_rows"] == expected:
-                break
-            time.sleep(0.5)
-        q.stop()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+    stream = table_file_stream(
+        spark,
+        "table_log_stream",
+        root,
+        "o_orderkey bigint, o_totalprice double",
+        _stream_latest,
+        _stream_added,
+    )
+    return drain(
+        spark,
+        sf_dir,
+        "tlog_stream",
+        stream.agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            msum(F.col("o_totalprice")).alias("total"),
+        ),
+    )
 
 
 @query(

@@ -65,16 +65,19 @@ def ntz_ts(c) -> "F.Column":
     )
 
 
-def run_to_table(
+def drain(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    build: Callable[[DataFrame], DataFrame],
+    stream: DataFrame,
     output_mode: str = "complete",
 ) -> DataFrame:
-    """Drain the built stream into a memory sink and return it as a batch
-    DataFrame. Sink names are namespaced per scale factor so the same
-    query can run against several fixtures in one session.
+    """Drain `stream` into a memory sink with trigger(availableNow=True)
+    and return the sink as a batch DataFrame: the query processes every
+    offset its source reports at start, then stops, and a source error
+    surfaces from awaitTermination. Sink names are namespaced per scale
+    factor so the same query can run against several fixtures in one
+    session.
 
     The shuffle-partition count is pinned low for the stream's lifetime:
     stateful operators create one state-store instance per shuffle
@@ -87,8 +90,7 @@ def run_to_table(
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         q = (
-            build(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
+            stream.writeStream.format("memory")
             .queryName(sink)
             .outputMode(output_mode)
             .trigger(availableNow=True)
@@ -98,3 +100,17 @@ def run_to_table(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
+
+
+def run_to_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[DataFrame], DataFrame],
+    output_mode: str = "complete",
+) -> DataFrame:
+    """Build the transformation under test over the events stream and
+    drain it (see `drain`)."""
+    return drain(
+        spark, sf_dir, name, build(read_events_stream(spark, sf_dir)), output_mode
+    )

@@ -2747,3 +2747,88 @@ def test_v2_checkpoint_sidecars_carry_state(spark):
     # a SECOND v2 checkpoint does not re-upgrade the protocol
     v2 = checkpoint_delta_v2(root)
     assert v2 == 3
+
+
+def _live_paths(root: str, version: int) -> set[str]:
+    return {
+        os.path.join(root, urllib.parse.unquote(a["path"]))
+        for a in delta_live_files(root, version)
+    }
+
+
+def test_stream_added_lists_exactly_the_appended_files(spark):
+    """The Delta stream callbacks, called without a stream: on an
+    append-only history, `_stream_added(root, lo, hi)` lists exactly the
+    data files versions (lo, hi] added, and the change-feed callback
+    lists the same files as inserts of their version."""
+    from atlas_migration_repo_spark.sources import delta_interop as D
+
+    root = _fresh("ut_delta_stream_added")
+    df = spark.range(30).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
+    write_delta(df.where("k < 10"), root)
+    write_delta(df.where("k >= 10 AND k < 20"), root, mode="append")
+    write_delta(df.where("k >= 20"), root, mode="append")
+    assert D._stream_latest(root) == 2
+    assert D._stream_added(root, 2, 2) == []
+
+    got = D._stream_added(root, 0, 2)
+    assert sorted(p for p, _ in got) == sorted(_live_paths(root, 2) - _live_paths(root, 0))
+    assert all(c == {} for _, c in got)
+    assert {p for p, _ in D._stream_added(root, None, 0)} == _live_paths(root, 0)
+
+    v2 = _live_paths(root, 2) - _live_paths(root, 1)
+    assert sorted(D._cdf_stream_added(root, 1, 2)) == sorted(
+        (p, {"_change_type": "insert", "_commit_version": 2}) for p in v2
+    )
+
+
+def test_stream_added_refuses_removes(spark):
+    """A data-changing remove fails the plain Delta stream, and a
+    version with removes but no `cdc` actions (CDF off) fails the
+    change-feed stream; the append-only prefix still lists."""
+    from atlas_migration_repo_spark.sources import delta_interop as D
+    from atlas_migration_repo_spark.sources.delta_interop import delete_delta_range
+
+    root = _fresh("ut_delta_stream_guard")
+    write_delta(spark.range(20).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"), root)
+    delete_delta_range(spark, root, "k", 0, 4)
+    assert D._stream_latest(root) == 1
+    assert {p for p, _ in D._stream_added(root, None, 0)} == _live_paths(root, 0)
+    with pytest.raises(RuntimeError, match="version 1 is not append-only"):
+        D._stream_added(root, None, 1)
+    with pytest.raises(RuntimeError, match="version 1 has data-changing removes"):
+        D._cdf_stream_added(root, 0, 1)
+
+
+def test_table_file_source_reads_arrow_batches_of_declared_schema(spark):
+    """The shared table file source's read() yields pyarrow RecordBatches
+    whose column names and types equal the declared schema: file columns
+    are cast to it (an int file column read as bigint) and constant
+    columns are appended in schema order."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from atlas_migration_repo_spark.sources import delta_interop as D
+    from atlas_migration_repo_spark.sources.files import table_file_source
+
+    root = _fresh("ut_table_file_source")
+    write_delta(
+        spark.range(10).selectExpr("CAST(id AS INT) AS k", "CAST(id AS DOUBLE) AS v"),
+        root,
+    )
+    ddl = "_commit_version bigint, k bigint, _change_type string, v double"
+    schema = T.StructType.fromDDL(ddl)
+    src = table_file_source("ut_delta_files", ddl, D._stream_latest, D._cdf_stream_added)
+    reader = src({"path": root}).streamReader(schema)
+    parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    assert parts
+    batches = [b for p in parts for b in reader.read(p)]
+    want = to_arrow_schema(schema)
+    assert batches and all(isinstance(b, pa.RecordBatch) for b in batches)
+    for b in batches:
+        assert b.schema.names == want.names
+        assert b.schema.types == want.types
+    rows = pa.Table.from_batches(batches).to_pylist()
+    assert sorted(r["k"] for r in rows) == list(range(10))
+    assert {(r["_change_type"], r["_commit_version"]) for r in rows} == {("insert", 0)}

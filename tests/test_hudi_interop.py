@@ -1865,3 +1865,38 @@ def test_model_check_archival_restore_savepoint(spark):
         }
         assert tt == want, f"final sweep: {instant} diverged"
     assert all(ran.values()), f"action class never ran: {ran}"
+
+
+def test_stream_added_lists_inserts_and_refuses_rewrites(spark):
+    """stream_hudi's callbacks, called without a stream: on insert-only
+    history `_stream_added(root, lo, hi)` lists exactly the base files
+    the commits in (lo, hi] wrote; an update commit (a rewritten file
+    group) and a replacecommit (clustering) each fail it."""
+    root = _fresh("ut_hudi_stream_added")
+    schema = "k bigint, v double"
+    instants = [
+        write_hudi(
+            spark.createDataFrame([(i, float(i)) for i in range(lo, lo + 50)], schema),
+            root,
+            record_key="k",
+        )
+        for lo in (0, 50, 100)
+    ]
+
+    def live(instant):
+        return {
+            os.path.join(root, s["stat"]["path"])
+            for s in H._replay_hudi(root, instant)[2]
+        }
+
+    assert H._stream_latest(root) == instants[2]
+    got = [p for p, c in H._stream_added(root, instants[0], instants[2])]
+    assert sorted(got) == sorted(live(instants[2]) - live(instants[0]))
+    assert {p for p, _ in H._stream_added(root, None, instants[0])} == live(instants[0])
+
+    upd = upsert_hudi(spark.createDataFrame([(1, -1.0)], schema), root)
+    with pytest.raises(RuntimeError, match=f"instant {upd} rewrites or amends"):
+        H._stream_added(root, instants[2], upd)
+    rc = cluster_hudi(root)
+    with pytest.raises(RuntimeError, match=f"instant {rc} is a replacecommit"):
+        H._stream_added(root, upd, rc)

@@ -838,6 +838,35 @@ def test_incremental_scan_composes_and_rejects_non_appends(spark):
     assert keys(read_iceberg_incremental(spark, root, d, d)) == set()
 
 
+def test_stream_added_lists_exactly_the_appended_files(spark):
+    """iceberg_stream's callbacks, called without a stream: on an
+    append-only history `_stream_added(root, lo, hi)` lists exactly the
+    data files the snapshots with sequence number in (lo, hi] added."""
+    from atlas_migration_repo_spark.sources import iceberg_interop as I
+
+    root = _fresh("ut_ice_stream_added")
+    schema = "k bigint, val double"
+    sids = [
+        write_iceberg(
+            spark.createDataFrame([(i, float(i)) for i in range(lo, lo + 50)], schema),
+            root,
+            mode="append",
+        )
+        for lo in (0, 50, 100)
+    ]
+
+    def live(sid):
+        return {
+            os.path.abspath(d["data_file"]["file_path"])
+            for d in I.iceberg_live_state(root, sid)[1]
+        }
+
+    assert I._stream_latest(root) == 3
+    got = [os.path.abspath(p) for p, c in I._stream_added(root, 1, 3)]
+    assert sorted(got) == sorted(live(sids[2]) - live(sids[0]))
+    assert {os.path.abspath(p) for p, _ in I._stream_added(root, None, 1)} == live(sids[0])
+
+
 def test_remove_orphan_files_keeps_all_history(spark):
     """remove_orphan_files must delete exactly the crashed-writer debris
     (uncommitted parquet in data/, abandoned .stage-* dirs) and nothing

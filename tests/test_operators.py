@@ -280,18 +280,48 @@ def test_airflow_dag_spec_generator():
 
 
 def test_driver_sample_prefix_spans_families():
-    """The first 50 registry entries are what the driver hash-verifies;
-    every prefix name must resolve and the prefix must span all operator
-    families (one stale name would silently shrink driver coverage)."""
-    from atlas_migration_repo_spark.registry import _DRIVER_SAMPLE_PREFIX, QUERIES
+    """The first ~50 registry entries are what the correctness gate
+    hash-verifies. The order follows load_all_modules' rule: the family
+    representatives (every name must resolve — one stale name would
+    silently shrink gate coverage), then every oracle-gated key no
+    committed CORRECTNESS_r*.json has sampled, then the rest. The
+    representatives must span the core operator families."""
+    import json
+    from pathlib import Path
 
-    missing = [n for n in _DRIVER_SAMPLE_PREFIX if n not in QUERIES]
-    assert missing == [], f"prefix names not in registry: {missing}"
-    first = list(QUERIES)[: len(_DRIVER_SAMPLE_PREFIX)]
-    assert first == list(_DRIVER_SAMPLE_PREFIX)
-    fams = {QUERIES[n].fn.__module__.rsplit(".", 1)[-1] for n in first}
-    mods = {qd.fn.__module__.rsplit(".", 1)[-1] for qd in QUERIES.values()}
-    assert fams == mods, f"families missing from driver sample: {mods - fams}"
+    from atlas_migration_repo_spark.registry import _FAMILY_REPRESENTATIVES, QUERIES
+
+    reps = list(_FAMILY_REPRESENTATIVES)
+    missing = [n for n in reps if n not in QUERIES]
+    assert missing == [], f"representatives not in registry: {missing}"
+    keys = list(QUERIES)
+    assert keys[: len(reps)] == reps
+    seen: set[str] = set()
+    for p in sorted(Path(__file__).resolve().parent.parent.glob("CORRECTNESS_r*.json")):
+        seen |= set(json.loads(p.read_text()))
+    rest = keys[len(reps) :]
+    fresh = [k for k in rest if QUERIES[k].oracle and k not in seen]
+    assert rest[: len(fresh)] == fresh, "unsampled oracle-gated keys must follow the representatives"
+    fams = {QUERIES[n].fn.__module__.split(".", 1)[1] for n in reps}
+    core = {
+        "operators.scans",
+        "operators.filters",
+        "operators.aggregates",
+        "operators.joins",
+        "operators.windows",
+        "operators.setops",
+        "operators.goldens",
+        "operators.pivots",
+        "operators.etl",
+        "operators.relational_ext",
+        "sources.files",
+        "functions.scalars",
+        "functions.udfs",
+        "streaming.windows",
+        "llm.text",
+        "llm.dedup",
+    }
+    assert fams == core, f"families missing from the representatives: {core - fams}"
 
 
 def test_shingle_df_cap_excludes_hot_shingle(spark):
@@ -3249,6 +3279,31 @@ def test_widen_validates_actual_type(spark, tmp_path):
     assert dict(t2.read(spark).dtypes)["n"] == "bigint"
 
 
+def test_table_log_stream_added_lists_exactly_the_appended_files(spark, tmp_path):
+    """stream_table_log's callbacks, called without a stream: on an
+    append-only history `_stream_added(root, lo, hi)` lists exactly the
+    files versions (lo, hi] added (TableLog.added_files, the walk
+    changes() uses); a compaction adds no data and lists nothing."""
+    import os
+
+    from atlas_migration_repo_spark.sources import table_log as TL
+
+    root = str(tmp_path / "t")
+    t = TL.TableLog(root)
+    for i in range(3):
+        t.append(spark.createDataFrame([(i, i * 10)], "k bigint, v bigint"))
+
+    def live(v):
+        return {os.path.join(t.data_dir, f["path"]) for f in t.snapshot(v).files}
+
+    assert TL._stream_latest(root) == 2
+    got = [p for p, c in TL._stream_added(root, 0, 2)]
+    assert sorted(got) == sorted(live(2) - live(0))
+    assert {p for p, _ in TL._stream_added(root, None, 0)} == live(0)
+    t.compact(spark, target_files=1)
+    assert TL._stream_added(root, 2, TL._stream_latest(root)) == []
+
+
 def test_compact_is_invisible_to_change_feed(spark, tmp_path):
     """Regression (second review): compact() rearranges bytes without
     adding data — its adds carry dataChange=false and the change feed
@@ -4338,7 +4393,7 @@ def test_driver_window_rotates_to_unseen_keys():
     fresh = [k for k in window if k not in seen]
     assert len(fresh) >= 30, (
         f"driver window holds only {len(fresh)} never-sampled keys; "
-        "rotate _DRIVER_SAMPLE_PREFIX in registry.py"
+        "see the ordering rule in registry.load_all_modules"
     )
 
 
