@@ -112,157 +112,99 @@ def r4(c: Column) -> Column:
     return F.round(c.cast("double"), 4) + F.lit(0.0)
 
 
-# msum fast path: per-row 8dp mantissa is split at this base into two
-# overflow-safe long sums (see msum docstring for the full budget).
+# Money sums: one SQL-text core (msum_sql) and its Column wrapper (msum).
 _MSUM_SPLIT = 3_000_000
-
-
-def _mantissa8(c: Column) -> Column:
-    """round(c·1e8) half-away-from-zero as a long — the unscaled value of
-    CAST(c AS DECIMAL(30,8)) for every value in msum's input contract."""
-    return (c * 1e8 + F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast("bigint")
-
-
-def _mantissa4(c: Column) -> Column:
-    """round(c·1e4) half-away-from-zero as a long — the unscaled 4dp value.
-    For ≤4dp-exact inputs with |c| < 5e14·1e-4 the double product c·1e4
-    carries < 0.5 units of error (|c·1e4|·2⁻⁵² < 0.5 up to |c·1e4| ≈ 2e15),
-    so the long recovers the exact scaled integer. Use instead of
-    _mantissa8 when |c| can exceed ~1e9 (there c·1e8 > 2^58 and the
-    8dp product's error exceeds the rounding margin) and the input is
-    4dp-exact — e.g. a 4dp measure times an integer weight."""
-    return (c * 1e4 + F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast("bigint")
-
-
-def _msum_parts(c: Column, dp: int = 8) -> tuple[Column, Column]:
-    """(hi, lo) long mantissa split of c at the dp-digit grid."""
-    m = _mantissa8(c) if dp == 8 else _mantissa4(c)
-    lo = m % _MSUM_SPLIT
-    # (m - lo) is an exact multiple of the split base ≤ 2^53, so the double
-    # division below is exact; the quotient re-enters long space unrounded.
-    hi = ((m - lo) / _MSUM_SPLIT).cast("bigint")
-    return hi, lo
-
-
-# exact decimal scale factors for reconstruction: multiplying the integer
-# Σm (DECIMAL(p,0)) by 10^-dp as DECIMAL(dp,dp) is exact (p+dp+1 ≤ 38).
 _MSUM_SCALE = {8: "0.00000001", 4: "0.0001"}
+_MSUM_OUT = {
+    "r4": "CAST(CAST({} AS DECIMAL(38,4)) AS DOUBLE)",
+    "double": "CAST({} AS DOUBLE)",
+    "decimal": "CAST({} AS DECIMAL(38,8))",
+}
 
 
-def _msum_total(hi_sum: Column, lo_sum: Column) -> Column:
-    """The exact integer mantissa sum Σm as DECIMAL(28,0), rebuilt from the
-    two overflow-safe long partial sums (hi·SPLIT + lo, all exact)."""
-    return (
-        hi_sum.cast("decimal(19,0)") * F.lit(_MSUM_SPLIT).cast("decimal(7,0)")
-        + lo_sum.cast("decimal(19,0)")
-    )
+def _mantissa_sql(expr: str, dp: int) -> str:
+    # round(expr·10^dp) half-away-from-zero as a long; 0.5D keeps the nudge a DOUBLE
+    return f"CAST(({expr}) * 1e{dp} + IF(({expr}) >= 0, 0.5D, -0.5D) AS BIGINT)"
 
 
-def _msum_reconstruct(hi_sum: Column, lo_sum: Column, dp: int = 8) -> Column:
-    """Σ(c at dp-digit grid) reconstructed exactly in decimal from the two
-    long partial sums: value equals SUM(CAST(c AS DECIMAL(30,8))) for every
-    dp-exact input (the 8dp decimal just carries trailing zeros at dp=4)."""
-    return _msum_total(hi_sum, lo_sum) * F.lit(_MSUM_SCALE[dp]).cast(
-        f"decimal({dp},{dp})"
-    )
-
-
-def msum(c: Column) -> Column:
-    """Exact money-sum, bit-identical to DECIMAL(30,8) accumulation →
-    DECIMAL(38,4) → double, via integer-mantissa long sums (r10 fast path).
-
-    Twin of oracle.sql_msum. Input contract (unchanged from the decimal
-    form): values are ≤6dp-exact decimals (fixture measures are ≤2dp, their
-    products ≤6dp-exact; arbitrary doubles are r4-rounded first — see
-    similarity.sim_maxsim) with |value| < 1e9.
-
-    Why this computes the same result (measured exhaustively on the
-    fixtures, pinned by tests/test_properties.py::test_msum_fast_path_*):
-    - Per row, round(c·1e8) half-away-from-zero on the BINARY double equals
-      the unscaled value of Spark's shortest-repr cast(c as decimal(30,8)):
-      a ≤6dp-exact value sits ≥50 mantissa units from the nearest rounding
-      tie, while the c·1e8 double product carries ≤1e-3 units of error —
-      a 4-5 order-of-magnitude margin (same argument, same 100× headroom,
-      as the decimal form's docstring made for the cast itself).
-    - The mantissa is split m = (m DIV 3e6)·3e6 + (m % 3e6), truncating
-      division, so the two long partial sums reconstruct Σm exactly at any
-      aggregation order — the same order-independence decimal sums gave.
-      Overflow budget: |m| ≤ 1.3e13 → |hi| ≤ 4.4e6, |lo| < 3e6; at 100 TB
-      (~6e11 lineitem rows) both sums stay below 2.7e18 ≪ 2^63.
-    - Reconstruction runs on |groups| rows only, entirely in decimal with
-      no precision-loss adjustment (27+8+1 ≤ 38 digits end to end): Σm as
-      DECIMAL(28,0), ·1e-8 → DECIMAL(37,8) exact, → DECIMAL(38,4) is the
-      identical HALF_UP 4dp rounding, → double correctly rounded once.
-    Why: the decimal form pays a Double.toString + BigDecimal parse per row
-    per measure (measured 1.76 s for Q1's four sums at sf0.1 vs 0.28 s for
-    this form); the long form stays in whole-stage codegen arithmetic.
-    """
-    hi, lo = _msum_parts(c)
-    return (
-        _msum_reconstruct(F.sum(hi), F.sum(lo))
-        .cast("decimal(38,4)")
-        .cast("double")
-    )
-
-
-def msum8(c: Column, dp: int = 8) -> Column:
-    """Exact money-sum cast straight to double, NO 4dp rounding — the twin
-    of ``F.sum(c.cast("decimal(30,8)")).cast("double")`` (r11; same input
-    contract and mantissa argument as msum — see its docstring). The
-    reconstructed DECIMAL value equals the DECIMAL(38,8) sum exactly, and
-    decimal→double casting is value-based, so the single correctly-rounded
-    conversion lands on the identical double regardless of the decimal's
-    declared precision. ``dp=4`` switches to the 4dp mantissa for inputs
-    that are 4dp-exact but too large for the 8dp grid (see _mantissa4)."""
-    hi, lo = _msum_parts(c, dp)
-    return _msum_reconstruct(F.sum(hi), F.sum(lo), dp).cast("double")
-
-
-def msum_dec(c: Column) -> Column:
-    """Exact money-sum typed DECIMAL(38,8) — drop-in for
-    ``F.sum(c.cast("decimal(30,8)"))`` at sites where the sum STAYS decimal
-    downstream (division, subtraction, ordering): the reconstructed value
-    is Σm·1e-8 exactly (the decimal sum's value) and the explicit
-    DECIMAL(38,8) cast (lossless widening from DECIMAL(37,8)) pins the
-    type, so downstream decimal type-derivation — division result scale,
-    ROUND output type — is unchanged from the decimal-accumulation form."""
-    hi, lo = _msum_parts(c)
-    return _msum_reconstruct(F.sum(hi), F.sum(lo)).cast("decimal(38,8)")
-
-
-def sql_msum_spark(expr: str) -> str:
-    """Spark-SQL text twin of msum for queries built as SQL strings
-    (func_sql_udf): the same mantissa-split long sums, reconstructed in
-    decimal — bit-identical to
-    ``CAST(ROUND(SUM(CAST((expr) AS DECIMAL(30,8))), 4) AS DOUBLE)``
-    under msum's input contract (0.5D literals keep the ±0.5 tie nudge a
-    DOUBLE, exactly like the Column form's F.lit(0.5))."""
-    m = f"CAST(({expr}) * 1e8 + IF(({expr}) >= 0, 0.5D, -0.5D) AS BIGINT)"
+def msum_parts_sql(expr: str, dp: int = 8) -> tuple[str, str]:
+    """Per-row ``(hi, lo)`` long texts of expr's dp-digit mantissa m, with
+    m = hi·3e6 + lo. For keys that carry the two partial sums across a
+    shuffle or a join; finish them with ``msum_finish_sql``."""
+    m = _mantissa_sql(expr, dp)
     lo = f"({m} % {_MSUM_SPLIT})"
-    hi = f"CAST(({m} - {lo}) / {_MSUM_SPLIT} AS BIGINT)"
+    # (m - lo) is an exact multiple of the split ≤ 2^53: the division is exact
+    return f"CAST(({m} - {lo}) / {_MSUM_SPLIT} AS BIGINT)", lo
+
+
+def msum_finish_sql(
+    hi_sum: str, lo_sum: str, *, out: str = "r4", dp: int = 8, minus: str | None = None
+) -> str:
+    """The exact value Σm·10^-dp from the summed ``hi``/``lo`` texts, cast
+    to ``out``. ``minus`` is a row expression whose mantissa is taken off
+    Σm first: the leave-one-out numerator Σm − m_row."""
     total = (
-        f"(CAST(SUM({hi}) AS DECIMAL(19,0)) * CAST({_MSUM_SPLIT} AS DECIMAL(7,0))"
-        f" + CAST(SUM({lo}) AS DECIMAL(19,0)))"
+        f"(CAST({hi_sum} AS DECIMAL(19,0)) * CAST({_MSUM_SPLIT} AS DECIMAL(7,0))"
+        f" + CAST({lo_sum} AS DECIMAL(19,0)))"
     )
-    return (
-        f"CAST(CAST({total} * CAST(0.00000001 AS DECIMAL(8,8))"
-        f" AS DECIMAL(38,4)) AS DOUBLE)"
+    if minus is not None:
+        total = f"({total} - {_mantissa_sql(minus, dp)})"
+    return _MSUM_OUT[out].format(
+        f"{total} * CAST({_MSUM_SCALE[dp]} AS DECIMAL({dp},{dp}))"
     )
 
 
-def msum_over(c: Column, w) -> Column:
-    """Windowed msum: bit-identical to
-    ``SUM(CAST(c AS DECIMAL(30,8))) OVER w → DECIMAL(38,4) → DOUBLE``
-    (equivalently ``ROUND(..., 4)::DOUBLE`` — both are HALF_UP on the same
-    exact value). The two long mantissa sums evaluate in the SAME window
-    frame pass; per output row the reconstruction is long→decimal
-    arithmetic, never a double→string→BigDecimal parse."""
-    hi, lo = _msum_parts(c)
-    return (
-        _msum_reconstruct(F.sum(hi).over(w), F.sum(lo).over(w))
-        .cast("decimal(38,4)")
-        .cast("double")
-    )
+def msum_sql(expr: str, *, out: str = "r4", dp: int = 8, over: str | None = None) -> str:
+    """Spark-SQL text of an exact money sum of ``expr`` — the one
+    implementation behind every Spark-side exact sum (``msum`` wraps it
+    as a Column; ``oracle.sql_msum`` is the DuckDB twin).
+
+    ``out`` picks the result, each bit-identical to a decimal form:
+    - ``"r4"``: ``CAST(ROUND(SUM(CAST(expr AS DECIMAL(30,8))), 4) AS DOUBLE)``;
+    - ``"double"``: ``CAST(SUM(CAST(expr AS DECIMAL(30,8))) AS DOUBLE)``;
+    - ``"decimal"``: ``SUM(CAST(expr AS DECIMAL(30,8)))``, value and
+      DECIMAL(38,8) type, for sums that stay decimal downstream.
+    ``dp`` is the mantissa grid (8, or 4 for large 4dp-exact inputs);
+    ``over`` is a window spec (the text inside ``OVER (...)``). The
+    generator adds no single quote to ``expr`` and ``over``, so the text
+    can sit inside a quoted SQL literal (EXECUTE IMMEDIATE).
+
+    Input contract: values are ≤6dp-exact at ``dp=8`` and ≤4dp-exact at
+    ``dp=4`` (fixture measures are ≤2dp and their products ≤6dp-exact;
+    arbitrary doubles are r4-rounded first), with |expr·10^dp| < 2e15 —
+    |value| < 2e7 at dp=8, |value| < 2e11 at dp=4.
+
+    Why it is exact:
+    - Per row, m = round(expr·10^dp) half-away-from-zero on the binary
+      double equals the unscaled value of CAST(expr AS DECIMAL(30,8)) at
+      that grid. The true scaled value is an integer, half a unit from
+      the nearest tie; the double input and the product each carry at
+      most |expr·10^dp|·2^-53 units of error, under 0.45 units in total
+      below 2e15. Past the budget this fails: near |value| = 1e9 at dp=8
+      the product's ulp is 16 units.
+    - m is split by truncating division into hi = m DIV 3e6 and
+      lo = m % 3e6, so SUM(hi) and SUM(lo) are two long sums that rebuild
+      Σm exactly in any aggregation order — the order independence the
+      decimal sum gave.
+    - Overflow budget: |m| < 2e15 gives |hi| < 6.7e8 and |lo| < 3e6, so
+      neither long sum can overflow below 1.3e10 rows per group. At money
+      magnitudes (|value| ≤ 1.3e5, |hi| ≤ 4.4e6) that is 2e12 rows, past
+      100 TB of lineitem (~6e11 rows).
+    - The finish runs once per group (or window row) in decimal with no
+      precision loss: Σm as DECIMAL(28,0), times 10^-dp as DECIMAL(dp,dp)
+      is exact (≤ 38 digits), then one HALF_UP cast to DECIMAL(38,4) for
+      ``r4`` and one correctly rounded cast to double.
+    The decimal form pays a Double.toString + BigDecimal parse per row; the
+    long sums stay in whole-stage codegen arithmetic.
+    """
+    window = f" OVER ({over})" if over is not None else ""
+    hi, lo = msum_parts_sql(expr, dp)
+    return msum_finish_sql(f"SUM({hi}){window}", f"SUM({lo}){window}", out=out, dp=dp)
+
+
+def msum(expr: str, *, out: str = "r4", dp: int = 8, over: str | None = None) -> Column:
+    """Column form of ``msum_sql`` — one parse, one py4j round trip."""
+    return F.expr(msum_sql(expr, out=out, dp=dp, over=over))
 
 
 def as_date(c: Column) -> Column:

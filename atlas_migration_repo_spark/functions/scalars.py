@@ -18,9 +18,9 @@ from pyspark.sql import functions as F
 from atlas_migration_repo_spark.catalog import (
     as_date,
     load,
+    msum_sql,
     ntz_trunc,
     r4,
-    sql_msum_spark,
 )
 from atlas_migration_repo_spark.oracle import sql_r4
 from atlas_migration_repo_spark.registry import query
@@ -614,15 +614,13 @@ def func_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RETURNS DOUBLE RETURN disc_price(p, d) * (1 + t)"
     )
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("li_udf")
-    # r11: the decimal accumulation is the mantissa-split long-sum form
-    # (catalog.sql_msum_spark — bit-identical, same HALF_UP finish); the
-    # SQL UDFs still appear by name so the analyzer-inlining this query
-    # demonstrates is unchanged.
+    # the SQL UDFs appear by name inside the money sum, so the analyzer
+    # still inlines them
     return spark.sql(
         f"""
         SELECT l_returnflag,
-               {sql_msum_spark('disc_price(l_extendedprice, l_discount)')} AS revenue,
-               {sql_msum_spark('charged(l_extendedprice, l_discount, l_tax)')} AS charged
+               {msum_sql('disc_price(l_extendedprice, l_discount)')} AS revenue,
+               {msum_sql('charged(l_extendedprice, l_discount, l_tax)')} AS charged
         FROM li_udf GROUP BY l_returnflag
         """
     )
@@ -895,13 +893,12 @@ def xml_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "<order><key>%d</key><status>%s</status><total>%.2f</total></order>",
             F.col("o_orderkey"),
             F.col("o_orderstatus"),
-            # r11: for 2dp-exact money, ROUND(CAST(v AS DEC(30,8)), 2)
-            # ::DOUBLE is v itself; compute it as the exact 2dp mantissa
-            # round-trip (k = round-half-away(v·100); k/100.0 is the one
-            # correctly-rounded double = v) — codegen long math instead of
-            # a per-row double→BigDecimal parse. Margin argument is
-            # catalog._mantissa8's at the 2dp grid (tie distance 0.5 vs
-            # ≤1e-7 units of product error).
+            # for 2dp-exact money, ROUND(CAST(v AS DEC(30,8)), 2)::DOUBLE
+            # is v itself: the exact 2dp mantissa round-trip
+            # (k = round-half-away(v·100); k/100.0 is the one correctly
+            # rounded double = v), codegen long math instead of a per-row
+            # double→BigDecimal parse. Margin argument: catalog.msum_sql's
+            # at the 2dp grid (tie distance 0.5 vs ≤1e-7 units of error).
             (
                 (
                     F.col("o_totalprice") * 100

@@ -1895,7 +1895,7 @@ def sim_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         # arbitrary double — round to the 4dp grid on both engines first.
         .agg(r4(F.max("cos")).alias("m"))
     )
-    return mx.groupBy("doc").agg(msum(F.col("m")).alias("maxsim"))
+    return mx.groupBy("doc").agg(msum("m").alias("maxsim"))
 
 
 PQ_M = 8  # subspaces (64-d -> 8 blocks of 8 dims)

@@ -17,12 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from atlas_migration_repo_spark.catalog import (
-    _msum_parts,
-    _msum_reconstruct,
     as_date,
     load,
     msum,
-    msum8,
+    msum_finish_sql,
+    msum_parts_sql,
     r4,
 )
 from atlas_migration_repo_spark.oracle import sql_isum, sql_msum, sql_r4
@@ -57,16 +56,15 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces 100 TB to 6 groups map-side before any shuffle.
     """
     li = load(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
         li.where(as_date(F.col("l_shipdate")) <= F.lit(_Q1_CUTOFF).cast("date"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            msum(F.col("l_quantity")).alias("sum_qty"),
-            msum(F.col("l_extendedprice")).alias("sum_base_price"),
+            msum("l_quantity").alias("sum_qty"),
+            msum("l_extendedprice").alias("sum_base_price"),
             msum(disc_price).alias("sum_disc_price"),
-            msum(charge).alias("sum_charge"),
+            msum(f"{disc_price} * (1 + l_tax)").alias("sum_charge"),
             r4(F.avg("l_quantity")).alias("avg_qty"),
             r4(F.avg("l_extendedprice")).alias("avg_price"),
             r4(F.avg("l_discount")).alias("avg_disc"),
@@ -93,7 +91,7 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("l_extendedprice")).alias("total_price"),
+        msum("l_extendedprice").alias("total_price"),
         r4(F.avg("l_quantity")).alias("avg_qty"),
         F.min("l_quantity").alias("min_qty"),
         F.max("l_quantity").alias("max_qty"),
@@ -122,7 +120,7 @@ def agg_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            msum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
     )
 
@@ -192,13 +190,11 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered/conditional aggregation (sum-when / count_if)."""
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_linestatus").agg(
-        msum(
-            F.when(F.col("l_returnflag") == "R", F.col("l_extendedprice")).otherwise(0.0)
-        ).alias("returned_price"),
+        msum("CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0.0D END").alias(
+            "returned_price"
+        ),
         F.count_if(F.col("l_discount") > 0.05).alias("n_discounted"),
-        msum(
-            F.when(F.col("l_quantity") >= 25, F.col("l_quantity")).otherwise(0.0)
-        ).alias("bulk_qty"),
+        msum("CASE WHEN l_quantity >= 25 THEN l_quantity ELSE 0.0D END").alias("bulk_qty"),
     )
 
 
@@ -305,7 +301,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("l_extendedprice")).alias("sum_price"),
+            msum("l_extendedprice").alias("sum_price"),
         )
         .select("l_returnflag", "l_linestatus", "gid", "n_rows", "sum_price")
     )
@@ -329,7 +325,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("l_extendedprice")).alias("sum_price"),
+            msum("l_extendedprice").alias("sum_price"),
         )
         .select("l_returnflag", "l_linestatus", "gid", "n_rows", "sum_price")
     )
@@ -353,7 +349,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("l_extendedprice")).alias("sum_price"),
+            msum("l_extendedprice").alias("sum_price"),
         )
         .select("l_returnflag", "l_linestatus", "gid", "n_rows", "sum_price")
     )
@@ -493,27 +489,21 @@ def agg_two_stage_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain GROUP BY. This is the manual fallback when AQE's skew handling
     can't kick in (e.g. a single giant group rather than a skewed join)."""
     ev = load(spark, sf_dir, "events")
-    # r11 mantissa form: the per-(key, salt) partials carry the two long
-    # mantissa sums (catalog._msum_parts) instead of a decimal; integer
-    # addition is associative, so merging partials reconstructs the exact
-    # Σm the single-stage msum computes — then the identical (38,4)→double
-    # finish. Bit-equality is pinned by the same capture/oracle gates.
-    hi, lo = _msum_parts(F.col("value"))
+    # the partials carry the two long mantissa sums; long addition is
+    # associative, so the merge rebuilds the single-stage msum's exact Σm
+    hi, lo = msum_parts_sql("value")
     partial = (
         ev.withColumn("salt", F.pmod(F.col("event_id"), F.lit(SALT_BUCKETS)))
         .groupBy("event_type", "salt")
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(hi).alias("ph"),
-            F.sum(lo).alias("pl"),
+            F.expr(f"SUM({hi})").alias("ph"),
+            F.expr(f"SUM({lo})").alias("pl"),
         )
     )
     return partial.groupBy("event_type").agg(
         F.sum("pn").alias("n"),
-        _msum_reconstruct(F.sum("ph"), F.sum("pl"))
-        .cast("decimal(38,4)")
-        .cast("double")
-        .alias("value_sum"),
+        F.expr(msum_finish_sql("SUM(ph)", "SUM(pl)")).alias("value_sum"),
     )
 
 
@@ -613,15 +603,13 @@ def agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately avoided: their bias corrections differ between engines,
     while first-principles moments over exact sums are bit-identical."""
     li = load(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity")
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        # r11: exact decimal power sums → msum8 (integral quantities ≤ 50,
-        # so q..q⁴ are integers ≤ 6.25e6 — far inside the mantissa margin)
-        msum8(q).alias("s1"),
-        msum8(q * q).alias("s2"),
-        msum8(q * q * q).alias("s3"),
-        msum8(q * q * q * q).alias("s4"),
+        # integral quantities ≤ 50: q..q⁴ are integers ≤ 6.25e6
+        msum("l_quantity", out="double").alias("s1"),
+        msum("l_quantity * l_quantity", out="double").alias("s2"),
+        msum("l_quantity * l_quantity * l_quantity", out="double").alias("s3"),
+        msum("l_quantity * l_quantity * l_quantity * l_quantity", out="double").alias("s4"),
     )
     return s.select(
         "l_returnflag",
@@ -675,8 +663,7 @@ def agg_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         *[
-            # r11: ROUND(dec-sum, 4)::DOUBLE → msum (identical HALF_UP)
-            msum(F.expr(e)).alias(k)
+            msum(e).alias(k)
             for k, e in _REGR_SUMS.items()
         ],
     )

@@ -677,7 +677,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.coalesce("touch_type", F.lit("none")).alias("touch_type"))
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            msum(F.col("value")).alias("attributed_value"),
+            msum("value").alias("attributed_value"),
             r4(
                 F.avg((epoch_us("ts") - F.col("touch_us")) / 60000000.0)
             ).alias("avg_min_to_convert"),

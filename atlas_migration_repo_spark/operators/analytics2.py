@@ -13,14 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atlas_migration_repo_spark.catalog import (
-    _mantissa8,
-    _msum_parts,
-    _msum_total,
     epoch_us,
     load,
     msum,
-    msum8,
-    msum_dec,
+    msum_finish_sql,
+    msum_parts_sql,
     r4,
 )
 from atlas_migration_repo_spark.oracle import sql_msum, sql_r4
@@ -170,8 +167,7 @@ def share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     rev = (
         li.groupBy("l_returnflag", "l_linestatus")
-        # r11: decimal sum → msum (bit-identical; catalog.py)
-        .agg(msum(F.col("l_extendedprice") * (1.0 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum("l_extendedprice * (1.0D - l_discount)").alias("revenue"))
     )
     w_all = Window.partitionBy()
     return rev.select(
@@ -223,11 +219,8 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.groupBy("user_id")
         .agg(
             F.sum("dt_s").alias("obs_seconds"),
-            # r11: exact decimal sum → msum8 at the 4dp grid (the product
-            # is 4dp-exact but can exceed 1e9, outside the 8dp mantissa's
-            # double-exactness range — catalog._mantissa4 documents the
-            # margin: |c·1e4| < 2e15 keeps the scaled error < 0.5 units)
-            (msum8(F.col("value") * F.col("dt_s"), dp=4) / F.sum("dt_s")).alias(
+            # the 4dp grid: value·dt_s is 4dp-exact but too large for dp=8
+            (msum("value * dt_s", out="double", dp=4) / F.sum("dt_s")).alias(
                 "_twap_raw"
             ),
         )
@@ -319,8 +312,7 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.first("mx"), F.max(F.col("o_orderdate").cast("date"))
             ).alias("recency_days"),
             F.count(F.lit(1)).alias("frequency"),
-            # r11: decimal sum → msum (bit-identical; catalog.py)
-            msum(F.col("o_totalprice")).alias("monetary"),
+            msum("o_totalprice").alias("monetary"),
         )
     )
     from atlas_migration_repo_spark.operators.distributed import global_ntile
@@ -385,14 +377,9 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = load(spark, sf_dir, "lineitem")
-    # r11: decimal accumulation → msum_dec; the sum STAYS DECIMAL(38,8)
-    # (value and type identical), so the downstream prefix sum, ordering
-    # and share division are untouched — only the per-lineitem-row
-    # double→BigDecimal parse is gone.
+    # the sum stays DECIMAL(38,8) for the prefix sum and share division
     rev = li.groupBy("l_partkey").agg(
-        msum_dec(F.col("l_extendedprice") * (1.0 - F.col("l_discount"))).alias(
-            "rev_dec"
-        )
+        msum("l_extendedprice * (1.0D - l_discount)", out="decimal").alias("rev_dec")
     )
     cum = global_running_sum(
         rev,
@@ -780,11 +767,9 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     4dp while still decimal, then cast — same discipline as msum. Plain
     two-sum aggregate: partial map-side combine, one shuffle of 3 rows."""
     li = load(spark, sf_dir, "lineitem")
-    # r11: both sums via msum_dec — identical DECIMAL(38,8) operands, so
-    # the decimal division (result scale included) and ROUND are unchanged.
-    # price·qty ≤ 4dp-exact and ≤ ~5e6: inside the 8dp mantissa margin.
-    num = msum_dec(F.col("l_extendedprice") * F.col("l_quantity"))
-    den = msum_dec(F.col("l_quantity"))
+    # DECIMAL(38,8) operands keep the decimal division's result scale
+    num = msum("l_extendedprice * l_quantity", out="decimal")
+    den = msum("l_quantity", out="decimal")
     return li.groupBy("l_returnflag").agg(
         F.round(num / den, 4).cast("double").alias("qty_weighted_price")
     )
@@ -952,8 +937,7 @@ def pct_change_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = o.groupBy(
         F.trunc(F.col("o_orderdate").cast("date"), "month").alias("month")
     ).agg(
-        # r11: decimal sum → msum (bit-identical; catalog.py)
-        msum(F.col("o_totalprice")).alias("revenue")
+        msum("o_totalprice").alias("revenue")
     )
     w = Window.orderBy("month")
     prev = F.lag("revenue").over(w)
@@ -1437,11 +1421,10 @@ def feature_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary. The (mu, sd) scalars broadcast; normalization is a pure map
     over the (sampled) output rows."""
     li = load(spark, sf_dir, "lineitem")
-    # r11: exact decimal sums → msum8 (bit-identical; catalog.py)
     m = li.agg(
-        (msum8(F.col("l_quantity")) / F.count(F.lit(1))).alias("mu_q"),
+        (msum("l_quantity", out="double") / F.count(F.lit(1))).alias("mu_q"),
         F.stddev_samp("l_quantity").alias("sd_q"),
-        (msum8(F.col("l_discount")) / F.count(F.lit(1))).alias("mu_d"),
+        (msum("l_discount", out="double") / F.count(F.lit(1))).alias("mu_d"),
         F.stddev_samp("l_discount").alias("sd_d"),
     )
     return (
@@ -1487,10 +1470,8 @@ def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     from atlas_migration_repo_spark.operators.distributed import global_rank
 
     o = load(spark, sf_dir, "orders")
-    # r11: decimal accumulation → msum_dec (DECIMAL(38,8) value+type
-    # pinned, so the rank ordering and the downstream Σi·x / Σx decimal
-    # arithmetic are untouched)
-    spend = o.groupBy("o_custkey").agg(msum_dec(F.col("o_totalprice")).alias("x"))
+    # DECIMAL(38,8) for the rank ordering and the Σi·x / Σx arithmetic
+    spend = o.groupBy("o_custkey").agg(msum("o_totalprice", out="decimal").alias("x"))
     ranked, n = global_rank(
         spend, [F.col("x").asc(), F.col("o_custkey").asc()], out="i"
     )
@@ -1904,8 +1885,7 @@ def orders_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.month(F.col("o_orderdate").cast("date")).alias("m")
     ).agg(
         F.count(F.lit(1)).alias("n"),
-        # r11: decimal accumulation → msum_dec (value+type pinned)
-        msum_dec(F.col("o_totalprice")).alias("rev"),
+        msum("o_totalprice", out="decimal").alias("rev"),
     )
     tot = monthly.agg(
         F.sum("rev").alias("trev"), F.count(F.lit(1)).alias("nm")
@@ -2035,8 +2015,7 @@ def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     yearly = o.groupBy(
         F.year(F.col("o_orderdate").cast("date")).cast("int").alias("yr")
     ).agg(
-        # r11: decimal sum → msum (bit-identical; catalog.py)
-        msum(F.col("o_totalprice")).alias("revenue")
+        msum("o_totalprice").alias("revenue")
     )
     w = Window.orderBy("yr")
     prev = F.lag("revenue").over(w)
@@ -2696,10 +2675,10 @@ def feature_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     target leakage). A one-member category has no "others" and encodes
     NULL (NULLIF on both sides).
 
-    Determinism: the per-segment sums accumulate in DECIMAL(30,8) (the
-    msum policy — 2dp money inputs are exact there), the subtraction
-    Σ−own happens while still decimal, and only the final division is
-    double, r4-rounded on both engines.
+    Determinism: the per-segment sums are exact msum mantissa sums (the
+    oracle's DECIMAL(30,8) value), the subtraction Σ−own happens while
+    still exact, and only the final division is double, r4-rounded on
+    both engines.
 
     Plan: one fact-dim join (customer side broadcast at dim scale), one
     hash aggregate producing |segments| rows (map-side partial combine),
@@ -2715,15 +2694,12 @@ def feature_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
         "o_orderkey", "segment", "o_totalprice"
     )
-    # r11 mantissa LOO (same argument as win_exclude_current): the segment
-    # sum is the exact integer mantissa Σm (two long partial sums, rebuilt
-    # once per segment); the per-row encoding divides (Σm − m_row)·1e-8 —
-    # the identical rational (seg_sum_dec − price_dec) was — so the double
-    # quotient is bit-equal while every per-row double→BigDecimal parse
-    # (aggregation side AND re-attach side) becomes codegen long math.
-    hi, lo = _msum_parts(F.col("o_totalprice"))
+    # the segment's two mantissa sums ride the broadcast; the row takes
+    # its own mantissa off Σm, the exact rational seg_sum − own
+    hi, lo = msum_parts_sql("o_totalprice")
     s = oc.groupBy("segment").agg(
-        _msum_total(F.sum(hi), F.sum(lo)).alias("seg_sum_m"),
+        F.expr(f"SUM({hi})").alias("seg_h"),
+        F.expr(f"SUM({lo})").alias("seg_l"),
         F.count(F.lit(1)).alias("seg_cnt"),
     )
     return (
@@ -2733,10 +2709,9 @@ def feature_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "segment",
             r4(
-                (
-                    (F.col("seg_sum_m") - _mantissa8(F.col("o_totalprice")))
-                    * F.lit("0.00000001").cast("decimal(8,8)")
-                ).cast("double")
+                F.expr(
+                    msum_finish_sql("seg_h", "seg_l", out="double", minus="o_totalprice")
+                )
                 / F.nullif(F.col("seg_cnt") - F.lit(1), F.lit(0))
             ).alias("loo_enc"),
         )

@@ -14,11 +14,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atlas_migration_repo_spark.catalog import (
-    _msum_parts,
-    _msum_reconstruct,
     as_date,
     load,
     msum,
+    msum_finish_sql,
+    msum_parts_sql,
+    msum_sql,
     r4,
 )
 from atlas_migration_repo_spark.oracle import sql_msum, sql_r4
@@ -43,11 +44,10 @@ def sql_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
     load(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
     return spark.sql(
-        """
+        f"""
         SELECT c_mktsegment,
                COUNT(*) AS n_orders,
-               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 4) AS DOUBLE)
-                   AS segment_value
+               {msum_sql('o_totalprice')} AS segment_value
         FROM v_orders JOIN v_customer ON o_custkey = c_custkey
         GROUP BY c_mktsegment
         """
@@ -79,7 +79,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     back = spark.read.parquet(path).where(F.col("l_returnflag") == "R")
     return back.groupBy("l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"), msum(F.col("l_extendedprice")).alias("sum_price")
+        F.count(F.lit(1)).alias("n"), msum("l_extendedprice").alias("sum_price")
     )
 
 
@@ -177,7 +177,7 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            msum(F.col("value")).alias("value_sum"),
+            msum("value").alias("value_sum"),
             F.any_value(F.col("user_total")).alias("user_total"),
         )
     )
@@ -407,7 +407,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, and the calendar joins broadcast."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_rec")
     return spark.sql(
-        """
+        f"""
         WITH RECURSIVE months(m) AS (
           SELECT DATE '1995-01-01' AS m
           UNION ALL
@@ -417,8 +417,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         rev AS (
           SELECT CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS DATE) AS m,
                  COUNT(*) AS n_orders,
-                 CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 4) AS DOUBLE)
-                   AS revenue
+                 {msum_sql('o_totalprice')} AS revenue
           FROM v_orders_rec GROUP BY 1
         )
         SELECT months.m AS month,
@@ -455,7 +454,7 @@ def obs_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.count_if(F.col("l_quantity") >= 45).alias("n_large"),
-        msum(F.col("l_extendedprice")).alias("total_price"),
+        msum("l_extendedprice").alias("total_price"),
     )
     audited.write.format("noop").mode("overwrite").save()  # the "real work"
     m = obs.get
@@ -480,10 +479,9 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache can reuse the parsed query across runs."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_param")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority, COUNT(*) AS n,
-               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 4) AS DOUBLE)
-                 AS total
+               {msum_sql('o_totalprice')} AS total
         FROM v_orders_param WHERE o_totalprice > :min_price
         GROUP BY o_orderpriority
         """,
@@ -804,27 +802,23 @@ def pipeline_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance: the materialized aggregate state is
     NOT recomputed when a delta arrives — the delta is aggregated alone
-    and merged into the old state (count adds, decimal-exact sums add).
+    and merged into the old state (count adds, exact mantissa sums add).
     This is partial aggregation made explicit at the pipeline level: the
     merge touches |groups| rows regardless of history size, so a 100 TB
     base table costs nothing per increment. The oracle recomputes from
-    scratch; hash-equality proves the algebra (sums stay decimal until
+    scratch; hash-equality proves the algebra (sums stay exact longs until
     the final 4dp round, so merge order cannot drift)."""
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit("1999-01-01").cast("date")
-    # r11 mantissa state (catalog.msum argument): the maintained aggregate
-    # state is the two long mantissa partial sums — longs add exactly and
-    # associatively, so base ⊎ delta reconstructs the identical Σm the
-    # decimal state carried, and the ROUND(·,4)::DOUBLE finish is the same
-    # HALF_UP on the same exact value. The merge algebra the query declares
-    # (state adds, never recomputes) is unchanged.
-    hi, lo = _msum_parts(F.col("o_totalprice"))
+    # the state is the two long mantissa sums: longs add exactly and
+    # associatively, so base ⊎ delta rebuilds the one-pass Σm
+    hi, lo = msum_parts_sql("o_totalprice")
 
     def agg_state(df: DataFrame) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(hi).alias("sh"),
-            F.sum(lo).alias("sl"),
+            F.expr(f"SUM({hi})").alias("sh"),
+            F.expr(f"SUM({lo})").alias("sl"),
         )
 
     base = agg_state(o.where(as_date(F.col("o_orderdate")) < cutoff))
@@ -843,10 +837,7 @@ def ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select(
         "o_orderstatus",
         "n",
-        _msum_reconstruct(F.col("sh"), F.col("sl"))
-        .cast("decimal(38,4)")
-        .cast("double")
-        .alias("total"),
+        F.expr(msum_finish_sql("sh", "sl")).alias("total"),
     )
 
 
@@ -900,9 +891,8 @@ def sql_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning/pushdown are identical to a literal name."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("obj_orders")
     return spark.sql(
-        """
-        SELECT o_orderstatus, COUNT(*) AS n,
-               CAST(ROUND(SUM(CAST(IDENTIFIER(:col) AS DECIMAL(30,8))), 4) AS DOUBLE) AS total
+        f"""
+        SELECT o_orderstatus, COUNT(*) AS n, {msum_sql('IDENTIFIER(:col)')} AS total
         FROM IDENTIFIER(:tbl) GROUP BY o_orderstatus
         """,
         args={"tbl": "obj_orders", "col": "o_totalprice"},
@@ -925,11 +915,10 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove the parser surface, and its oracle is the classic spelling."""
     load(spark, sf_dir, "events").createOrReplaceTempView("v_events_pipe")
     return spark.sql(
-        """
+        f"""
         FROM v_events_pipe
         |> WHERE event_type = 'purchase'
-        |> AGGREGATE COUNT(*) AS n,
-             CAST(ROUND(SUM(CAST(value AS DECIMAL(30,8))), 4) AS DOUBLE) AS total
+        |> AGGREGATE COUNT(*) AS n, {msum_sql('value')} AS total
            GROUP BY user_id
         |> WHERE n > 2
         """
@@ -955,8 +944,7 @@ def sql_exec_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql("DECLARE OR REPLACE VARIABLE min_value DOUBLE")
     spark.sql("SET VARIABLE min_value = 100.0")
     return spark.sql(
-        "EXECUTE IMMEDIATE 'SELECT event_type, COUNT(*) AS n, "
-        "CAST(ROUND(SUM(CAST(value AS DECIMAL(30,8))), 4) AS DOUBLE) AS total "
+        f"EXECUTE IMMEDIATE 'SELECT event_type, COUNT(*) AS n, {msum_sql('value')} AS total "
         "FROM v_events_exec WHERE value > ? GROUP BY event_type' USING min_value"
     )
 
@@ -977,9 +965,9 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis time to the explicit GROUP BY, so the plan is identical."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("v_orders_gba")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-               CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(30,8))), 4) AS DOUBLE) AS total
+               {msum_sql('o_totalprice')} AS total
         FROM v_orders_gba GROUP BY ALL
         """
     )
@@ -1062,7 +1050,7 @@ def time_travel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("rn") == 1) & (F.col("op") != "delete"))
     )
     return asof.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"), msum(F.col("o_totalprice")).alias("total")
+        F.count(F.lit(1)).alias("n"), msum("o_totalprice").alias("total")
     )
 
 
@@ -1558,9 +1546,7 @@ def stats_cbo_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         return spark.sql(
             f"""
-            SELECT r_name, COUNT(*) AS n_suppliers,
-                   CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(30,8))) AS DECIMAL(38,4)) AS DOUBLE)
-                     AS acctbal_sum
+            SELECT r_name, COUNT(*) AS n_suppliers, {msum_sql('s_acctbal')} AS acctbal_sum
             FROM {names['supplier']}
             JOIN {names['nation']} ON s_nationkey = n_nationkey
             JOIN {names['region']} ON n_regionkey = r_regionkey
@@ -1686,7 +1672,7 @@ def pipeline_lakehouse_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = t.read(spark)
     return final.agg(
         F.count(F.lit(1)).alias("n_final"),
-        msum(F.col("o_totalprice")).alias("total_final"),
+        msum("o_totalprice").alias("total_final"),
     ).select(
         F.lit(n_staged).alias("n_staged"),
         F.lit(n_initial).alias("n_initial"),
@@ -1731,7 +1717,7 @@ def pipeline_migrate_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng.migrate_table(h_root, i_root, "iceberg")
     return read_iceberg(spark, i_root).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 

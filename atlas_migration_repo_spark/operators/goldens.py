@@ -48,7 +48,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", as_date(F.col("o_orderdate")).alias("order_date"))
         .agg(
-            msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            msum("l_extendedprice * (1 - l_discount)").alias("revenue"),
             F.any_value(F.col("o_orderpriority")).alias("priority"),
         )
         .select("l_orderkey", "revenue", "order_date", "priority")
@@ -97,7 +97,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
-        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum("l_extendedprice * (1 - l_discount)").alias("revenue"))
     )
 
 
@@ -143,7 +143,7 @@ def q7_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("k2"))
         .where(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year"))
-        .agg(msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(msum("l_extendedprice * (1 - l_discount)").alias("revenue"))
     )
 
 
@@ -182,7 +182,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.any_value(F.col("c_name")).alias("c_name"),
             F.any_value(F.col("n_name")).alias("n_name"),
-            msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            msum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
         .orderBy(F.col("revenue").desc(), "c_custkey")
         .limit(20)
@@ -211,5 +211,5 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_discount").between(0.03, 0.05)
             & (F.col("l_quantity") < 24)
         )
-        .agg(msum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
+        .agg(msum("l_extendedprice * l_discount").alias("revenue"))
     )

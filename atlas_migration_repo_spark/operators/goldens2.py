@@ -31,15 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from atlas_migration_repo_spark.catalog import as_date, load, msum, msum8
+from atlas_migration_repo_spark.catalog import as_date, load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 
 _REV = "l_extendedprice * (1 - l_discount)"
-
-
-def _rev() -> F.Column:
-    return F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
 
 
 @query(
@@ -179,10 +175,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("sk"))
         .groupBy(F.year(as_date(F.col("o_orderdate"))).alias("o_year"))
         .agg(
-            msum(
-                F.when(F.col("supp_nation") == "NATION_3", _rev()).otherwise(F.lit(0))
-            ).alias("num"),
-            msum(_rev()).alias("den"),
+            msum(f"CASE WHEN supp_nation = 'NATION_3' THEN {_REV} ELSE 0 END").alias(
+                "num"
+            ),
+            msum(_REV).alias("den"),
         )
         .select("o_year", F.round(F.col("num") / F.col("den"), 4).alias("mkt_share"))
     )
@@ -213,7 +209,6 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load(spark, sf_dir, "supplier")
     o = load(spark, sf_dir, "orders")
     n = load(spark, sf_dir, "nation")
-    profit = _rev() - F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.05)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -223,7 +218,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year(as_date(F.col("o_orderdate"))).alias("o_year"),
         )
-        .agg(msum(profit).alias("sum_profit"))
+        .agg(msum(f"{_REV} - p_retailprice * l_quantity * 0.05D").alias("sum_profit"))
     )
 
 
@@ -255,7 +250,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_15")
-    val = F.col("l_extendedprice") * F.col("l_quantity")
+    val = "l_extendedprice * l_quantity"
     base = li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey")).join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
@@ -354,10 +349,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
-            msum(
-                F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0))
-            ).alias("num"),
-            msum(_rev()).alias("den"),
+            msum(f"CASE WHEN p_type = 'PROMO' THEN {_REV} ELSE 0 END").alias("num"),
+            msum(_REV).alias("den"),
         )
         .select(
             F.round(F.lit(100.0) * F.col("num") / F.col("den"), 4).alias(
@@ -392,7 +385,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").where(
         as_date(F.col("l_shipdate")).between("1997-01-01", "1997-03-31")
     )
-    rev = li.groupBy("l_suppkey").agg(msum(_rev()).alias("total_revenue"))
+    rev = li.groupBy("l_suppkey").agg(msum(_REV).alias("total_revenue"))
     s = load(spark, sf_dir, "supplier")
     # global MAX as an empty-frame window: computes `rev` once instead of
     # twice (agg + crossJoin re-derivation). The single-partition window
@@ -476,7 +469,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(avgq), F.col("l_partkey") == F.col("apk"))
         .where(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
-        .agg(msum(F.col("l_extendedprice")).alias("s"))
+        .agg(msum("l_extendedprice").alias("s"))
         .select(F.round(F.col("s") / F.lit(7.0), 4).alias("avg_yearly"))
     )
 
@@ -561,7 +554,7 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             | clause("Brand#23", 10, 10, 20)
             | clause("Brand#3", 15, 20, 30)
         )
-        .agg(msum(_rev()).alias("revenue"))
+        .agg(msum(_REV).alias("revenue"))
     )
 
 
@@ -700,8 +693,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nations = [3, 8, 12, 13, 15]
     c = load(spark, sf_dir, "customer").where(F.col("c_nationkey").isin(nations))
     thr = c.where(F.col("c_acctbal") > 0).agg(
-        # r11: exact decimal sum → msum8 (bit-identical value; catalog.py)
-        (msum8(F.col("c_acctbal")) / F.count(F.lit(1)).cast("double")).alias("thr")
+        (msum("c_acctbal", out="double") / F.count(F.lit(1)).cast("double")).alias("thr")
     )
     recent = (
         load(spark, sf_dir, "orders")
@@ -715,7 +707,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            msum(F.col("c_acctbal")).alias("totacctbal"),
+            msum("c_acctbal").alias("totacctbal"),
         )
         .orderBy("cntrycode")
     )

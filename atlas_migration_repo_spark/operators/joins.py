@@ -180,7 +180,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            msum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
+            msum("l_extendedprice * (1 - l_discount)").alias("revenue"),
         )
     )
 
@@ -230,7 +230,7 @@ def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n_orders"), msum(F.col("o_totalprice")).alias("total"))
+        .agg(F.count(F.lit(1)).alias("n_orders"), msum("o_totalprice").alias("total"))
     )
 
 

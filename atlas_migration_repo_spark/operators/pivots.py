@@ -143,7 +143,7 @@ def pivot_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("o_orderstatus", ["F", "O", "P"])
         .agg(
             F.count(F.lit(1)).alias("n"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
     )
 

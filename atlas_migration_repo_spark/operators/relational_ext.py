@@ -123,7 +123,7 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "orders")
         .where(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1).isin("0", "1"))
         .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"), msum(F.col("o_totalprice")).alias("sum_price"))
+        .agg(F.count(F.lit(1)).alias("n"), msum("o_totalprice").alias("sum_price"))
     )
 
 
@@ -159,7 +159,7 @@ def ts_rollup_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_events"),
-            msum(F.col("value")).alias("sum_value"),
+            msum("value").alias("sum_value"),
         )
         .select("day_ts", "hour_ts", "gid", "n_events", "sum_value")
     )
@@ -197,7 +197,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "customer")
         .where(keep)
         .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"), msum(F.col("c_acctbal")).alias("sum_bal"))
+        .agg(F.count(F.lit(1)).alias("n"), msum("c_acctbal").alias("sum_bal"))
     )
 
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from atlas_migration_repo_spark.catalog import load, msum8
+from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.registry import query
 
 
@@ -58,8 +58,7 @@ def scan_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     c.count()  # materialize
     return c.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        # r11: exact decimal sum → msum8 (bit-identical; catalog.py)
-        msum8(F.col("c_acctbal")).alias("bal"),
+        msum("c_acctbal", out="double").alias("bal"),
     )
 
 

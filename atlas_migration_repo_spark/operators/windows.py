@@ -14,12 +14,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from atlas_migration_repo_spark.catalog import (
-    _mantissa8,
-    _msum_parts,
-    _msum_total,
     epoch_us,
     load,
-    msum_over,
+    msum,
+    msum_finish_sql,
+    msum_parts_sql,
     r4,
 )
 from atlas_migration_repo_spark.oracle import sql_r4
@@ -104,28 +103,15 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative customer spend (decimal-exact prefix sums, §5.4 policy).
-
-    r10 fast path, same trick as catalog.msum: the prefix sum runs over the
-    long 8dp mantissa (one codegen add per row) instead of DECIMAL(30,8)
-    (one Double.toString + BigDecimal parse per row), and each row's
-    result re-enters decimal only for the final exact 4dp rounding.
-    Bit-identical while any single customer's cumulative spend stays under
-    9.2e10 (mantissa < 2^63) — TPC-H customers hold ~10 orders ≤ ~600k
-    each at EVERY scale factor, so the margin is ~10^4 at 100 TB."""
-    from atlas_migration_repo_spark.catalog import _mantissa8
-
+    """Cumulative customer spend (exact prefix sums, §5.4 policy): the
+    windowed catalog.msum, two long mantissa sums in one frame pass."""
     o = load(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.col("o_orderdate").cast("date"), "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    running = msum(
+        "o_totalprice",
+        over="PARTITION BY o_custkey ORDER BY CAST(o_orderdate AS DATE), o_orderkey"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
     )
-    running_m = F.sum(_mantissa8(F.col("o_totalprice"))).over(w)
-    running = running_m.cast("decimal(19,0)") * F.lit("0.00000001").cast("decimal(8,8)")
-    return o.select(
-        "o_orderkey", running.cast("decimal(38,4)").cast("double").alias("running_spend")
-    )
+    return o.select("o_orderkey", running.alias("running_spend"))
 
 
 @query(
@@ -383,7 +369,7 @@ def win_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_exclude_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out mean per group — the EXCLUDE CURRENT ROW frame Spark's
     window surface lacks, composed as (group_sum − value) / (group_n − 1).
-    The group sum accumulates in DECIMAL(30,8), so the numerator is exact
+    The group sum is an exact msum mantissa sum, so the numerator is exact
     and order-independent in both engines (a raw double window sum drifts
     ~1e-12 with partition order — fatal on the 4dp rounding grid); the
     single double division is then the identical IEEE op on identical
@@ -397,26 +383,21 @@ def win_exclude_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite exact for nullable event_type too (a plain equi-join
     would silently drop those rows)."""
     ev = load(spark, sf_dir, "events")
-    # r11 mantissa form (catalog.msum argument): the group sum is carried as
-    # two long partial sums and reconstructed ONCE per group as the exact
-    # integer mantissa Σm (DECIMAL(28,0)); the per-row LOO numerator is then
-    # (Σm − m_row)·1e-8 — the identical rational the DECIMAL(30,8) form
-    # computed as (__gsum − value_dec), so the double quotient is bit-equal
-    # while the per-row double→BigDecimal parse is gone from both the
-    # aggregation and the re-attached subtraction.
-    hi, lo = _msum_parts(F.col("value"))
+    # the group's two mantissa sums ride the broadcast; the row takes its
+    # own mantissa off Σm, the exact rational __gsum − value
+    hi, lo = msum_parts_sql("value")
     g = ev.groupBy("event_type").agg(
-        _msum_total(F.sum(hi), F.sum(lo)).alias("__gsum_m"),
+        F.expr(f"SUM({hi})").alias("__gh"),
+        F.expr(f"SUM({lo})").alias("__gl"),
         F.count(F.lit(1)).alias("__gn"),
     )
     g = g.withColumnRenamed("event_type", "__g_et")
     ev = ev.join(
         F.broadcast(g), ev["event_type"].eqNullSafe(g["__g_et"])
     ).drop("__g_et")
-    loo = (
-        (F.col("__gsum_m") - _mantissa8(F.col("value")))
-        * F.lit("0.00000001").cast("decimal(8,8)")
-    ).cast("double") / (F.col("__gn") - 1)
+    loo = F.expr(msum_finish_sql("__gh", "__gl", out="double", minus="value")) / (
+        F.col("__gn") - 1
+    )
     return ev.select(
         "event_id",
         "event_type",
@@ -450,19 +431,16 @@ def win_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates in decimal so frame-order drift can't move the 4dp grid.
     One shuffle on user_id; state is bounded by events-per-window, the
     batch twin of stream_sliding's watermarked state."""
-    ev = load(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events").withColumn("__us", epoch_us("ts"))
     w = (
-        Window.partitionBy("user_id")
-        .orderBy(epoch_us("ts"))
-        .rangeBetween(-RANGE_HOURS * 3600 * 1_000_000, Window.currentRow)
+        f"PARTITION BY user_id ORDER BY __us RANGE BETWEEN"
+        f" {RANGE_HOURS * 3600 * 1_000_000} PRECEDING AND CURRENT ROW"
     )
     return ev.select(
         "event_id",
         "user_id",
-        F.count(F.lit(1)).over(w).alias("n_in_window"),
-        # r11: ROUND(dec-sum, 4)::DOUBLE → msum_over (same HALF_UP on the
-        # same exact value; both long mantissa sums share the frame pass)
-        msum_over(F.col("value"), w).alias("sum_in_window"),
+        F.expr(f"COUNT(1) OVER ({w})").alias("n_in_window"),
+        msum("value", over=w).alias("sum_in_window"),
     )
 
 
@@ -488,16 +466,11 @@ def win_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a sliding two-pointer over each partition's sort, O(n) per key.
     Decimal accumulation makes the windowed sum order-exact, so both
     engines agree without an epsilon."""
-    e = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(epoch_us("ts"))
-        .rangeBetween(-3_600_000_000, Window.currentRow)
-    )
+    e = load(spark, sf_dir, "events").withColumn("__us", epoch_us("ts"))
+    w = "PARTITION BY user_id ORDER BY __us RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW"
     return e.select(
         "event_id",
         "user_id",
-        F.count(F.lit(1)).over(w).alias("n_last_hour"),
-        # r11: windowed decimal sum → msum_over (bit-identical; catalog.py)
-        msum_over(F.col("value"), w).alias("value_last_hour"),
+        F.expr(f"COUNT(1) OVER ({w})").alias("n_last_hour"),
+        msum("value", over=w).alias("value_last_hour"),
     )

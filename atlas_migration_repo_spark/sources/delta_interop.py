@@ -3134,7 +3134,7 @@ def delta_sink_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_delta(batches[2], root, mode="append", txn=("feed", 2))
     return read_delta(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3183,7 +3183,7 @@ def delta_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3243,7 +3243,7 @@ def delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1, 2):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -3295,7 +3295,7 @@ def delta_rename_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         agg = read_delta(spark, root, **kw).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col(col)).alias("total"),
+            msum(col).alias("total"),
         )
         outs.append(
             agg.select(
@@ -3486,7 +3486,7 @@ def delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(
             agg.select(F.lit(v).cast("long").alias("version"), "n_rows", "total")
@@ -3554,7 +3554,7 @@ def delta_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
     )
 
@@ -3591,7 +3591,7 @@ def delta_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return got.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3629,7 +3629,7 @@ def delta_delete_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])
@@ -3780,7 +3780,7 @@ def delta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "delta_stream",
         stream.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         ),
     )
 
@@ -3825,12 +3825,12 @@ def delta_adopt_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1):
         agg = t.read(spark, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     cdc = t.changes(spark, from_version=0).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
     outs.append(cdc.select(F.lit(2).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -3870,7 +3870,7 @@ def delta_convert_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1):
         agg = read_delta(spark, t.root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])
@@ -3975,7 +3975,7 @@ def delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("_commit_version", "_change_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
     )
 
@@ -4067,7 +4067,7 @@ def stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "delta_cdf_stream",
         stream.groupBy("_commit_version", "_change_type").agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         ),
     )
 
@@ -4100,7 +4100,7 @@ def delta_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     for phase, v in ((0, pre_v), (1, None)):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(phase).alias("phase"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])
@@ -4134,7 +4134,7 @@ def delta_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = read_delta_range(spark, root, "o_custkey", 100, 400)
     return got.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -4173,7 +4173,7 @@ def delta_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     for phase, v in ((0, 0), (1, 1), (2, None)):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(
             agg.select(F.lit(phase).alias("version"), "n_rows", "total")
@@ -4217,7 +4217,7 @@ def delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1, 2):
         agg = read_delta(spark, root, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -4255,7 +4255,7 @@ def delta_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     for side, p in (("source", root), ("clone", dst)):
         agg = read_delta(spark, p).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(side).alias("side"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])

@@ -241,7 +241,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(path)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("l_extendedprice")).alias("sum_price"),
+        msum("l_extendedprice").alias("sum_price"),
     )
 
 
@@ -303,7 +303,7 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            msum(F.col("l_extendedprice")).alias("sum_price"),
+            msum("l_extendedprice").alias("sum_price"),
         )
     )
 
@@ -336,7 +336,7 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.parquet(path)
         .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("sum_value"))
+        .agg(F.count(F.lit(1)).alias("n"), msum("value").alias("sum_value"))
     )
 
 
@@ -416,7 +416,7 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.agg(
         F.count(F.when(F.col("_corrupt").isNull(), 1)).alias("n_good"),
         F.count("_corrupt").alias("n_corrupt"),
-        msum(F.col("c_acctbal")).alias("good_acctbal"),
+        msum("c_acctbal").alias("good_acctbal"),
     )
 
 
@@ -451,7 +451,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         fact.join(dim, "day")
         .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("value_sum"))
+        .agg(F.count(F.lit(1)).alias("n"), msum("value").alias("value_sum"))
     )
 
 
@@ -552,7 +552,7 @@ def sink_sorted_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     back = spark.read.parquet(path)
     return back.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"), msum(F.col("l_extendedprice")).alias("sum_price")
+        F.count(F.lit(1)).alias("n"), msum("l_extendedprice").alias("sum_price")
     )
 
 
@@ -709,7 +709,7 @@ def sink_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     back = spark.read.parquet(scratch_path(sf_dir, "orders_zstd"))
     return back.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"), msum(F.col("o_totalprice")).alias("total")
+        F.count(F.lit(1)).alias("n"), msum("o_totalprice").alias("total")
     )
 
 

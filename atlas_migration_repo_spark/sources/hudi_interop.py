@@ -1964,7 +1964,7 @@ def hudi_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -2034,7 +2034,7 @@ def hudi_delete_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return read_hudi(spark, root).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -2082,7 +2082,7 @@ def hudi_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, instant in enumerate(instants):
         agg = read_hudi(spark, root, as_of=instant).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -2146,7 +2146,7 @@ def hudi_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return read_hudi(spark, root).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -2180,7 +2180,7 @@ def hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     for snap, as_of in ((0, pre), (1, None)):
         agg = read_hudi(spark, root, as_of=as_of).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(snap).alias("snap"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -2208,7 +2208,7 @@ def hudi_sink_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_hudi(batches[2], root, record_key="o_orderkey", checkpoint="feed:2")
     return read_hudi(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -2242,7 +2242,7 @@ def hudi_event_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged = read_hudi_event_range(spark, root, _HUDI_EV_LO, _HUDI_EV_HI)
     return ranged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("value")).alias("total"),
+        msum("value").alias("total"),
     )
 
 
@@ -2922,7 +2922,7 @@ def hudi_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return read_hudi(spark, root).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -2973,7 +2973,7 @@ def hudi_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             read_hudi(spark, root, view=view)
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(F.lit(phase).alias("phase"), "n_rows", "total")
         )
@@ -3307,7 +3307,7 @@ def hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean_hudi(root, retain_versions=1)
     return read_hudi(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3439,7 +3439,7 @@ def hudi_adopt_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3687,7 +3687,7 @@ def lakehouse_uniform_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total")
         )
@@ -3735,7 +3735,7 @@ def lakehouse_uniform_hudi_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
         outs.append(
             df.agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             ).select(F.lit(reader).alias("reader"), "n_rows", "total")
         )
     return outs[0].unionByName(outs[1])
@@ -3840,7 +3840,7 @@ def stream_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_hudi",
         stream.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         ),
     )
 
@@ -4745,7 +4745,7 @@ def hudi_metadata_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         .withColumn("files_view_exact", F.lit(bool(exact)))
     )
@@ -4812,7 +4812,7 @@ def hudi_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_hudi_column_range(spark, root, "o_orderkey", lo, hi)
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         .withColumn("pruned_blind", F.lit(n_deleted > 0))
     )
@@ -4853,7 +4853,7 @@ def hudi_timeline_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = read_hudi(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
     return agg.select(
         "n_rows",
@@ -4935,7 +4935,7 @@ def hudi_adopt_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(
                 F.lit(reader).alias("reader"),
@@ -5056,7 +5056,7 @@ def hudi_clustering_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranged = read_hudi_event_range(spark, root, _HUDI_EV_LO, _HUDI_EV_HI)
     return ranged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("value")).alias("total"),
+        msum("value").alias("total"),
     )
 
 

@@ -3569,7 +3569,7 @@ def iceberg_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3613,7 +3613,7 @@ def lakehouse_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total")
         )
@@ -3667,7 +3667,7 @@ def lakehouse_uniform_dv_puffin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(
                 F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total"
@@ -3738,7 +3738,7 @@ def lakehouse_uniform_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(
                 F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total"
@@ -3798,7 +3798,7 @@ def lakehouse_uniform_reverse(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(
                 F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total"
@@ -3869,7 +3869,7 @@ def lakehouse_uniform_reverse_sync(spark: SparkSession, sf_dir: str) -> DataFram
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                msum(F.col("o_totalprice")).alias("total"),
+                msum("o_totalprice").alias("total"),
             )
             .select(
                 F.lit(reader).alias("reader"), "o_orderstatus", "n_rows", "total"
@@ -3913,7 +3913,7 @@ def iceberg_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return got.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3945,7 +3945,7 @@ def iceberg_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pruned.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -3981,7 +3981,7 @@ def iceberg_bucket_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = reduce(lambda a, b: a.unionByName(b), parts)
     return hits.agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -4061,7 +4061,7 @@ def iceberg_rename_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         agg = read_iceberg(spark, root, **kw).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col(col)).alias("total"),
+            msum(col).alias("total"),
         )
         outs.append(
             agg.select(
@@ -4096,7 +4096,7 @@ def iceberg_sink_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_iceberg(batches[2], root, mode="append", txn=("feed", 2))
     return read_iceberg(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -4167,7 +4167,7 @@ def iceberg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, sid in enumerate((s0, s1, s2)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(i).alias("snap"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -4214,7 +4214,7 @@ def iceberg_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, sid in ((0, s0), (1, None)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])
@@ -4269,7 +4269,7 @@ def iceberg_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i, sid in enumerate((s0, s1, s2)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(i).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -4299,7 +4299,7 @@ def iceberg_delete_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete_iceberg_eq(spark, root, keys, ["c_mktsegment"])
     return read_iceberg(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("c_acctbal")).alias("total"),
+        msum("c_acctbal").alias("total"),
     )
 
 
@@ -4339,7 +4339,7 @@ def iceberg_rewrite_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite_iceberg(spark, root)
     return read_iceberg(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -4410,7 +4410,7 @@ def iceberg_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, sid in ((0, s0), (1, None)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(
             agg.select(F.lit(v).cast("long").alias("version"), "n_rows", "total")
@@ -4492,7 +4492,7 @@ def iceberg_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, sid in ((0, s0), (1, s1), (2, s2)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(
             agg.select(F.lit(v).cast("long").alias("version"), "n_rows", "total")
@@ -4545,7 +4545,7 @@ def iceberg_eq_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v, sid in ((0, s0), (1, s1), (2, s2)):
         agg = read_iceberg(spark, root, snapshot_id=sid).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("c_acctbal")).alias("total"),
+            msum("c_acctbal").alias("total"),
         )
         outs.append(
             agg.select(F.lit(v).cast("long").alias("version"), "n_rows", "total")
@@ -4688,7 +4688,7 @@ def iceberg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "iceberg_stream",
         stream.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         ),
     )
 
@@ -4725,7 +4725,7 @@ def iceberg_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     for label, kw in (("audit_tag", {"ref": "audit_tag"}), ("main", {})):
         agg = read_iceberg(spark, root, **kw).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(label).alias("ref"), "n_rows", "total"))
     return outs[0].unionByName(outs[1])
@@ -4775,5 +4775,5 @@ def iceberg_incremental_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, root, from_snapshot_id=s1, to_snapshot_id=s3
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )

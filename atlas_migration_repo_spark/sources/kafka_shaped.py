@@ -277,6 +277,6 @@ def stream_kafka_shaped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kafka_shaped",
         parsed.groupBy("partition").agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("v.o_totalprice")).alias("total"),
+            msum("v.o_totalprice").alias("total"),
         ),
     )

@@ -1129,7 +1129,7 @@ def merge_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1):
         agg = t.read(spark, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(
             agg.select(F.lit(v).cast("long").alias("version"), "n_rows", "total")
@@ -1186,7 +1186,7 @@ def time_travel_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in (0, 1, 2):
         agg = t.read(spark, version=v).agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total"))
     return reduce(lambda a, b: a.unionByName(b), outs)
@@ -1225,7 +1225,7 @@ def table_log_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return t.changes(spark, from_version=0).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )
 
 
@@ -1299,7 +1299,7 @@ def stream_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tlog_stream",
         stream.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col("o_totalprice")).alias("total"),
+            msum("o_totalprice").alias("total"),
         ),
     )
 
@@ -1365,7 +1365,7 @@ def table_log_rename_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         price = "o_totalprice" if v == 0 else "price_usd"
         agg = df.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            msum(F.col(price)).alias("total"),
+            msum(price).alias("total"),
             F.sum("o_prio").cast("bigint").alias("prio_sum"),
         )
         outs.append(agg.select(F.lit(v).alias("version"), "n_rows", "total", "prio_sum"))
@@ -1405,5 +1405,5 @@ def table_log_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return t.read_range(spark, "o_orderkey", 3000, 4999).agg(
         F.count(F.lit(1)).alias("n_rows"),
-        msum(F.col("o_totalprice")).alias("total"),
+        msum("o_totalprice").alias("total"),
     )

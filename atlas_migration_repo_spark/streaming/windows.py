@@ -37,7 +37,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(src: DataFrame) -> DataFrame:
         return (
             src.groupBy(F.window("ts", "1 hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("value_sum"))
+            .agg(F.count(F.lit(1)).alias("n"), msum("value").alias("value_sum"))
             .select(
                 F.col("window.start").alias("window_start"), "event_type", "n", "value_sum"
             )
@@ -68,7 +68,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(src: DataFrame) -> DataFrame:
         return (
             src.groupBy(F.window("ts", "1 hour", "30 minutes"))
-            .agg(F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("value_sum"))
+            .agg(F.count(F.lit(1)).alias("n"), msum("value").alias("value_sum"))
             .select(F.col("window.start").alias("window_start"), "n", "value_sum")
         )
 
@@ -185,7 +185,7 @@ def stream_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(src: DataFrame) -> DataFrame:
         return src.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("value_sum")
+            F.count(F.lit(1)).alias("n"), msum("value").alias("value_sum")
         )
 
     return run_to_table(spark, sf_dir, "stream_global_agg", build)

@@ -137,7 +137,7 @@ def test_msum_twin_matches_duckdb_for_any_2dp_input(spark, vals):
     fvals = [float(v) for v in vals]
     got = (
         _df(spark, [(0, "", v) for v in fvals])
-        .agg(msum(F.col("value")).alias("s"))
+        .agg(msum("value").alias("s"))
         .collect()[0]["s"]
     )
     con = duckdb.connect()
@@ -538,42 +538,42 @@ def test_shuffle_epochs_reproducible_and_permutes(spark):
 
 
 def test_msum_fast_path_matches_decimal_form(spark):
-    """r10 msum optimization gate: the long-mantissa fast path must be
-    bit-identical to the DECIMAL(30,8)-accumulation form it replaced.
+    """The long-mantissa money sum must be bit-identical to the
+    DECIMAL(30,8)-accumulation form it replaced.
 
     Checks both layers on real fixture data (every lineitem row at SF_DIR):
-    (a) per-row: round(c*1e8) half-away-from-zero == unscaled value of
-        cast(c as decimal(30,8)) for each Q1 measure incl. the 6dp-exact
+    (a) per-row: the (hi, lo) split rebuilds hi·3e6 + lo == unscaled value
+        of cast(c as decimal(30,8)) for each Q1 measure incl. the 6dp-exact
         products — zero mismatches tolerated;
     (b) aggregated: Q1-shaped msum group results equal the decimal form
         cell-for-cell (string compare — catches any dtype/repr drift).
     Also pins the negative-value branch with a constructed frame.
     """
-    from atlas_migration_repo_spark.catalog import _mantissa8, as_date, load, msum
+    from atlas_migration_repo_spark.catalog import as_date, load, msum, msum_parts_sql
 
     li = load(spark, SF_DIR, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    disc_price = "l_extendedprice * (1 - l_discount)"
     measures = {
-        "qty": F.col("l_quantity"),
-        "ext": F.col("l_extendedprice"),
+        "qty": "l_quantity",
+        "ext": "l_extendedprice",
         "dp": disc_price,
-        "ch": charge,
+        "ch": f"{disc_price} * (1 + l_tax)",
     }
     checks = []
-    for tag, c in measures.items():
+    for tag, e in measures.items():
+        c = F.expr(e)
         dec_m = (c.cast("decimal(30,8)") * 100000000).cast("decimal(38,0)").cast("bigint")
-        checks.append(
-            F.sum(F.when(dec_m != _mantissa8(c), 1).otherwise(0)).alias(tag)
-        )
+        hi, lo = msum_parts_sql(e)
+        m = F.expr(f"{hi} * 3000000 + {lo}")
+        checks.append(F.sum(F.when(dec_m != m, 1).otherwise(0)).alias(tag))
     row = li.agg(*checks).collect()[0]
     assert all(v == 0 for v in row), f"per-row mantissa drift: {row.asDict()}"
 
-    def msum_decimal(c):
-        return F.sum(c.cast("decimal(30,8)")).cast("decimal(38,4)").cast("double")
+    def msum_decimal(e):
+        return F.sum(F.expr(e).cast("decimal(30,8)")).cast("decimal(38,4)").cast("double")
 
     def q1(agg_fn):
-        aggs = [agg_fn(c).alias(tag) for tag, c in measures.items()]
+        aggs = [agg_fn(e).alias(tag) for tag, e in measures.items()]
         return (
             li.where(as_date(F.col("l_shipdate")) <= F.lit("2001-09-02").cast("date"))
             .groupBy("l_returnflag", "l_linestatus")
@@ -589,85 +589,85 @@ def test_msum_fast_path_matches_decimal_form(spark):
         [(1, -999.99), (1, -0.01), (1, 123.45), (2, -500.55), (2, 0.0)],
         "k int, v double",
     )
-    got = {
-        r["k"]: str(r["s"])
-        for r in neg.groupBy("k").agg(msum(F.col("v")).alias("s")).collect()
-    }
+    got = {r["k"]: str(r["s"]) for r in neg.groupBy("k").agg(msum("v").alias("s")).collect()}
     want = {
         r["k"]: str(r["s"])
-        for r in neg.groupBy("k").agg(msum_decimal(F.col("v")).alias("s")).collect()
+        for r in neg.groupBy("k").agg(msum_decimal("v").alias("s")).collect()
     }
     assert got == want
 
 
 def test_msum_family_matches_decimal_forms(spark):
-    """r11 decimal-site conversion gate (VERDICT r10 "next" #4): each new
-    mantissa helper must be bit-identical to the DECIMAL(30,8) form it
-    replaced, on real fixture data AND a constructed negative-value frame.
+    """Every msum output form must be bit-identical to the DECIMAL(30,8)
+    form it stands for, on real fixture data AND a constructed
+    negative-value frame.
 
-    - msum8      vs SUM(CAST(c AS DEC(30,8)))::DOUBLE            (no 4dp round)
-    - msum8 dp=4 vs the same, for a 4dp-exact >1e9-magnitude product
-    - msum_dec   vs SUM(CAST(c AS DEC(30,8))) — value AND dtype, and the
-                 downstream decimal division agg_weighted_avg relies on
-    - msum_over  vs SUM(CAST(...)) OVER w → DEC(38,4) → DOUBLE and the
-                 ROUND(...,4)::DOUBLE spelling (same HALF_UP)
-    - the LOO subtraction identity (Σm − m_row)·1e-8 vs (gsum − dec_row)
+    - out="double"        vs SUM(CAST(c AS DEC(30,8)))::DOUBLE     (no 4dp round)
+    - out="double", dp=4  vs the same, for a 4dp-exact >1e9-magnitude product
+    - out="decimal"       vs SUM(CAST(c AS DEC(30,8))) — value AND dtype, and
+                          the downstream decimal division agg_weighted_avg
+                          relies on
+    - over=<window>       vs SUM(CAST(...)) OVER w → DEC(38,4) → DOUBLE and the
+                          ROUND(...,4)::DOUBLE spelling (same HALF_UP)
+    - the LOO finish (Σm − m_row)·1e-8 vs (gsum − dec_row)
     """
     from pyspark.sql import Window
 
     from atlas_migration_repo_spark.catalog import (
-        _mantissa8,
-        _msum_parts,
-        _msum_total,
         load,
-        msum8,
-        msum_dec,
-        msum_over,
+        msum,
+        msum_finish_sql,
+        msum_parts_sql,
     )
 
     li = load(spark, SF_DIR, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    q = F.col("l_quantity")
+    disc_price = "l_extendedprice * (1 - l_discount)"
 
-    # --- msum8 (group + global), incl. negative frame ---
-    def dec8(c):
-        return F.sum(c.cast("decimal(30,8)")).cast("double")
+    # --- out="double" (group + global), incl. negative frame ---
+    def dec8(e):
+        return F.sum(F.expr(e).cast("decimal(30,8)")).cast("double")
 
     for df, key in ((li, "l_returnflag"),):
-        for c in (disc_price, q * q * q * q):
-            old = {r[0]: str(r[1]) for r in df.groupBy(key).agg(dec8(c)).collect()}
-            new = {r[0]: str(r[1]) for r in df.groupBy(key).agg(msum8(c)).collect()}
+        for e in (disc_price, "l_quantity * l_quantity * l_quantity * l_quantity"):
+            old = {r[0]: str(r[1]) for r in df.groupBy(key).agg(dec8(e)).collect()}
+            new = {
+                r[0]: str(r[1])
+                for r in df.groupBy(key).agg(msum(e, out="double")).collect()
+            }
             assert old == new
     neg = spark.createDataFrame(
         [(1, -999.99), (1, -0.01), (1, 123.45), (2, -500.55), (2, 0.0)],
         "k int, v double",
     )
-    assert [str(r[0]) for r in neg.agg(msum8(F.col("v"))).collect()] == [
-        str(r[0]) for r in neg.agg(dec8(F.col("v"))).collect()
+    assert [str(r[0]) for r in neg.agg(msum("v", out="double")).collect()] == [
+        str(r[0]) for r in neg.agg(dec8("v")).collect()
     ]
 
-    # --- msum8 dp=4: 4dp-exact values far beyond the 8dp grid's range ---
+    # --- dp=4: 4dp-exact values far beyond the 8dp grid's range ---
     big = spark.createDataFrame(
         [(1, 9876.5432, 2_600_000), (1, 0.0001, 1_999_999), (2, -123.4567, 3)],
         "k int, v double, w long",
     )
-    prod = F.col("v") * F.col("w")
-    old = {r[0]: str(r[1]) for r in big.groupBy("k").agg(dec8(prod)).collect()}
-    new = {r[0]: str(r[1]) for r in big.groupBy("k").agg(msum8(prod, dp=4)).collect()}
+    old = {r[0]: str(r[1]) for r in big.groupBy("k").agg(dec8("v * w")).collect()}
+    new = {
+        r[0]: str(r[1])
+        for r in big.groupBy("k").agg(msum("v * w", out="double", dp=4)).collect()
+    }
     assert old == new
 
-    # --- msum_dec: value, dtype, and a downstream decimal division ---
-    def decsum(c):
-        return F.sum(c.cast("decimal(30,8)"))
+    # --- out="decimal": value, dtype, and a downstream decimal division ---
+    def decsum(e):
+        return F.sum(F.expr(e).cast("decimal(30,8)"))
 
     a = li.groupBy("l_returnflag").agg(decsum(disc_price).alias("s"))
-    b = li.groupBy("l_returnflag").agg(msum_dec(disc_price).alias("s"))
+    b = li.groupBy("l_returnflag").agg(msum(disc_price, out="decimal").alias("s"))
     assert a.schema["s"].dataType.simpleString() == b.schema["s"].dataType.simpleString()
     assert {r[0]: str(r[1]) for r in a.collect()} == {
         r[0]: str(r[1]) for r in b.collect()
     }
-    num_old, den_old = decsum(F.col("l_extendedprice") * q), decsum(q)
-    num_new, den_new = msum_dec(F.col("l_extendedprice") * q), msum_dec(q)
+    num_old, den_old = decsum("l_extendedprice * l_quantity"), decsum("l_quantity")
+    num_new = msum("l_extendedprice * l_quantity", out="decimal")
+    den_new = msum("l_quantity", out="decimal")
     old = {
         r[0]: str(r[1])
         for r in li.groupBy("l_returnflag")
@@ -682,7 +682,7 @@ def test_msum_family_matches_decimal_forms(spark):
     }
     assert old == new
 
-    # --- msum_over vs both decimal window spellings ---
+    # --- windowed msum vs both decimal window spellings ---
     ev = load(spark, SF_DIR, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, 0)
     trip = ev.select(
@@ -695,14 +695,20 @@ def test_msum_family_matches_decimal_forms(spark):
         F.round(F.sum(F.col("value").cast("decimal(30,8)")).over(w), 4)
         .cast("double")
         .alias("b"),
-        msum_over(F.col("value"), w).alias("c"),
+        msum(
+            "value",
+            over="PARTITION BY user_id ORDER BY ts, event_id"
+            " ROWS BETWEEN 3 PRECEDING AND CURRENT ROW",
+        ).alias("c"),
     ).collect()
     for r in trip:
         assert str(r["a"]) == str(r["b"]) == str(r["c"]), r
 
-    # --- LOO identity: (Σm − m_row)·1e-8 == (gsum_dec − dec_row) ---
-    hi, lo = _msum_parts(F.col("value"))
-    g_new = ev.groupBy("event_type").agg(_msum_total(F.sum(hi), F.sum(lo)).alias("gm"))
+    # --- LOO finish: (Σm − m_row)·1e-8 == (gsum_dec − dec_row) ---
+    hi, lo = msum_parts_sql("value")
+    g_new = ev.groupBy("event_type").agg(
+        F.expr(f"SUM({hi})").alias("gh"), F.expr(f"SUM({lo})").alias("gl")
+    )
     g_old = ev.groupBy("event_type").agg(
         F.sum(F.col("value").cast("decimal(30,8)")).alias("gs")
     )
@@ -710,14 +716,154 @@ def test_msum_family_matches_decimal_forms(spark):
         ev.join(F.broadcast(g_new), "event_type")
         .join(F.broadcast(g_old), "event_type")
         .select(
-            (
-                (F.col("gm") - _mantissa8(F.col("value")))
-                * F.lit("0.00000001").cast("decimal(8,8)")
-            ).cast("double").alias("new"),
+            F.expr(msum_finish_sql("gh", "gl", out="double", minus="value")).alias("new"),
             (F.col("gs") - F.col("value").cast("decimal(30,8)")).cast("double").alias("old"),
         )
     )
     assert j.where(F.col("new") != F.col("old")).count() == 0
+
+
+def _edge_values(rnd, places, lo, hi, n):
+    """n signed ``places``-dp-exact Decimals with lo ≤ |v|·10^places < hi."""
+    from decimal import Decimal
+
+    return [
+        Decimal(rnd.randrange(lo, hi)).scaleb(-places) * rnd.choice((1, -1))
+        for _ in range(n)
+    ]
+
+
+def test_msum_overflow_edges_match_decimal_forms(spark):
+    """Drive msum_sql to the budget its docstring states, |expr·10^dp| just
+    under 2e15 on both signs: 6dp-exact values just under |2e7| at dp=8,
+    4dp-exact values just under |2e11| at dp=4, and groups mixing those
+    with cent-sized and money-sized 2dp values. Every ``out`` form must equal
+    its DECIMAL(30,8) reference; per row, the (hi, lo) split must rebuild
+    the decimal mantissa within the stated bounds |hi| < 6.7e8, |lo| < 3e6
+    (|hi| ≤ 4.4e6 at money magnitudes). Past the budget (6dp values near
+    |1e9| at dp=8) the per-row mantissa is not exact, which is why the
+    contract stops at 2e15."""
+    import random
+
+    from atlas_migration_repo_spark.catalog import msum, msum_parts_sql
+
+    rnd = random.Random(20261017)
+    edge8 = _edge_values(rnd, 6, 19_990_000 * 10**6, 2 * 10**13, 60)
+    edge4 = _edge_values(rnd, 4, 199_900_000_000 * 10**4, 2 * 10**15, 60)
+    money = _edge_values(rnd, 2, 1, 13_000_000, 60)
+    cents = _edge_values(rnd, 2, 1, 100, 20)
+    cases = {
+        8: edge8 + money + cents,
+        4: edge4 + money + cents,
+    }
+    refs = {
+        "r4": "CAST(ROUND(SUM(CAST(v AS DECIMAL(30,8))), 4) AS DOUBLE)",
+        "double": "CAST(SUM(CAST(v AS DECIMAL(30,8))) AS DOUBLE)",
+        "decimal": "SUM(CAST(v AS DECIMAL(30,8)))",
+    }
+    for dp, vals in cases.items():
+        rnd.shuffle(vals)
+        # groups: pure edge, mixed, and one holding every value
+        rows = [(i % 4, float(v)) for i, v in enumerate(vals)]
+        rows += [(9, float(v)) for v in vals]
+        df = spark.createDataFrame(rows, "k int, v double")
+        for out, ref in refs.items():
+            got = df.groupBy("k").agg(msum("v", out=out, dp=dp).alias("s"))
+            want = df.groupBy("k").agg(F.expr(ref).alias("s"))
+            assert got.schema["s"].dataType == want.schema["s"].dataType, out
+            assert {r[0]: str(r[1]) for r in got.collect()} == {
+                r[0]: str(r[1]) for r in want.collect()
+            }, (dp, out)
+        hi, lo = msum_parts_sql("v", dp)
+        parts = df.select(
+            F.expr(hi).alias("hi"),
+            F.expr(lo).alias("lo"),
+            F.expr(f"{hi} * 3000000 + {lo}").alias("m"),
+            (F.col("v").cast("decimal(30,8)") * 10**dp)
+            .cast("decimal(38,0)")
+            .cast("bigint")
+            .alias("dec_m"),
+            F.abs("v").alias("a"),
+        ).collect()
+        for r in parts:
+            assert r["m"] == r["dec_m"], r
+            assert abs(r["hi"]) < 6.7e8 and abs(r["lo"]) < 3_000_000, r
+            if r["a"] <= 1.3e5:
+                assert abs(r["hi"]) <= 4.4e6, r
+    # the long sums' row budget at the per-row maximum
+    assert (2**63 - 1) // int(2e15 / 3e6) > 1.3e10
+
+    # past the budget: near |1e9| the 8dp product's ulp is 16 units
+    far = _edge_values(rnd, 6, 999_000_000 * 10**6, 10**15, 40)
+    hi, lo = msum_parts_sql("v")
+    drift = (
+        spark.createDataFrame([(float(v),) for v in far], "v double")
+        .where(
+            F.expr(f"{hi} * 3000000 + {lo}")
+            != (F.col("v").cast("decimal(30,8)") * 10**8)
+            .cast("decimal(38,0)")
+            .cast("bigint")
+        )
+        .count()
+    )
+    assert drift > 0
+
+
+def test_no_spark_side_decimal_money_accumulation():
+    """Money sums on the Spark side come from catalog.msum_sql: no function
+    body spells decimal(30,8) except the DuckDB twin (oracle.py) and the
+    Delta-CDC state column of refresh_delta_group_mv, and no module but
+    catalog.py names a private mantissa helper (``_mantissa*`` /
+    ``_msum*``). Oracle strings (decorator arguments) and docstrings are
+    left out of the scan."""
+    import ast
+    import pathlib
+
+    import atlas_migration_repo_spark
+
+    root = pathlib.Path(atlas_migration_repo_spark.__file__).parent
+    hits, private = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        if rel != "catalog.py":
+            private += [
+                f"{rel}:{n.lineno} {name}"
+                for n in ast.walk(tree)
+                for name in (
+                    [n.id] if isinstance(n, ast.Name)
+                    else [n.attr] if isinstance(n, ast.Attribute)
+                    else [a.name for a in n.names] if isinstance(n, ast.ImportFrom)
+                    else []
+                )
+                if name.startswith(("_mantissa", "_msum"))
+            ]
+        if rel == "oracle.py":
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if fn.name == "refresh_delta_group_mv":
+                continue
+            body = fn.body
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                body = body[1:]
+            hits += [
+                f"{rel}:{n.lineno} {fn.name}"
+                for stmt in body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "decimal(30,8)" in n.value.lower()
+            ]
+    assert not hits, hits
+    assert not private, private
+    # sql_exec_immediate embeds the text in a single-quoted literal
+    from atlas_migration_repo_spark.catalog import msum_sql
+
+    for out in ("r4", "double", "decimal"):
+        for dp in (8, 4):
+            assert "'" not in msum_sql("v", out=out, dp=dp, over="PARTITION BY k")
 
 
 @given(

@@ -67,7 +67,7 @@ def main():
             ).option("pathGlobFilter", "events.parquet").parquet(sf_dir)
             out = (
                 src.groupBy(F.window("ts", "1 hour"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"), msum(F.col("value")).alias("value_sum"))
+                .agg(F.count(F.lit(1)).alias("n"), msum("value").alias("value_sum"))
                 .select(F.col("window.start").alias("window_start"), "event_type", "n", "value_sum")
             )
             noop(out)
