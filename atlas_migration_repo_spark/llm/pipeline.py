@@ -7,7 +7,7 @@ is the integration test of the whole §2.10 family.
 
 Scale shape: the quality filter is a scan-level projection (no shuffle);
 exact dedup is one hash-groupBy; the near-dup canonical set comes from
-dedup_clusters (inverted-index pair join + iterative min-label CC) and
+dedup_clusters (pair join + min-label CC, one edge shuffle per round) and
 is joined back as a left-semi — at 100 TB the semi join's right side is
 the canonical-id list, orders of magnitude smaller than the corpus.
 """

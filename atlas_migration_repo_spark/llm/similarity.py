@@ -1341,20 +1341,16 @@ def embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-cosine near-dup pair graph (dedup_embed's LSH-pruned pairs),
     cluster id = min vec_id, one canonical vector per cluster — the
     operator that actually deduplicates an embedding corpus when A~B~C
-    but A≁C. Same iterative min-label propagation as the text-side
-    dedup_clusters (one edge-list shuffle per round, localCheckpoint
-    lineage truncation, O(log diameter) rounds); the DuckDB oracle
+    but A≁C. Same `min_label_components` call as the text-side
+    dedup_clusters (the LSH+cosine pair plan runs once, one edge-list
+    shuffle per round, O(log diameter) rounds); the DuckDB oracle
     replays the components via a recursive-CTE transitive closure over
     the exact pair set, which equals the LSH pair set at recall 1.0."""
     from atlas_migration_repo_spark.llm.dedup import min_label_components
 
-    pairs = dedup_embed(spark, sf_dir).select("va", "vb")
-    edges = pairs.unionByName(
-        pairs.select(F.col("vb").alias("va"), F.col("va").alias("vb"))
-    ).persist()
-    lab = min_label_components(edges, "va", "vb")
+    lab = min_label_components(dedup_embed(spark, sf_dir), "va", "vb")
     em = load(spark, sf_dir, "embeddings").select("vec_id")
-    out = (
+    return (
         em.join(lab, em.vec_id == lab.id, "left")
         .select(
             "vec_id",
@@ -1362,8 +1358,6 @@ def embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("is_canonical", F.col("cluster_id") == F.col("vec_id"))
     )
-    edges.unpersist()
-    return out
 
 
 _SQL_DIST_TO_CENT = (
