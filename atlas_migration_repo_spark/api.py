@@ -60,6 +60,9 @@ class AtlasEngine:
         sf_dir: str | None = None,
         app_name: str = "atlas-engine",
     ) -> None:
+        """A ``spark`` passed in keeps its own static confs, e.g. DataFrame
+        origin capture, which ``get_spark`` turns off but which cannot be
+        changed once a session exists."""
         self.spark = spark or get_spark(app_name=app_name)
         self.sf_dir = sf_dir if sf_dir is not None else _default_sf_dir()
         self._views_registered = False

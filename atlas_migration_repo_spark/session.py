@@ -21,9 +21,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the shared SparkSession.
 
-    Env overrides: SPARK_GRAFT_CPUS → local[N]; defaults tuned for the
-    local[*] test box while staying valid on a 1000-executor cluster
-    (everything here is per-session config, not hardware assumptions).
+    Env overrides: SPARK_GRAFT_CPUS → local[N], SPARK_GRAFT_SHUFFLE →
+    spark.sql.shuffle.partitions, SPARK_GRAFT_DRIVER_MEM →
+    spark.driver.memory; defaults tuned for the local[*] test box while
+    staying valid on a 1000-executor cluster (everything here is
+    per-session config, not hardware assumptions).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -63,5 +65,7 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushDown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Origin capture: ~10 py4j trips/call + IPython import; errors lose only file:line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()

@@ -217,6 +217,57 @@ def test_s3a_config_helper(spark):
         configure_s3(spark, "bad/bucket")
 
 
+def _sent_commands(spark, build):
+    """Run ``build`` and return the py4j commands it sent from this thread,
+    counted by wrapping the gateway client's ``send_command``."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, sent = client.send_command, threading.get_ident(), []
+
+    def send_command(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        build()
+    finally:
+        client.send_command = send
+    return sent
+
+
+def test_session_skips_dataframe_origin_capture(spark):
+    """get_spark turns off PySpark's per-call DataFrame origin capture, so
+    building a Column or a query plan pays no wrapper round trips."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    F.col("warm") + 1  # the first call also resolves the JVM classes
+    sent = _sent_commands(spark, lambda: F.col("x") + 1)
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+    assert len(sent) <= 4, len(sent)
+    sent = _sent_commands(spark, lambda: QUERIES["agg_pricing_summary"].fn(spark, SF_DIR))
+    assert len(sent) <= 160, len(sent)
+
+
+def test_runtime_error_keeps_condition_without_origin_capture(spark):
+    """Without origin capture a runtime error still carries its condition
+    and the operation name in its DataFrame context; only the Python
+    file:line is gone."""
+    from pyspark.errors import ArithmeticException, QueryContextType
+
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.col("id") / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    ctx = [
+        c
+        for c in err.value.getQueryContext()
+        if c.contextType() == QueryContextType.DataFrame
+    ]
+    assert ctx and ctx[0].fragment(), [c.summary() for c in ctx]
+    assert f'"{ctx[0].fragment()}" was called from' in ctx[0].summary()
+
+
 def test_airflow_dag_spec_generator():
     """The DAG-spec generator must emit a JSON-pure, acyclic
     extract->transform->load chain per object with watermark-driven
