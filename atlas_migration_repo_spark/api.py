@@ -61,8 +61,9 @@ class AtlasEngine:
         app_name: str = "atlas-engine",
     ) -> None:
         """A ``spark`` passed in keeps its own static confs, e.g. DataFrame
-        origin capture, which ``get_spark`` turns off but which cannot be
-        changed once a session exists."""
+        origin capture, which ``get_spark`` turns off, and the generated-class
+        cache size (``spark.sql.codegen.cache.maxEntries``), which it raises;
+        neither can be changed once a session exists."""
         self.spark = spark or get_spark(app_name=app_name)
         self.sf_dir = sf_dir if sf_dir is not None else _default_sf_dir()
         self._views_registered = False

@@ -67,5 +67,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # Origin capture: ~10 py4j trips/call + IPython import; errors lose only file:line.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Codegen LRU (default 100): an olap_llm pass cycles 103-131 classes, 14 bench keys ~215; 0 = off.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     return builder.getOrCreate()
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes compiled so far in this JVM (Spark's CodegenMetrics);
+    a repeat run whose classes sit in the codegen cache adds none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

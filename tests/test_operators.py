@@ -250,6 +250,34 @@ def test_session_skips_dataframe_origin_capture(spark):
     assert len(sent) <= 160, len(sent)
 
 
+def test_session_codegen_cache_holds_repeat_working_set(spark):
+    """get_spark sizes the generated-class cache above a pass's working set,
+    so a repeat run of the perfbench olap_llm keys recompiles (almost) no
+    classes; at Spark's default of 100 entries the LRU evicts each class
+    before it comes round again and the second round recompiles 125-148."""
+    from atlas_migration_repo_spark.session import compiled_classes
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    keys = (
+        "agg_pricing_summary",
+        "q3_shipping_priority",
+        "q9_product_profit",
+        "join_asof",
+        "pipeline_corpus_clean",
+        "multimodal_resize_ppm",
+    )
+
+    def one_round():
+        for k in keys:
+            QUERIES[k].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    one_round()
+    before = compiled_classes(spark)
+    one_round()
+    compiled = compiled_classes(spark) - before
+    assert compiled <= 10, compiled
+
+
 def test_runtime_error_keeps_condition_without_origin_capture(spark):
     """Without origin capture a runtime error still carries its condition
     and the operation name in its DataFrame context; only the Python
