@@ -53,19 +53,23 @@ from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
+    Footer,
+    StagedFile,
     attach_partition_values,
+    file_footer,
     file_path_col,
     scratch_path,
+    stage_write,
     table_file_stream,
 )
 from atlas_migration_repo_spark.sources.table_log import (
     LogStore,
     TableLog,
+    log_stats,
     resolve_log_store,
 )
 from atlas_migration_repo_spark.streaming.harness import drain
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
@@ -385,22 +389,17 @@ def _current_meta(path: str) -> dict | None:
 # ---------------------------------------------------------------------------
 # writer
 # ---------------------------------------------------------------------------
-def _delta_stats(file_path: str) -> str:
+def _add_stats(footer: Footer) -> str:
     """Delta-style per-file stats JSON STRING for the add action:
-    numRecords from the parquet footer plus the same min/max/nullCount
-    envelope TableLog harvests (footer-only — no data scan). Stats cover
-    table columns only: a CDF merge's data files also carry the feed's
-    all-null `_change_type` column (a name the protocol reserves on CDF
-    tables), which is left out."""
-    import pyarrow.parquet as pq
-
-    st = TableLog._file_stats(file_path)
+    numRecords plus the same min/max/nullCount envelope TableLog records
+    (footer-only — no data scan). Stats cover table columns only: a CDF
+    merge's data files also carry the feed's all-null `_change_type`
+    column (a name the protocol reserves on CDF tables), which is left
+    out."""
+    st = log_stats(footer)
     for per_col in st.values():
         per_col.pop("_change_type", None)
-    try:
-        st["numRecords"] = pq.ParquetFile(file_path).metadata.num_rows
-    except Exception:
-        pass
+    st["numRecords"] = footer.num_rows
     return json.dumps(st, sort_keys=True)
 
 
@@ -410,80 +409,59 @@ def _cdf_enabled(meta: dict | None) -> bool:
     ) == "true"
 
 
-def _write_stage(
+def _stage(
     path: str, df: DataFrame, mapping: dict[str, str], partition_by: list[str]
-) -> str:
-    """Write a LOGICAL DataFrame bound for the table as parquet into a
-    fresh stage dir under `path` (hive dirs per `partition_by`) and
-    return the stage path. Under a logical → physical column `mapping`
-    (columnMapping tables) data files, partition dirs (hence
-    partitionValues) and stats carry PHYSICAL names; names that are not
-    table columns (`_change_type`, `__is_cdc`) stay literal."""
+):
+    """`stage_write` of a LOGICAL DataFrame bound for the table. Under a
+    logical → physical column `mapping` (columnMapping tables) data
+    files, partition dirs (hence partitionValues) and stats carry
+    PHYSICAL names; names that are not table columns (`_change_type`,
+    `__is_cdc`) stay literal."""
     if mapping:
         df = df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
         partition_by = [mapping.get(c, c) for c in partition_by]
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(stage)
-    return stage
+    return stage_write(df, path, partition_by)
 
 
-def _harvest_stage(
+def _land(
     path: str,
-    stage: str,
+    leaves: list[StagedFile],
     now_ms: int,
     data_change: bool = True,
     cdc: bool = False,
 ) -> list[dict]:
-    """Move every parquet file a Spark write left under `stage` into the
-    table, preserving hive key=value subdirs and decoding them into
-    partitionValues, and return one action per file — the shared tail
-    of every data-writing commit. Data files land under the table root
-    as `add` actions; with `cdc=True` change files land under
+    """Move staged files into the table under Delta-style unique names,
+    keeping their hive dirs, and return one action per file — the shared
+    tail of every data-writing commit. Data files land under the table
+    root as `add` actions; with `cdc=True` change files land under
     `_change_data/` as the protocol's `cdc` actions (dataChange=false —
     change files are derived, not table data; zero-row files skipped).
-    The stage dir is removed whatever happens."""
-    import pyarrow.parquet as pq
-
+    The `__is_cdc` dir a CDF merge splits its one write by is no table
+    partition: it is left out of the dirs and partitionValues."""
     actions: list[dict] = []
-    try:
-        for dirpath, _dirs, names in os.walk(stage):
-            reldir = os.path.relpath(dirpath, stage)
-            parts = [] if reldir == "." else reldir.split(os.sep)
-            pvals: dict[str, str | None] = {}
-            for part in parts:
-                if "=" in part:
-                    k, v = part.split("=", 1)
-                    pvals[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
-            dest_dir = os.path.join(path, *(["_change_data"] if cdc else []), *parts)
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                if cdc and pq.ParquetFile(src).metadata.num_rows == 0:
-                    continue
-                os.makedirs(dest_dir, exist_ok=True)
-                prefix = "cdc" if cdc else "part"
-                dest = os.path.join(
-                    dest_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet"
-                )
-                os.rename(src, dest)
-                entry = {
-                    "path": urllib.parse.quote(os.path.relpath(dest, path)),
-                    "partitionValues": dict(pvals),
-                    "size": os.path.getsize(dest),
-                    "dataChange": data_change and not cdc,
-                }
-                if cdc:
-                    actions.append({"cdc": entry})
-                else:
-                    entry["modificationTime"] = now_ms
-                    entry["stats"] = _delta_stats(dest)
-                    actions.append({"add": entry})
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    for leaf in leaves:
+        if cdc and leaf.footer.num_rows == 0:
+            continue
+        segs = [s for s in leaf.segments if not s.startswith("__is_cdc=")]
+        dest_dir = os.path.join(path, *(["_change_data"] if cdc else []), *segs)
+        os.makedirs(dest_dir, exist_ok=True)
+        prefix = "cdc" if cdc else "part"
+        dest = os.path.join(dest_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet")
+        os.rename(leaf.path, dest)
+        entry = {
+            "path": urllib.parse.quote(os.path.relpath(dest, path)),
+            "partitionValues": {
+                k: v for k, v in leaf.values.items() if k != "__is_cdc"
+            },
+            "size": os.path.getsize(dest),
+            "dataChange": data_change and not cdc,
+        }
+        if cdc:
+            actions.append({"cdc": entry})
+        else:
+            entry["modificationTime"] = now_ms
+            entry["stats"] = _add_stats(leaf.footer)
+            actions.append({"add": entry})
     return actions
 
 
@@ -644,9 +622,9 @@ def write_delta(
                 new_phys[f.name] = f"col-{uuid.uuid4().hex[:12]}"
         mapping.update(new_phys)
 
-    stage = _write_stage(path, df, mapping, partition_by)
-    now_ms = int(time.time() * 1000)
-    adds = _harvest_stage(path, stage, now_ms)
+    with _stage(path, df, mapping, partition_by) as leaves:
+        now_ms = int(time.time() * 1000)
+        adds = _land(path, leaves, now_ms)
 
     actions: list[dict] = [
         {
@@ -1494,7 +1472,6 @@ def merge_delta(
             }
         }
     ]
-    cdc_stage = None
     if _cdf_enabled(meta):
 
         def out(side: str | None, change_type: str | None) -> str:
@@ -1512,18 +1489,13 @@ def merge_delta(
             f"CASE WHEN __t IS NULL THEN {out('s', 'insert')} END"
             "), r -> r IS NOT NULL))"
         )
-        stage = _write_stage(
-            path, rows, _column_mapping(meta), ["__is_cdc", *pcols]
-        )
-        data_stage = os.path.join(stage, "__is_cdc=false")
-        cdc_stage = os.path.join(stage, "__is_cdc=true")
+        staged = _stage(path, rows, _column_mapping(meta), ["__is_cdc", *pcols])
     else:
-        stage = data_stage = _write_stage(
-            path, merged, _column_mapping(meta), pcols
-        )
-    try:
-        if cdc_stage:
-            actions.extend(_harvest_stage(path, cdc_stage, now_ms, cdc=True))
+        staged = _stage(path, merged, _column_mapping(meta), pcols)
+    with staged as leaves:
+        changes = [f for f in leaves if f.values.get("__is_cdc") == "true"]
+        data = [f for f in leaves if f.values.get("__is_cdc") != "true"]
+        actions.extend(_land(path, changes, now_ms, cdc=True))
         for a in touched_adds:
             actions.append(
                 {
@@ -1534,9 +1506,7 @@ def merge_delta(
                     }
                 }
             )
-        actions.extend(_harvest_stage(path, data_stage, now_ms))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        actions.extend(_land(path, data, now_ms))
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -1622,8 +1592,8 @@ def delete_delta_range(
         ).where(F.col(column).between(F.lit(lo), F.lit(hi))).select(
             *[f.name for f in schema.fields]
         ).withColumn("_change_type", F.lit("delete"))
-        stage = _write_stage(path, deleted, _column_mapping(meta), pcols)
-        actions.extend(_harvest_stage(path, stage, now_ms, cdc=True))
+        with _stage(path, deleted, _column_mapping(meta), pcols) as leaves:
+            actions.extend(_land(path, leaves, now_ms, cdc=True))
     for a in drop_whole + rewrite:
         actions.append(
             {
@@ -1644,8 +1614,8 @@ def delete_delta_range(
         ).where(~F.col(column).between(F.lit(lo), F.lit(hi))).select(
             *[f.name for f in schema.fields]
         )
-        stage = _write_stage(path, survivors, _column_mapping(meta), pcols)
-        actions.extend(_harvest_stage(path, stage, now_ms))
+        with _stage(path, survivors, _column_mapping(meta), pcols) as leaves:
+            actions.extend(_land(path, leaves, now_ms))
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -2092,10 +2062,8 @@ def delete_delta_dv(spark: SparkSession, path: str, predicate: str) -> int:
         cdf = matched.select(*[f.name for f in schema.fields]).withColumn(
             "_change_type", F.lit("delete")
         )
-        stage = _write_stage(
-            path, cdf, _column_mapping(meta), meta.get("partitionColumns") or []
-        )
-        actions.extend(_harvest_stage(path, stage, now_ms, cdc=True))
+        with _stage(path, cdf, _column_mapping(meta), pcols) as leaves:
+            actions.extend(_land(path, leaves, now_ms, cdc=True))
     for rel, a in by_rel.items():
         if abs_of[rel] not in touched_abs:
             continue
@@ -2153,7 +2121,8 @@ def purge_delta_dv(spark: SparkSession, path: str) -> int:
     if not pcols:
         df = df.coalesce(max(1, len(dv_adds)))
     now_ms = int(time.time() * 1000)
-    stage = _write_stage(path, df, _column_mapping(meta), pcols)
+    with _stage(path, df, _column_mapping(meta), pcols) as leaves:
+        adds = _land(path, leaves, now_ms, data_change=False)
     actions: list[dict] = [
         {
             "commitInfo": {
@@ -2173,7 +2142,7 @@ def purge_delta_dv(spark: SparkSession, path: str) -> int:
                 }
             }
         )
-    actions.extend(_harvest_stage(path, stage, now_ms, data_change=False))
+    actions.extend(adds)
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -2298,7 +2267,8 @@ def optimize_delta(
     else:
         df = df.repartition(*pcols) if pcols else df.coalesce(target_files)
     now_ms = int(time.time() * 1000)
-    stage = _write_stage(path, df, _column_mapping(meta), pcols)
+    with _stage(path, df, _column_mapping(meta), pcols) as leaves:
+        adds = _land(path, leaves, now_ms, data_change=False)
     op_params: dict = {"targetFiles": target_files}
     if zorder_by:
         op_params["zOrderBy"] = json.dumps(zorder_by)
@@ -2321,7 +2291,7 @@ def optimize_delta(
                 }
             }
         )
-    actions.extend(_harvest_stage(path, stage, now_ms, data_change=False))
+    actions.extend(adds)
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
 
@@ -3047,7 +3017,7 @@ def _delta_state_from_iceberg(path: str):
             "size": f["file_size_in_bytes"],
             "modificationTime": int(os.path.getmtime(fp) * 1000),
             "dataChange": True,
-            "stats": _delta_stats(fp),
+            "stats": _add_stats(file_footer(fp)),
         }
     return spark_schema, identity, adds_by_rel
 

@@ -16,7 +16,11 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
+import urllib.parse
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -180,6 +184,96 @@ def table_file_stream(
     the streaming DataFrame over the table at `root`."""
     spark.dataSource.register(table_file_source(name, ddl, latest, added))
     return spark.readStream.format(name).option("path", root).load()
+
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+class ColumnFooter(NamedTuple):
+    """One column's statistics across a parquet file's row groups."""
+
+    min: object  # raw footer value; None when no row group has min/max
+    max: object
+    null_count: int | None  # summed over the row groups that report one
+    complete: bool  # every row group carries min and max
+
+
+class Footer(NamedTuple):
+    num_rows: int
+    columns: dict[str, ColumnFooter]  # keyed by path_in_schema
+
+
+class StagedFile(NamedTuple):
+    path: str  # the file under the stage dir
+    segments: list[str]  # raw hive dirs below the stage, e.g. ["p=a%2Fb"]
+    values: dict[str, str | None]  # the segments decoded
+    footer: Footer
+
+
+def file_footer(path: str) -> Footer:
+    """Row count and per-column statistics of one parquet file, read from
+    its footer in one open (no data scan). For each column, `min`/`max`
+    are the raw pyarrow values over the row groups that carry them, and
+    `complete` says whether every row group did; `null_count` sums every
+    row group that reports one, including all-null groups without
+    min/max. Each table format encodes these its own way: the Delta and
+    TableLog stats dict, Iceberg typed bounds, Hudi key/event/column
+    ranges."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    cols: dict[str, ColumnFooter] = {}
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        for ci in range(md.num_columns):
+            col = group.column(ci)
+            st = col.statistics
+            lo, hi, nulls, complete = cols.get(
+                col.path_in_schema, ColumnFooter(None, None, None, True)
+            )
+            if st is not None and st.has_null_count:
+                nulls = (nulls or 0) + st.null_count
+            if st is None or not st.has_min_max:
+                complete = False
+            else:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+            cols[col.path_in_schema] = ColumnFooter(lo, hi, nulls, complete)
+    return Footer(md.num_rows, cols)
+
+
+@contextmanager
+def stage_write(
+    df: DataFrame, root: str, partition_by: list[str]
+) -> Iterator[list[StagedFile]]:
+    """Write `df` as parquet with ONE Spark write into a fresh
+    `root/.stage-<uuid>` (hive `k=v` dirs per `partition_by`) and yield
+    one `StagedFile` per parquet leaf, in walk order: its path, its raw
+    dir segments, their values (%-unquoted, `__HIVE_DEFAULT_PARTITION__`
+    as None) and its `file_footer`. The caller moves the files it keeps
+    into the table under its own names; the stage, with anything left
+    in it, is removed on exit whatever happens."""
+    stage = os.path.join(root, f".stage-{uuid.uuid4().hex}")
+    try:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(stage)
+        leaves = []
+        for dirpath, _dirs, names in os.walk(stage):
+            reldir = os.path.relpath(dirpath, stage)
+            segments = [] if reldir == "." else reldir.split(os.sep)
+            values = {}
+            for seg in segments:
+                k, _, v = seg.partition("=")
+                values[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+            for name in sorted(names):
+                if name.endswith(".parquet"):
+                    src = os.path.join(dirpath, name)
+                    leaves.append(StagedFile(src, segments, values, file_footer(src)))
+        yield leaves
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 @query("source_csv", oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")

@@ -82,8 +82,11 @@ from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
+    Footer,
     attach_partition_values,
+    file_footer,
     scratch_path,
+    stage_write,
     table_file_stream,
 )
 from atlas_migration_repo_spark.sources.table_log import (
@@ -762,101 +765,25 @@ def hudi_checkpoint(path: str) -> str | None:
 # ---------------------------------------------------------------------------
 # write mechanics
 # ---------------------------------------------------------------------------
-def _footer_rows(fp: str) -> int:
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(fp).metadata.num_rows
-
-
-def _footer_event_range(fp: str, field: str) -> tuple[int | None, int | None]:
-    """[min, max] of `field` across row groups in EPOCH MILLIS, read from
-    parquet footer statistics only (no data scan)."""
+def _stat_range(footer: Footer, field: str):
+    """JSON-encodable [min, max] of one column from a file's footer
+    statistics (no data scan): the HoodieWriteStat event-time and record
+    key ranges and the per-file envelope the metadata table's
+    column_stats partition records. Datetimes normalize to epoch millis,
+    binary to utf-8; (None, None) when any row group lacks stats
+    (skipping must narrow, never filter)."""
     import datetime as dt
 
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fp).metadata
-    try:
-        idx = md.schema.to_arrow_schema().get_field_index(field)
-    except Exception:
+    col = footer.columns.get(field)
+    if col is None or not col.complete:
         return None, None
-    if idx < 0:
-        return None, None
-    mn = mx = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        lo, hi = st.min, st.max
-        if isinstance(lo, dt.datetime):
-            lo = int(lo.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-            hi = int(hi.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-        mn = lo if mn is None else min(mn, lo)
-        mx = hi if mx is None else max(mx, hi)
-    return mn, mx
-
-
-def _footer_key_range(fp: str) -> tuple[str | None, str | None]:
-    """[min, max] of `_hoodie_record_key` across row groups, read from
-    parquet footer statistics only (no data scan) — the spec's
-    HoodieWriteStat minRecordKey/maxRecordKey, which let upsert tagging
-    skip file groups whose key band is disjoint from the batch."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fp).metadata
-    try:
-        idx = md.schema.to_arrow_schema().get_field_index(
-            "_hoodie_record_key"
-        )
-    except Exception:
-        return None, None
-    if idx < 0:
-        return None, None
-    mn = mx = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        lo, hi = st.min, st.max
-        if isinstance(lo, bytes):
-            lo, hi = lo.decode(), hi.decode()
-        mn = lo if mn is None else min(mn, lo)
-        mx = hi if mx is None else max(mx, hi)
-    return mn, mx
-
-
-def _footer_col_range(fp: str, field: str):
-    """JSON-encodable [min, max] of an arbitrary column across row
-    groups, read from parquet footer statistics only (no data scan) —
-    the per-file envelope the metadata table's column_stats partition
-    records. Datetimes normalize to epoch millis, binary to utf-8;
-    (None, None) when any row group lacks stats (skipping must narrow,
-    never filter)."""
-    import datetime as dt
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fp).metadata
-    try:
-        idx = md.schema.to_arrow_schema().get_field_index(field)
-    except Exception:
-        return None, None
-    if idx < 0:
-        return None, None
-    mn = mx = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None, None
-        lo, hi = st.min, st.max
-        if isinstance(lo, dt.datetime):
-            lo = int(lo.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-            hi = int(hi.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
-        elif isinstance(lo, bytes):
-            lo, hi = lo.decode(), hi.decode()
-        mn = lo if mn is None else min(mn, lo)
-        mx = hi if mx is None else max(mx, hi)
-    return mn, mx
+    lo, hi = col.min, col.max
+    if isinstance(lo, dt.datetime):
+        lo = int(lo.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+        hi = int(hi.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+    elif isinstance(lo, bytes):
+        lo, hi = lo.decode(), hi.decode()
+    return lo, hi
 
 
 # --- record-key bloom filters (the spec's BLOOM index family) --------------
@@ -1066,63 +993,46 @@ def _stage_place(
     partition dir. The pre-write `repartition(__fid)` makes every file
     group exactly one task's output, so each (partition, fileId) leaf
     holds exactly one base file. Returns [{fid, partition, rel, rows,
-    size}] — a FILE-GROUP-scale driver loop, never row-scale."""
-    import urllib.parse
-
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
+    size, footer}] — a FILE-GROUP-scale driver loop, never row-scale."""
     dup = [f"__hp_{c}" for c in partition_by]
     staged = df
     for c, d in zip(partition_by, dup):
         staged = staged.withColumn(d, F.col(c).cast("string"))
     staged = staged.repartition(F.col("__fid"))
-    staged.write.mode("overwrite").partitionBy(*dup, "__fid").parquet(stage)
 
     placed: list[dict] = []
-    try:
-        for dirpath, _dirs, names in os.walk(stage):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                reldir = os.path.relpath(dirpath, stage)
-                fid = None
-                real_segs: list[str] = []
-                for seg in ([] if reldir == "." else reldir.split(os.sep)):
-                    if seg.startswith("__fid="):
-                        fid = urllib.parse.unquote(seg[len("__fid="):])
-                    elif seg.startswith("__hp_"):
-                        real_segs.append(seg[len("__hp_"):])
-                assert fid is not None, f"stage leaf without __fid: {reldir}"
-                part_rel = "/".join(real_segs)
-                dest_dir = os.path.join(path, *real_segs) if real_segs else path
-                os.makedirs(dest_dir, exist_ok=True)
-                if real_segs:
-                    pm = os.path.join(dest_dir, ".hoodie_partition_metadata")
-                    if not os.path.exists(pm):
-                        with open(pm, "w") as fh:
-                            fh.write(
-                                "#partition metadata\n"
-                                f"commitTime={instant}\n"
-                                f"partitionDepth={len(partition_by)}\n"
-                            )
-                dest = os.path.join(
-                    dest_dir, f"{fid}_{_WRITE_TOKEN}_{instant}.parquet"
-                )
-                assert not os.path.exists(dest), (
-                    f"two staged files for file group {fid}"
-                )
-                os.rename(src, dest)
-                placed.append(
-                    {
-                        "fid": fid,
-                        "partition": part_rel,
-                        "rel": os.path.relpath(dest, path),
-                        "rows": _footer_rows(dest),
-                        "size": os.path.getsize(dest),
-                    }
-                )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    with stage_write(staged, path, [*dup, "__fid"]) as leaves:
+        for leaf in leaves:
+            fid = leaf.values["__fid"]
+            assert fid is not None, f"stage leaf without __fid: {leaf.path}"
+            real_segs = [
+                seg[len("__hp_"):] for seg in leaf.segments if seg.startswith("__hp_")
+            ]
+            part_rel = "/".join(real_segs)
+            dest_dir = os.path.join(path, *real_segs) if real_segs else path
+            os.makedirs(dest_dir, exist_ok=True)
+            if real_segs:
+                pm = os.path.join(dest_dir, ".hoodie_partition_metadata")
+                if not os.path.exists(pm):
+                    with open(pm, "w") as fh:
+                        fh.write(
+                            "#partition metadata\n"
+                            f"commitTime={instant}\n"
+                            f"partitionDepth={len(partition_by)}\n"
+                        )
+            dest = os.path.join(dest_dir, f"{fid}_{_WRITE_TOKEN}_{instant}.parquet")
+            assert not os.path.exists(dest), f"two staged files for file group {fid}"
+            os.rename(leaf.path, dest)
+            placed.append(
+                {
+                    "fid": fid,
+                    "partition": part_rel,
+                    "rel": os.path.relpath(dest, path),
+                    "rows": leaf.footer.num_rows,
+                    "size": os.path.getsize(dest),
+                    "footer": leaf.footer,
+                }
+            )
     return placed
 
 
@@ -1130,7 +1040,6 @@ def _write_stats(
     placed: list[dict],
     prev_instant_by_group: dict[tuple[str, str], str],
     event_field: str | None,
-    base_path: str,
     updates_by_group: dict[tuple[str, str], int] | None = None,
     deletes_by_group: dict[tuple[str, str], int] | None = None,
     all_rows_inserted: bool = False,
@@ -1169,16 +1078,14 @@ def _write_stats(
             "partitionPath": p["partition"],
         }
         if event_field:
-            mn, mx = _footer_event_range(
-                os.path.join(base_path, p["rel"]), event_field
-            )
+            mn, mx = _stat_range(p["footer"], event_field)
             if mn is not None:
                 st["minEventTime"] = mn
                 st["maxEventTime"] = mx
         if p["rows"] > 0:
             # spec HoodieWriteStat minRecordKey/maxRecordKey: footer-only
             # stats that let upsert tagging skip disjoint key bands
-            kmn, kmx = _footer_key_range(os.path.join(base_path, p["rel"]))
+            kmn, kmx = _stat_range(p["footer"], "_hoodie_record_key")
             if kmn is not None:
                 st["minRecordKey"] = kmn
                 st["maxRecordKey"] = kmx
@@ -1336,7 +1243,6 @@ def write_hudi(
         placed,
         prev_by_group,
         props.get("hoodie.payload.event.time.field"),
-        path,
         all_rows_inserted=True,
         blooms=_maybe_blooms(df.sparkSession, path, placed, props),
     )
@@ -1577,7 +1483,6 @@ def upsert_hudi(
         placed,
         prev_by_group,
         props.get("hoodie.payload.event.time.field"),
-        path,
         updates_by_group=upd_counts,
         blooms=_maybe_blooms(df.sparkSession, path, placed, props),
     )
@@ -1777,6 +1682,7 @@ def delete_hudi(keys_df: DataFrame, path: str) -> str:
                 "rel": os.path.relpath(dest, path),
                 "rows": 0,
                 "size": os.path.getsize(dest),
+                "footer": file_footer(dest),
             }
         )
 
@@ -1798,7 +1704,6 @@ def delete_hudi(keys_df: DataFrame, path: str) -> str:
         placed,
         prev_by_group,
         props.get("hoodie.payload.event.time.field"),
-        path,
         deletes_by_group=deletes_by_group,
         blooms=_maybe_blooms(spark, path, placed, props),
     )
@@ -1902,7 +1807,6 @@ def cluster_hudi(
         placed,
         prev_by_group,
         props.get("hoodie.payload.event.time.field"),
-        path,
         blooms=_maybe_blooms(spark, path, placed, props),
     )
     meta = _commit_meta("cluster", p2ws, schema_json, replaces=replaces)
@@ -2798,6 +2702,7 @@ def _execute_compaction(path: str, instant: str, plan: dict) -> str:
                 "rel": os.path.relpath(dest, path),
                 "rows": 0,
                 "size": os.path.getsize(dest),
+                "footer": file_footer(dest),
             }
         )
 
@@ -2809,7 +2714,6 @@ def _execute_compaction(path: str, instant: str, plan: dict) -> str:
         placed,
         prev_by_group,
         props.get("hoodie.payload.event.time.field"),
-        path,
         blooms=_maybe_blooms(spark, path, placed, props),
     )
     meta = _commit_meta("compact", p2ws, schema_json)
@@ -3333,7 +3237,6 @@ def adopt_parquet_to_hudi(
     timeline partition pruning, appends and INSERT OVERWRITE work;
     row-level upsert/delete/incremental refuse with a rewrite hint, the
     mode's real limitation."""
-    import pyarrow.parquet as pq
 
     partition_by = list(partition_by or [])
     if _table_exists(path):
@@ -3386,15 +3289,16 @@ def adopt_parquet_to_hudi(
     p2ws: dict[str, list[dict]] = {}
     for rel, part_rel in data_files:
         fp = os.path.join(path, rel)
+        n = file_footer(fp).num_rows
         p2ws.setdefault(part_rel, []).append(
             {
                 "fileId": os.path.splitext(os.path.basename(rel))[0],
                 "path": rel,
                 "prevCommit": "null",
-                "numWrites": pq.ParquetFile(fp).metadata.num_rows,
+                "numWrites": n,
                 "numDeletes": 0,
                 "numUpdateWrites": 0,
-                "numInserts": pq.ParquetFile(fp).metadata.num_rows,
+                "numInserts": n,
                 "totalWriteBytes": os.path.getsize(fp),
                 "fileSizeInBytes": os.path.getsize(fp),
                 "partitionPath": part_rel,
@@ -3488,7 +3392,7 @@ def _delta_state_from_hudi(path: str):
     bridge, twin of the MOR-delete refusal on the Iceberg side)."""
     import urllib.parse
 
-    from atlas_migration_repo_spark.sources.delta_interop import _delta_stats
+    from atlas_migration_repo_spark.sources.delta_interop import _add_stats
 
     latest, schema_json, slices = _replay_hudi(path)
     if schema_json is None:
@@ -3520,7 +3424,7 @@ def _delta_state_from_hudi(path: str):
             "size": os.path.getsize(fp),
             "modificationTime": int(os.path.getmtime(fp) * 1000),
             "dataChange": True,
-            "stats": _delta_stats(fp),
+            "stats": _add_stats(file_footer(fp)),
         }
     return latest, data, pcols, adds_by_rel
 
@@ -4371,9 +4275,10 @@ def _cs_for_files(path: str, rels: list[str], cols: list[str]) -> dict:
         fp = os.path.join(path, rel)
         if not os.path.isfile(fp):
             continue
+        footer = file_footer(fp)
         stats = {}
         for c in cols:
-            mn, mx = _footer_col_range(fp, c)
+            mn, mx = _stat_range(footer, c)
             if mn is not None:
                 stats[c] = [mn, mx]
         if stats:
@@ -4959,8 +4864,6 @@ def adopt_delta_to_hudi(spark: SparkSession, path: str) -> str:
     in files would lie to a name-based reader)."""
     import urllib.parse
 
-    import pyarrow.parquet as pq
-
     from atlas_migration_repo_spark.sources.delta_interop import (
         _column_mapping,
         _replay,
@@ -5005,7 +4908,7 @@ def adopt_delta_to_hudi(spark: SparkSession, path: str) -> str:
             for c in pcols
             if pv.get(c) is not None
         )
-        n = pq.ParquetFile(fp).metadata.num_rows
+        n = file_footer(fp).num_rows
         p2ws.setdefault(part_rel, []).append(
             {
                 "fileId": os.path.splitext(os.path.basename(rel))[0],

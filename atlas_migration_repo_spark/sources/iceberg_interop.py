@@ -44,9 +44,11 @@ from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.avro import _container_bytes, parse_container
 from atlas_migration_repo_spark.sources.files import (
+    Footer,
     attach_partition_values,
     file_path_col,
     scratch_path,
+    stage_write,
     table_file_stream,
 )
 from atlas_migration_repo_spark.sources.table_log import (
@@ -55,7 +57,6 @@ from atlas_migration_repo_spark.sources.table_log import (
 )
 from atlas_migration_repo_spark.streaming.harness import drain
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # Spark type <-> Iceberg primitive type names (spec §Schemas)
 _SPARK_TO_ICE = {
@@ -561,46 +562,25 @@ def _ice_decode_bound(ice_type: str, b: bytes):
     raise TypeError(f"no single-value serialization for {ice_type}")
 
 
-def _file_bounds(file_path: str, fields: list[dict]) -> tuple[list, list]:
-    """Per-file typed column bounds from the parquet FOOTER (no data
-    scan), encoded with the spec's single-value serialization and keyed
-    by field-id — the lower_bounds/upper_bounds of the data_file."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(file_path).metadata
-    except Exception:
-        return [], []
+def _file_bounds(footer: Footer, fields: list[dict]) -> tuple[list, list]:
+    """Per-file typed column bounds from a parquet footer, encoded with
+    the spec's single-value serialization and keyed by field-id — the
+    lower_bounds/upper_bounds of the data_file."""
     by_name = {f["name"]: f for f in fields}
-    mins: dict = {}
-    maxs: dict = {}
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            if name not in by_name:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
     lowers, uppers = [], []
-    for name in mins:
-        f = by_name[name]
+    for name, col in footer.columns.items():
+        f = by_name.get(name)
+        if f is None or col.min is None:
+            continue
+        lo, hi = col.min, col.max
+        if isinstance(lo, bytes):
+            try:
+                lo, hi = lo.decode(), hi.decode()
+            except UnicodeDecodeError:
+                continue
         try:
-            lowers.append(
-                {"key": f["id"], "value": _ice_encode_bound(f["type"], mins[name])}
-            )
-            uppers.append(
-                {"key": f["id"], "value": _ice_encode_bound(f["type"], maxs[name])}
-            )
+            lowers.append({"key": f["id"], "value": _ice_encode_bound(f["type"], lo)})
+            uppers.append({"key": f["id"], "value": _ice_encode_bound(f["type"], hi)})
         except TypeError:
             continue
     return lowers, uppers
@@ -694,10 +674,6 @@ def _stage_data_files(
     files into data/ decoding dir names into typed partition values, and
     return (ADDED manifest entries with column bounds, row count) — the
     staging half shared by write_iceberg and merge_iceberg."""
-    import pyarrow.parquet as pq
-    import urllib.parse as up
-
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
     staged_df = df
     for pf in part_fields:
         if pf["transform"] == "year":
@@ -775,55 +751,37 @@ def _stage_data_files(
     staged_df.sparkSession.conf.set(
         "spark.sql.parquet.fieldId.write.enabled", "true"
     )
-    w = staged_df.write.mode("overwrite")
-    if part_fields:
-        w = w.partitionBy(*[pf["name"] for pf in part_fields])
-    w.parquet(stage)
-
+    ice_types = {pf["name"]: pf["ice_type"] for pf in part_fields}
     entries: list[tuple] = []
     added_rows = 0
-    try:
-        for dirpath, _dirs, names in os.walk(stage):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, name)
-                reldir = os.path.relpath(dirpath, stage)
-                pvals: dict[str, object] = {}
-                parts = [] if reldir == "." else reldir.split(os.sep)
-                for part in parts:
-                    if "=" in part:
-                        k, v = part.split("=", 1)
-                        raw = None if v == _HIVE_NULL else up.unquote(v)
-                        pf = next(p for p in part_fields if p["name"] == k)
-                        pvals[k] = _encode_part_value(raw, pf["ice_type"])
-                dest = os.path.join(
-                    path, "data", f"{uuid.uuid4().hex}.parquet"
+    with stage_write(staged_df, path, list(ice_types)) as leaves:
+        for leaf in leaves:
+            pvals = {
+                k: _encode_part_value(v, ice_types[k]) for k, v in leaf.values.items()
+            }
+            dest = os.path.join(path, "data", f"{uuid.uuid4().hex}.parquet")
+            os.rename(leaf.path, dest)
+            nrec = leaf.footer.num_rows
+            added_rows += nrec
+            lowers, uppers = _file_bounds(leaf.footer, schema_fields)
+            entries.append(
+                (
+                    1,  # status ADDED
+                    snap_id,
+                    seq,
+                    seq,
+                    {
+                        "content": 0,
+                        "file_path": dest,
+                        "file_format": "PARQUET",
+                        "partition": pvals,
+                        "record_count": nrec,
+                        "file_size_in_bytes": os.path.getsize(dest),
+                        "lower_bounds": lowers or None,
+                        "upper_bounds": uppers or None,
+                    },
                 )
-                os.rename(src, dest)
-                nrec = pq.ParquetFile(dest).metadata.num_rows
-                added_rows += nrec
-                lowers, uppers = _file_bounds(dest, schema_fields)
-                entries.append(
-                    (
-                        1,  # status ADDED
-                        snap_id,
-                        seq,
-                        seq,
-                        {
-                            "content": 0,
-                            "file_path": dest,
-                            "file_format": "PARQUET",
-                            "partition": pvals,
-                            "record_count": nrec,
-                            "file_size_in_bytes": os.path.getsize(dest),
-                            "lower_bounds": lowers or None,
-                            "upper_bounds": uppers or None,
-                        },
-                    )
-                )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+            )
     return entries, added_rows
 
 
@@ -1701,28 +1659,19 @@ def _stage_delete_files(
 ) -> tuple[list[tuple], int]:
     """Stage `del_df` as parquet DELETE FILES under data/ and return
     their ADDED manifest entries + total tombstone count — shared by
-    the MOR delete commits and the UniForm DV bridge."""
-    import pyarrow.parquet as pq
-
-    stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-    del_df.write.mode("overwrite").parquet(stage)
+    the MOR delete commits, merge_iceberg and the UniForm DV bridge."""
     entries: list[tuple] = []
     n_del = 0
-    try:
-        for name in sorted(os.listdir(stage)):
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(stage, name)
-            nrec = pq.ParquetFile(src).metadata.num_rows
+    with stage_write(del_df, path, []) as leaves:
+        for leaf in leaves:
+            nrec = leaf.footer.num_rows
             if nrec == 0:
                 continue
-            dest = os.path.join(
-                path, "data", f"{uuid.uuid4().hex}-deletes.parquet"
-            )
+            dest = os.path.join(path, "data", f"{uuid.uuid4().hex}-deletes.parquet")
             # UniForm over a Delta table has no data/ dir yet — the
             # manifest stores absolute paths, the dir is just a home
             os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
+            os.rename(leaf.path, dest)
             n_del += nrec
             entries.append(
                 (
@@ -1743,8 +1692,6 @@ def _stage_delete_files(
                     },
                 )
             )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
     return entries, n_del
 
 
@@ -1757,8 +1704,6 @@ def _commit_delete_snapshot(
     manifest forward, and append a `delete` snapshot. Returns the new
     snapshot id (or the current one if the delete matched nothing —
     empty commits are elided)."""
-    import pyarrow.parquet as pq
-
     cur = _current_metadata(path)
     v, meta = cur
     seq = meta["last-sequence-number"] + 1
@@ -2333,7 +2278,6 @@ def merge_iceberg(
     partition-agnostic — but the merge keys must be DATA columns (an
     identity partition column's values are metadata-only, invisible to
     the read-side anti-join). Exact schema match."""
-    import pyarrow.parquet as pq
 
     cur = _current_metadata(path)
     if cur is None:
@@ -2359,27 +2303,6 @@ def merge_iceberg(
     seq = meta["last-sequence-number"] + 1
     snap_id = int(time.time() * 1000) * 1000 + seq
 
-    def _stage(df: DataFrame, suffix: str) -> list[tuple[str, int]]:
-        stage = os.path.join(path, f".stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(stage)
-        moved = []
-        try:
-            for name in sorted(os.listdir(stage)):
-                if not name.endswith(".parquet"):
-                    continue
-                src = os.path.join(stage, name)
-                nrec = pq.ParquetFile(src).metadata.num_rows
-                if nrec == 0:
-                    continue
-                dest = os.path.join(
-                    path, "data", f"{uuid.uuid4().hex}{suffix}.parquet"
-                )
-                os.rename(src, dest)
-                moved.append((dest, nrec))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return moved
-
     ordered = [f["name"] for f in schema_fields]
     by_fname = {f["name"]: f for f in schema_fields}
     data_entries, _added = _stage_data_files(
@@ -2391,29 +2314,9 @@ def merge_iceberg(
         snap_id,
         seq,
     )
-    del_moved = _stage(source.select(*on).distinct(), "-deletes")
-
-    def _entry(dest, nrec, content, bounds, equality_ids):
-        lowers, uppers = bounds if bounds else (None, None)
-        return (
-            1,
-            snap_id,
-            seq,
-            seq,
-            {
-                "content": content,
-                "file_path": dest,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": nrec,
-                "file_size_in_bytes": os.path.getsize(dest),
-                "lower_bounds": lowers or None,
-                "upper_bounds": uppers or None,
-                "equality_ids": equality_ids,
-            },
-        )
-
-    del_entries = [_entry(d, n, 2, None, eq_ids) for d, n in del_moved]
+    del_entries, _n_del = _stage_delete_files(
+        path, source.select(*on).distinct(), snap_id, seq, 2, eq_ids
+    )
     # data manifest carries the table's partition struct + summaries
     # (manifest-list pruning); the delete manifest is partition-less and
     # never pruned

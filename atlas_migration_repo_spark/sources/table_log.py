@@ -81,10 +81,43 @@ from pyspark.sql import functions as F
 from atlas_migration_repo_spark.catalog import load, msum
 from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
-from atlas_migration_repo_spark.sources.files import scratch_path, table_file_stream
+from atlas_migration_repo_spark.sources.files import (
+    Footer,
+    scratch_path,
+    stage_write,
+    table_file_stream,
+)
 from atlas_migration_repo_spark.streaming.harness import drain
 
 _VERSION_RE = re.compile(r"^(\d{20})\.json$")
+
+
+def log_stats(footer: Footer) -> dict:
+    """The add action's data-skipping stats (the dict Delta writes as
+    JSON): per-column minValues/maxValues/nullCount from a file footer.
+    Binary bounds decode as UTF-8 (undecodable ones are left out) and
+    non-scalar bounds (dates, decimals) become their str(); a column
+    without bounds in any row group has no min/max, which only disables
+    skipping on that file."""
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    for name, col in footer.columns.items():
+        if col.null_count is not None:
+            nulls[name] = col.null_count
+        lo, hi = col.min, col.max
+        if lo is None:
+            continue
+        if isinstance(lo, bytes):
+            try:
+                lo, hi = lo.decode(), hi.decode()
+            except UnicodeDecodeError:
+                continue
+        if not isinstance(lo, (int, float, str)):
+            lo, hi = str(lo), str(hi)
+        mins[name] = lo
+        maxs[name] = hi
+    return {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -630,14 +663,7 @@ class TableLog:
         (e.g. the ANN index) record application metadata such as the
         source version they indexed, the commitInfo-userMetadata idea."""
         self._check(df)
-        df = self._to_physical(df)
-        stage = f"s-{uuid.uuid4().hex}"
-        stage_abs = os.path.join(self.data_dir, stage)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(stage_abs)
-        adds = self._adds_for_stage(stage_abs)
+        adds = self._write_adds(self._to_physical(df), partition_by)
         if extra_actions:
             adds.extend(extra_actions)
         adds.append({"commitInfo": {"operation": "APPEND", "numFiles": len(adds)}})
@@ -778,13 +804,7 @@ class TableLog:
                 for c in target.columns
             ]
         )
-        stage = f"s-{uuid.uuid4().hex}"
-        stage_abs = os.path.join(self.data_dir, stage)
-        w = self._to_physical(merged).write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(stage_abs)
-        actions = self._adds_for_stage(stage_abs)
+        actions = self._write_adds(self._to_physical(merged), partition_by)
         actions += [{"remove": {"path": f["path"]}} for f in snap.files]
         actions.append(
             {"commitInfo": {"operation": "MERGE", "numFiles": len(actions)}}
@@ -822,13 +842,7 @@ class TableLog:
         pvcols = sorted(
             {k for f in snap.files for k in f.get("partitionValues", {})}
         )
-        stage = f"s-{uuid.uuid4().hex}"
-        stage_abs = os.path.join(self.data_dir, stage)
-        w = self._to_physical(df).write.mode("overwrite")
-        if pvcols:
-            w = w.partitionBy(*pvcols)
-        w.parquet(stage_abs)
-        actions = self._adds_for_stage(stage_abs)
+        actions = self._write_adds(self._to_physical(df), pvcols)
         # dataChange=false: the commit rearranges bytes, adds no data —
         # the change feed and the streaming source skip it, so a
         # compaction never replays the whole table to consumers (the
@@ -845,65 +859,30 @@ class TableLog:
         )
         return self._commit(actions)
 
-    def _adds_for_stage(self, stage_abs: str) -> list[dict]:
+    def _write_adds(self, df: DataFrame, partition_by: list[str] | None) -> list[dict]:
+        """Stage `df` with one Spark write, move its files under one new
+        `data/s-<uuid>/` root keeping their hive dirs (the layout `read`
+        and `read_range` group by), and return one add action per file
+        with its decoded partitionValues and footer stats."""
+        seg = f"s-{uuid.uuid4().hex}"
         adds = []
-        for dirpath, _dirs, names in os.walk(stage_abs):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, name)
-                rel = os.path.relpath(full, self.data_dir)
-                pvals = dict(
-                    part.split("=", 1)
-                    for part in os.path.relpath(dirpath, stage_abs).split(os.sep)
-                    if "=" in part
-                )
+        with stage_write(df, self.data_dir, partition_by or []) as leaves:
+            for leaf in leaves:
+                rel = os.path.join(seg, *leaf.segments, os.path.basename(leaf.path))
+                full = os.path.join(self.data_dir, rel)
+                os.makedirs(os.path.dirname(full), exist_ok=True)
+                os.rename(leaf.path, full)
                 adds.append(
                     {
                         "add": {
                             "path": rel,
-                            "partitionValues": pvals,
+                            "partitionValues": dict(leaf.values),
                             "size": os.path.getsize(full),
-                            "stats": self._file_stats(full),
+                            "stats": log_stats(leaf.footer),
                         }
                     }
                 )
         return adds
-
-    @staticmethod
-    def _file_stats(path: str) -> dict:
-        """Per-file column min/max/nullCount from the parquet FOOTER (no
-        data scan) — the data-skipping statistics Delta writes into add
-        actions. Numeric/string/date columns only; absent stats simply
-        disable skipping for that file, never correctness."""
-        import pyarrow.parquet as pq
-
-        try:
-            md = pq.ParquetFile(path).metadata
-        except Exception:
-            return {}
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                name = col.path_in_schema
-                lo, hi = st.min, st.max
-                if isinstance(lo, bytes):
-                    try:
-                        lo, hi = lo.decode(), hi.decode()
-                    except UnicodeDecodeError:
-                        continue
-                if not isinstance(lo, (int, float, str)):
-                    lo, hi = str(lo), str(hi)
-                mins[name] = lo if name not in mins else min(mins[name], lo)
-                maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-                nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-        return {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
 
     def files_in_range(self, column: str, lo, hi, version: int | None = None):
         """Log-side data skipping: live files whose [min,max] envelope for
