@@ -56,6 +56,7 @@ from atlas_migration_repo_spark.sources.files import (
     Footer,
     StagedFile,
     attach_partition_values,
+    envelope_meets,
     file_footer,
     file_path_col,
     scratch_path,
@@ -1038,14 +1039,32 @@ def delta_live_files(
     predicates BEFORE any filesystem listing or Spark scan — Delta's
     metadata-level partition pruning."""
     _, _, adds = _replay(path, version)
-    if partition_eq:
-        want = {k: (None if v is None else str(v)) for k, v in partition_eq.items()}
-        adds = [
-            a
-            for a in adds
-            if all((a.get("partitionValues") or {}).get(k) == v for k, v in want.items())
-        ]
-    return adds
+    return _adds_matching(adds, partition_eq)
+
+
+def _adds_matching(adds: list[dict], partition_eq: dict | None) -> list[dict]:
+    """`adds` whose partitionValues equal every `partition_eq` value."""
+    if not partition_eq:
+        return adds
+    want = {k: (None if v is None else str(v)) for k, v in partition_eq.items()}
+    return [
+        a
+        for a in adds
+        if all((a.get("partitionValues") or {}).get(k) == v for k, v in want.items())
+    ]
+
+
+def _stats_envelope(add: dict, phys: str) -> tuple:
+    """(min, max) of PHYSICAL column `phys` from an add's stats string;
+    None where the add records no bound."""
+    st = json.loads(add.get("stats") or "{}")
+    return (st.get("minValues") or {}).get(phys), (st.get("maxValues") or {}).get(phys)
+
+
+def _adds_in_range(meta: dict, adds: list[dict], column: str, lo, hi) -> list[dict]:
+    """`adds` whose stats envelope for logical `column` meets [lo, hi]."""
+    phys = _column_mapping(meta).get(column, column)  # stats keys are physical
+    return [a for a in adds if envelope_meets(*_stats_envelope(a, phys), lo, hi)]
 
 
 def delta_files_in_range(
@@ -1056,16 +1075,8 @@ def delta_files_in_range(
     Files without stats are kept (skipping is an optimization, never a
     filter) — the same contract as TableLog.files_in_range, driven by
     the Delta stats strings every add action carries."""
-    _, meta, _ = _replay(path, version)
-    column = _column_mapping(meta).get(column, column)  # stats keys are physical
-    out = []
-    for a in delta_live_files(path, version):
-        st = json.loads(a.get("stats") or "{}")
-        fmin = (st.get("minValues") or {}).get(column)
-        fmax = (st.get("maxValues") or {}).get(column)
-        if fmin is None or fmax is None or (fmax >= lo and fmin <= hi):
-            out.append(a)
-    return out
+    _, meta, adds = _replay(path, version)
+    return _adds_in_range(meta, adds, column, lo, hi)
 
 
 def rename_delta_column(path: str, old: str, new: str) -> int:
@@ -1269,9 +1280,10 @@ def _scan_adds_logical(
     index) are added straight off the scan node (metadata columns only
     resolve there), DV masks subtracted, columnMapping renames undone.
     Partition columns are NOT attached here — callers compose
-    _attach_partition_cols. The shared read core of read_delta and the
-    file-rewriting maintenance ops: on mapped tables a logical-schema
-    scan would silently read every renamed column as NULL."""
+    _attach_partition_cols. The shared read core of read_delta,
+    read_delta_range and the file-rewriting maintenance ops: on mapped
+    tables a logical-schema scan would silently read every renamed
+    column as NULL."""
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = meta.get("partitionColumns") or []
     data_fields = [f for f in schema.fields if f.name not in pcols]
@@ -1316,20 +1328,28 @@ def read_delta(
         if version is not None:
             raise ValueError("pass either version or timestamp_ms, not both")
         version = delta_version_as_of(path, timestamp_ms)
-    v, meta, _ = _replay(path, version)
+    _, meta, adds = _replay(path, version)
     if partition_eq:
         # mapped tables record partitionValues under PHYSICAL names;
         # callers prune with logical ones
         pmap = _column_mapping(meta)
-        partition_eq = {pmap.get(k, k): val for k, val in partition_eq.items()}
-    adds = delta_live_files(path, v, partition_eq)
+        adds = _adds_matching(
+            adds, {pmap.get(k, k): val for k, val in partition_eq.items()}
+        )
+    return _read_adds(spark, path, meta, adds)
+
+
+def _read_adds(
+    spark: SparkSession, path: str, meta: dict, adds: list[dict]
+) -> DataFrame:
+    """The table's rows in `adds` under `meta`'s logical schema: the
+    mapped scan with DV masks (_scan_adds_logical), partition columns
+    from the log, columns in schema order. Shared by read_delta and
+    read_delta_range."""
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    pcols = meta.get("partitionColumns") or []
     if not adds:
         return spark.createDataFrame([], schema)
     df = _scan_adds_logical(spark, adds, meta, path)
-    if not pcols:
-        return df.select(*[f.name for f in schema.fields])
     return _attach_partition_cols(spark, df, adds, meta, path).select(
         *[f.name for f in schema.fields]
     )
@@ -1397,7 +1417,7 @@ def merge_delta(
     merge key must be a data column (merging ON a partition column
     would make the semi-join scan metadata-blind; route that shape
     through read-side partition pruning instead)."""
-    v, meta, _ = _replay(path)
+    _, meta, adds_live = _replay(path)
     pcols = meta.get("partitionColumns") or []
     if key in pcols:
         raise ValueError(
@@ -1405,7 +1425,6 @@ def merge_delta(
             "column (partition-granular upserts are an overwrite of the "
             "partition, not a row merge)"
         )
-    adds_live = delta_live_files(path, v)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     base = _scan_adds_logical(
         spark, adds_live, meta, path, file_col="__file"
@@ -1527,7 +1546,7 @@ def delete_delta_range(
     in-range files are tombstoned unread and nothing is rewritten);
     deleting on a data column uses the same stats three-way split, with
     survivors rewritten back into hive layout."""
-    v, meta, _ = _replay(path)
+    _, meta, adds_live = _replay(path)
     pcols = meta.get("partitionColumns") or []
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     # mapped tables key partitionValues and stats by PHYSICAL name
@@ -1551,20 +1570,16 @@ def delete_delta_range(
                 return float(lo) <= float(pv) <= float(hi)
             return str(lo) <= pv <= str(hi)
 
-        for a in delta_live_files(path, v):
+        for a in adds_live:
             if _pv_in_range((a.get("partitionValues") or {}).get(phys_key)):
                 drop_whole.append(a)
     else:
-        for a in delta_live_files(path, v):
-            st = json.loads(a.get("stats") or "{}")
-            fmin = (st.get("minValues") or {}).get(phys_key)
-            fmax = (st.get("maxValues") or {}).get(phys_key)
-            if fmin is None or fmax is None:
-                rewrite.append(a)  # no stats → must read it
-            elif fmin >= lo and fmax <= hi:
+        for a in adds_live:
+            fmin, fmax = _stats_envelope(a, phys_key)
+            if fmin is not None and fmax is not None and fmin >= lo and fmax <= hi:
                 drop_whole.append(a)  # fully inside → metadata-only delete
-            elif fmax >= lo and fmin <= hi:
-                rewrite.append(a)  # boundary overlap → rewrite survivors
+            elif envelope_meets(fmin, fmax, lo, hi):
+                rewrite.append(a)  # overlap or no stats → rewrite survivors
             # else: disjoint → untouched
     now_ms = int(time.time() * 1000)
     actions: list[dict] = [
@@ -1964,9 +1979,8 @@ def delete_delta_dv(spark: SparkSession, path: str, predicate: str) -> int:
     table protocol to 3/7 + deletionVectors so pre-feature readers fail
     loudly instead of resurrecting deleted rows. CDF-enabled tables
     stage exact delete images. Returns the new version."""
-    v, meta, _ = _replay(path)
+    v, meta, adds_live = _replay(path)
     pcols = meta.get("partitionColumns") or []
-    adds_live = delta_live_files(path, v)
     if not adds_live:
         return v
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -2107,9 +2121,8 @@ def purge_delta_dv(spark: SparkSession, path: str) -> int:
     so the commit is dataChange=false (feeds/streams skip it) — the
     maintenance op that reclaims DV-shadowed bytes once enough deletes
     accumulate. Returns the new version (unchanged if no DVs live)."""
-    v, meta, _ = _replay(path)
+    v, meta, adds_live = _replay(path)
     pcols = meta.get("partitionColumns") or []
-    adds_live = delta_live_files(path, v)
     dv_adds = [a for a in adds_live if a.get("deletionVector")]
     if not dv_adds:
         return v
@@ -2229,9 +2242,8 @@ def optimize_delta(
     the partition columns (one task per live partition value, so each
     partition's many small files become one), land back in hive layout,
     and `target_files` — a whole-table knob — is ignored."""
-    v, meta, _ = _replay(path)
+    v, meta, adds_live = _replay(path)
     pcols = meta.get("partitionColumns") or []
-    adds_live = delta_live_files(path, v)
     if len(adds_live) <= 1:
         return v
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -2715,8 +2727,7 @@ def convert_tablelog_to_delta(spark: SparkSession, tlog: TableLog) -> int:
             # them from the converted table
             tacts = [{"add": dict(f)} for f in tlog.snapshot(v).files]
         else:
-            with open(os.path.join(tlog.log_dir, f"{v:020d}.json")) as fh:
-                tacts = [json.loads(line) for line in fh if line.strip()]
+            tacts = tlog._commit_actions(v)
         dacts: list[dict] = [
             {
                 "commitInfo": {
@@ -3166,18 +3177,13 @@ def read_delta_range(
     version: int | None = None,
 ) -> DataFrame:
     """Skip-aware range read: prune files from LOG STATISTICS (no
-    listing, no footer reads), scan only the survivors, then apply the
+    listing, no footer reads), read the survivors through read_delta's
+    core (column mapping, DV masks, partition columns), then apply the
     exact predicate — skipping narrows, the predicate decides."""
-    v, meta, _ = _replay(path, version)
-    files = delta_files_in_range(path, column, lo, hi, v)
-    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    if not files:
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(path, urllib.parse.unquote(a["path"])) for a in files]
-    df = _apply_dv_mask(
-        spark, spark.read.schema(schema).parquet(*paths), files, path
-    )
-    return df.where(F.col(column).between(F.lit(lo), F.lit(hi)))
+    _, meta, adds = _replay(path, version)
+    return _read_adds(
+        spark, path, meta, _adds_in_range(meta, adds, column, lo, hi)
+    ).where(F.col(column).between(F.lit(lo), F.lit(hi)))
 
 
 _TT_CUT = "1997-01-01"

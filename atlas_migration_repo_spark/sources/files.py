@@ -189,6 +189,19 @@ def table_file_stream(
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
+def hive_dir_value(raw: str) -> str | None:
+    """The partition value a hive `k=<raw>` dir segment stands for:
+    %-unquoted, with `__HIVE_DEFAULT_PARTITION__` as None."""
+    return None if raw == _HIVE_NULL else urllib.parse.unquote(raw)
+
+
+def envelope_meets(fmin, fmax, lo, hi) -> bool:
+    """Whether a file whose column envelope is [fmin, fmax] may hold a
+    value in [lo, hi]. A missing bound keeps the file: skipping narrows
+    a scan, the exact predicate decides."""
+    return fmin is None or fmax is None or (fmax >= lo and fmin <= hi)
+
+
 class ColumnFooter(NamedTuple):
     """One column's statistics across a parquet file's row groups."""
 
@@ -266,7 +279,7 @@ def stage_write(
             values = {}
             for seg in segments:
                 k, _, v = seg.partition("=")
-                values[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+                values[k] = hive_dir_value(v)
             for name in sorted(names):
                 if name.endswith(".parquet"):
                     src = os.path.join(dirpath, name)

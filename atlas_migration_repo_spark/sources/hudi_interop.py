@@ -84,6 +84,7 @@ from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
     Footer,
     attach_partition_values,
+    envelope_meets,
     file_footer,
     scratch_path,
     stage_write,
@@ -682,8 +683,7 @@ def read_hudi_event_range(
         raise ValueError("table declares no event-time field")
 
     def _env_overlaps(st: dict) -> bool:
-        mn, mx = st.get("minEventTime"), st.get("maxEventTime")
-        return mn is None or mx is None or (mx >= lo_ms and mn <= hi_ms)
+        return envelope_meets(st.get("minEventTime"), st.get("maxEventTime"), lo_ms, hi_ms)
 
     keep = []
     for s in slices:

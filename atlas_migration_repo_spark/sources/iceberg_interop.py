@@ -46,6 +46,7 @@ from atlas_migration_repo_spark.sources.avro import _container_bytes, parse_cont
 from atlas_migration_repo_spark.sources.files import (
     Footer,
     attach_partition_values,
+    envelope_meets,
     file_path_col,
     scratch_path,
     stage_write,
@@ -1207,36 +1208,54 @@ def iceberg_live_files(
     return meta, [d["data_file"] for d in datas]
 
 
+def _file_envelope(data_file: dict, field: dict) -> tuple:
+    """(lower, upper) bound of schema `field` recorded for a manifest
+    data_file (keyed by field-id, spec single-value binary encoding);
+    None where the file records none."""
+
+    def _bound(raw):
+        for kv in raw or ():
+            if kv["key"] == field["id"]:
+                return _ice_decode_bound(field["type"], kv["value"])
+        return None
+
+    return _bound(data_file.get("lower_bounds")), _bound(data_file.get("upper_bounds"))
+
+
+def _datas_in_range(datas: list[dict], field: dict, lo, hi) -> list[dict]:
+    """Live data entries whose bounds for `field` meet [lo, hi]."""
+    return [
+        d for d in datas if envelope_meets(*_file_envelope(d["data_file"], field), lo, hi)
+    ]
+
+
+def _field(schema_fields: list[dict], column: str) -> dict:
+    return next(f for f in schema_fields if f["name"] == column)
+
+
+def _schema_fields_at(meta: dict, snapshot_id: int | None) -> list[dict]:
+    """The field list a read at `snapshot_id` sees. A LATEST read (None)
+    resolves the CURRENT schema — a rename (a metadata-only commit that
+    bumps current-schema-id without a new snapshot) must be visible
+    immediately; a pinned snapshot keeps the schema-id it was written
+    with (old snapshots keep their narrower schema, per the spec)."""
+    schema_id = meta["current-schema-id"]
+    if snapshot_id is not None:
+        snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == snapshot_id)
+        schema_id = snap.get("schema-id", schema_id)
+    return meta["schemas"][schema_id]["fields"]
+
+
 def iceberg_files_in_range(
     path: str, column: str, lo, hi, snapshot_id: int | None = None
 ) -> tuple[dict, list[dict]]:
     """Data skipping from MANIFEST bounds: live files whose
-    [lower_bounds, upper_bounds] envelope for `column` (keyed by
-    field-id, spec single-value binary encoding) intersects [lo, hi].
-    Files without bounds are kept — skipping narrows, never filters."""
-    meta, files = iceberg_live_files(path, snapshot_id)
-    fld = next(
-        f
-        for f in meta["schemas"][meta["current-schema-id"]]["fields"]
-        if f["name"] == column
-    )
-    fid, typ = fld["id"], fld["type"]
-
-    def _bound(raw, key_id):
-        if not raw:
-            return None
-        for kv in raw:
-            if kv["key"] == key_id:
-                return _ice_decode_bound(typ, kv["value"])
-        return None
-
-    out = []
-    for f in files:
-        fmin = _bound(f.get("lower_bounds"), fid)
-        fmax = _bound(f.get("upper_bounds"), fid)
-        if fmin is None or fmax is None or (fmax >= lo and fmin <= hi):
-            out.append(f)
-    return meta, out
+    [lower_bounds, upper_bounds] envelope for `column` (named as of the
+    snapshot) intersects [lo, hi]. Files without bounds are kept —
+    skipping narrows, never filters."""
+    meta, datas, _ = iceberg_live_state(path, snapshot_id)
+    fld = _field(_schema_fields_at(meta, snapshot_id), column)
+    return meta, [d["data_file"] for d in _datas_in_range(datas, fld, lo, hi)]
 
 
 def read_iceberg_range(
@@ -1247,29 +1266,15 @@ def read_iceberg_range(
     hi,
     snapshot_id: int | None = None,
 ) -> DataFrame:
-    """Skip-aware range read: prune files from manifest bounds, scan
-    only the survivors, apply the exact predicate. Unpartitioned tables
-    only (partition columns are not materialized in data files)."""
-    meta, files = iceberg_files_in_range(path, column, lo, hi, snapshot_id)
-    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    full = _full_schema(meta, schema_fields, spark)
-    if not files:
-        return spark.createDataFrame([], full)
-    df = (
-        spark.read.schema(full)
-        .parquet(*[f["file_path"] for f in files])
-        .where(F.col(column).between(F.lit(lo), F.lit(hi)))
+    """Skip-aware range read: prune files from manifest bounds, read the
+    survivors through read_iceberg's core (the snapshot's schema, row
+    deletes, identity partition columns), apply the exact predicate."""
+    meta, datas, dels = iceberg_live_state(path, snapshot_id)
+    schema_fields = _schema_fields_at(meta, snapshot_id)
+    kept = _datas_in_range(datas, _field(schema_fields, column), lo, hi)
+    return _read_datas(spark, meta, schema_fields, kept, dels).where(
+        F.col(column).between(F.lit(lo), F.lit(hi))
     )
-    _, datas, dels = iceberg_live_state(path, snapshot_id)
-    if dels:
-        keep = {os.path.abspath(f["file_path"]) for f in files}
-        kept = [
-            d
-            for d in datas
-            if os.path.abspath(d["data_file"]["file_path"]) in keep
-        ]
-        df = _apply_row_deletes(spark, df, kept, dels, schema_fields)
-    return df.select(*[f.name for f in full.fields])
 
 
 def iceberg_snapshot_as_of(path: str, timestamp_ms: int) -> int:
@@ -1348,16 +1353,23 @@ def read_iceberg(
     elif ref is not None:
         snapshot_id = iceberg_resolve_ref(path, ref)
     meta, datas, dels = iceberg_live_state(path, snapshot_id, partition_eq)
+    return _read_datas(
+        spark, meta, _schema_fields_at(meta, snapshot_id), datas, dels, with_lineage
+    )
+
+
+def _read_datas(
+    spark: SparkSession,
+    meta: dict,
+    schema_fields: list[dict],
+    datas: list[dict],
+    dels: list[dict],
+    with_lineage: bool = False,
+) -> DataFrame:
+    """read_iceberg's core over resolved live data and delete entries:
+    one scan of the data files, row deletes, lineage columns, identity
+    partition columns. Shared by read_iceberg and read_iceberg_range."""
     files = [d["data_file"] for d in datas]
-    if snapshot_id is None:
-        # a LATEST read resolves the CURRENT schema — a rename (a
-        # metadata-only commit that bumps current-schema-id without a
-        # new snapshot) must be visible immediately
-        schema_id = meta["current-schema-id"]
-    else:
-        snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == snapshot_id)
-        schema_id = snap.get("schema-id", meta["current-schema-id"])
-    schema_fields = meta["schemas"][schema_id]["fields"]
     # only IDENTITY partition columns are reattached from metadata;
     # hidden-transform fields (year/month) exist only as layout + log
     # metadata — their SOURCE columns live in the data files themselves
@@ -1518,20 +1530,13 @@ def read_iceberg_incremental(
         if to_snapshot_id is not None
         else meta["current-snapshot-id"]
     )
-    snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == sid)
-    schema_id = snap.get("schema-id", meta["current-schema-id"])
-    schema_fields = meta["schemas"][schema_id]["fields"]
-    pcols = [
-        pf["name"]
-        for pf in meta["partition-specs"][0]["fields"]
-        if pf.get("transform", "identity") == "identity"
-    ]
-    full = _full_schema(meta, schema_fields, spark)
-    if not files:
-        return spark.createDataFrame([], full)
-    data_schema = T.StructType([f for f in full.fields if f.name not in pcols])
-    df = spark.read.schema(data_schema).parquet(*[f["file_path"] for f in files])
-    return _reattach_partition_cols(spark, df, files, pcols, full)
+    return _read_datas(
+        spark,
+        meta,
+        _schema_fields_at(meta, sid),
+        [{"data_file": f} for f in files],
+        [],
+    )
 
 
 def _apply_row_deletes(
@@ -1785,24 +1790,9 @@ def delete_iceberg_where(
             "rewrite/overwrite instead of row tombstones"
         )
     schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    fld = next(f for f in schema_fields if f["name"] == column)
-    fid, typ = fld["id"], fld["type"]
-
-    def _bound(raw, key_id):
-        if not raw:
-            return None
-        for kv in raw:
-            if kv["key"] == key_id:
-                return _ice_decode_bound(typ, kv["value"])
-        return None
-
-    cands = []
-    for d in datas:
-        f = d["data_file"]
-        fmin = _bound(f.get("lower_bounds"), fid)
-        fmax = _bound(f.get("upper_bounds"), fid)
-        if fmin is None or fmax is None or (fmax >= lo and fmin <= hi):
-            cands.append(f)
+    cands = [
+        d["data_file"] for d in _datas_in_range(datas, _field(schema_fields, column), lo, hi)
+    ]
     if not cands:
         return meta["current-snapshot-id"]
     full = _full_schema(meta, schema_fields, spark)
@@ -1896,24 +1886,9 @@ def delete_iceberg_dv(spark: SparkSession, path: str, column: str, lo, hi) -> in
             "rewrite/overwrite instead of row tombstones"
         )
     schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    fld = next(f for f in schema_fields if f["name"] == column)
-    fid, typ = fld["id"], fld["type"]
-
-    def _bound(raw, key_id):
-        if not raw:
-            return None
-        for kv in raw:
-            if kv["key"] == key_id:
-                return _ice_decode_bound(typ, kv["value"])
-        return None
-
-    cands = []
-    for d in datas:
-        f = d["data_file"]
-        fmin = _bound(f.get("lower_bounds"), fid)
-        fmax = _bound(f.get("upper_bounds"), fid)
-        if fmin is None or fmax is None or (fmax >= lo and fmin <= hi):
-            cands.append(f)
+    cands = [
+        d["data_file"] for d in _datas_in_range(datas, _field(schema_fields, column), lo, hi)
+    ]
     if not cands:
         return meta["current-snapshot-id"]
     full = _full_schema(meta, schema_fields, spark)
@@ -2171,14 +2146,6 @@ def _dv_positions_for_keys(
         ],
     ).collect()[0]
 
-    def _bound(raw, key_id, typ):
-        if not raw:
-            return None
-        for kv in raw:
-            if kv["key"] == key_id:
-                return _ice_decode_bound(typ, kv["value"])
-        return None
-
     cands = []
     for d in datas:
         f = d["data_file"]
@@ -2186,15 +2153,9 @@ def _dv_positions_for_keys(
         for i, c in enumerate(on):
             if env[f"__nl_{i}"]:
                 continue  # null keys: bounds can't witness absence
-            fld = by_name[c]
-            fmin = _bound(f.get("lower_bounds"), fld["id"], fld["type"])
-            fmax = _bound(f.get("upper_bounds"), fld["id"], fld["type"])
             lo, hi = env[f"__lo_{i}"], env[f"__hi_{i}"]
-            if (
-                fmin is not None
-                and fmax is not None
-                and lo is not None
-                and (fmax < lo or fmin > hi)
+            if lo is not None and not envelope_meets(
+                *_file_envelope(f, by_name[c]), lo, hi
             ):
                 keep = False
                 break

@@ -83,6 +83,8 @@ from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
     Footer,
+    envelope_meets,
+    hive_dir_value,
     scratch_path,
     stage_write,
     table_file_stream,
@@ -118,6 +120,27 @@ def log_stats(footer: Footer) -> dict:
         mins[name] = lo
         maxs[name] = hi
     return {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
+
+
+def _load_actions(log_file: str) -> list[dict]:
+    """The actions of one commit or checkpoint file. Logs written before
+    partition values were decoded hold the raw hive dir string (`a%2Fb`,
+    `__HIVE_DEFAULT_PARTITION__`): a logged value equal to the raw
+    `k=<raw>` segment of its add's own path becomes the value that
+    segment stands for. A decoded value differs from its raw segment
+    only when decoding changed it, so newer logs read unchanged."""
+    with open(log_file) as fh:
+        acts = [json.loads(line) for line in fh if line.strip()]
+    for a in acts:
+        add = a.get("add")
+        if not add or not add.get("partitionValues"):
+            continue
+        pv = add["partitionValues"]
+        for seg in add["path"].split(os.sep)[:-1]:
+            k, _, raw = seg.partition("=")
+            if pv.get(k) == raw:
+                pv[k] = hive_dir_value(raw)
+    return acts
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -414,16 +437,20 @@ class TableLog:
         cps = [c for c in self._checkpoints() if c <= v]
         if cps:
             start = cps[-1]
-            with open(
-                os.path.join(self.log_dir, f"{start:020d}.checkpoint.json")
-            ) as fh:
-                acts.extend(json.loads(line) for line in fh if line.strip())
+            acts.extend(
+                _load_actions(
+                    os.path.join(self.log_dir, f"{start:020d}.checkpoint.json")
+                )
+            )
         for ver in vs:
             if ver <= start or ver > v:
                 continue
-            with open(os.path.join(self.log_dir, f"{ver:020d}.json")) as fh:
-                acts.extend(json.loads(line) for line in fh if line.strip())
+            acts.extend(self._commit_actions(ver))
         return v, acts
+
+    def _commit_actions(self, version: int) -> list[dict]:
+        """The actions committed at `version` alone."""
+        return _load_actions(os.path.join(self.log_dir, f"{version:020d}.json"))
 
     def checkpoint(self, version: int | None = None) -> int:
         """Write a checkpoint of the resolved state (live add actions +
@@ -742,17 +769,7 @@ class TableLog:
             raise ValueError(
                 f"no added files in ({from_version}, {hi}] of {self.log_dir}"
             )
-        groups: dict[str, list[str]] = {}
-        for p in added:
-            groups.setdefault(p.split(os.sep, 1)[0], []).append(
-                os.path.join(self.data_dir, p)
-            )
-        parts = [
-            spark.read.option("basePath", os.path.join(self.data_dir, seg)).parquet(*ps)
-            for seg, ps in sorted(groups.items())
-        ]
-        df = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-        return self._apply_mapping(df, hi)
+        return self._scan(spark, added, hi)
 
     def delete_where(self, pred) -> int:
         """Logical file-level delete: commit remove-actions for every live
@@ -896,7 +913,7 @@ class TableLog:
             st = f.get("stats") or {}
             fmin = (st.get("minValues") or {}).get(phys)
             fmax = (st.get("maxValues") or {}).get(phys)
-            if fmin is None or fmax is None or (fmax >= lo and fmin <= hi):
+            if envelope_meets(fmin, fmax, lo, hi):
                 out.append(f)
         return out
 
@@ -904,25 +921,16 @@ class TableLog:
         self, spark: SparkSession, column: str, lo, hi, version: int | None = None
     ) -> DataFrame:
         """Skip-aware range read: prune files from LOG STATISTICS (no
-        listing, no footer reads at query time), then apply the exact
-        predicate to the survivors — file skipping prunes I/O, the
-        residual filter guarantees semantics."""
+        listing, no footer reads at query time), read the survivors
+        through `read`'s scan, then apply the exact predicate — file
+        skipping prunes I/O, the residual filter guarantees semantics.
+        A range no file meets reads zero rows with `read`'s columns."""
         files = self.files_in_range(column, lo, hi, version)
         if not files:
-            raise ValueError(f"no live files intersect {column} in [{lo}, {hi}]")
-        groups: dict[str, list[str]] = {}
-        for f in files:
-            seg = f["path"].split(os.sep, 1)[0]
-            groups.setdefault(seg, []).append(os.path.join(self.data_dir, f["path"]))
-        parts = [
-            spark.read.option("basePath", os.path.join(self.data_dir, seg)).parquet(*ps)
-            for seg, ps in sorted(groups.items())
-        ]
-        df = self._apply_mapping(
-            reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts),
-            version,
+            return self.read(spark, version).limit(0)
+        return self._scan(spark, [f["path"] for f in files], version).where(
+            F.col(column).between(F.lit(lo), F.lit(hi))
         )
-        return df.where((F.col(column) >= lo) & (F.col(column) <= hi))
 
     def vacuum(self, retain_versions: int | None = None) -> list[str]:
         """Physically delete unreferenced data files.
@@ -1000,24 +1008,32 @@ class TableLog:
             ]
         if not files:
             raise ValueError(f"version {snap.version} has no live files after pruning")
-        # Each commit staged its files under one data/s-<uuid>/ root; group
-        # by the deepest NON-PARTITION ancestor dir (everything above the
-        # first key=value segment) and give Spark that root as basePath so
-        # key=value partition columns are recovered consistently. Grouping
-        # by the FIRST segment alone would lump an adopted table's
-        # "../data/s-a" and "../data/s-b" staging dirs into one ".."
-        # group — a single inferred-schema scan that crashes when a
-        # widened column leaves the groups at different physical widths.
+        return self._scan(spark, [f["path"] for f in files], version)
+
+    def _scan(
+        self, spark: SparkSession, paths: list[str], version: int | None
+    ) -> DataFrame:
+        """The rows of data files `paths` (relative to data/) under the
+        logical schema AS OF `version` — the one scan under read,
+        read_range and changes.
+
+        Each commit staged its files under one data/s-<uuid>/ root; group
+        by the deepest NON-PARTITION ancestor dir (everything above the
+        first key=value segment) and give Spark that root as basePath so
+        key=value partition columns are recovered consistently. Grouping
+        by the FIRST segment alone would lump an adopted table's
+        "../data/s-a" and "../data/s-b" staging dirs into one ".."
+        group — a single inferred-schema scan that crashes when a
+        widened column leaves the groups at different physical widths."""
         groups: dict[str, list[str]] = {}
-        for f in files:
-            parts = f["path"].split(os.sep)
+        for p in paths:
             root_parts: list[str] = []
-            for seg in parts[:-1]:
+            for seg in p.split(os.sep)[:-1]:
                 if "=" in seg:
                     break
                 root_parts.append(seg)
             seg = os.sep.join(root_parts) if root_parts else "."
-            groups.setdefault(seg, []).append(os.path.join(self.data_dir, f["path"]))
+            groups.setdefault(seg, []).append(os.path.join(self.data_dir, p))
         parts = [
             spark.read.option("basePath", os.path.join(self.data_dir, seg)).parquet(*ps)
             for seg, ps in sorted(groups.items())

@@ -1,13 +1,16 @@
 """The shared staged write and footer reader of the table formats
 (sources/files.py `stage_write` / `file_footer`): decoded partition
 values, null counts summed over every row group, and one footer open per
-committed data file for Delta, Iceberg, Hudi and TableLog."""
+committed data file for Delta, Iceberg, Hudi and TableLog. And the read
+side: each format's range read is its full read over log-pruned files,
+and a Delta read replays the log once."""
 
 from __future__ import annotations
 
 import collections
 import json
 import os
+from datetime import datetime, timedelta
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -16,14 +19,30 @@ from pyspark.sql import functions as F
 
 from atlas_migration_repo_spark.sources.delta_interop import (
     convert_tablelog_to_delta,
+    delete_delta_dv,
     delta_live_files,
     merge_delta,
     read_delta,
+    read_delta_cdf,
+    read_delta_range,
+    rename_delta_column,
     write_delta,
 )
 from atlas_migration_repo_spark.sources.files import ColumnFooter, file_footer
-from atlas_migration_repo_spark.sources.hudi_interop import write_hudi
-from atlas_migration_repo_spark.sources.iceberg_interop import write_iceberg
+from atlas_migration_repo_spark.sources.hudi_interop import (
+    delete_hudi,
+    read_hudi,
+    read_hudi_event_range,
+    write_hudi,
+)
+from atlas_migration_repo_spark.sources.iceberg_interop import (
+    delete_iceberg_where,
+    iceberg_live_state,
+    read_iceberg,
+    read_iceberg_range,
+    rename_iceberg_column,
+    write_iceberg,
+)
 from atlas_migration_repo_spark.sources.table_log import TableLog, log_stats
 
 
@@ -155,3 +174,242 @@ def test_hudi_write_stat_ranges_from_the_shared_footer(spark, tmp_path):
         1_700_086_400_000,
     )
     assert (st["minRecordKey"], st["maxRecordKey"]) == ("1", "2")
+
+
+# -- reads: a range read is the full read over log-pruned files ------------
+
+_LO, _HI = 5, 14  # ids 5..14 of 0..29: 10 rows at the latest version
+_EPOCH = datetime(1970, 1, 1)
+
+
+def _matrix_frame(spark, ids):
+    """Rows `id`, `p = id % 3`, `v = id * 10` and an event time `ts` of
+    `id` seconds, written as one file per id band so stats can prune."""
+    return (
+        spark.range(ids.start, ids.stop, numPartitions=2)
+        .select(
+            "id",
+            (F.col("id") % 3).alias("p"),
+            (F.col("id") * 10).alias("v"),
+            F.timestamp_seconds("id").alias("ts"),
+        )
+        .repartitionByRange(2, "id")
+    )
+
+
+# per format: write(df, root, pcols, append) -> version token, rename,
+# delete (rows 6..9 or, for TableLog, the p = 1 files), read(at), range(at)
+_FORMATS = {
+    "delta": dict(
+        write=lambda spark, df, root, pcols, append: write_delta(
+            df, root, partition_by=pcols, mode="append" if append else "overwrite"
+        ),
+        rename=lambda spark, root: rename_delta_column(root, "v", "w"),
+        delete=lambda spark, root: delete_delta_dv(spark, root, "id BETWEEN 6 AND 9"),
+        read=lambda spark, root, at: read_delta(spark, root, version=at),
+        range=lambda spark, root, c, lo, hi, at: read_delta_range(
+            spark, root, c, lo, hi, version=at
+        ),
+    ),
+    "iceberg": dict(
+        write=lambda spark, df, root, pcols, append: write_iceberg(
+            df, root, partition_by=pcols, mode="append" if append else "overwrite"
+        ),
+        rename=lambda spark, root: rename_iceberg_column(root, "v", "w"),
+        delete=lambda spark, root: delete_iceberg_where(spark, root, "v", 60, 90),
+        read=lambda spark, root, at: read_iceberg(spark, root, snapshot_id=at),
+        range=lambda spark, root, c, lo, hi, at: read_iceberg_range(
+            spark, root, c, lo, hi, snapshot_id=at
+        ),
+    ),
+    "tablelog": dict(
+        write=lambda spark, df, root, pcols, append: TableLog(root).append(
+            df, partition_by=pcols
+        ),
+        rename=lambda spark, root: TableLog(root).rename_column("v", "w"),
+        delete=lambda spark, root: TableLog(root).delete_where(
+            lambda pv: pv.get("p") == "1"
+        ),
+        read=lambda spark, root, at: TableLog(root).read(spark, version=at),
+        range=lambda spark, root, c, lo, hi, at: TableLog(root).read_range(
+            spark, c, lo, hi, version=at
+        ),
+    ),
+    "hudi": dict(
+        write=lambda spark, df, root, pcols, append: write_hudi(
+            df, root, record_key="id", partition_by=pcols, event_time_field="ts"
+        ),
+        delete=lambda spark, root: delete_hudi(
+            spark.range(6, 10).select("id"), root
+        ),
+        read=lambda spark, root, at: read_hudi(spark, root),
+        # Hudi's range reader takes event-time bounds: `id` seconds
+        range=lambda spark, root, c, lo, hi, at: read_hudi_event_range(
+            spark, root, _EPOCH + timedelta(seconds=lo), _EPOCH + timedelta(seconds=hi)
+        ),
+    ),
+}
+_SHAPES = ["plain", "partitioned", "renamed", "deletes", "empty"]
+_UNSUPPORTED = {("hudi", "renamed"), ("hudi", "travel")}  # no such Hudi reader
+
+
+@pytest.fixture(scope="module")
+def matrix_table(spark, tmp_path_factory):
+    """(fmt, shape) -> (root, version after the first write) of a table
+    built once per module: ids 0..19, then 20..29 appended, then the
+    shape's change (partitioned by `p` for `partitioned`, and for
+    TableLog's `deletes`, whose deletes are by partition)."""
+    base = tmp_path_factory.mktemp("range_matrix")
+    built: dict = {}
+
+    def get(fmt, shape):
+        if (fmt, shape) not in built:
+            f = _FORMATS[fmt]
+            root = str(base / f"{fmt}_{shape}")
+            by_p = shape == "partitioned" or (fmt, shape) == ("tablelog", "deletes")
+            pcols = ["p"] if by_p else []
+            first = f["write"](spark, _matrix_frame(spark, range(0, 20)), root, pcols, False)
+            if fmt == "iceberg":
+                first = iceberg_live_state(root)[0]["current-snapshot-id"]
+            elif fmt == "tablelog":
+                first = TableLog(root).versions()[-1]
+            f["write"](spark, _matrix_frame(spark, range(20, 30)), root, pcols, True)
+            if shape == "renamed":
+                f["rename"](spark, root)
+            elif shape == "deletes":
+                f["delete"](spark, root)
+            built[fmt, shape] = (root, first)
+        return built[fmt, shape]
+
+    return get
+
+
+_CELLS = [
+    (fmt, shape, mode)
+    for fmt in _FORMATS
+    for shape in _SHAPES
+    for mode in ("full", "range", "travel")
+    if (fmt, shape) not in _UNSUPPORTED and (fmt, mode) not in _UNSUPPORTED
+]
+
+
+@pytest.mark.parametrize("fmt,shape,mode", _CELLS)
+def test_range_read_is_the_full_read_filtered(spark, matrix_table, fmt, shape, mode):
+    """Every format's range read returns exactly its full read at the
+    same version with the BETWEEN filter applied — same rows, same
+    column names in the same order — on a plain, a partitioned, a
+    renamed, a deleted-from and an empty-range table; and the full read
+    itself holds the rows written."""
+    root, first = matrix_table(fmt, shape)
+    f = _FORMATS[fmt]
+    at = first if mode == "travel" else None
+    renamed = shape == "renamed" and mode != "travel"
+    vcol = "w" if renamed else "v"
+    ids = set(range(20 if mode == "travel" else 30))
+    if shape == "deletes" and mode != "travel":
+        ids -= {i for i in ids if i % 3 == 1} if fmt == "tablelog" else set(range(6, 10))
+    full = f["read"](spark, root, at)
+    if mode == "full":
+        got = {(r["id"], r["p"], r[vcol]) for r in full.collect()}
+        assert got == {(i, i % 3, i * 10) for i in ids}
+        return
+    # the range column: `id` (Hudi: its event time), the renamed column
+    # on a renamed table, an id range past every file when empty
+    col, lo, hi = ("id", _LO, _HI)
+    if shape == "renamed":
+        col, lo, hi = (vcol, _LO * 10, _HI * 10)
+    elif shape == "empty":
+        lo, hi = 100, 200
+    ranged = f["range"](spark, root, col, lo, hi, at)
+    if fmt == "hudi":
+        want = full.where(
+            F.col("ts").between(
+                F.timestamp_seconds(F.lit(lo)), F.timestamp_seconds(F.lit(hi))
+            )
+        )
+    else:
+        want = full.where(F.col(col).between(F.lit(lo), F.lit(hi)))
+    assert ranged.columns == want.columns
+    got_rows = sorted(map(tuple, ranged.collect()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    expect_ids = {i for i in ids if _LO <= i <= _HI} if shape != "empty" else set()
+    assert {r[0] for r in got_rows} == expect_ids
+    assert all(None not in r for r in got_rows)
+
+
+def test_delta_reads_replay_the_log_once(spark, tmp_path, monkeypatch):
+    """read_delta, read_delta_range, merge_delta and read_delta_cdf each
+    resolve the log once: one checkpoint-plus-commits walk per call."""
+    from atlas_migration_repo_spark.sources import delta_interop as D
+
+    root = str(tmp_path / "cdf")
+    df = _matrix_frame(spark, range(0, 30))
+    write_delta(
+        df, root, partition_by=["p"], configuration={"delta.enableChangeDataFeed": "true"}
+    )
+    calls = []
+    real = D._raw_actions
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(D, "_raw_actions", counting)
+    ops = {
+        "read_delta": lambda: read_delta(spark, root),
+        "read_delta_range": lambda: read_delta_range(spark, root, "id", _LO, _HI),
+        "merge_delta": lambda: merge_delta(
+            spark, root, df.where("id < 3").withColumn("v", F.lit(0).cast("long")), "id"
+        ),
+        "read_delta_cdf": lambda: read_delta_cdf(spark, root, 0),
+    }
+    counts = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        counts[name] = len(calls)
+    assert counts == dict.fromkeys(ops, 1)
+
+
+def test_old_tablelog_logs_decode_raw_partition_dirs(spark, tmp_path):
+    """A TableLog log written before partition values were decoded holds
+    the raw hive dir strings (`a%2Fb`, `__HIVE_DEFAULT_PARTITION__`).
+    Replay reads them as the values they stand for, so a predicate on
+    None finds the null partition and a converted Delta table reads
+    'a/b' and NULL."""
+    rows = {(1, "a/b"), (2, None), (3, "x y")}
+    t = TableLog(str(tmp_path / "old"))
+    t.append(
+        spark.createDataFrame([(1, "a/b"), (2, None)], "id int, region string"),
+        partition_by=["region"],
+    )
+    t.append(spark.createDataFrame([(3, "x y")], "id int, region string"), partition_by=["region"])
+    for v in t.versions():  # rewrite each commit as the old writer logged it
+        commit = os.path.join(t.log_dir, f"{v:020d}.json")
+        with open(commit) as fh:
+            acts = [json.loads(line) for line in fh if line.strip()]
+        for a in acts:
+            if "add" in a:
+                (seg,) = [s for s in a["add"]["path"].split(os.sep) if s.startswith("region=")]
+                a["add"]["partitionValues"]["region"] = seg.split("=", 1)[1]
+        with open(commit, "w") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in acts)
+    raw = {"a%2Fb", "__HIVE_DEFAULT_PARTITION__", "x y"}
+    with open(os.path.join(t.log_dir, f"{0:020d}.json")) as fh:
+        logged = {
+            json.loads(line)["add"]["partitionValues"]["region"]
+            for line in fh
+            if '"add"' in line
+        }
+    assert logged <= raw and len(logged) == 2
+    assert {f["partitionValues"]["region"] for f in t.snapshot().files} == {
+        "a/b",
+        None,
+        "x y",
+    }
+    convert_tablelog_to_delta(spark, t)
+    got = {(r["id"], r["region"]) for r in read_delta(spark, t.root).collect()}
+    assert got == rows
+    t.delete_where(lambda pv: pv["region"] is None)
+    got = {(r["id"], r["region"]) for r in t.read(spark).collect()}
+    assert got == rows - {(2, None)}
