@@ -134,21 +134,17 @@ class AtlasEngine:
         w.save(path)
 
     def read_table(self, path: str) -> DataFrame:
-        """Read ANY table this engine speaks — Delta, Iceberg, Hudi, or
-        TableLog — with the format auto-detected from the metadata tree
-        (the lakehouse CLI's detection)."""
+        """Read ANY table this engine speaks — Delta (TableLog included),
+        Iceberg or Hudi — with the format auto-detected from the metadata
+        tree (the lakehouse CLI's detection)."""
         from atlas_migration_repo_spark.lakehouse import detect_format
 
         fmt = detect_format(path)
-        if fmt == "delta":
-            return self.read_delta(path)
         if fmt == "iceberg":
             return self.read_iceberg(path)
         if fmt == "hudi":
             return self.read_hudi(path)
-        from atlas_migration_repo_spark.sources.table_log import TableLog
-
-        return TableLog(path).read(self.spark)
+        return self.read_delta(path)
 
     def register_table(self, name: str, path: str) -> None:
         """Expose any lakehouse table to `.sql()` as a temp view."""
@@ -435,26 +431,22 @@ class AtlasEngine:
         return remove_orphan_files(path, older_than_ms=older_than_ms)
 
     def convert_to_delta(self, tablelog_root: str) -> int:
-        """Zero-copy, history-preserving CONVERT of a TableLog table to
-        the Delta format (same files, a `_delta_log` beside `_log`)."""
-        from atlas_migration_repo_spark.sources.delta_interop import (
-            convert_tablelog_to_delta,
-        )
+        """CONVERT of a TableLog table to Delta: a TableLog is stored as
+        Delta, and opening a root of the older `_log/` format imports it
+        zero-copy with its history. Returns the Delta version."""
         from atlas_migration_repo_spark.sources.table_log import TableLog
 
-        return convert_tablelog_to_delta(self.spark, TableLog(tablelog_root))
+        return TableLog(tablelog_root).versions()[-1]
 
     def adopt_delta(self, path: str):
-        """Adopt a foreign Delta table as a TableLog, zero-copy with its
-        history — the reverse migration. Returns the TableLog."""
-        from atlas_migration_repo_spark.sources.delta_interop import (
-            adopt_delta_as_tablelog,
-        )
+        """A Delta table as a TableLog — same files, same log, full
+        history. Returns the TableLog."""
+        from atlas_migration_repo_spark.sources.table_log import TableLog
 
-        return adopt_delta_as_tablelog(path)
+        return TableLog(path)
 
     def describe_table(self, path: str):
-        """Format-auto-detected describe (delta/iceberg/tablelog) from
+        """Format-auto-detected describe (delta/iceberg/hudi) from
         metadata alone — the CLI's `describe` as a library call."""
         from atlas_migration_repo_spark.lakehouse import run
 

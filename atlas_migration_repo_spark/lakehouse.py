@@ -8,9 +8,10 @@ FILES triple for any table this engine can read, format auto-detected:
     python -m atlas_migration_repo_spark.lakehouse fsck     <path>
     python -m atlas_migration_repo_spark.lakehouse timeline <path>  (hudi)
 
-Formats: Delta (`_delta_log/`), Iceberg v2 (`metadata/version-hint.text`),
-Hudi COW (`.hoodie/hoodie.properties`), and the engine's own TableLog
-(`_log/`). Pure metadata reads — no Spark
+Formats: Delta (`_delta_log/`, which is also how the engine's own
+TableLog is stored), Iceberg v2 (`metadata/version-hint.text`) and Hudi
+COW (`.hoodie/hoodie.properties`); a TableLog root of the older `_log/`
+format is imported as Delta first. Pure metadata reads — no Spark
 session, no data scan; output is one JSON document on stdout (stderr
 stays clean for piping). This is the operator-facing half of the interop
 modules: a user migrating from the reference's Databricks/S3 stack keeps
@@ -25,17 +26,22 @@ import sys
 
 
 def detect_format(path: str) -> str:
+    if os.path.isdir(os.path.join(path, "_log")) and not os.path.isdir(
+        os.path.join(path, "_delta_log")
+    ):
+        # a TableLog root from before TableLog was stored as Delta:
+        # opening it imports its `_log/` as a Delta log
+        from atlas_migration_repo_spark.sources.table_log import TableLog
+
+        TableLog(path)
     if os.path.isdir(os.path.join(path, "_delta_log")):
         return "delta"
     if os.path.exists(os.path.join(path, "metadata", "version-hint.text")):
         return "iceberg"
     if os.path.exists(os.path.join(path, ".hoodie", "hoodie.properties")):
         return "hudi"
-    if os.path.isdir(os.path.join(path, "_log")):
-        return "tablelog"
     raise FileNotFoundError(
-        f"no _delta_log/, metadata/version-hint.text, .hoodie/ or _log/ "
-        f"under {path}"
+        f"no _delta_log/, metadata/version-hint.text or .hoodie/ under {path}"
     )
 
 
@@ -181,65 +187,6 @@ def _iceberg_files(path: str) -> list[dict]:
     ]
 
 
-# -- tablelog ----------------------------------------------------------------
-def _tablelog_describe(path: str) -> dict:
-    from atlas_migration_repo_spark.sources.table_log import TableLog
-
-    t = TableLog(path)
-    snap = t.snapshot()
-    return {
-        "format": "tablelog",
-        "version": snap.version,
-        "constraints": t.constraints(),
-        "num_files": len(snap.files),
-        "size_bytes": sum(f.get("size", 0) for f in snap.files),
-    }
-
-
-def _tablelog_history(path: str) -> list[dict]:
-    from atlas_migration_repo_spark.sources.table_log import TableLog
-
-    t = TableLog(path)
-    out = []
-    for v in t.versions():
-        adds = removes = 0
-        info: dict = {}
-        with open(os.path.join(t.log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    adds += 1
-                elif "remove" in a:
-                    removes += 1
-                elif "commitInfo" in a:
-                    info = a["commitInfo"]
-        out.append(
-            {
-                "version": v,
-                "operation": info.get("operation"),
-                "num_added_files": adds,
-                "num_removed_files": removes,
-            }
-        )
-    return out
-
-
-def _tablelog_files(path: str) -> list[dict]:
-    from atlas_migration_repo_spark.sources.table_log import TableLog
-
-    return [
-        {
-            "path": f["path"],
-            "size": f.get("size"),
-            "partition_values": f.get("partitionValues") or {},
-            "stats": f.get("stats") or {},
-        }
-        for f in TableLog(path).snapshot().files
-    ]
-
-
 # -- hudi --------------------------------------------------------------------
 def _hudi_describe(path: str) -> dict:
     from atlas_migration_repo_spark.sources.hudi_interop import (
@@ -333,9 +280,6 @@ _DISPATCH = {
     ("iceberg", "describe"): _iceberg_describe,
     ("iceberg", "history"): _iceberg_history,
     ("iceberg", "files"): _iceberg_files,
-    ("tablelog", "describe"): _tablelog_describe,
-    ("tablelog", "history"): _tablelog_history,
-    ("tablelog", "files"): _tablelog_files,
     ("hudi", "describe"): _hudi_describe,
     ("hudi", "history"): _hudi_history,
     ("hudi", "files"): _hudi_files,
@@ -647,16 +591,6 @@ def fsck(path: str) -> dict:
                                 f"log block count mismatch: {st['path']} "
                                 f"block={got} stat={want}"
                             )
-    else:  # tablelog
-        from atlas_migration_repo_spark.sources.table_log import TableLog
-
-        t = TableLog(path)
-        snap = t.snapshot()
-        for f in snap.files:
-            checked += 1
-            full = os.path.join(path, "data", f["path"])
-            if not os.path.exists(full):
-                errors.append(f"missing data file: {f['path']}")
     return {
         "format": fmt,
         "ok": not errors,

@@ -13,8 +13,8 @@ the IVF-PQ index a first-class TableLog citizen:
 
 - build_ann_index: train quantizer + codebooks on the corpus snapshot,
   encode all members, commit — with the SOURCE VERSION recorded in the
-  same atomic commit (`extra_actions` metaData), so the index always
-  knows how far it has indexed.
+  same atomic commit (a Delta `txn` mark of app `ann_indexed_version`),
+  so the index always knows how far it has indexed.
 - sync_ann_index: pull `changes()` from the embeddings TableLog since
   the recorded version (the repo's own CDC primitive), assign + encode
   ONLY the delta under the persisted centroids/codebooks, append. No
@@ -49,8 +49,16 @@ from atlas_migration_repo_spark.llm.similarity import (
     _pq_train,
 )
 from atlas_migration_repo_spark.registry import query
+from atlas_migration_repo_spark.sources.delta_interop import (
+    delta_txn_version,
+    set_delta_txn,
+    write_delta,
+)
 from atlas_migration_repo_spark.sources.files import scratch_path
 from atlas_migration_repo_spark.sources.table_log import TableLog
+
+# the txn app whose mark on the codes log is the embeddings version indexed
+_INDEXED = "ann_indexed_version"
 
 
 def _logs(index_root: str) -> tuple[TableLog, TableLog, TableLog]:
@@ -79,16 +87,12 @@ def _with_bucket(coded: DataFrame) -> DataFrame:
 
 
 def indexed_version(codes_log: TableLog) -> int:
-    """The embeddings-table version this index has indexed through —
-    read from the codes log's own metaData actions (latest wins)."""
-    _, acts = codes_log._actions()
-    v = None
-    for a in acts:
-        if "metaData" in a and "ann_indexed_version" in a["metaData"]:
-            v = a["metaData"]["ann_indexed_version"]
+    """The embeddings-table version this index has indexed through — the
+    codes log's txn mark."""
+    v = delta_txn_version(codes_log.root, _INDEXED)
     if v is None:
-        raise ValueError("codes log carries no ann_indexed_version metadata")
-    return int(v)
+        raise ValueError(f"codes log carries no {_INDEXED} txn mark")
+    return v
 
 
 def build_ann_index(
@@ -124,10 +128,8 @@ def build_ann_index(
     bc = spark.sparkContext.broadcast(cent)
     bcb = spark.sparkContext.broadcast(cb)
     coded = _pq_encode(_assign_cells(em, bc, 1), bcb)
-    codes_log.append(
-        _with_bucket(coded),
-        partition_by=["cell_bucket"],
-        extra_actions=[{"metaData": {"ann_indexed_version": source_version}}],
+    codes_log.append_txn(
+        _with_bucket(coded), _INDEXED, source_version, partition_by=["cell_bucket"]
     )
 
 
@@ -153,8 +155,8 @@ def sync_ann_index(spark: SparkSession, em_log: TableLog, index_root: str) -> in
     """Incrementally index embeddings appended since the last sync:
     `changes()` yields exactly the delta rows, which are assigned and
     encoded under the PERSISTED quantizer (no retrain) and appended to
-    the codes log together with the new high-water version — one atomic
-    commit. Returns the number of rows indexed."""
+    the codes log together with the new high-water version (its txn
+    mark) — one atomic commit. Returns the number of rows indexed."""
     _, _, codes_log = _logs(index_root)
     from_v = indexed_version(codes_log)
     to_v = em_log.versions()[-1]
@@ -165,25 +167,18 @@ def sync_ann_index(spark: SparkSession, em_log: TableLog, index_root: str) -> in
     except ValueError:
         # the versions since the watermark carry no data changes — e.g.
         # a compact() (dataChange=false adds, skipped by the feed) or a
-        # pure delete. Advance the watermark with a metadata-only commit
-        # so the next sync doesn't re-walk the same empty range; a
-        # re-index of the whole table here is exactly what the
-        # dataChange flag exists to prevent.
-        codes_log._commit(
-            [
-                {"metaData": {"ann_indexed_version": to_v}},
-                {"commitInfo": {"operation": "ANN SYNC (no data change)"}},
-            ]
-        )
+        # pure delete. Advance the watermark with a txn-only commit so
+        # the next sync doesn't re-walk the same empty range; a re-index
+        # of the whole table here is exactly what the dataChange flag
+        # exists to prevent.
+        set_delta_txn(codes_log.root, _INDEXED, to_v)
         return 0
     cent, cb = _load_quantizer(spark, index_root)
     bc = spark.sparkContext.broadcast(cent)
     bcb = spark.sparkContext.broadcast(cb)
     coded = _pq_encode(_assign_cells(delta, bc, 1), bcb)
-    codes_log.append(
-        _with_bucket(coded),
-        partition_by=["cell_bucket"],
-        extra_actions=[{"metaData": {"ann_indexed_version": to_v}}],
+    codes_log.append_txn(
+        _with_bucket(coded), _INDEXED, to_v, partition_by=["cell_bucket"]
     )
     return delta.count()
 
@@ -192,9 +187,10 @@ def compact_ann_index(spark: SparkSession, em_log: TableLog, index_root: str) ->
     """Drop index entries whose vectors were DELETED from the embeddings
     table (changes() carries adds; deletes surface here): rewrite codes
     as codes ⋉ live vec_ids — one semi join on the 4-byte-code table,
-    never touching arrays — committed as a merge-style remove+add swap,
-    so older index versions stay time-travelable. Stale entries are
-    harmless for correctness even before compaction (the exact rerank
+    never touching arrays — committed as one overwrite (a remove+add
+    swap), so older index versions stay time-travelable; the watermark's
+    txn mark carries over untouched. Stale entries are harmless for
+    correctness even before compaction (the exact rerank
     inner-joins the live table, so deleted ids can't be emitted); they
     only waste shortlist slots, which is why this is a periodic OPTIMIZE,
     not a sync-path step. Returns rows dropped."""
@@ -206,13 +202,11 @@ def compact_ann_index(spark: SparkSession, em_log: TableLog, index_root: str) ->
     n_after = kept.count()
     if n_after == n_before:
         return 0
-    iv = indexed_version(codes_log)
-    snap = codes_log.snapshot()
-    codes_log.append(
+    write_delta(
         _with_bucket(kept),
+        codes_log.root,
         partition_by=["cell_bucket"],
-        extra_actions=[{"metaData": {"ann_indexed_version": iv}}]
-        + [{"remove": {"path": f["path"]}} for f in snap.files],
+        mode="overwrite",
     )
     return n_before - n_after
 

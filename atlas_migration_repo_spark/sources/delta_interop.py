@@ -27,11 +27,11 @@ landed by ONE Spark write; change files of partitioned tables keep the
 table's hive layout under `_change_data/<col>=<v>/`, their partition
 values in the `cdc` actions (older flat change files still read).
 
-Distinct from `table_log.py`: TableLog is this engine's own bespoke
-transactional layer (richer: CHECK constraints, column mapping, CDC,
-idempotent txns). delta_interop is the FOREIGN-format bridge; a zero-copy
-`convert_tablelog_to_delta` maps a TableLog's commit history onto Delta
-commits in place, the CONVERT TO DELTA idea.
+This is also the engine's own transaction log: `table_log.TableLog` is a
+thin facade over these functions, and a TableLog is a Delta table whose
+data files sit under `data/`. A TableLog root written before that (an
+`_log` directory of JSON commits) is imported once, zero-copy and with
+its history, by `import_tablelog_log` when it is opened.
 """
 
 from __future__ import annotations
@@ -54,20 +54,18 @@ from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
     Footer,
+    LogStore,
     StagedFile,
     attach_partition_values,
     envelope_meets,
     file_footer,
     file_path_col,
+    hive_dir_value,
+    log_stats,
+    resolve_log_store,
     scratch_path,
     stage_write,
     table_file_stream,
-)
-from atlas_migration_repo_spark.sources.table_log import (
-    LogStore,
-    TableLog,
-    log_stats,
-    resolve_log_store,
 )
 from atlas_migration_repo_spark.streaming.harness import drain
 
@@ -161,9 +159,11 @@ def _publish_commit(
     - REMOVE-carrying commits re-resolve the snapshot and raise
       ConcurrentDeltaWriteError if any removed file is no longer live
       (a concurrent overwrite superseded it);
-    - metaData-carrying commits raise outright (the schema/config they
-      computed predates the race winner — blind retry would clobber a
-      concurrent evolution's columns, Delta's metadata-changed rule);
+    - metaData-carrying commits raise (the schema/config they computed
+      predates the race winner — blind retry would clobber a concurrent
+      evolution's columns, Delta's metadata-changed rule), unless the
+      table now has the same metaData (two writers creating one table):
+      the commit then retries without its metaData and protocol;
     - txn-carrying commits re-check the transaction mark and return the
       winner's version as a NO-OP if the same (appId, version) already
       landed — two restarted workers replaying one micro-batch commit
@@ -178,21 +178,23 @@ def _publish_commit(
     has_meta = any("metaData" in a for a in actions)
     txns = [a["txn"] for a in actions if "txn" in a]
     table_root = os.path.dirname(log_dir)
-    tmp = os.path.join(log_dir, f".tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a, sort_keys=True) + "\n")
-        fh.flush()
-        os.fsync(fh.fileno())
+    tmp = _stage_commit(log_dir, actions)
     try:
         lost_race = False
         while True:
             if lost_race and has_meta:
-                raise ConcurrentDeltaWriteError(
-                    "a concurrent commit won the version race and this "
-                    "commit carries a metaData action computed before it; "
-                    "re-read the table and redo the schema change"
-                )
+                if not _log_has_table_state(table_root, actions):
+                    raise ConcurrentDeltaWriteError(
+                        "a concurrent commit won the version race and this "
+                        "commit carries a metaData action computed before "
+                        "it; re-read the table and redo the schema change"
+                    )
+                actions = [
+                    a for a in actions if "metaData" not in a and "protocol" not in a
+                ]
+                has_meta = False
+                os.unlink(tmp)
+                tmp = _stage_commit(log_dir, actions)
             if lost_race and removed:
                 live = {a["path"] for a in delta_live_files(table_root)}
                 gone = sorted(removed - live)
@@ -249,6 +251,39 @@ def _publish_commit(
             version = next_version
     finally:
         os.unlink(tmp)
+
+
+def _stage_commit(log_dir: str, actions: list[dict]) -> str:
+    """Write `actions` to a fresh `.tmp.<uuid>` file in `log_dir` (what
+    the store publishes) and return its path."""
+    tmp = os.path.join(log_dir, f".tmp.{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        for a in actions:
+            fh.write(json.dumps(a, sort_keys=True) + "\n")
+        fh.flush()
+        os.fsync(fh.fileno())
+    return tmp
+
+
+def _log_has_table_state(path: str, actions: list[dict]) -> bool:
+    """Whether the table's current metaData equals the one `actions`
+    carries, table id and creation time aside. A race winner still
+    publishing the table's first commit (coordinated stores) is waited
+    for, up to two seconds."""
+    for _ in range(400):
+        if _committed_versions(_log_dir(path)):
+            break
+        time.sleep(0.005)
+    else:
+        return False
+    _, acts = _raw_actions(path)
+    current, _ = _reduce_actions(acts)
+    ours = next(a["metaData"] for a in actions if "metaData" in a)
+
+    def state(meta: dict) -> dict:
+        return {k: v for k, v in meta.items() if k not in ("id", "createdTime")}
+
+    return state(current) == state(ours)
 
 
 def _checkpoint_actions(cp_path: str) -> list[dict]:
@@ -424,6 +459,12 @@ def _stage(
     return stage_write(df, path, partition_by)
 
 
+def _files_dir(path: str) -> str:
+    """Where a commit to the table at `path` puts its data files."""
+    data = os.path.join(path, "data")
+    return data if os.path.isdir(data) else path
+
+
 def _land(
     path: str,
     leaves: list[StagedFile],
@@ -438,13 +479,16 @@ def _land(
     `_change_data/` as the protocol's `cdc` actions (dataChange=false —
     change files are derived, not table data; zero-row files skipped).
     The `__is_cdc` dir a CDF merge splits its one write by is no table
-    partition: it is left out of the dirs and partitionValues."""
+    partition: it is left out of the dirs and partitionValues. A table
+    whose root holds a `data/` directory (the TableLog layout) lands its
+    data files there."""
     actions: list[dict] = []
+    base = os.path.join(path, "_change_data") if cdc else _files_dir(path)
     for leaf in leaves:
         if cdc and leaf.footer.num_rows == 0:
             continue
         segs = [s for s in leaf.segments if not s.startswith("__is_cdc=")]
-        dest_dir = os.path.join(path, *(["_change_data"] if cdc else []), *segs)
+        dest_dir = os.path.join(base, *segs)
         os.makedirs(dest_dir, exist_ok=True)
         prefix = "cdc" if cdc else "part"
         dest = os.path.join(dest_dir, f"{prefix}-{uuid.uuid4().hex}.snappy.parquet")
@@ -482,9 +526,31 @@ def _check_delta_constraints(df: DataFrame, meta: dict | None) -> None:
         bad = df.where(~F.coalesce(F.expr(expr), F.lit(True))).limit(1)
         if bad.count():
             raise DeltaConstraintViolation(
-                f"CHECK constraint {key.removeprefix('delta.constraints.')}"
-                f" ({expr}) violated by incoming rows"
+                "CHECK constraint violated, commit refused: "
+                f"{key.removeprefix('delta.constraints.')} ({expr})"
             )
+
+
+def _constraints_protocol(proto: dict) -> dict | None:
+    """The protocol a table needs once it carries CHECK constraints —
+    writer version 3, or the checkConstraints feature on a
+    table-features protocol — or None when `proto` already allows
+    them."""
+    if proto.get("minWriterVersion", 2) < 3:
+        return {
+            "minReaderVersion": proto.get("minReaderVersion", 1),
+            "minWriterVersion": 3,
+        }
+    if proto.get("minWriterVersion") == 7 and "checkConstraints" not in (
+        proto.get("writerFeatures") or []
+    ):
+        return {
+            **proto,
+            "writerFeatures": sorted(
+                set(proto.get("writerFeatures") or []) | {"checkConstraints"}
+            ),
+        }
+    return None
 
 
 def add_delta_constraint(
@@ -519,23 +585,8 @@ def add_delta_constraint(
             }
         }
     ]
-    proto = _current_protocol(path)
-    if proto.get("minWriterVersion", 2) < 3:
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 3,
-                }
-            }
-        )
-    elif proto.get("minWriterVersion") == 7 and "checkConstraints" not in (
-        proto.get("writerFeatures") or []
-    ):
-        new_proto = dict(proto)
-        new_proto["writerFeatures"] = sorted(
-            set(proto.get("writerFeatures") or []) | {"checkConstraints"}
-        )
+    new_proto = _constraints_protocol(_current_protocol(path))
+    if new_proto:
         actions.append({"protocol": new_proto})
     conf[key] = expr
     new_meta = dict(meta)
@@ -563,6 +614,25 @@ def drop_delta_constraint(path: str, name: str) -> int:
             }
         },
         {"metaData": new_meta},
+    ]
+    return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
+
+
+def set_delta_txn(path: str, app_id: str, version: int) -> int:
+    """Commit the transaction mark (`app_id`, `version`) alone, with no
+    data — how a consumer moves its watermark over versions that changed
+    no data. A no-op returning the current version when the mark is
+    already at or past `version`."""
+    now_ms = int(time.time() * 1000)
+    actions = [
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": "SET TRANSACTION",
+                "operationParameters": {"appId": app_id, "version": int(version)},
+            }
+        },
+        {"txn": {"appId": app_id, "version": int(version), "lastUpdated": now_ms}},
     ]
     return _publish_commit(_log_dir(path), actions, _next_version(_log_dir(path)))
 
@@ -831,63 +901,80 @@ def _cp_schema_fields():
     }
 
 
+def _cp_rows(
+    meta: dict, adds: list[dict], txns: dict[str, dict]
+) -> tuple[dict, list[dict], list[dict]]:
+    """(metaData, add rows, txn rows) as every checkpoint flavor writes
+    them, in the shape of `_cp_schema_fields`."""
+    md = {
+        "id": meta.get("id"),
+        "format": {"provider": "parquet"},
+        "schemaString": meta.get("schemaString"),
+        "partitionColumns": meta.get("partitionColumns") or [],
+        "configuration": meta.get("configuration") or {},
+        "createdTime": meta.get("createdTime"),
+    }
+    add_rows = [
+        {
+            "add": {
+                "path": a["path"],
+                "partitionValues": a.get("partitionValues") or {},
+                "size": a.get("size"),
+                "modificationTime": a.get("modificationTime"),
+                "dataChange": False,
+                "stats": a.get("stats"),
+                "deletionVector": a.get("deletionVector"),
+            }
+        }
+        for a in adds
+    ]
+    txn_rows = [
+        {
+            "txn": {
+                "appId": t["appId"],
+                "version": int(t["version"]),
+                "lastUpdated": t.get("lastUpdated"),
+            }
+        }
+        for t in txns.values()
+    ]
+    return md, add_rows, txn_rows
+
+
+def _put_checkpoint(log_dir: str, name: str, table, pointer: dict) -> None:
+    """Write checkpoint `table` as `log_dir/name`, then point
+    `_last_checkpoint` at it (`pointer`), each through a tmp + rename so
+    a torn write is never seen."""
+    import pyarrow.parquet as pq
+
+    cp = os.path.join(log_dir, name)
+    tmp = cp + f".tmp.{uuid.uuid4().hex}"
+    pq.write_table(table, tmp)
+    os.rename(tmp, cp)
+    last = os.path.join(log_dir, "_last_checkpoint")
+    tmp = last + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as fh:
+        json.dump(pointer, fh)
+    os.rename(tmp, last)
+
+
 def checkpoint_delta(path: str, version: int | None = None) -> int:
     """Write a V1 parquet checkpoint of the resolved state at `version`
     (default latest) plus the `_last_checkpoint` pointer, so readers
     replay O(commits since checkpoint) instead of the whole log."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     v, protocol, meta, adds, txns = _resolve_checkpoint_state(path, version)
     f = _cp_schema_fields()
     schema = pa.schema([f["protocol"], f["txn"], f["metaData"], f["add"]])
-    rows: list[dict] = [
-        {
-            "protocol": protocol,
-            "metaData": {
-                "id": meta.get("id"),
-                "format": {"provider": "parquet"},
-                "schemaString": meta.get("schemaString"),
-                "partitionColumns": meta.get("partitionColumns") or [],
-                "configuration": meta.get("configuration") or {},
-                "createdTime": meta.get("createdTime"),
-            },
-        }
-    ]
-    for a in adds:
-        rows.append(
-            {
-                "add": {
-                    "path": a["path"],
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                    "modificationTime": a.get("modificationTime"),
-                    "dataChange": False,
-                    "stats": a.get("stats"),
-                    "deletionVector": a.get("deletionVector"),
-                }
-            }
-        )
-    for t in txns.values():
-        rows.append(
-            {
-                "txn": {
-                    "appId": t["appId"],
-                    "version": int(t["version"]),
-                    "lastUpdated": t.get("lastUpdated"),
-                }
-            }
-        )
-    table = pa.Table.from_pylist(rows, schema=schema)
-    cp = os.path.join(_log_dir(path), f"{v:020d}.checkpoint.parquet")
-    tmp = cp + f".tmp.{uuid.uuid4().hex}"
-    pq.write_table(table, tmp)
-    os.rename(tmp, cp)
-    last = os.path.join(_log_dir(path), "_last_checkpoint")
-    tmp = last + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": v, "size": len(rows)}, fh)
-    os.rename(tmp, last)
+    md, add_rows, txn_rows = _cp_rows(meta, adds, txns)
+    rows = [{"protocol": protocol, "metaData": md}, *add_rows, *txn_rows]
+    _put_checkpoint(
+        _log_dir(path),
+        f"{v:020d}.checkpoint.parquet",
+        pa.Table.from_pylist(rows, schema=schema),
+        {"version": v, "size": len(rows)},
+    )
     return v
 
 
@@ -947,22 +1034,9 @@ def checkpoint_delta_v2(
     side_schema = pa.schema([f["add"]])
     n_sidecars = max(1, min(n_sidecars, max(1, len(adds))))
     sidecars: list[dict] = []
+    md, add_rows, txn_rows = _cp_rows(meta, adds, txns)
     for i in range(n_sidecars):
-        chunk = adds[i::n_sidecars]
-        rows = [
-            {
-                "add": {
-                    "path": a["path"],
-                    "partitionValues": a.get("partitionValues") or {},
-                    "size": a.get("size"),
-                    "modificationTime": a.get("modificationTime"),
-                    "dataChange": False,
-                    "stats": a.get("stats"),
-                    "deletionVector": a.get("deletionVector"),
-                }
-            }
-            for a in chunk
-        ]
+        rows = add_rows[i::n_sidecars]
         name = f"{uuid.uuid4().hex}.parquet"
         dest = os.path.join(sidecar_dir, name)
         tmp = dest + f".tmp.{uuid.uuid4().hex}"
@@ -986,46 +1060,17 @@ def checkpoint_delta_v2(
     )
     rows = [
         {"checkpointMetadata": {"version": v, "tags": {}}},
-        {
-            "protocol": protocol,
-            "metaData": {
-                "id": meta.get("id"),
-                "format": {"provider": "parquet"},
-                "schemaString": meta.get("schemaString"),
-                "partitionColumns": meta.get("partitionColumns") or [],
-                "configuration": meta.get("configuration") or {},
-                "createdTime": meta.get("createdTime"),
-            },
-        },
+        {"protocol": protocol, "metaData": md},
+        *txn_rows,
+        *[{"sidecar": sc} for sc in sidecars],
     ]
-    rows += [
-        {
-            "txn": {
-                "appId": t["appId"],
-                "version": int(t["version"]),
-                "lastUpdated": t.get("lastUpdated"),
-            }
-        }
-        for t in txns.values()
-    ]
-    rows += [{"sidecar": sc} for sc in sidecars]
-    uid = uuid.uuid4().hex
-    cp = os.path.join(log_dir, f"{v:020d}.checkpoint.{uid}.parquet")
-    tmp = cp + f".tmp.{uuid.uuid4().hex}"
-    pq.write_table(pa.Table.from_pylist(rows, schema=top_schema), tmp)
-    os.rename(tmp, cp)
-    last = os.path.join(log_dir, "_last_checkpoint")
-    tmp = last + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": v,
-                "size": len(rows),
-                "v2Checkpoint": {"path": os.path.basename(cp)},
-            },
-            fh,
-        )
-    os.rename(tmp, last)
+    name = f"{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+    _put_checkpoint(
+        log_dir,
+        name,
+        pa.Table.from_pylist(rows, schema=top_schema),
+        {"version": v, "size": len(rows), "v2Checkpoint": {"path": name}},
+    )
     return v
 
 
@@ -1089,8 +1134,8 @@ def rename_delta_column(path: str, old: str, new: str) -> int:
     The rename itself only changes the field's LOGICAL name; the
     physical name — what the data files and partitionValues carry — is
     frozen forever. Time travel below the rename surfaces the old name
-    (each version reads under its own metaData). Twin of the TableLog's
-    rename machinery and iceberg's rename_iceberg_column."""
+    (each version reads under its own metaData). TableLog.rename_column
+    runs this; iceberg's twin is rename_iceberg_column."""
     _, meta, _ = _replay(path)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     names = [f.name for f in schema.fields]
@@ -1129,6 +1174,21 @@ def rename_delta_column(path: str, old: str, new: str) -> int:
             actions.append(
                 {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}}
             )
+        elif cur.get("minWriterVersion") == 7:
+            # a table-features protocol names every feature it uses
+            actions.append(
+                {
+                    "protocol": {
+                        **cur,
+                        "readerFeatures": sorted(
+                            set(cur.get("readerFeatures") or []) | {"columnMapping"}
+                        ),
+                        "writerFeatures": sorted(
+                            set(cur.get("writerFeatures") or []) | {"columnMapping"}
+                        ),
+                    }
+                }
+            )
     new_meta = dict(meta)
     new_meta["schemaString"] = T.StructType(fields).json()
     new_meta["configuration"] = conf
@@ -1159,8 +1219,8 @@ def widen_delta_column(path: str, column: str, to_type: str) -> int:
     promote the narrower physical type at scan (Spark's parquet type
     promotion), so pre-widen files read exactly. Only lossless widenings
     are allowed (integer chain upward, float→double). Time travel below
-    the widen surfaces the original type. Twin of the TableLog's
-    widen_column and the sibling rename_delta_column."""
+    the widen surfaces the original type. TableLog.widen_column runs
+    this; the sibling is rename_delta_column."""
     _, meta, _ = _replay(path)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     names = [f.name for f in schema.fields]
@@ -1170,7 +1230,7 @@ def widen_delta_column(path: str, column: str, to_type: str) -> int:
     pair = (cur.dataType.simpleString(), to_type)
     if pair not in _WIDEN_OK:
         raise ValueError(
-            f"widening {pair[0]} -> {to_type} is not lossless; allowed: "
+            f"unsupported widening {pair[0]} -> {to_type}; lossless pairs: "
             f"{sorted(_WIDEN_OK)}"
         )
     fields = []
@@ -2547,8 +2607,8 @@ def vacuum_delta(path: str, retain_versions: int | None = None) -> list[str]:
     live only in versions older than the newest N are reclaimed and the
     stale commit JSONs are dropped after a checkpoint of the oldest
     retained version (replay stays resolvable), so older time travel
-    fails loudly rather than half-resolving — the same contract as
-    TableLog.vacuum. Returns deleted relative paths."""
+    fails loudly rather than half-resolving. Returns deleted relative
+    paths."""
     log_dir = _log_dir(path)
     vs = _committed_versions(log_dir)
     if not vs:
@@ -2556,12 +2616,7 @@ def vacuum_delta(path: str, retain_versions: int | None = None) -> list[str]:
     if retain_versions is not None and len(vs) > retain_versions:
         keep = vs[-retain_versions:]
         checkpoint_delta(path, keep[0])
-        referenced: set[str] = set()
-        for v in keep:
-            for a in delta_live_files(path, v):
-                referenced.add(urllib.parse.unquote(a["path"]))
-                if a.get("deletionVector"):
-                    referenced.add(_dv_relpath(a["deletionVector"]))
+        acts = [{"add": a} for v in keep for a in delta_live_files(path, v)]
         for v in vs[: len(vs) - retain_versions]:
             os.unlink(os.path.join(log_dir, f"{v:020d}.json"))
         for n in list(os.listdir(log_dir)):
@@ -2569,49 +2624,22 @@ def vacuum_delta(path: str, retain_versions: int | None = None) -> list[str]:
                 os.unlink(os.path.join(log_dir, n))
         # change-data files of RETAINED commits stay readable; cdc of
         # dropped commits loses its reference here and is reclaimed below
-        for v in keep:
-            jf = os.path.join(log_dir, f"{v:020d}.json")
-            if os.path.exists(jf):
-                with open(jf) as fh:
-                    for line in fh:
-                        if line.strip():
-                            a = json.loads(line)
-                            if "cdc" in a:
-                                referenced.add(
-                                    urllib.parse.unquote(a["cdc"]["path"])
-                                )
+        acts += [a for v in keep for a in _commit_actions(log_dir, v) if "cdc" in a]
     else:
-        # referenced by ANY committed version: walk every commit/checkpoint
-        # add action directly (never the replayed tail — the TableLog
-        # vacuum lesson: post-checkpoint replay forgets removed-then-
-        # checkpointed history)
-        referenced = set()
+        # referenced by ANY committed version: every commit's and
+        # checkpoint's actions (never the replayed tail: post-checkpoint
+        # replay forgets removed-then-checkpointed history)
+        acts = [a for v in vs for a in _commit_actions(log_dir, v)]
         for n in os.listdir(log_dir):
-            if n.endswith(".json") and n[:20].isdigit():
-                with open(os.path.join(log_dir, n)) as fh:
-                    for line in fh:
-                        if line.strip():
-                            a = json.loads(line)
-                            if "add" in a:
-                                referenced.add(
-                                    urllib.parse.unquote(a["add"]["path"])
-                                )
-                                if a["add"].get("deletionVector"):
-                                    referenced.add(
-                                        _dv_relpath(a["add"]["deletionVector"])
-                                    )
-                            elif "cdc" in a:
-                                referenced.add(
-                                    urllib.parse.unquote(a["cdc"]["path"])
-                                )
-            elif n.endswith(".checkpoint.parquet"):
-                for a in _checkpoint_actions(os.path.join(log_dir, n)):
-                    if "add" in a:
-                        referenced.add(urllib.parse.unquote(a["add"]["path"]))
-                        if a["add"].get("deletionVector"):
-                            referenced.add(
-                                _dv_relpath(a["add"]["deletionVector"])
-                            )
+            if n.endswith(".checkpoint.parquet"):
+                acts += _checkpoint_actions(os.path.join(log_dir, n))
+    referenced: set[str] = set()
+    for a in acts:
+        f = a.get("add") or a.get("cdc")
+        if f:
+            referenced.add(urllib.parse.unquote(f["path"]))
+            if f.get("deletionVector"):
+                referenced.add(_dv_relpath(f["deletionVector"]))
     deleted = []
     for dirpath, _dirs, names in os.walk(path):
         if "_delta_log" in dirpath:
@@ -2636,98 +2664,212 @@ def vacuum_delta(path: str, retain_versions: int | None = None) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# zero-copy conversion from the engine's TableLog
+# TableLog roots written before a TableLog was stored as Delta
 # ---------------------------------------------------------------------------
-def convert_tablelog_to_delta(spark: SparkSession, tlog: TableLog) -> int:
-    """CONVERT TO DELTA, history-preserving and zero-copy: write a
-    `_delta_log` beside the TableLog's own `_log`, mapping every committed
-    TableLog version to a Delta commit over the SAME data files
-    (add/remove paths get the `data/` prefix; stats dicts become Delta
-    stats JSON strings; CHECK constraints land in metaData.configuration
-    as `delta.constraints.*` the way Delta stores them). No data file is
-    copied or rewritten. A RENAME history converts through Delta
-    COLUMN MAPPING (mode=name, reader/writer protocol 2/5): each field
-    carries `delta.columnMapping.physicalName` pointing at the stable
-    physical name the data files use, so every version — including
-    pre-rename ones — reads under the current logical names, exactly
-    Delta's own rename semantics. A WIDEN history converts through the
-    TYPE WIDENING table feature (protocol 3/7 with feature lists): the
-    schemaString carries the widened type plus `delta.typeChanges`
-    field metadata, and readers promote each file's narrower physical
-    type at scan (Spark's parquet type promotion), so pre-widen files
-    stay valid forever — no rewrite.
+_OLD_COMMIT = re.compile(r"^(\d{20})\.json$")
+_OLD_CHECKPOINT = re.compile(r"^(\d{20})\.checkpoint\.json$")
+_OLD_LOG_META = ("constraints", "columnMapping", "columnTypes")
 
-    The metaData carries the LATEST snapshot's schema (what Delta's own
-    snapshot conversion does); earlier versions read through it, with
-    additively-evolved columns null for old files."""
-    cmap, ctypes = tlog._column_meta()
-    vs = tlog.versions()
+
+def _old_log_actions(log_file: str) -> list[dict]:
+    """The actions of one old TableLog commit or JSON checkpoint.
+
+    - An application's own metaData key with an int value (the ANN
+      index's `ann_indexed_version`) becomes a txn mark of that name.
+    - Logs written before partition values were decoded hold the raw
+      hive dir string (`a%2Fb`, `__HIVE_DEFAULT_PARTITION__`): a logged
+      value equal to the raw `k=<raw>` segment of its add's own path
+      becomes the value that segment stands for. A decoded value differs
+      from its raw segment only when decoding changed it, so newer logs
+      read unchanged."""
+    with open(log_file) as fh:
+        acts = [json.loads(line) for line in fh if line.strip()]
+    out: list[dict] = []
+    for a in acts:
+        md = a.get("metaData")
+        if md is not None:
+            out += [
+                {"txn": {"appId": k, "version": v}}
+                for k, v in md.items()
+                if k not in _OLD_LOG_META and isinstance(v, int)
+            ]
+            a = {"metaData": {k: v for k, v in md.items() if k in _OLD_LOG_META}}
+        out.append(a)
+        add = a.get("add")
+        if not add or not add.get("partitionValues"):
+            continue
+        pv = add["partitionValues"]
+        for seg in add["path"].split(os.sep)[:-1]:
+            k, _, raw = seg.partition("=")
+            if pv.get(k) == raw:
+                pv[k] = hive_dir_value(raw)
+    return out
+
+
+def _partition_type(values: list[str | None]) -> T.DataType:
+    """Spark's type inference for partition dir values, over the types
+    TableLog partitions held: int, bigint, double, else string."""
+    present = [v for v in values if v is not None]
+    if present and all(re.fullmatch(r"-?\d+", v) for v in present):
+        fits = all(abs(int(v)) < 2**31 for v in present)
+        return T.IntegerType() if fits else T.LongType()
+    try:
+        return T.DoubleType() if [float(v) for v in present] else T.StringType()
+    except ValueError:
+        return T.StringType()
+
+
+def _old_log_schema(
+    data_dir: str, files: list[dict], pcols: list[str]
+) -> T.StructType:
+    """The physical schema an old TableLog read unioned over its live
+    `files`: footer columns in first-seen order, with the partition
+    columns after the first file's (where Spark's partition discovery
+    put them)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    types: dict[str, T.DataType] = {}
+    for f in files:
+        arrow = pq.read_schema(os.path.join(data_dir, f["path"]))
+        spark_json = (arrow.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        schema = (
+            T.StructType.fromJson(json.loads(spark_json))
+            if spark_json
+            else from_arrow_schema(arrow)
+        )
+        for fld in schema.fields:
+            types.setdefault(fld.name, fld.dataType)
+        for c in pcols:
+            values = [g["partitionValues"].get(c) for g in files]
+            types.setdefault(c, _partition_type(values))
+    return T.StructType([T.StructField(n, t, True) for n, t in types.items()])
+
+
+def import_tablelog_log(root: str) -> int | None:
+    """Give an old TableLog root (JSON commits under `_log/`, files under
+    `data/`) a `_delta_log` over the same files, history preserved — the
+    CONVERT TO DELTA run once when such a root is opened. Old version v
+    becomes Delta commit v: `data/`-prefixed adds and removes, stats
+    JSON strings, decoded partition values, txn marks (application
+    watermarks included); a metaData-only version becomes an empty
+    commit. The first commit carries the LATEST protocol and metaData
+    (Delta's snapshot conversion), so every version reads under the
+    current schema:
+    - CHECK constraints land in configuration as `delta.constraints.c<i>`;
+    - a RENAME history converts through column mapping (mode=name,
+      protocol 2/5): each field's physicalName is the name its files
+      carry, so pre-rename versions read under the new names;
+    - a WIDEN history converts through the typeWidening feature
+      (protocol 3/7): the field carries the widened type and
+      `delta.typeChanges`, and narrower files promote at scan.
+    A retention-trimmed history starts at its oldest surviving version,
+    seeded from the state resolved there (checkpoint included), and gets
+    a Delta checkpoint base there: real Delta readers refuse a log that
+    neither starts at 0 nor has one. Returns the newest version, or None
+    when `_log/` holds no commit. No data file is copied or rewritten."""
+    old = os.path.join(root, "_log")
+    names = os.listdir(old) if os.path.isdir(old) else []
+    vs = sorted(int(m.group(1)) for n in names if (m := _OLD_COMMIT.match(n)))
     if not vs:
-        raise FileNotFoundError(f"no committed versions in {tlog.log_dir}")
-    delta_log = _log_dir(tlog.root)
-    if os.path.isdir(delta_log):
-        shutil.rmtree(delta_log)
-    logical_schema = tlog.read(spark).schema
+        return None
+    commits = {v: _old_log_actions(os.path.join(old, f"{v:020d}.json")) for v in vs}
+    cps = [int(m.group(1)) for n in names if (m := _OLD_CHECKPOINT.match(n))]
+    cp = max((c for c in cps if c <= vs[0]), default=-1)
+    seed = []
+    if cp >= 0:
+        seed = _old_log_actions(os.path.join(old, f"{cp:020d}.checkpoint.json"))
+    if vs[0] > cp:
+        seed += commits[vs[0]]
+
+    def fold(acts: list[dict]) -> tuple[dict, dict, dict]:
+        """(live adds by path, latest metaData of each kind, txn marks)"""
+        live: dict = {}
+        md: dict = {}
+        txns: dict = {}
+        for a in acts:
+            if "add" in a:
+                live[a["add"]["path"]] = a["add"]
+            elif "remove" in a:
+                live.pop(a["remove"]["path"], None)
+            elif "txn" in a:
+                t = a["txn"]
+                txns[t["appId"]] = max(int(t["version"]), txns.get(t["appId"], -1))
+            md.update(a.get("metaData") or {})
+        return live, md, txns
+
+    seed_live, _, seed_txns = fold(seed)
+    live, md, _ = fold(seed + [a for v in vs[1:] for a in commits[v]])
+    cmap = md.get("columnMapping") or {}  # physical -> logical
+    ctypes = md.get("columnTypes") or {}  # physical -> widened type
+    files = sorted(live.values(), key=lambda f: f["path"])
+    pcols = next(
+        (sorted(f["partitionValues"]) for f in files if f.get("partitionValues")), []
+    )
+    physical = _old_log_schema(os.path.join(root, "data"), files, pcols)
+    fields = []
+    for i, f in enumerate(physical.fields):
+        md_f: dict = {}
+        if cmap:
+            md_f["delta.columnMapping.id"] = i + 1
+            md_f["delta.columnMapping.physicalName"] = f.name
+        if f.name in ctypes:
+            md_f["delta.typeChanges"] = [{"toType": ctypes[f.name]}]
+        dtype = _parse_simple_type(ctypes[f.name]) if f.name in ctypes else f.dataType
+        fields.append(T.StructField(cmap.get(f.name, f.name), dtype, True, md_f))
+    features = [
+        n for n, used in (("columnMapping", cmap), ("typeWidening", ctypes)) if used
+    ]
     protocol = dict(_PROTOCOL)
-    features: list[str] = []
-    if cmap:
-        features.append("columnMapping")
-    if ctypes:
-        features.append("typeWidening")
-    if cmap or ctypes:
-        phys_of = {logical: phys for phys, logical in cmap.items()}
-        widened = dict(ctypes)  # physical name -> widened type
-        fields = []
-        for i, f in enumerate(logical_schema.fields):
-            md: dict = {}
-            if cmap:
-                md["delta.columnMapping.id"] = i + 1
-                md["delta.columnMapping.physicalName"] = phys_of.get(
-                    f.name, f.name
-                )
-            phys = phys_of.get(f.name, f.name)
-            if phys in widened:
-                md["delta.typeChanges"] = [{"toType": widened[phys]}]
-            fields.append(T.StructField(f.name, f.dataType, True, md))
-        logical_schema = T.StructType(fields)
-        if ctypes:
-            # table features require the v3/v7 protocol representation
-            protocol = {
-                "minReaderVersion": 3,
-                "minWriterVersion": 7,
-                "readerFeatures": sorted(features),
-                "writerFeatures": sorted(features),
-            }
-        else:
-            protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
-    schema_json = logical_schema.json()
-    now_ms = int(time.time() * 1000)
-    constraints = tlog.constraints()
+    if ctypes:  # table features need the 3/7 representation
+        protocol = {
+            "minReaderVersion": 3,
+            "minWriterVersion": 7,
+            "readerFeatures": features,
+            "writerFeatures": features,
+        }
+    elif cmap:
+        protocol = {"minReaderVersion": 2, "minWriterVersion": 5}
     conf = {
-        f"delta.constraints.c{i}": expr for i, expr in enumerate(constraints)
+        f"delta.constraints.c{i}": e for i, e in enumerate(md.get("constraints") or [])
     }
+    if conf:
+        protocol = _constraints_protocol(protocol) or protocol
     if cmap:
         conf["delta.columnMapping.mode"] = "name"
-        conf["delta.columnMapping.maxColumnId"] = str(len(logical_schema.fields))
+        conf["delta.columnMapping.maxColumnId"] = str(len(fields))
     if ctypes:
         conf["delta.enableTypeWidening"] = "true"
-    # partitionColumns from the live snapshot's add actions
-    pcols: list[str] = []
-    for f in tlog.snapshot().files:
-        if f.get("partitionValues"):
-            pcols = sorted(f["partitionValues"])
-            break
+    now_ms = int(time.time() * 1000)
+
+    def delta_actions(acts: list[dict]) -> list[dict]:
+        out = []
+        for a in acts:
+            kind = next((k for k in ("add", "remove", "txn") if k in a), None)
+            if kind == "txn":
+                out.append({"txn": {**a["txn"], "lastUpdated": now_ms}})
+            elif kind:
+                x = a[kind]
+                path = os.path.normpath(os.path.join("data", x["path"]))
+                entry = {
+                    "path": urllib.parse.quote(path),
+                    "dataChange": x.get("dataChange", True),
+                }
+                if kind == "add":
+                    entry.update(
+                        partitionValues=x.get("partitionValues") or {},
+                        size=x.get("size", 0),
+                        modificationTime=now_ms,
+                        stats=json.dumps(x.get("stats") or {}, sort_keys=True),
+                    )
+                else:
+                    entry["deletionTimestamp"] = now_ms
+                out.append({kind: entry})
+        return out
+
     for v in vs:
-        if v == vs[0]:
-            # the FIRST surviving version seeds from the RESOLVED
-            # snapshot, not its commit JSON: a retention-trimmed log's
-            # oldest JSON references only its own delta, while files
-            # added by trimmed history live on via the TableLog
-            # checkpoint — replaying the JSON alone would silently drop
-            # them from the converted table
-            tacts = [{"add": dict(f)} for f in tlog.snapshot(v).files]
-        else:
-            tacts = tlog._commit_actions(v)
         dacts: list[dict] = [
             {
                 "commitInfo": {
@@ -2738,161 +2880,32 @@ def convert_tablelog_to_delta(spark: SparkSession, tlog: TableLog) -> int:
             }
         ]
         if v == vs[0]:
-            dacts.append({"protocol": protocol})
-            dacts.append(
-                {
-                    "metaData": {
-                        "id": uuid.uuid4().hex,
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_json,
-                        "partitionColumns": pcols,
-                        "configuration": conf,
-                        "createdTime": now_ms,
-                    }
-                }
+            meta = {
+                "id": uuid.uuid4().hex,
+                "format": {"provider": "parquet", "options": {}},
+                "schemaString": T.StructType(fields).json(),
+                "partitionColumns": pcols,
+                "configuration": conf,
+                "createdTime": now_ms,
+            }
+            dacts += [{"protocol": protocol}, {"metaData": meta}]
+            dacts += delta_actions(
+                [{"add": f} for f in seed_live.values()]
+                + [{"txn": {"appId": a, "version": x}} for a, x in seed_txns.items()]
             )
-        for a in tacts:
-            if "add" in a:
-                add = a["add"]
-                dacts.append(
-                    {
-                        "add": {
-                            "path": urllib.parse.quote(
-                                os.path.join("data", add["path"])
-                            ),
-                            "partitionValues": add.get("partitionValues") or {},
-                            "size": add.get("size", 0),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "stats": json.dumps(
-                                add.get("stats") or {}, sort_keys=True
-                            ),
-                        }
-                    }
-                )
-            elif "remove" in a:
-                dacts.append(
-                    {
-                        "remove": {
-                            "path": urllib.parse.quote(
-                                os.path.join("data", a["remove"]["path"])
-                            ),
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        _publish_commit(delta_log, dacts, v)
-    _finish_convert(tlog.root, vs[0])
+        else:
+            dacts += delta_actions(commits[v])
+        _publish_commit(_log_dir(root), dacts, v)
+    if vs[0] > 0:
+        checkpoint_delta(root, vs[0])
     return vs[-1]
 
 
-def adopt_delta_as_tablelog(path: str) -> TableLog:
-    """The REVERSE migration: adopt a foreign Delta table as a TableLog,
-    zero-copy and history-preserving — every Delta commit becomes a
-    TableLog version over the SAME data files (paths recorded relative
-    to the TableLog data root via `..`, since Delta keeps files at the
-    table root), stats strings become stats dicts, partitionValues carry
-    over. The adopted table then gets everything the TableLog ecosystem
-    offers on its own history: time travel, `changes()` CDC, constraint
-    gating of future writes, streaming subscription. Refuses a root that
-    already has a TableLog log (never clobbers history). A columnMapping
-    table adopts faithfully: the Delta physicalName map translates into
-    a TableLog columnMapping action in the seed commit, so reads surface
-    the logical names over the physical-named files."""
-    log_dir = _log_dir(path)
-    vs = _committed_versions(log_dir)
-    if not vs:
-        raise FileNotFoundError(f"no Delta commits under {log_dir}")
-    tlog_log = os.path.join(path, "_log")
-    if os.path.isdir(tlog_log) and os.listdir(tlog_log):
-        raise FileExistsError(f"{tlog_log} already holds a TableLog log")
-    _, dmeta, _adopt_adds = _replay(path)
-    if any(a.get("deletionVector") for a in _adopt_adds):
-        raise ValueError(
-            "adopt_delta_as_tablelog: table has live deletion vectors; "
-            "TableLog reads cannot mask them — run purge_delta_dv first"
-        )
-    cmap: dict[str, str] = {}
-    ctypes: dict[str, str] = {}
-    dschema = T.StructType.fromJson(json.loads(dmeta["schemaString"]))
-    mapped = (dmeta.get("configuration") or {}).get(
-        "delta.columnMapping.mode"
-    ) == "name"
-    for f in dschema.fields:
-        phys = (
-            (f.metadata or {}).get("delta.columnMapping.physicalName", f.name)
-            if mapped
-            else f.name
-        )
-        if phys != f.name:
-            cmap[phys] = f.name
-        # typeWidening: older files carry a narrower physical type; the
-        # TableLog expresses the same thing as a columnTypes action
-        # (readers cast each file's column up before the union)
-        if (f.metadata or {}).get("delta.typeChanges"):
-            ctypes[phys] = f.dataType.simpleString()
-    t = TableLog(path)
-
-    def _as_tablelog_add(add: dict) -> dict:
-        rel = urllib.parse.unquote(add["path"])
-        return {
-            "add": {
-                # data files stay where Delta put them (table root);
-                # TableLog paths resolve under data/
-                "path": os.path.join("..", rel),
-                "partitionValues": add.get("partitionValues") or {},
-                "size": add.get("size", 0),
-                "stats": json.loads(add.get("stats") or "{}"),
-            }
-        }
-
-    for i, v in enumerate(vs):
-        if i == 0:
-            # the first surviving Delta version seeds from the RESOLVED
-            # state (checkpoint-backed): its JSON alone misses files
-            # that trimmed history added — same rule as the forward
-            # conversion
-            tacts = [_as_tablelog_add(a) for a in delta_live_files(path, v)]
-            if cmap:
-                tacts.append({"metaData": {"columnMapping": cmap}})
-            if ctypes:
-                tacts.append({"metaData": {"columnTypes": ctypes}})
-        else:
-            dacts = _commit_actions(log_dir, v)
-            tacts = []
-            for a in dacts:
-                if "add" in a:
-                    tacts.append(_as_tablelog_add(a["add"]))
-                elif "remove" in a:
-                    tacts.append(
-                        {
-                            "remove": {
-                                "path": os.path.join(
-                                    "..",
-                                    urllib.parse.unquote(a["remove"]["path"]),
-                                )
-                            }
-                        }
-                    )
-        if not tacts:
-            tacts.append({"commitInfo": {"operation": "ADOPT.EMPTY"}})
-        committed = t._commit(tacts)
-        if committed != i:
-            raise RuntimeError(
-                f"adoption version drift: delta v{v} landed as tablelog "
-                f"v{committed}, expected {i}"
-            )
-    return t
-
-
-def _finish_convert(path: str, first_version: int) -> None:
-    """A converted log whose history starts above version 0 (the source
-    TableLog was retention-trimmed) needs a checkpoint base at its first
-    surviving version — real Delta readers refuse a log that neither
-    starts at 0 nor has a checkpoint to replay from."""
-    if first_version > 0:
-        checkpoint_delta(path, first_version)
+def convert_tablelog_to_delta(spark: SparkSession, tlog) -> int:
+    """CONVERT TO DELTA of a TableLog: nothing left to do, since a
+    TableLog is a Delta table (an old `_log` root was imported when
+    `tlog` opened it). Returns the table's Delta version."""
+    return _raw_actions(tlog.root)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3778,11 +3791,13 @@ def delta_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delta_adopt_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reverse migration: a foreign DELTA table (two commits) is
-    adopted zero-copy as a TableLog — same files, full history — and
-    then served by TABLELOG machinery: version time travel for v0/v1
-    and the incremental `changes()` CDC feed for the v1 delta (the
-    version=2 output row). A user migrating INTO this engine keeps
-    their Delta history and gains the log's CDC/constraints/streaming."""
+    opened as a TableLog — same files, same log, full history — and
+    served by TABLELOG machinery: version time travel for v0/v1 and the
+    incremental `changes()` feed for the v1 delta (the version=2 output
+    row). A user migrating INTO this engine keeps their Delta history
+    and gains the TableLog API."""
+    from atlas_migration_repo_spark.sources.table_log import TableLog
+
     root = scratch_path(sf_dir, "orders_delta_adopt")
     shutil.rmtree(root, ignore_errors=True)
     orders = load(spark, sf_dir, "orders").select(
@@ -3796,7 +3811,7 @@ def delta_adopt_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
         mode="append",
     )
-    t = adopt_delta_as_tablelog(root)
+    t = TableLog(root)
     outs = []
     for v in (0, 1):
         agg = t.read(spark, version=v).agg(
@@ -3823,11 +3838,13 @@ def delta_adopt_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def delta_convert_tablelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-copy CONVERT TO DELTA of a TableLog table, history preserved:
-    two TableLog commits (orders < cut partitioned by year, then the
-    [cut, 1999) append) become two Delta commits over the SAME parquet
-    files; both versions are then read through the DELTA protocol reader
-    and must reproduce the TableLog per-version state."""
+    """CONVERT TO DELTA of a TableLog table: two TableLog commits
+    (orders < cut partitioned by year, then the [cut, 1999) append) are
+    two Delta commits over the same parquet files, so both versions read
+    through the DELTA protocol reader reproduce the TableLog per-version
+    state."""
+    from atlas_migration_repo_spark.sources.table_log import TableLog
+
     root = scratch_path(sf_dir, "orders_tlog2delta")
     shutil.rmtree(root, ignore_errors=True)
     t = TableLog(root)

@@ -14,12 +14,16 @@ readers filtering that key.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import threading
+import time
 import urllib.parse
 import uuid
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -287,6 +291,223 @@ def stage_write(
         yield leaves
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+
+
+def log_stats(footer: Footer) -> dict:
+    """An add action's data-skipping stats: per-column minValues /
+    maxValues / nullCount from a file footer. Binary bounds decode as
+    UTF-8 (undecodable ones are left out) and non-scalar bounds (dates,
+    decimals) become their str(); a column without bounds in any row
+    group has no min/max, which only disables skipping on that file."""
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    for name, col in footer.columns.items():
+        if col.null_count is not None:
+            nulls[name] = col.null_count
+        lo, hi = col.min, col.max
+        if lo is None:
+            continue
+        if isinstance(lo, bytes):
+            try:
+                lo, hi = lo.decode(), hi.decode()
+            except UnicodeDecodeError:
+                continue
+        if not isinstance(lo, (int, float, str)):
+            lo, hi = str(lo), str(hi)
+        mins[name] = lo
+        maxs[name] = hi
+    return {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
+
+
+class LogStore:
+    """Put-if-absent seam for publishing commit files — the one
+    storage-specific step of every commit publisher (the Delta log,
+    Iceberg metadata, the Hudi timeline), and what gives them optimistic
+    concurrency. `publish` must
+    atomically make `target` exist with `tmp`'s content iff no committed
+    file exists at `target`, returning False (without clobbering) when a
+    concurrent writer won."""
+
+    def publish(self, tmp: str, target: str) -> bool:
+        raise NotImplementedError
+
+    def recover(self, log_dir: str) -> None:
+        """Finish any crashed writer's half-published commits so the log
+        has no claimed-but-missing versions. No-op for stores whose
+        publish is single-step-atomic."""
+
+
+class PosixLinkLogStore(LogStore):
+    """os.link put-if-absent — atomic on POSIX filesystems (EEXIST when a
+    concurrent writer took the version). NOT valid on object stores,
+    which have no hard links; use CoordinatedPutLogStore there."""
+
+    def publish(self, tmp: str, target: str) -> bool:
+        try:
+            os.link(tmp, target)
+            return True
+        except FileExistsError:
+            return False
+
+
+class CoordinatedPutLogStore(LogStore):
+    """Put-if-absent for rename-less, last-writer-wins stores (S3 plain
+    PUT). The commit object itself is written with a CLOBBERING write —
+    the only kind such stores have — made safe by first winning an
+    external put-if-absent claim for the version (the public Delta
+    S3DynamoDBLogStore design; the external coordinator is modeled by an
+    O_EXCL file in a separate _claims/ dir, standing in for a DynamoDB
+    conditional write — swap `_claim` to target the real coordinator and
+    nothing else changes).
+
+    Object visibility: an S3 PUT is read-ATOMIC — a concurrent GET sees
+    the old object or the new one, never a partial body. A plain local
+    `open(path, "wb")` is NOT (a reader between truncate and write sees
+    an empty/partial file — observed as a JSONDecodeError in a racing
+    re-read under load), so every object this emulation publishes
+    (staged copy, commit object, recovery re-copy) goes through
+    `_put_atomic`: write a same-directory temp, fsync, `os.replace` onto
+    the destination. The replace is a CLOBBERING last-writer-wins step —
+    coordination still comes only from the claim, exactly like S3 —
+    it merely models S3's read-atomicity faithfully on a POSIX fs.
+
+    Publish steps (crash-recoverable at every boundary):
+    1. claim <v> (conditional create; lose ⇒ return False after
+       recovering the winner's commit if they crashed),
+    2. copy tmp → staging object named in the claim (durable source of
+       truth for recovery),
+    3. plain-PUT target (only the claim owner ever writes it),
+    4. mark the claim complete.
+    A crash after 1 leaves a claim whose staging object is missing —
+    recoverable only by expiring the claim (lease timeout) since no
+    content was ever durably published; a crash after 2 or 3 is finished
+    idempotently by `recover` (re-copy staging → target)."""
+
+    def __init__(self, lease_ms: int = 15_000) -> None:
+        self.lease_ms = lease_ms
+
+    def _claims_dir(self, log_dir: str) -> str:
+        d = os.path.join(log_dir, "_claims")
+        os.makedirs(d, exist_ok=True)
+        return d
+
+    @staticmethod
+    def _put_atomic(src_path: str, dest: str) -> None:
+        """Clobbering PUT with S3-like read-atomicity: readers of `dest`
+        see the previous object or the complete new one, never a partial
+        body. Same-directory temp so os.replace stays one-filesystem."""
+        tmp = f"{dest}.put-{os.getpid()}-{threading.get_ident()}"
+        with open(src_path, "rb") as src, open(tmp, "wb") as dst:
+            dst.write(src.read())
+            dst.flush()
+            os.fsync(dst.fileno())
+        os.replace(tmp, dest)
+
+    def publish(self, tmp: str, target: str) -> bool:
+        log_dir = os.path.dirname(target)
+        version_name = os.path.basename(target)
+        claim = os.path.join(self._claims_dir(log_dir), version_name + ".claim")
+        staged = os.path.join(
+            self._claims_dir(log_dir), version_name + ".staged"
+        )
+        try:
+            fd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            self._recover_one(claim, staged, target)
+            return False
+        with os.fdopen(fd, "w") as fh:
+            json.dump(
+                {"staged": os.path.basename(staged), "complete": False,
+                 "ts_ms": int(time.time() * 1000)},
+                fh,
+            )
+            fh.flush()
+            os.fsync(fh.fileno())
+        # durable staging copy, then the last-writer-wins PUT of the
+        # commit object (we own the claim, so nobody else writes target).
+        # Both are read-atomic puts: `staged` must never be observable
+        # half-written (a racing loser's _recover_one would copy the
+        # partial body onto target), and a racing re-read of `target`
+        # must see a complete JSON document or none at all.
+        self._put_atomic(tmp, staged)
+        self._put_atomic(tmp, target)
+        with open(claim, "w") as fh:
+            json.dump({"staged": os.path.basename(staged), "complete": True}, fh)
+        return True
+
+    def _recover_one(self, claim: str, staged: str, target: str) -> None:
+        """Finish a crashed owner's publish: if the staging object exists
+        but the commit object doesn't, re-copy it (idempotent — only the
+        claim owner's content was ever staged). A claim with NO staging
+        object after the lease expires is a pre-stage crash: nothing was
+        published, so the claim is expired to unblock the version."""
+        if os.path.exists(target):
+            return
+        if os.path.exists(staged):
+            self._put_atomic(staged, target)  # idempotent, read-atomic
+            return
+        try:
+            with open(claim) as fh:
+                meta = json.load(fh)
+        except (OSError, ValueError):
+            return
+        if int(time.time() * 1000) - meta.get("ts_ms", 0) > self.lease_ms:
+            os.unlink(claim)  # expired pre-stage crash; version reusable
+
+    def recover(self, log_dir: str) -> None:
+        claims = self._claims_dir(log_dir)
+        for name in os.listdir(claims):
+            if not name.endswith(".claim"):
+                continue
+            base = name[: -len(".claim")]
+            self._recover_one(
+                os.path.join(claims, name),
+                os.path.join(claims, base + ".staged"),
+                os.path.join(log_dir, base),
+            )
+
+
+# Process-wide default store, and the store of the writing call in
+# progress (a TableLog opened with its own store publishes through it).
+_DEFAULT_LOG_STORE: LogStore | None = None
+_CALL_LOG_STORE: ContextVar[LogStore | None] = ContextVar("log_store", default=None)
+
+
+def set_default_log_store(store: LogStore | None) -> None:
+    """Override the process-wide LogStore (None restores env/posix
+    resolution). Tests use this to run every publisher — Delta
+    `_publish_commit`, Iceberg `_publish_metadata`, Hudi — against the
+    coordinated-put store without threading a parameter through every
+    write API."""
+    global _DEFAULT_LOG_STORE
+    _DEFAULT_LOG_STORE = store
+
+
+@contextmanager
+def log_store_for_call(store: LogStore) -> Iterator[None]:
+    """Publish every commit made inside the block, in this thread,
+    through `store`."""
+    token = _CALL_LOG_STORE.set(store)
+    try:
+        yield
+    finally:
+        _CALL_LOG_STORE.reset(token)
+
+
+def resolve_log_store() -> LogStore:
+    """The LogStore every publisher uses when not given one explicitly:
+    the store of the call in progress (`log_store_for_call`), else the
+    `set_default_log_store` override, else SPARK_GRAFT_LOG_STORE=
+    coordinated for rename-less object-store targets, else the POSIX
+    hard-link store."""
+    store = _CALL_LOG_STORE.get() or _DEFAULT_LOG_STORE
+    if store is not None:
+        return store
+    name = os.environ.get("SPARK_GRAFT_LOG_STORE", "posix").strip().lower()
+    if name in ("coordinated", "coordinated_put", "s3", "object"):
+        return CoordinatedPutLogStore()
+    return PosixLinkLogStore()
 
 
 @query("source_csv", oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")

@@ -56,8 +56,8 @@ stores are one switch away. Concurrency is Hudi's optimistic model:
 instant claims are put-if-absent, and a completing writer re-checks
 that no commit finished after its claim touched the same file groups.
 
-Distinct from `table_log.py` (the engine's bespoke transactional
-layer) and the Delta/Iceberg bridges: Hudi's unit of replacement is
+Distinct from the Delta log (which TableLog is stored as) and the
+Iceberg bridge: Hudi's unit of replacement is
 the FILE GROUP (fileId lineage), not the file list — upserts keep the
 group identity across slices, which is why tagging joins on the
 `_hoodie_file_name`-derived fileId instead of a path diff.
@@ -83,16 +83,14 @@ from atlas_migration_repo_spark.oracle import sql_msum
 from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.files import (
     Footer,
+    LogStore,
     attach_partition_values,
     envelope_meets,
     file_footer,
+    resolve_log_store,
     scratch_path,
     stage_write,
     table_file_stream,
-)
-from atlas_migration_repo_spark.sources.table_log import (
-    LogStore,
-    resolve_log_store,
 )
 from atlas_migration_repo_spark.streaming.harness import drain
 

@@ -45,16 +45,14 @@ from atlas_migration_repo_spark.registry import query
 from atlas_migration_repo_spark.sources.avro import _container_bytes, parse_container
 from atlas_migration_repo_spark.sources.files import (
     Footer,
+    LogStore,
     attach_partition_values,
     envelope_meets,
     file_path_col,
+    resolve_log_store,
     scratch_path,
     stage_write,
     table_file_stream,
-)
-from atlas_migration_repo_spark.sources.table_log import (
-    LogStore,
-    resolve_log_store,
 )
 from atlas_migration_repo_spark.streaming.harness import drain
 

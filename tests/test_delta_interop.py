@@ -33,6 +33,28 @@ def _fresh(key: str) -> str:
     return root
 
 
+def _old_tablelog(root: str, steps: list) -> None:
+    """Lay down a TableLog root the way writers left it before TableLog
+    was stored as Delta: one `_log/<v>.json` commit per step, a
+    DataFrame step appending one parquet file under `data/s-<v>/` (its
+    columns as the files carry them, so physical names after a rename)
+    and a dict step committing that metaData action."""
+    for v, step in enumerate(steps):
+        if isinstance(step, dict):
+            acts = [{"metaData": step}]
+        else:
+            seg = os.path.join(root, "data", f"s-{v}")
+            step.coalesce(1).write.parquet(seg)
+            acts = [
+                {"add": {"path": f"s-{v}/{n}", "partitionValues": {}, "size": 1}}
+                for n in sorted(os.listdir(seg))
+                if n.endswith(".parquet")
+            ]
+        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
+        with open(os.path.join(root, "_log", f"{v:020d}.json"), "w") as fh:
+            fh.writelines(json.dumps(a) + "\n" for a in acts)
+
+
 def test_checkpoint_carries_state_without_json_history(spark):
     """After checkpoint_delta, the pre-checkpoint JSON commits are
     REDUNDANT: deleting them must not change the read (the V1 parquet
@@ -420,7 +442,7 @@ def test_lakehouse_cli_all_formats(spark):
     TableLog(t).append(nat)
     assert detect_format(d) == "delta"
     assert detect_format(i) == "iceberg"
-    assert detect_format(t) == "tablelog"
+    assert detect_format(t) == "delta"
     desc = run("describe", d)
     assert desc["version"] == 1 and desc["num_records"] == 30
     assert [h["version"] for h in run("history", d)] == [0, 1]
@@ -436,22 +458,16 @@ def test_adopt_then_append_mixes_layouts(spark):
     TableLog.append commits v-next under data/ while the adopted files
     stay at the Delta root, and one read unions both layouts. Adoption
     refuses to clobber an existing TableLog log."""
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        adopt_delta_as_tablelog,
-    )
-
     root = _fresh("t_delta_adopt_mix")
     nat = load(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
     write_delta(nat.where(F.col("n_nationkey") < 10), root)
-    t = adopt_delta_as_tablelog(root)
+    t = TableLog(root)
     assert t.versions() == [0]
     t.append(nat.where(F.col("n_nationkey") >= 10))
     got = sorted(r["n_nationkey"] for r in t.read(spark).collect())
     assert got == list(range(25))
     v0 = sorted(r["n_nationkey"] for r in t.read(spark, version=0).collect())
     assert v0 == list(range(10))
-    with pytest.raises(FileExistsError):
-        adopt_delta_as_tablelog(root)
 
 
 def test_adopt_trimmed_delta_keeps_checkpointed_files(spark):
@@ -459,10 +475,7 @@ def test_adopt_trimmed_delta_keeps_checkpointed_files(spark):
     (oldest JSONs gone, state carried by the checkpoint) must seed the
     first TableLog version from the RESOLVED state — not the oldest
     surviving JSON, which would silently drop trimmed-history files."""
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        adopt_delta_as_tablelog,
-        vacuum_delta,
-    )
+    from atlas_migration_repo_spark.sources.delta_interop import vacuum_delta
 
     root = _fresh("t_delta_adopt_trim")
     nat = load(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
@@ -472,26 +485,22 @@ def test_adopt_trimmed_delta_keeps_checkpointed_files(spark):
     )
     write_delta(nat.where(F.col("n_nationkey") >= 15), root, mode="append")
     vacuum_delta(root, retain_versions=2)  # v0 JSON trimmed
-    t = adopt_delta_as_tablelog(root)
-    assert t.versions() == [0, 1]
+    t = TableLog(root)
+    assert t.versions() == [1, 2]
     got = sorted(r["n_nationkey"] for r in t.read(spark).collect())
     assert got == list(range(25))  # v0's 5 rows survived the adoption
     assert sorted(
-        r["n_nationkey"] for r in t.read(spark, version=0).collect()
+        r["n_nationkey"] for r in t.read(spark, version=1).collect()
     ) == list(range(15))
 
 
 def test_adopt_partitioned_delta_recovers_partition_column(spark):
     """Adopting a hive-laid-out partitioned Delta table must surface the
     partition column through TableLog.read (per-segment basePath)."""
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        adopt_delta_as_tablelog,
-    )
-
     root = _fresh("t_delta_adopt_part")
     nat = load(spark, SF_DIR, "nation").select("n_nationkey", "n_name", "n_regionkey")
     write_delta(nat, root, partition_by=["n_regionkey"])
-    t = adopt_delta_as_tablelog(root)
+    t = TableLog(root)
     got = {(r["n_nationkey"], r["n_regionkey"]) for r in t.read(spark).collect()}
     want = {(r["n_nationkey"], r["n_regionkey"]) for r in nat.collect()}
     assert got == want
@@ -627,26 +636,32 @@ def test_convert_maps_renames_and_widens(spark):
     lists, `delta.typeChanges` field metadata, widened schemaString, and
     pre-widen files promoting at scan (values exact, no rewrite)."""
     root = _fresh("t_delta_convert_cmap")
-    t = TableLog(root)
     nat = load(spark, SF_DIR, "nation").select("n_nationkey", "n_name")
-    t.append(nat.withColumn("n_nationkey", F.col("n_nationkey").cast("int")))
-    t.rename_column("n_name", "nation_name")
+    _old_tablelog(
+        root,
+        [
+            nat.withColumn("n_nationkey", F.col("n_nationkey").cast("int")),
+            {"columnMapping": {"n_name": "nation_name"}},
+        ],
+    )
+    t = TableLog(root)
     convert_tablelog_to_delta(spark, t)  # renames convert fine
     assert read_delta(spark, root).columns == ["n_nationkey", "nation_name"]
 
     root2 = _fresh("t_delta_convert_widen")
+    _old_tablelog(
+        root2,
+        [
+            load(spark, SF_DIR, "nation")
+            .select("n_nationkey")
+            .withColumn("n_nationkey", F.col("n_nationkey").cast("int")),
+            {"columnTypes": {"n_nationkey": "bigint"}},
+            load(spark, SF_DIR, "nation")
+            .select("n_nationkey")
+            .withColumn("n_nationkey", (F.col("n_nationkey") + 100).cast("bigint")),
+        ],
+    )
     t2 = TableLog(root2)
-    t2.append(
-        load(spark, SF_DIR, "nation")
-        .select("n_nationkey")
-        .withColumn("n_nationkey", F.col("n_nationkey").cast("int"))
-    )
-    t2.widen_column("n_nationkey", "bigint", from_type="int")
-    t2.append(
-        load(spark, SF_DIR, "nation")
-        .select("n_nationkey")
-        .withColumn("n_nationkey", (F.col("n_nationkey") + 100).cast("bigint"))
-    )
     convert_tablelog_to_delta(spark, t2)
     log_dir = os.path.join(root2, "_delta_log")
     first = sorted(n for n in os.listdir(log_dir) if n.endswith(".json"))[0]
@@ -1217,18 +1232,23 @@ def test_convert_column_mapped_tablelog_roundtrip(spark, tmp_path):
     import pytest as _pytest
 
     from atlas_migration_repo_spark.sources.delta_interop import (
-        adopt_delta_as_tablelog,
         convert_tablelog_to_delta,
         merge_delta,
         write_delta,
     )
 
-    t = TableLog(str(tmp_path / "t"))
-    t.append(spark.createDataFrame([(i, i * 10) for i in range(50)], "k bigint, v bigint"))
-    t.rename_column("v", "val")
-    t.append(
-        spark.createDataFrame([(i, i * 10) for i in range(50, 80)], "k bigint, val bigint")
+    _old_tablelog(
+        str(tmp_path / "t"),
+        [
+            spark.createDataFrame([(i, i * 10) for i in range(50)], "k bigint, v bigint"),
+            {"columnMapping": {"v": "val"}},
+            # written after the rename under the physical name
+            spark.createDataFrame(
+                [(i, i * 10) for i in range(50, 80)], "k bigint, v bigint"
+            ),
+        ],
     )
+    t = TableLog(str(tmp_path / "t"))
     last = convert_tablelog_to_delta(spark, t)
     log_dir = os.path.join(str(tmp_path / "t"), "_delta_log")
     first = sorted(os.listdir(log_dir))[0]
@@ -1274,8 +1294,7 @@ def test_convert_column_mapped_tablelog_roundtrip(spark, tmp_path):
 
     clone = str(tmp_path / "t2")
     _sh.copytree(str(tmp_path / "t"), clone)
-    _sh.rmtree(os.path.join(clone, "_log"))
-    t2 = adopt_delta_as_tablelog(clone)
+    t2 = TableLog(clone)
     got = {r["k"]: r["val"] for r in t2.read(spark).collect()}
     assert got == {**{i: i * 10 for i in range(80)}, 0: 999, 1000: 999}
     assert t2.read(spark).columns == ["k", "val"]
@@ -1447,12 +1466,15 @@ def test_convert_combined_rename_and_widen(spark, tmp_path):
         convert_tablelog_to_delta,
     )
 
-    t = TableLog(str(tmp_path / "t"))
-    t.append(
-        spark.createDataFrame([(i,) for i in range(25)], "n int")
+    _old_tablelog(
+        str(tmp_path / "t"),
+        [
+            spark.createDataFrame([(i,) for i in range(25)], "n int"),
+            {"columnTypes": {"n": "bigint"}},
+            {"columnMapping": {"n": "key"}},
+        ],
     )
-    t.widen_column("n", "bigint", from_type="int")
-    t.rename_column("n", "key")
+    t = TableLog(str(tmp_path / "t"))
     convert_tablelog_to_delta(spark, t)
     log_dir = os.path.join(str(tmp_path / "t"), "_delta_log")
     first = sorted(n for n in os.listdir(log_dir) if n.endswith(".json"))[0]
@@ -1520,23 +1542,24 @@ def test_adopt_translates_type_widening(spark, tmp_path):
     import shutil as _sh
 
     from atlas_migration_repo_spark.sources.delta_interop import (
-        adopt_delta_as_tablelog,
         convert_tablelog_to_delta,
     )
 
-    t = TableLog(str(tmp_path / "t"))
-    t.append(spark.createDataFrame([(i,) for i in range(20)], "n int"))
-    t.widen_column("n", "bigint", from_type="int")
-    t.append(
-        spark.createDataFrame(
-            [(i + 10_000_000_000,) for i in range(20, 30)], "n bigint"
-        )
+    _old_tablelog(
+        str(tmp_path / "t"),
+        [
+            spark.createDataFrame([(i,) for i in range(20)], "n int"),
+            {"columnTypes": {"n": "bigint"}},
+            spark.createDataFrame(
+                [(i + 10_000_000_000,) for i in range(20, 30)], "n bigint"
+            ),
+        ],
     )
+    t = TableLog(str(tmp_path / "t"))
     convert_tablelog_to_delta(spark, t)
     clone = str(tmp_path / "t2")
     _sh.copytree(str(tmp_path / "t"), clone)
-    _sh.rmtree(os.path.join(clone, "_log"))
-    t2 = adopt_delta_as_tablelog(clone)
+    t2 = TableLog(clone)
     df = t2.read(spark)
     assert dict(df.dtypes)["n"] == "bigint"
     got = sorted(r["n"] for r in df.collect())

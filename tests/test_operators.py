@@ -2439,10 +2439,10 @@ def test_table_log_crash_consistency(spark, tmp_path):
     assert t.read(spark, version=0).count() == 60
 
     # simulate a crashed writer: torn tmp commit + orphan staged data file
-    torn = os.path.join(root, "_log", ".tmp.deadbeef")
+    torn = os.path.join(t.log_dir, ".tmp.deadbeef")
     with open(torn, "w") as fh:
         fh.write('{"add": {"path": "gar')  # truncated mid-JSON
-    bad_name = os.path.join(root, "_log", "not-a-version.json")
+    bad_name = os.path.join(t.log_dir, "not-a-version.json")
     with open(bad_name, "w") as fh:
         fh.write(json.dumps({"add": {"path": "nope.parquet"}}))
     orphan_dir = os.path.join(root, "data", "s-orphan")
@@ -2474,7 +2474,7 @@ def test_table_log_put_if_absent(spark, tmp_path):
     t = TableLog(str(tmp_path / "t"))
     t.append(spark.range(10).select("id"))
     # squat on version 1 the way a concurrent winner would
-    with open(os.path.join(str(tmp_path / "t"), "_log", f"{1:020d}.json"), "w") as fh:
+    with open(os.path.join(t.log_dir, f"{1:020d}.json"), "w") as fh:
         fh.write('{"commitInfo": {"operation": "SQUAT"}}\n')
     v = t.append(spark.range(5).select("id"))
     assert v == 2
@@ -2928,8 +2928,8 @@ def test_table_log_data_skipping_prunes_files(spark, tmp_path):
     import json
     import os
 
-    log_dir = os.path.join(str(tmp_path / "t"), "_log")
-    acts = [{"add": {"path": "s-x/manual.parquet", "partitionValues": {}, "size": 1}}]
+    log_dir = t.log_dir
+    acts = [{"add": {"path": "data/s-x/manual.parquet", "partitionValues": {}, "size": 1}}]
     spark.range(5000, 5010).select(F.col("id"), F.col("id").alias("v")).coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(str(tmp_path / "t"), "data", "s-man"))
@@ -3172,7 +3172,9 @@ def test_table_log_conflicting_remove_raises(spark, tmp_path):
             state["raced"] = True
             # the concurrent winner removes the same file at this version
             with open(target, "w") as fh:
-                fh.write(_json.dumps({"remove": {"path": victim}}) + "\n")
+                fh.write(
+                    _json.dumps({"remove": {"path": os.path.join("data", victim)}}) + "\n"
+                )
             return False
         return real_publish(tmp, target)
 

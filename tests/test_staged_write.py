@@ -374,34 +374,39 @@ def test_delta_reads_replay_the_log_once(spark, tmp_path, monkeypatch):
 def test_old_tablelog_logs_decode_raw_partition_dirs(spark, tmp_path):
     """A TableLog log written before partition values were decoded holds
     the raw hive dir strings (`a%2Fb`, `__HIVE_DEFAULT_PARTITION__`).
-    Replay reads them as the values they stand for, so a predicate on
-    None finds the null partition and a converted Delta table reads
-    'a/b' and NULL."""
+    Opening such a root imports them as the values they stand for, so
+    a predicate on None finds the null partition and the Delta table
+    reads 'a/b' and NULL."""
     rows = {(1, "a/b"), (2, None), (3, "x y")}
-    t = TableLog(str(tmp_path / "old"))
-    t.append(
-        spark.createDataFrame([(1, "a/b"), (2, None)], "id int, region string"),
-        partition_by=["region"],
-    )
-    t.append(spark.createDataFrame([(3, "x y")], "id int, region string"), partition_by=["region"])
-    for v in t.versions():  # rewrite each commit as the old writer logged it
-        commit = os.path.join(t.log_dir, f"{v:020d}.json")
-        with open(commit) as fh:
-            acts = [json.loads(line) for line in fh if line.strip()]
-        for a in acts:
-            if "add" in a:
-                (seg,) = [s for s in a["add"]["path"].split(os.sep) if s.startswith("region=")]
-                a["add"]["partitionValues"]["region"] = seg.split("=", 1)[1]
-        with open(commit, "w") as fh:
+    root = str(tmp_path / "old")
+    data = os.path.join(root, "data")
+    for v, part in enumerate([[(1, "a/b"), (2, None)], [(3, "x y")]]):
+        # the commit an old writer logged: `_log/<v>.json`, data-relative
+        # add paths, each partition value the raw hive dir string
+        seg = os.path.join(data, f"s-{v}")
+        spark.createDataFrame(part, "id int, region string").write.partitionBy(
+            "region"
+        ).parquet(seg)
+        acts = []
+        for dirpath, _dirs, names in os.walk(seg):
+            for n in sorted(names):
+                if n.endswith(".parquet"):
+                    path = os.path.relpath(os.path.join(dirpath, n), data)
+                    (dseg,) = [s for s in path.split(os.sep) if s.startswith("region=")]
+                    pv = {"region": dseg.split("=", 1)[1]}
+                    acts.append({"add": {"path": path, "partitionValues": pv, "size": 1}})
+        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
+        with open(os.path.join(root, "_log", f"{v:020d}.json"), "w") as fh:
             fh.writelines(json.dumps(a) + "\n" for a in acts)
     raw = {"a%2Fb", "__HIVE_DEFAULT_PARTITION__", "x y"}
-    with open(os.path.join(t.log_dir, f"{0:020d}.json")) as fh:
+    with open(os.path.join(root, "_log", f"{0:020d}.json")) as fh:
         logged = {
             json.loads(line)["add"]["partitionValues"]["region"]
             for line in fh
             if '"add"' in line
         }
     assert logged <= raw and len(logged) == 2
+    t = TableLog(root)
     assert {f["partitionValues"]["region"] for f in t.snapshot().files} == {
         "a/b",
         None,
