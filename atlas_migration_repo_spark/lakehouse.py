@@ -11,8 +11,9 @@ FILES triple for any table this engine can read, format auto-detected:
 Formats: Delta (`_delta_log/`, which is also how the engine's own
 TableLog is stored), Iceberg v2 (`metadata/version-hint.text`) and Hudi
 COW (`.hoodie/hoodie.properties`); a TableLog root of the older `_log/`
-format is imported as Delta first. Pure metadata reads — no Spark
-session, no data scan; output is one JSON document on stdout (stderr
+format is imported as Delta first (that one-time import types its
+partition columns with a Spark read). Otherwise pure metadata reads — no
+Spark session, no data scan; output is one JSON document on stdout (stderr
 stays clean for piping). This is the operator-facing half of the interop
 modules: a user migrating from the reference's Databricks/S3 stack keeps
 their `DESCRIBE HISTORY` muscle memory.
@@ -26,9 +27,7 @@ import sys
 
 
 def detect_format(path: str) -> str:
-    if os.path.isdir(os.path.join(path, "_log")) and not os.path.isdir(
-        os.path.join(path, "_delta_log")
-    ):
+    if os.path.isdir(os.path.join(path, "_log")):
         # a TableLog root from before TableLog was stored as Delta:
         # opening it imports its `_log/` as a Delta log
         from atlas_migration_repo_spark.sources.table_log import TableLog
@@ -76,6 +75,7 @@ def _delta_describe(path: str) -> dict:
 
 def _delta_history(path: str) -> list[dict]:
     from atlas_migration_repo_spark.sources.delta_interop import (
+        _commit_actions,
         _committed_versions,
         _log_dir,
     )
@@ -83,26 +83,15 @@ def _delta_history(path: str) -> list[dict]:
     out = []
     log_dir = _log_dir(path)
     for v in _committed_versions(log_dir):
-        adds = removes = 0
-        info: dict = {}
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a:
-                    adds += 1
-                elif "remove" in a:
-                    removes += 1
-                elif "commitInfo" in a:
-                    info = a["commitInfo"]
+        acts = _commit_actions(log_dir, v)
+        info = next((a["commitInfo"] for a in acts if "commitInfo" in a), {})
         out.append(
             {
                 "version": v,
                 "operation": info.get("operation"),
                 "timestamp": info.get("timestamp"),
-                "num_added_files": adds,
-                "num_removed_files": removes,
+                "num_added_files": sum("add" in a for a in acts),
+                "num_removed_files": sum("remove" in a for a in acts),
             }
         )
     return out
@@ -317,7 +306,7 @@ def uniform_status(path: str) -> dict:
             "num_file_groups": len(slices),
         }
         if has_delta:
-            marker = _hudi_sync_marker(path)
+            marker = _delta_sync_marker(path, "hudiInstant")
             if marker is not None:
                 # compare against the latest DATA-WRITE instant: service
                 # actions (clean/savepoint) advance the timeline without
@@ -348,16 +337,19 @@ def uniform_status(path: str) -> dict:
         elif has_delta:
             # reverse-UniForm table (Iceberg-owned): the Delta commits
             # record the iceberg snapshot they were synced FROM
-            marker = _reverse_sync_snapshot(path)
+            marker = _delta_sync_marker(path, "icebergSnapshot")
             if marker is not None:
-                out["in_sync"] = marker == snap["snapshot-id"]
+                out["in_sync"] = int(marker) == snap["snapshot-id"]
     return out
 
 
-def _hudi_sync_marker(path: str) -> str | None:
-    """Newest hudiInstant marker in the Delta log's commitInfo actions
-    (written by publish/sync_delta_log_from_hudi)."""
+def _delta_sync_marker(path: str, key: str):
+    """Newest `key` in the operationParameters of the Delta log's
+    commitInfo actions: `hudiInstant` (written by
+    publish/sync_delta_log_from_hudi) or `icebergSnapshot` (by
+    publish/sync_delta_log_from_iceberg)."""
     from atlas_migration_repo_spark.sources.delta_interop import (
+        _commit_actions,
         _committed_versions,
         _log_dir,
     )
@@ -365,42 +357,9 @@ def _hudi_sync_marker(path: str) -> str | None:
     log_dir = _log_dir(path)
     marker = None
     for v in _committed_versions(log_dir):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                ci = a.get("commitInfo")
-                if ci and "hudiInstant" in (
-                    ci.get("operationParameters") or {}
-                ):
-                    marker = ci["operationParameters"]["hudiInstant"]
-    return marker
-
-
-def _reverse_sync_snapshot(path: str) -> int | None:
-    """Newest icebergSnapshot marker in the Delta log's commitInfo
-    actions (written by publish/sync_delta_log_from_iceberg)."""
-    import urllib.parse  # noqa: F401  (keep import surface minimal)
-
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        _committed_versions,
-        _log_dir,
-    )
-
-    log_dir = _log_dir(path)
-    marker = None
-    for v in _committed_versions(log_dir):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                ci = a.get("commitInfo")
-                if ci and "icebergSnapshot" in (
-                    ci.get("operationParameters") or {}
-                ):
-                    marker = int(ci["operationParameters"]["icebergSnapshot"])
+        for a in _commit_actions(log_dir, v):
+            params = (a.get("commitInfo") or {}).get("operationParameters") or {}
+            marker = params.get(key, marker)
     return marker
 
 

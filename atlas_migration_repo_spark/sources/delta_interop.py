@@ -36,6 +36,7 @@ its history, by `import_tablelog_log` when it is opened.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -183,7 +184,9 @@ def _publish_commit(
         lost_race = False
         while True:
             if lost_race and has_meta:
-                if not _log_has_table_state(table_root, actions):
+                current, _ = _reduce_actions(_raw_actions(table_root)[1])
+                ours = next(a["metaData"] for a in actions if "metaData" in a)
+                if not _same_table(current, ours):
                     raise ConcurrentDeltaWriteError(
                         "a concurrent commit won the version race and this "
                         "commit carries a metaData action computed before "
@@ -235,22 +238,24 @@ def _publish_commit(
                     last = delta_txn_version(table_root, t["appId"])
                     if last is not None and int(t["version"]) <= last:
                         return _raw_actions(table_root)[0]
-            target = os.path.join(log_dir, f"{version:020d}.json")
-            if store.publish(tmp, target):
+            if _publish_exact(store, tmp, version):
                 return version
             lost_race = True
-            vs = _committed_versions(log_dir)
-            next_version = (vs[-1] + 1) if vs else version + 1
-            if next_version == version:
-                # race winner still mid-publish (coordinated stores):
-                # their claim exists but the commit object doesn't yet —
-                # back off until it appears instead of spinning
-                import time
-
-                time.sleep(0.005)
-            version = next_version
+            version = _committed_versions(log_dir)[-1] + 1
     finally:
         os.unlink(tmp)
+
+
+def _publish_exact(store: LogStore, tmp: str, version: int) -> bool:
+    """Publish staged commit `tmp` as `version`: True if it landed, False
+    once a concurrent writer's commit is there. A lost coordinated-store
+    claim backs off until the winner's commit object appears."""
+    target = os.path.join(os.path.dirname(tmp), f"{version:020d}.json")
+    while not store.publish(tmp, target):
+        if os.path.exists(target):
+            return False
+        time.sleep(0.005)
+    return True
 
 
 def _stage_commit(log_dir: str, actions: list[dict]) -> str:
@@ -265,25 +270,12 @@ def _stage_commit(log_dir: str, actions: list[dict]) -> str:
     return tmp
 
 
-def _log_has_table_state(path: str, actions: list[dict]) -> bool:
-    """Whether the table's current metaData equals the one `actions`
-    carries, table id and creation time aside. A race winner still
-    publishing the table's first commit (coordinated stores) is waited
-    for, up to two seconds."""
-    for _ in range(400):
-        if _committed_versions(_log_dir(path)):
-            break
-        time.sleep(0.005)
-    else:
-        return False
-    _, acts = _raw_actions(path)
-    current, _ = _reduce_actions(acts)
-    ours = next(a["metaData"] for a in actions if "metaData" in a)
-
-    def state(meta: dict) -> dict:
-        return {k: v for k, v in meta.items() if k not in ("id", "createdTime")}
-
-    return state(current) == state(ours)
+def _same_table(a: dict, b: dict) -> bool:
+    """Whether two metaData actions describe the same table, table id
+    and creation time aside."""
+    return {k: v for k, v in a.items() if k not in ("id", "createdTime")} == {
+        k: v for k, v in b.items() if k not in ("id", "createdTime")
+    }
 
 
 def _checkpoint_actions(cp_path: str) -> list[dict]:
@@ -670,7 +662,10 @@ def write_delta(
     prev_adds: list[dict] = []
     if prev_meta is not None:
         _, _, prev_adds = _replay(path)
-        if partition_by != (prev_meta.get("partitionColumns") or []):
+        prev_schema = T.StructType.fromJson(json.loads(prev_meta["schemaString"]))
+        if partition_by != (prev_meta.get("partitionColumns") or []) and (
+            prev_schema.fields  # a table of no columns yet takes the first write's
+        ):
             # BOTH directions must refuse: partitioning an existing
             # unpartitioned table would physically drop the partition
             # column from the appended files while the metaData still
@@ -731,7 +726,6 @@ def write_delta(
             }
         )
     else:
-        prev_schema = T.StructType.fromJson(json.loads(prev_meta["schemaString"]))
         prev_fields = {f.name: f.dataType for f in prev_schema.fields}
         new_fields = {f.name: f.dataType for f in df.schema.fields}
         if prev_fields != new_fields:
@@ -776,6 +770,7 @@ def write_delta(
                 new_meta["configuration"] = conf
             merged = T.StructType(prev_schema.fields + added)
             new_meta["schemaString"] = merged.json()
+            new_meta["partitionColumns"] = partition_by
             actions.append({"metaData": new_meta})
     if mode == "overwrite":
         for a in prev_adds:
@@ -2706,75 +2701,111 @@ def _old_log_actions(log_file: str) -> list[dict]:
     return out
 
 
-def _partition_type(values: list[str | None]) -> T.DataType:
-    """Spark's type inference for partition dir values, over the types
-    TableLog partitions held: int, bigint, double, else string."""
-    present = [v for v in values if v is not None]
-    if present and all(re.fullmatch(r"-?\d+", v) for v in present):
-        fits = all(abs(int(v)) < 2**31 for v in present)
-        return T.IntegerType() if fits else T.LongType()
-    try:
-        return T.DoubleType() if [float(v) for v in present] else T.StringType()
-    except ValueError:
-        return T.StringType()
+def _old_log_schema(data_dir: str, files: list[dict]) -> T.StructType:
+    """The schema an old TableLog read gave its live `files`: one Spark
+    read per staging dir (basePath is the dir above the first `k=v`
+    segment, so partition discovery types the partition columns as
+    those reads did: int, decimal, date, timestamp, ...), unioned by
+    name."""
+    if not files:
+        return T.StructType([])
+    from atlas_migration_repo_spark.session import get_spark
 
-
-def _old_log_schema(
-    data_dir: str, files: list[dict], pcols: list[str]
-) -> T.StructType:
-    """The physical schema an old TableLog read unioned over its live
-    `files`: footer columns in first-seen order, with the partition
-    columns after the first file's (where Spark's partition discovery
-    put them)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    types: dict[str, T.DataType] = {}
+    spark = SparkSession.getActiveSession() or get_spark()
+    groups: dict[str, list[str]] = {}
     for f in files:
-        arrow = pq.read_schema(os.path.join(data_dir, f["path"]))
-        spark_json = (arrow.metadata or {}).get(
-            b"org.apache.spark.sql.parquet.row.metadata"
-        )
-        schema = (
-            T.StructType.fromJson(json.loads(spark_json))
-            if spark_json
-            else from_arrow_schema(arrow)
-        )
-        for fld in schema.fields:
-            types.setdefault(fld.name, fld.dataType)
-        for c in pcols:
-            values = [g["partitionValues"].get(c) for g in files]
-            types.setdefault(c, _partition_type(values))
-    return T.StructType([T.StructField(n, t, True) for n, t in types.items()])
+        segs = f["path"].split(os.sep)[:-1]
+        base = os.sep.join(itertools.takewhile(lambda s: "=" not in s, segs))
+        groups.setdefault(base, []).append(os.path.join(data_dir, f["path"]))
+    parts = [
+        spark.read.option("basePath", os.path.join(data_dir, b)).parquet(*ps)
+        for b, ps in sorted(groups.items())
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts).schema
 
 
+def _import_source(acts: list[dict]) -> int | None:
+    """The old `_log/` version a Delta commit imported; None for any
+    other commit."""
+    info = next((a["commitInfo"] for a in acts if "commitInfo" in a), {})
+    if info.get("operation") != "CONVERT.TABLELOG":
+        return None
+    return info["operationParameters"]["sourceVersion"]
+
+
+def _adoption_state(root: str, vs: list[int], ds: list[int]) -> bool | None:
+    """None unless `_log/` was written by adopting this root's Delta
+    table (its i-th version mirrors Delta's i-th, data paths `../<p>`);
+    else whether nothing was committed through it since: its newest
+    version mirrors the Delta version at the same position."""
+    first, last = (
+        _old_log_actions(os.path.join(root, "_log", f"{v:020d}.json"))
+        for v in (vs[0], vs[-1])
+    )
+    seed = [a["add"]["path"] for a in first if "add" in a]
+    if not (seed and all(p.startswith("..") for p in seed)) and not any(
+        a.get("commitInfo", {}).get("operation") == "ADOPT.EMPTY" for a in first
+    ):
+        return None
+    n = len(vs) - 1
+    if n == 0 or n >= len(ds):
+        return n == 0
+
+    def paths(acts: list[dict], rel) -> set:
+        return {(k, rel(a[k]["path"])) for a in acts for k in ("add", "remove") if k in a}
+
+    theirs = _commit_actions(_log_dir(root), ds[n])
+    return not any("metaData" in a for a in last) and paths(
+        last, lambda p: os.path.normpath(os.path.join("data", p))
+    ) == paths(theirs, urllib.parse.unquote)
 def import_tablelog_log(root: str) -> int | None:
     """Give an old TableLog root (JSON commits under `_log/`, files under
     `data/`) a `_delta_log` over the same files, history preserved — the
-    CONVERT TO DELTA run once when such a root is opened. Old version v
-    becomes Delta commit v: `data/`-prefixed adds and removes, stats
-    JSON strings, decoded partition values, txn marks (application
-    watermarks included); a metaData-only version becomes an empty
-    commit. The first commit carries the LATEST protocol and metaData
-    (Delta's snapshot conversion), so every version reads under the
-    current schema:
+    CONVERT TO DELTA run when such a root is opened, until it is done.
+    Old version v becomes Delta commit v, claimed at exactly that number:
+    a commit already there must be the import of v (another opener
+    importing at the same time, or one that stopped part-way), else the
+    logs diverged (the table was converted to or adopted from Delta and
+    written through both) and ValueError is raised. An `_log/` left by
+    adopting the Delta table, with nothing committed through it since,
+    is not imported. Commits carry `data/`-prefixed adds and removes,
+    stats JSON strings, decoded partition values and txn marks
+    (application watermarks included); the first carries the LATEST
+    protocol and metaData, as Delta's snapshot conversion does:
     - CHECK constraints land in configuration as `delta.constraints.c<i>`;
     - a RENAME history converts through column mapping (mode=name,
       protocol 2/5): each field's physicalName is the name its files
       carry, so pre-rename versions read under the new names;
     - a WIDEN history converts through the typeWidening feature
-      (protocol 3/7): the field carries the widened type and
-      `delta.typeChanges`, and narrower files promote at scan.
+      (protocol 3/7), and narrower files promote at scan.
     A retention-trimmed history starts at its oldest surviving version,
-    seeded from the state resolved there (checkpoint included), and gets
-    a Delta checkpoint base there: real Delta readers refuse a log that
-    neither starts at 0 nor has one. Returns the newest version, or None
-    when `_log/` holds no commit. No data file is copied or rewritten."""
+    seeded from the state resolved there, with a Delta checkpoint there
+    (real Delta readers refuse a log that neither starts at 0 nor has
+    one). No data file is copied. Returns the newest version or None."""
     old = os.path.join(root, "_log")
     names = os.listdir(old) if os.path.isdir(old) else []
     vs = sorted(int(m.group(1)) for n in names if (m := _OLD_COMMIT.match(n)))
     if not vs:
         return None
+    log_dir = _log_dir(root)
+    ds = _committed_versions(log_dir)
+    diverged = ValueError(
+        f"{root}: `_delta_log/` is not the import of `_log/`; both logs were "
+        "written after a conversion or adoption, so neither holds the table"
+    )
+    if ds:
+        adopted = _adoption_state(root, vs, ds)
+        if adopted is not None:
+            if adopted:
+                return None
+            raise diverged
+        done = vs[0] == 0 or os.path.exists(os.path.join(log_dir, "_last_checkpoint"))
+        if ds[-1] >= vs[-1] and done:
+            if vs[-1] in ds and _import_source(_commit_actions(log_dir, vs[-1])) != vs[-1]:
+                raise diverged
+            return vs[-1]  # imported (later JSON commits may be trimmed)
+        if ds[: len(vs)] != vs[: len(ds)]:
+            raise diverged
     commits = {v: _old_log_actions(os.path.join(old, f"{v:020d}.json")) for v in vs}
     cps = [int(m.group(1)) for n in names if (m := _OLD_CHECKPOINT.match(n))]
     cp = max((c for c in cps if c <= vs[0]), default=-1)
@@ -2808,7 +2839,7 @@ def import_tablelog_log(root: str) -> int | None:
     pcols = next(
         (sorted(f["partitionValues"]) for f in files if f.get("partitionValues")), []
     )
-    physical = _old_log_schema(os.path.join(root, "data"), files, pcols)
+    physical = _old_log_schema(os.path.join(root, "data"), files)
     fields = []
     for i, f in enumerate(physical.fields):
         md_f: dict = {}
@@ -2869,6 +2900,9 @@ def import_tablelog_log(root: str) -> int | None:
                 out.append({kind: entry})
         return out
 
+    store = resolve_log_store()
+    os.makedirs(log_dir, exist_ok=True)
+    store.recover(log_dir)
     for v in vs:
         dacts: list[dict] = [
             {
@@ -2895,9 +2929,20 @@ def import_tablelog_log(root: str) -> int | None:
             )
         else:
             dacts += delta_actions(commits[v])
-        _publish_commit(_log_dir(root), dacts, v)
-    if vs[0] > 0:
-        checkpoint_delta(root, vs[0])
+        tmp = _stage_commit(log_dir, dacts)
+        try:
+            won = _publish_exact(store, tmp, v)
+        finally:
+            os.unlink(tmp)
+        if not won:
+            theirs = _commit_actions(log_dir, v)
+            their_meta = next((a["metaData"] for a in theirs if "metaData" in a), {})
+            if _import_source(theirs) != v or (
+                v == vs[0] and not _same_table(their_meta, meta)
+            ):
+                raise diverged
+        if v == vs[0] and v > 0:
+            checkpoint_delta(root, v)
     return vs[-1]
 
 

@@ -35,9 +35,10 @@ Kept here, because Delta has no such call:
   holds raises ValueError("... not in committed versions ...").
 
 Every method commits at most one version. A root that holds an `_log/`
-of JSON commits (written before TableLog was stored as Delta) and no
-Delta commit is imported once when it is opened
-(`delta_interop.import_tablelog_log`).
+of JSON commits (written before TableLog was stored as Delta) is
+imported when it is opened, one Delta version per old version
+(`delta_interop.import_tablelog_log`, which refuses a root whose two
+logs diverged).
 """
 
 from __future__ import annotations
@@ -131,9 +132,8 @@ class TableLog:
         self.log_dir = _log_dir(root)
         self.data_dir = os.path.join(root, "data")
         os.makedirs(self.data_dir, exist_ok=True)
-        if not _committed_versions(self.log_dir):
-            with log_store_for_call(self.store):
-                import_tablelog_log(root)
+        with log_store_for_call(self.store):
+            import_tablelog_log(root)
         os.makedirs(self.log_dir, exist_ok=True)
         self.store.recover(self.log_dir)
 
@@ -170,7 +170,8 @@ class TableLog:
         validates its incoming rows against them (one filter-count per
         constraint, map-side) and refuses to commit on violation; rows
         already in the table are not checked. On a table without commits
-        this is its first commit, a table of no columns yet."""
+        this is its first commit, a table of no columns yet: the first
+        append sets its columns and partitioning."""
         meta = _current_meta(self.root) or {}
         protocol = _current_protocol(self.root) if meta else dict(_PROTOCOL)
         now_ms = int(time.time() * 1000)
