@@ -2758,6 +2758,8 @@ def _adoption_state(root: str, vs: list[int], ds: list[int]) -> bool | None:
     return not any("metaData" in a for a in last) and paths(
         last, lambda p: os.path.normpath(os.path.join("data", p))
     ) == paths(theirs, urllib.parse.unquote)
+
+
 def import_tablelog_log(root: str) -> int | None:
     """Give an old TableLog root (JSON commits under `_log/`, files under
     `data/`) a `_delta_log` over the same files, history preserved — the
