@@ -397,6 +397,11 @@ def delta_txn_version(path: str, app_id: str) -> int | None:
         _, acts = _raw_actions(path)
     except FileNotFoundError:
         return None  # table being created: its first commit carries the mark
+    return _txn_mark(acts, app_id)
+
+
+def _txn_mark(acts: list[dict], app_id: str) -> int | None:
+    """Latest `txn` version for `app_id` among resolved log actions."""
     best: int | None = None
     for a in acts:
         t = a.get("txn")
@@ -653,15 +658,20 @@ def write_delta(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     partition_by = list(partition_by or [])
-    prev_meta = _current_meta(path)
+    # one log resolve serves the metaData, the files an overwrite
+    # removes and the txn marks
+    try:
+        prev_version, acts = _raw_actions(path)
+    except FileNotFoundError:
+        prev_version, acts = -1, []
+    prev_meta, prev_adds = _reduce_actions(acts)
+    prev_meta = prev_meta or None
     if txn is not None and prev_meta is not None:
-        last = delta_txn_version(path, txn[0])
+        last = _txn_mark(acts, txn[0])
         if last is not None and int(txn[1]) <= last:
             # current version may live only in a checkpoint (trimmed log)
-            return _raw_actions(path)[0]
-    prev_adds: list[dict] = []
+            return prev_version
     if prev_meta is not None:
-        _, _, prev_adds = _replay(path)
         prev_schema = T.StructType.fromJson(json.loads(prev_meta["schemaString"]))
         if partition_by != (prev_meta.get("partitionColumns") or []) and (
             prev_schema.fields  # a table of no columns yet takes the first write's

@@ -214,30 +214,175 @@ def _publish_metadata(
     os.replace(tmp, hint)
 
 
-def _append_snapshot_commit(
-    path: str, cur: tuple[int, dict], snapshot: dict, seq: int
-) -> None:
-    """Append `snapshot` to an EXISTING table's metadata and publish the
-    next vN.metadata.json — the shared tail of every non-initial commit
-    (append/overwrite/delete/replace)."""
+# -- snapshot commit: every committing verb goes through these ---------------
+def _new_table_meta(
+    path: str, schema_fields: list[dict], partition_by: list[str], properties: dict
+) -> tuple[int, dict]:
+    """Version 0 of a table being created: its schema and partition spec
+    (`partition_by` terms as write_iceberg takes them) and no snapshot —
+    the base its first _commit_snapshot publishes as v1."""
+    by_name = {f["name"]: f for f in schema_fields}
+    spec = []
+    for i, term in enumerate(partition_by):
+        pf = _parse_partition_term(term, by_name)
+        spec.append(
+            {
+                "name": pf["name"],
+                "transform": pf["transform"],
+                "source-id": pf["source_id"],
+                "field-id": 1000 + i,
+            }
+        )
+    return 0, {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": path,
+        "last-sequence-number": 0,
+        "last-updated-ms": int(time.time() * 1000),
+        "last-column-id": max(f["id"] for f in schema_fields),
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": schema_fields}],
+        "current-schema-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": spec}],
+        "default-spec-id": 0,
+        "last-partition-id": max([pf["field-id"] for pf in spec], default=999),
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "properties": properties,
+        "snapshots": [],
+        "current-snapshot-id": None,
+        "snapshot-log": [],
+        "metadata-log": [],
+    }
+
+
+def _schema_patch(meta: dict, schema_fields: list[dict]) -> dict:
+    """Metadata patch making `schema_fields` the current schema: none when
+    they already are, else a NEW schema entry (bumped schema-id) — old
+    schemas stay and snapshots keep theirs."""
+    if schema_fields == meta["schemas"][meta["current-schema-id"]]["fields"]:
+        return {}
+    sid = len(meta["schemas"])
+    return {
+        "schemas": meta["schemas"]
+        + [{"type": "struct", "schema-id": sid, "fields": schema_fields}],
+        "current-schema-id": sid,
+        "last-column-id": max(f["id"] for f in schema_fields),
+    }
+
+
+def _snapshot_ids(meta: dict) -> tuple[int, int]:
+    """(sequence number, snapshot id) of the table's next snapshot. Drawn
+    before anything is staged: every ADDED manifest entry records both."""
+    seq = meta["last-sequence-number"] + 1
+    return seq, int(time.time() * 1000) * 1000 + seq  # unique, monotonic
+
+
+def _current_manifests(meta: dict) -> list[tuple]:
+    """Manifest-list rows of the current snapshot ([] before the first)."""
+    sid = meta["current-snapshot-id"]
+    snap = next((s for s in meta["snapshots"] if s["snapshot-id"] == sid), None)
+    if snap is None:
+        return []
+    return parse_container(open(snap["manifest-list"], "rb").read())[1]
+
+
+def _manifest_row(
+    path: str,
+    avsc: dict,
+    entries: list[tuple],
+    snap_id: int,
+    seq: int,
+    min_seq: int | None = None,
+    partitions: list | None = None,
+) -> tuple:
+    """Write `entries` as one manifest and return its manifest-list row
+    (_MANIFEST_FILE_SCHEMA order). Its content follows the entries (0
+    data, 1 deletes of either kind); its file and row counts are the
+    entries' by status (1 added, 0 existing, 2 deleted). A rewritten
+    manifest keeps the sequence numbers `seq`/`min_seq` it had."""
+    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
+    length = _write_avro_file(man_path, avsc, entries)
+    by_status = [[e[4]["record_count"] for e in entries if e[0] == s] for s in (1, 0, 2)]
+    content = 1 if entries and entries[0][4]["content"] else 0
+    return (
+        man_path,
+        length,
+        0,  # partition spec id
+        content,
+        seq,
+        seq if min_seq is None else min_seq,
+        snap_id,
+        *map(len, by_status),
+        *map(sum, by_status),
+        partitions,
+    )
+
+
+def _assign_row_ids(meta: dict, entries: list[tuple]) -> None:
+    """On a row-lineage table (metadata carries next-row-id), give each
+    ADDED data file its first_row_id in manifest-entry order: next-row-id
+    plus the rows of the files before it — the spec's inheritance base.
+    Rows whose files materialize `_row_id` keep that value at read time."""
+    if "next-row-id" not in meta:
+        return
+    off = int(meta["next-row-id"])
+    for e in entries:
+        e[4]["first_row_id"] = off
+        off += int(e[4]["record_count"])
+
+
+def _commit_snapshot(
+    path: str,
+    cur: tuple[int, dict],
+    seq: int,
+    snap_id: int,
+    rows: list[tuple],
+    carried: list[tuple],
+    summary: dict,
+    patch: dict | None = None,
+) -> int:
+    """Commit one snapshot: write its manifest list — `rows`, the
+    manifests this commit wrote, ahead of `carried`, the manifests it
+    keeps — then append the snapshot to `cur`'s metadata (from
+    _current_metadata, or _new_table_meta for a table being created)
+    with `patch` applied, and publish the next vN.metadata.json. On a
+    row-lineage table the snapshot records its first-row-id and
+    next-row-id advances by the rows its new data manifests add.
+    Returns the snapshot id."""
     v, meta = cur
-    meta = json.loads(json.dumps(meta))
-    now_ms = snapshot["timestamp-ms"]
+    meta = json.loads(json.dumps({**meta, **(patch or {})}))
+    mlist_path = os.path.join(
+        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
+    )
+    _write_avro_file(mlist_path, _MANIFEST_FILE_SCHEMA, [*rows, *carried])
+    now_ms = int(time.time() * 1000)
+    snapshot = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": now_ms,
+        "manifest-list": mlist_path,
+        "summary": summary,
+        "schema-id": meta["current-schema-id"],
+    }
+    if meta["current-snapshot-id"] is not None:
+        snapshot["parent-snapshot-id"] = meta["current-snapshot-id"]
+    if v:
+        meta["metadata-log"].append(
+            {
+                "timestamp-ms": now_ms,
+                "metadata-file": os.path.join(_meta_dir(path), f"v{v}.metadata.json"),
+            }
+        )
+    if "next-row-id" in meta:
+        snapshot["first-row-id"] = meta["next-row-id"]
+        meta["next-row-id"] += sum(r[10] for r in rows if r[3] == 0)
     meta["last-sequence-number"] = seq
     meta["last-updated-ms"] = now_ms
-    snapshot.setdefault("schema-id", meta["current-schema-id"])
     meta["snapshots"].append(snapshot)
-    meta["current-snapshot-id"] = snapshot["snapshot-id"]
-    meta["snapshot-log"].append(
-        {"snapshot-id": snapshot["snapshot-id"], "timestamp-ms": now_ms}
-    )
-    meta["metadata-log"].append(
-        {
-            "timestamp-ms": now_ms,
-            "metadata-file": os.path.join(_meta_dir(path), f"v{v}.metadata.json"),
-        }
-    )
+    meta["current-snapshot-id"] = snap_id
+    meta["snapshot-log"].append({"snapshot-id": snap_id, "timestamp-ms": now_ms})
     _publish_metadata(path, v + 1, meta)
+    return snap_id
 
 
 def _partition_avro_type(part_fields: list[dict]) -> dict:
@@ -667,12 +812,12 @@ def _stage_data_files(
     schema_fields: list[dict],
     snap_id: int,
     seq: int,
-) -> tuple[list[tuple], int]:
+) -> list[tuple]:
     """Stage `df` as Iceberg DATA files: derive hidden-transform columns
     (year/month ordinals, murmur3 buckets), write hive layout, move the
     files into data/ decoding dir names into typed partition values, and
-    return (ADDED manifest entries with column bounds, row count) — the
-    staging half shared by write_iceberg and merge_iceberg."""
+    return their ADDED manifest entries with column bounds — the staging
+    half shared by write_iceberg and both merges."""
     staged_df = df
     for pf in part_fields:
         if pf["transform"] == "year":
@@ -752,7 +897,6 @@ def _stage_data_files(
     )
     ice_types = {pf["name"]: pf["ice_type"] for pf in part_fields}
     entries: list[tuple] = []
-    added_rows = 0
     with stage_write(staged_df, path, list(ice_types)) as leaves:
         for leaf in leaves:
             pvals = {
@@ -761,7 +905,6 @@ def _stage_data_files(
             dest = os.path.join(path, "data", f"{uuid.uuid4().hex}.parquet")
             os.rename(leaf.path, dest)
             nrec = leaf.footer.num_rows
-            added_rows += nrec
             lowers, uppers = _file_bounds(leaf.footer, schema_fields)
             entries.append(
                 (
@@ -781,7 +924,7 @@ def _stage_data_files(
                     },
                 )
             )
-    return entries, added_rows
+    return entries
 
 
 def iceberg_txn_version(path: str, app_id: str) -> int | None:
@@ -886,240 +1029,96 @@ def write_iceberg(
     partition_by = list(partition_by or [])
     lineage_cols = [c for c in df.columns if c in _LINEAGE_FIELD_IDS]
     schema_df = df.drop(*lineage_cols) if lineage_cols else df
+    incoming = _ice_schema(schema_df.schema)
     cur = _current_metadata(path)
-    lineage_on = (
-        "next-row-id" in cur[1] if cur is not None else bool(row_lineage)
-    )
-    if lineage_cols and not lineage_on:
-        raise ValueError(
-            "materialized _row_id columns require a row-lineage table "
-            "(create with row_lineage=True)"
-        )
     if txn is not None and cur is not None:
         last = iceberg_txn_version(path, txn[0])
         if last is not None and int(txn[1]) <= last:
             return cur[1]["current-snapshot-id"]
+    if cur is None:
+        cur = _new_table_meta(
+            path, incoming, partition_by, {"field-ids-complete": "true"}
+        )
+        if row_lineage:
+            cur[1].update({"format-version": 3, "next-row-id": 0})
+    meta = cur[1]
+    if lineage_cols and "next-row-id" not in meta:
+        raise ValueError(
+            "materialized _row_id columns require a row-lineage table "
+            "(create with row_lineage=True)"
+        )
+    want_spec = [
+        (d["name"], d["transform"])
+        for d in (_parse_partition_term(t, None) for t in partition_by)
+    ]
+    have_spec = [
+        (pf["name"], pf["transform"]) for pf in meta["partition-specs"][0]["fields"]
+    ]
+    if want_spec != have_spec:
+        raise ValueError("partition_by must match the table's partition spec")
+    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
+    incoming = {f["name"]: f["type"] for f in incoming}
+    existing = {f["name"]: f["type"] for f in schema_fields}
+    promoted: dict[str, str] = {}
+    for name_, t_ in existing.items():
+        if name_ in incoming and incoming[name_] != t_:
+            # the spec's safe type promotions: the field keeps its
+            # id, a new schema entry carries the wider type, and
+            # older narrow files promote at scan time
+            if (t_, incoming[name_]) in _ICE_PROMOTE_OK:
+                promoted[name_] = incoming[name_]
+                continue
+        if name_ not in incoming or incoming[name_] != t_:
+            raise ValueError(
+                f"schema evolution on {name_!r} is not additive "
+                "(missing or narrowed/retyped); only new columns and "
+                f"safe promotions {sorted(_ICE_PROMOTE_OK)} are allowed"
+            )
+    schema_fields = [
+        {**f, "type": promoted.get(f["name"], f["type"])} for f in schema_fields
+    ]
+    # Iceberg-native evolution: new columns take fresh field-ids above
+    # last-column-id in a NEW schema entry (_schema_patch)
+    next_id = meta["last-column-id"] + 1
+    for n in incoming:
+        if n not in existing:
+            schema_fields.append(
+                {"id": next_id, "name": n, "required": False, "type": incoming[n]}
+            )
+            next_id += 1
+    by_name = {f["name"]: f for f in schema_fields}
+    part_fields = _spec_part_fields(meta, schema_fields)
     os.makedirs(_meta_dir(path), exist_ok=True)
     os.makedirs(os.path.join(path, "data"), exist_ok=True)
-
-    evolved = False
-    if cur is not None:
-        _, meta = cur
-        want_spec = [
-            (d["name"], d["transform"])
-            for d in (_parse_partition_term(t, None) for t in partition_by)
-        ]
-        have_spec = [
-            (pf["name"], pf["transform"])
-            for pf in meta["partition-specs"][0]["fields"]
-        ]
-        if want_spec != have_spec:
-            raise ValueError("partition_by must match the table's partition spec")
-        schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-        incoming = {f["name"]: f["type"] for f in _ice_schema(schema_df.schema)}
-        existing = {f["name"]: f["type"] for f in schema_fields}
-        promoted: dict[str, str] = {}
-        for name_, t_ in existing.items():
-            if name_ in incoming and incoming[name_] != t_:
-                # the spec's safe type promotions: the field keeps its
-                # id, a new schema entry carries the wider type, and
-                # older narrow files promote at scan time
-                if (t_, incoming[name_]) in _ICE_PROMOTE_OK:
-                    promoted[name_] = incoming[name_]
-                    continue
-            if name_ not in incoming or incoming[name_] != t_:
-                raise ValueError(
-                    f"schema evolution on {name_!r} is not additive "
-                    "(missing or narrowed/retyped); only new columns and "
-                    f"safe promotions {sorted(_ICE_PROMOTE_OK)} are allowed"
-                )
-        if promoted:
-            evolved = True
-            schema_fields = [
-                {**f, "type": promoted.get(f["name"], f["type"])}
-                for f in schema_fields
-            ]
-        new_names = [n for n in incoming if n not in existing]
-        if new_names:
-            # Iceberg-native evolution: new columns take fresh field-ids
-            # above last-column-id; a NEW schema entry (bumped schema-id)
-            # is appended — old schemas stay, snapshots keep theirs
-            evolved = True
-            next_id = meta["last-column-id"] + 1
-            schema_fields = list(schema_fields)
-            for n in new_names:
-                schema_fields.append(
-                    {
-                        "id": next_id,
-                        "name": n,
-                        "required": False,
-                        "type": incoming[n],
-                    }
-                )
-                next_id += 1
-    else:
-        schema_fields = _ice_schema(schema_df.schema)
-    by_name = {f["name"]: f for f in schema_fields}
-    part_fields = []
-    for i, term in enumerate(partition_by):
-        d = _parse_partition_term(term, by_name)
-        d["field_id"] = 1000 + i
-        part_fields.append(d)
 
     # stage data files — hidden-partition transforms derive their dir
     # column on the fly (year/month ordinals from 1970, per the spec);
     # the SOURCE column stays in the data files, the derived column
     # exists only as directory layout + log metadata
-    seq = (cur[1]["last-sequence-number"] + 1) if cur else 1
-    snap_id = int(time.time() * 1000) * 1000 + seq  # unique, monotonic
-    entries, added_rows = _stage_data_files(
+    seq, snap_id = _snapshot_ids(meta)
+    entries = _stage_data_files(
         df, path, part_fields, by_name, schema_fields, snap_id, seq
     )
-
-    first_row = None
-    if lineage_on:
-        # assign row ids to the ADDED files in manifest-entry order:
-        # file N's first_row_id = snapshot first-row-id + rows in files
-        # before it (the spec's inheritance base). Rows whose files
-        # materialize `_row_id` keep the materialized value at read time.
-        first_row = int(cur[1].get("next-row-id", 0)) if cur else 0
-        off = 0
-        for e in entries:
-            e[4]["first_row_id"] = first_row + off
-            off += int(e[4]["record_count"])
-
-    # one manifest per commit
-    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    man_len = _write_avro_file(
-        man_path, _manifest_entry_schema(part_fields), entries
-    )
-
-    # per-manifest partition summaries → manifest-list-level pruning
-    summaries = _partition_summaries(part_fields, entries) or []
-    new_manifest_row = (
-        man_path,
-        man_len,
-        0,
-        0,  # content: data
-        seq,
-        seq,
+    _assign_row_ids(meta, entries)
+    # one manifest per commit; its partition summaries drive
+    # manifest-list-level pruning
+    row = _manifest_row(
+        path,
+        _manifest_entry_schema(part_fields),
+        entries,
         snap_id,
-        len(entries),
-        0,
-        0,
-        added_rows,
-        0,
-        0,
-        summaries or None,
+        seq,
+        partitions=_partition_summaries(part_fields, entries),
     )
-    prior_manifests: list[tuple] = []
-    if cur is not None and mode == "append":
-        _, meta = cur
-        cur_snap = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        _, prior = parse_container(
-            open(cur_snap["manifest-list"], "rb").read()
-        )
-        prior_manifests = prior
-    mlist_path = os.path.join(
-        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    _write_avro_file(
-        mlist_path, _MANIFEST_FILE_SCHEMA, [new_manifest_row] + prior_manifests
-    )
-
-    now_ms = int(time.time() * 1000)
-    summary = {"operation": "append" if mode == "append" else "overwrite"}
+    summary = {"operation": mode}
     if txn is not None:
         summary["txn-app-id"] = txn[0]
         summary["txn-version"] = str(int(txn[1]))
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist_path,
-        "summary": summary,
-        "schema-id": 0,
-    }
-    if lineage_on:
-        snapshot["first-row-id"] = first_row
-    if cur is None:
-        meta = {
-            "format-version": 3 if lineage_on else 2,
-            "table-uuid": str(uuid.uuid4()),
-            "location": path,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "last-column-id": max(f["id"] for f in schema_fields),
-            "schemas": [
-                {"type": "struct", "schema-id": 0, "fields": schema_fields}
-            ],
-            "current-schema-id": 0,
-            "partition-specs": [
-                {
-                    "spec-id": 0,
-                    "fields": [
-                        {
-                            "name": pf["name"],
-                            "transform": pf["transform"],
-                            "source-id": pf["source_id"],
-                            "field-id": pf["field_id"],
-                        }
-                        for pf in part_fields
-                    ],
-                }
-            ],
-            "default-spec-id": 0,
-            "last-partition-id": max(
-                [pf["field_id"] for pf in part_fields], default=999
-            ),
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "default-sort-order-id": 0,
-            "properties": {"field-ids-complete": "true"},
-            "snapshots": [snapshot],
-            "current-snapshot-id": snap_id,
-            "snapshot-log": [
-                {"snapshot-id": snap_id, "timestamp-ms": now_ms}
-            ],
-            "metadata-log": [],
-        }
-        if lineage_on:
-            meta["next-row-id"] = first_row + added_rows
-        v = 1
-    else:
-        v, meta = cur
-        meta = json.loads(json.dumps(meta))
-        meta["last-sequence-number"] = seq
-        meta["last-updated-ms"] = now_ms
-        if lineage_on:
-            meta["next-row-id"] = first_row + added_rows
-        if evolved:
-            new_sid = len(meta["schemas"])
-            meta["schemas"].append(
-                {"type": "struct", "schema-id": new_sid, "fields": schema_fields}
-            )
-            meta["current-schema-id"] = new_sid
-            meta["last-column-id"] = max(f["id"] for f in schema_fields)
-        snapshot["schema-id"] = meta["current-schema-id"]
-        meta["snapshots"].append(snapshot)
-        meta["current-snapshot-id"] = snap_id
-        meta["snapshot-log"].append(
-            {"snapshot-id": snap_id, "timestamp-ms": now_ms}
-        )
-        meta["metadata-log"].append(
-            {
-                "timestamp-ms": now_ms,
-                "metadata-file": os.path.join(
-                    _meta_dir(path), f"v{v}.metadata.json"
-                ),
-            }
-        )
-        v += 1
-    _publish_metadata(path, v, meta)
-    return snap_id
+    carried = _current_manifests(meta) if mode == "append" else []
+    return _commit_snapshot(
+        path, cur, seq, snap_id, [row], carried, summary,
+        _schema_patch(meta, schema_fields),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1659,12 +1658,11 @@ def _stage_delete_files(
     seq: int,
     content: int,
     equality_ids: list[int] | None,
-) -> tuple[list[tuple], int]:
+) -> list[tuple]:
     """Stage `del_df` as parquet DELETE FILES under data/ and return
-    their ADDED manifest entries + total tombstone count — shared by
-    the MOR delete commits, merge_iceberg and the UniForm DV bridge."""
+    their ADDED manifest entries — shared by the MOR delete commits,
+    merge_iceberg and the UniForm DV bridge."""
     entries: list[tuple] = []
-    n_del = 0
     with stage_write(del_df, path, []) as leaves:
         for leaf in leaves:
             nrec = leaf.footer.num_rows
@@ -1675,7 +1673,6 @@ def _stage_delete_files(
             # manifest stores absolute paths, the dir is just a home
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             os.rename(leaf.path, dest)
-            n_del += nrec
             entries.append(
                 (
                     1,  # status ADDED
@@ -1695,7 +1692,7 @@ def _stage_delete_files(
                     },
                 )
             )
-    return entries, n_del
+    return entries
 
 
 def _commit_delete_snapshot(
@@ -1708,54 +1705,56 @@ def _commit_delete_snapshot(
     snapshot id (or the current one if the delete matched nothing —
     empty commits are elided)."""
     cur = _current_metadata(path)
-    v, meta = cur
-    seq = meta["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
-    entries, n_del = _stage_delete_files(
-        path, del_df, snap_id, seq, content, equality_ids
-    )
+    seq, snap_id = _snapshot_ids(cur[1])
+    entries = _stage_delete_files(path, del_df, snap_id, seq, content, equality_ids)
     if not entries:
-        return meta["current-snapshot-id"]
-    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    man_len = _write_avro_file(man_path, _manifest_entry_schema([]), entries)
-    del_manifest_row = (
-        man_path,
-        man_len,
-        0,
-        1,  # content: DELETES
-        seq,
-        seq,
-        snap_id,
-        len(entries),
-        0,
-        0,
-        n_del,
-        0,
-        0,
-        None,
+        return cur[1]["current-snapshot-id"]
+    row = _manifest_row(path, _manifest_entry_schema([]), entries, snap_id, seq)
+    return _commit_snapshot(
+        path, cur, seq, snap_id, [row], _current_manifests(cur[1]),
+        {"operation": "delete"},
     )
-    cur_snap = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    _, prior = parse_container(open(cur_snap["manifest-list"], "rb").read())
-    mlist_path = os.path.join(
-        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    _write_avro_file(
-        mlist_path, _MANIFEST_FILE_SCHEMA, [del_manifest_row] + list(prior)
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": mlist_path,
-        "summary": {"operation": "delete"},
-        "schema-id": meta["current-schema-id"],
+
+
+def _identity_cols(meta: dict) -> set[str]:
+    """Identity partition columns: their values live only in metadata,
+    never in data files, so no row-level verb can key or filter on them."""
+    return {
+        pf["name"]
+        for pf in meta["partition-specs"][0]["fields"]
+        if pf.get("transform", "identity") == "identity"
     }
-    _append_snapshot_commit(path, cur, snapshot, seq)
-    return snap_id
+
+
+def _range_hits(
+    spark: SparkSession, path: str, column: str, lo, hi
+) -> tuple[dict, DataFrame | None]:
+    """(metadata, (file_path, pos) of the live rows whose `column` lies in
+    [lo, hi]) — the scan half of both range deletes. Candidate files are
+    pruned from MANIFEST column bounds first, so a file disjoint from
+    [lo, hi] is never scanned; None when no file can match."""
+    meta, datas, _ = iceberg_live_state(path)
+    if column in _identity_cols(meta):
+        raise ValueError(
+            f"{column!r} is an identity partition column (values live in "
+            "metadata, not data files); delete whole partitions via "
+            "rewrite/overwrite instead of row tombstones"
+        )
+    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
+    cands = _datas_in_range(datas, _field(schema_fields, column), lo, hi)
+    if not cands:
+        return meta, None
+    full = _full_schema(meta, schema_fields, spark)
+    hits = (
+        spark.read.schema(full)
+        .parquet(*[d["data_file"]["file_path"] for d in cands])
+        .where(F.col(column).between(F.lit(lo), F.lit(hi)))
+        .select(
+            file_path_col().alias("file_path"),
+            F.col("_metadata.row_index").alias("pos"),
+        )
+    )
+    return meta, hits
 
 
 def delete_iceberg_where(
@@ -1775,37 +1774,11 @@ def delete_iceberg_where(
     manifests) — but the predicate column must be a DATA column: an
     identity partition column's values live only in metadata, so a
     range delete on one is an overwrite/rewrite, not a row tombstone."""
-    meta, datas, _ = iceberg_live_state(path)
-    ident_pcols = {
-        pf["name"]
-        for pf in meta["partition-specs"][0]["fields"]
-        if pf.get("transform", "identity") == "identity"
-    }
-    if column in ident_pcols:
-        raise ValueError(
-            f"{column!r} is an identity partition column (values live in "
-            "metadata, not data files); delete whole partitions via "
-            "rewrite/overwrite instead of row tombstones"
-        )
-    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    cands = [
-        d["data_file"] for d in _datas_in_range(datas, _field(schema_fields, column), lo, hi)
-    ]
-    if not cands:
+    meta, hits = _range_hits(spark, path, column, lo, hi)
+    if hits is None:
         return meta["current-snapshot-id"]
-    full = _full_schema(meta, schema_fields, spark)
-    hits = (
-        spark.read.schema(full)
-        .parquet(*[f["file_path"] for f in cands])
-        .where(F.col(column).between(F.lit(lo), F.lit(hi)))
-        .select(
-            file_path_col().alias(
-                "file_path"
-            ),
-            F.col("_metadata.row_index").alias("pos"),
-        )
-        .repartitionByRange(4, "file_path", "pos")
-        .sortWithinPartitions("file_path", "pos")
+    hits = hits.repartitionByRange(4, "file_path", "pos").sortWithinPartitions(
+        "file_path", "pos"
     )
     return _commit_delete_snapshot(path, hits, content=1, equality_ids=None)
 
@@ -1823,12 +1796,7 @@ def delete_iceberg_eq(
     anti-joins keys against data-file contents, and an identity
     partition column's values are metadata-only."""
     meta, _, _ = iceberg_live_state(path)
-    ident_pcols = {
-        pf["name"]
-        for pf in meta["partition-specs"][0]["fields"]
-        if pf.get("transform", "identity") == "identity"
-    }
-    bad = sorted(set(on) & ident_pcols)
+    bad = sorted(set(on) & _identity_cols(meta))
     if bad:
         raise ValueError(
             f"equality-delete keys {bad} are identity partition columns "
@@ -1843,11 +1811,11 @@ def delete_iceberg_eq(
 
 
 def delete_iceberg_dv(spark: SparkSession, path: str, column: str, lo, hi) -> int:
-    """NATIVE Iceberg v3 DELETION-VECTOR delete (VERDICT r7 "next" #4):
-    a range delete that lands as deletion-vector-v1 blobs in a Puffin
-    file plus a v3 delete manifest — no Delta table anywhere in the
-    path (the UniForm bridge at publish_iceberg_metadata_from_delta
-    remains the other producer of the same artifacts).
+    """NATIVE Iceberg v3 DELETION-VECTOR delete: a range delete that
+    lands as deletion-vector-v1 blobs in a Puffin file plus a v3 delete
+    manifest — no Delta table anywhere in the path (the UniForm bridge
+    at publish_iceberg_metadata_from_delta remains the other producer
+    of the same artifacts).
 
     Spec obligations implemented, not just exercised:
     - SUPERSEDE-BY-UNION: the spec allows at most ONE live DV per data
@@ -1871,69 +1839,38 @@ def delete_iceberg_dv(spark: SparkSession, path: str, column: str, lo, hi) -> in
     scan, and per-file position lists are tombstone-sized (bounded by
     rows-per-file), so the commit cost is O(matched rows), never a data
     rewrite. Returns the new snapshot id (no-op deletes are elided)."""
-    meta, datas, deletes = iceberg_live_state(path)
-    ident_pcols = {
-        pf["name"]
-        for pf in meta["partition-specs"][0]["fields"]
-        if pf.get("transform", "identity") == "identity"
-    }
-    if column in ident_pcols:
-        raise ValueError(
-            f"{column!r} is an identity partition column (values live in "
-            "metadata, not data files); delete whole partitions via "
-            "rewrite/overwrite instead of row tombstones"
-        )
-    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    cands = [
-        d["data_file"] for d in _datas_in_range(datas, _field(schema_fields, column), lo, hi)
-    ]
-    if not cands:
-        return meta["current-snapshot-id"]
-    full = _full_schema(meta, schema_fields, spark)
-    hits = (
-        spark.read.schema(full)
-        .parquet(*[f["file_path"] for f in cands])
-        .where(F.col(column).between(F.lit(lo), F.lit(hi)))
-        .select(
-            file_path_col().alias("file_path"),
-            F.col("_metadata.row_index").alias("pos"),
-        )
-        .groupBy("file_path")
+    meta, hits = _range_hits(spark, path, column, lo, hi)
+    hits = [] if hits is None else (
+        hits.groupBy("file_path")
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
         .collect()
     )
     if not hits:
         return meta["current-snapshot-id"]
-    new_dvs: dict[str, set[int]] = {
-        os.path.abspath(r["file_path"]): set(r["positions"]) for r in hits
-    }
-    superseded = _dv_union_supersede(spark, new_dvs, deletes)
+    new_dvs = {os.path.abspath(r["file_path"]): set(r["positions"]) for r in hits}
     cur = _current_metadata(path)
-    seq = cur[1]["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
+    seq, snap_id = _snapshot_ids(cur[1])
     return _commit_dv_snapshot(
-        path, cur, seq, snap_id, [], new_dvs, superseded, "delete"
+        spark, path, cur, seq, snap_id, [], new_dvs,
+        _current_manifests(cur[1]), {"operation": "delete"},
     )
 
 
 def _dv_union_supersede(
     spark: SparkSession, new_dvs: dict[str, set[int]], deletes: list[dict]
 ) -> set[tuple[str, int]]:
-    """Shared DV-writer spec obligations (delete_iceberg_dv /
-    merge_iceberg_dv / delete_iceberg_eq_dv): fold each live Puffin DV
-    whose referenced data file is re-targeted by `new_dvs` INTO the new
+    """The DV writers' spec obligations over the live delete files
+    `deletes` (data_file dicts): fold each live Puffin DV whose
+    referenced data file is re-targeted by `new_dvs` INTO the new
     position set (at-most-one-live-DV-per-file → supersede-by-union),
     and REFUSE when a live v2 position-delete file still references a
     targeted data file (v3 forbids mixing; the spec's migration guidance
     is to compact first). Mutates `new_dvs`; returns the superseded
     (puffin_path, content_offset) pairs whose manifest entries the
-    commit must mark DELETED. NB `spark` is genuinely required: the
-    v2-coexistence check reads each live position-delete FILE's
-    referenced data paths via spark.read.parquet (ADVICE r9 #5 assessed:
-    the parameter is used on that branch, so it stays)."""
+    commit must mark DELETED. `spark` reads each live position-delete
+    file's referenced data paths for the coexistence check."""
     superseded: set[tuple[str, int]] = set()
-    for d in deletes:
-        f = d["data_file"]
+    for f in deletes:
         if f.get("content") != 1:
             continue
         if f.get("file_format") == "PUFFIN":
@@ -1967,152 +1904,79 @@ def _dv_union_supersede(
 
 
 def _commit_dv_snapshot(
+    spark: SparkSession,
     path: str,
     cur: tuple[int, dict],
     seq: int,
     snap_id: int,
-    data_rows: list[tuple],
+    rows: list[tuple],
     new_dvs: dict[str, set[int]],
-    superseded: set[tuple[str, int]],
-    operation: str,
-    added_rows: int = 0,
+    carried: list[tuple],
+    summary: dict,
+    patch: dict | None = None,
 ) -> int:
-    """Commit tail shared by every native-DV verb: write ONE Puffin file
-    + v3 delete manifest for `new_dvs`, carry every prior manifest
-    forward — rewriting any that holds a superseded DV entry (marked
-    DELETED, siblings EXISTING with sequence numbers materialized) —
-    prepend `data_rows` manifest rows (merge's new data files), stamp
-    format-version 3, and append one snapshot. An empty `new_dvs`
-    (insert-only merge) skips the Puffin/delete manifest entirely.
-    On a row-lineage table (metadata carries `next-row-id`) the snapshot
-    records its `first-row-id` and next-row-id advances by `added_rows`
-    (the caller has already assigned per-file `first_row_id` to the new
-    data manifest entries — ADVICE r9 #1)."""
-    v, cur_meta = cur
-    rows: list[tuple] = list(data_rows)
-    if new_dvs:
-        puffin, blobs_meta = _write_puffin_dvs(
-            path,
-            sorted((ref, sorted(ps)) for ref, ps in new_dvs.items()),
-            snap_id,
-            seq,
-        )
-        size = os.path.getsize(puffin)
-        entries = [
-            (
-                1,  # status ADDED
-                snap_id,
-                seq,
-                seq,
-                {
-                    "content": 1,
-                    "file_path": puffin,
-                    "file_format": "PUFFIN",
-                    "partition": {},
-                    "record_count": int(bm["properties"]["cardinality"]),
-                    "file_size_in_bytes": size,
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": None,
-                    "referenced_data_file": bm["properties"][
-                        "referenced-data-file"
-                    ],
-                    "content_offset": bm["offset"],
-                    "content_size_in_bytes": bm["length"],
-                },
-            )
-            for bm in blobs_meta
-        ]
-        n_del = sum(e[4]["record_count"] for e in entries)
-        man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-        man_len = _write_avro_file(man_path, _manifest_entry_schema_v3(), entries)
-        rows.append(
-            (
-                man_path,
-                man_len,
-                0,
-                1,  # content: DELETES
-                seq,
-                seq,
-                snap_id,
-                len(entries),
-                0,
-                0,
-                n_del,
-                0,
-                0,
-                None,
-            )
-        )
-    cur_snap = next(
-        s
-        for s in cur_meta["snapshots"]
-        if s["snapshot-id"] == cur_meta["current-snapshot-id"]
+    """Commit tail of every DV writer: apply supersede-by-union and the
+    v2-coexistence refusal against the live deletes of the `carried`
+    delete manifests, write ONE Puffin file + v3 delete manifest for
+    `new_dvs` after `rows` (a merge's new data manifest), rewrite each
+    carried manifest that holds a superseded DV entry (marked DELETED,
+    siblings EXISTING with sequence numbers materialized), and commit
+    the snapshot at format-version 3. An empty `new_dvs` (insert-only
+    merge) writes no Puffin file and no delete manifest."""
+    dv_manifests = {
+        m[0]: parse_container(open(m[0], "rb").read())[1]
+        for m in carried
+        if m[3] == 1
+    }
+    superseded = _dv_union_supersede(
+        spark,
+        new_dvs,
+        [e[4] for es in dv_manifests.values() for e in es if e[0] != 2],
     )
-    _, prior = parse_container(open(cur_snap["manifest-list"], "rb").read())
-    carried = []
-    for m in prior:
-        m = list(m)
-        if m[3] != 1 or not superseded:
-            carried.append(tuple(m))
-            continue
-        _, m_entries = parse_container(open(m[0], "rb").read())
-        hit_idx = [
-            i
-            for i, e in enumerate(m_entries)
-            if e[0] != 2
+    if new_dvs:
+        rows = [
+            *rows,
+            _manifest_row(
+                path,
+                _manifest_entry_schema_v3(),
+                _puffin_entries(path, new_dvs, snap_id, seq),
+                snap_id,
+                seq,
+            ),
+        ]
+    kept = []
+    for m in carried:
+        hit = [
+            e[0] != 2
             and e[4].get("file_format") == "PUFFIN"
             and (e[4]["file_path"], int(e[4]["content_offset"])) in superseded
+            for e in dv_manifests.get(m[0], ())
         ]
-        if not hit_idx:
-            carried.append(tuple(m))
+        if not any(hit):
+            kept.append(m)
             continue
         rewritten = []
-        kept = removed = kept_rows = removed_rows = 0
-        for i, e in enumerate(m_entries):
+        for is_hit, e in zip(hit, dv_manifests[m[0]]):
             e = list(e)
             e[2] = e[2] if e[2] is not None else m[4]  # materialize seqs
             e[3] = e[3] if e[3] is not None else m[4]
-            if i in hit_idx:
-                e[0] = 2  # DELETED by this commit
-                e[1] = snap_id
-                removed += 1
-                removed_rows += e[4]["record_count"]
+            if is_hit:
+                e[0], e[1] = 2, snap_id  # DELETED by this commit
             elif e[0] != 2:
                 e[0] = 0  # EXISTING
-                kept += 1
-                kept_rows += e[4]["record_count"]
             else:
                 continue  # drop entries already dead before this commit
             rewritten.append(tuple(e))
-        rw_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-        rw_len = _write_avro_file(
-            rw_path, _manifest_entry_schema_v3(), rewritten
+        kept.append(
+            _manifest_row(
+                path, _manifest_entry_schema_v3(), rewritten, snap_id, m[4],
+                min_seq=m[5], partitions=m[13],
+            )
         )
-        carried.append(
-            (rw_path, rw_len, m[2], 1, m[4], m[5], snap_id, 0, kept, removed,
-             0, kept_rows, removed_rows, m[13])
-        )
-    mlist_path = os.path.join(
-        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
+    return _commit_snapshot(
+        path, cur, seq, snap_id, rows, kept, summary,
+        {**(patch or {}), "format-version": 3},  # DVs require v3
     )
-    _write_avro_file(mlist_path, _MANIFEST_FILE_SCHEMA, rows + carried)
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": mlist_path,
-        "summary": {"operation": operation},
-        "schema-id": cur_meta["current-schema-id"],
-    }
-    patched = json.loads(json.dumps(cur_meta))
-    patched["format-version"] = 3  # DVs require v3
-    if "next-row-id" in cur_meta:
-        first_row = int(cur_meta["next-row-id"])
-        snapshot["first-row-id"] = first_row
-        patched["next-row-id"] = first_row + int(added_rows)
-    _append_snapshot_commit(path, (v, patched), snapshot, seq)
-    return snap_id
 
 
 def _dv_positions_for_keys(
@@ -2185,7 +2049,7 @@ def delete_iceberg_eq_dv(
     spark: SparkSession, path: str, keys: DataFrame, on: list[str]
 ) -> int:
     """Key-addressed delete landing as NATIVE v3 DELETION VECTORS
-    (VERDICT r8 "next" #2, the equality half): delete_iceberg_eq's
+    (the equality half of the DV verbs): delete_iceberg_eq's
     equality-delete FILE commits in O(keys) but taxes every future read
     with an anti-join; this verb pays ONE bounds-pruned scan at commit
     time to resolve the same key set into positional DVs, so a
@@ -2196,13 +2060,8 @@ def delete_iceberg_eq_dv(
     supersede-by-union and v2-coexistence refusal as delete_iceberg_dv
     (shared helpers). Returns the new snapshot id; a no-match delete is
     elided."""
-    meta, datas, deletes = iceberg_live_state(path)
-    ident_pcols = {
-        pf["name"]
-        for pf in meta["partition-specs"][0]["fields"]
-        if pf.get("transform", "identity") == "identity"
-    }
-    bad = sorted(set(on) & ident_pcols)
+    meta, datas, _ = iceberg_live_state(path)
+    bad = sorted(set(on) & _identity_cols(meta))
     if bad:
         raise ValueError(
             f"equality-delete keys {bad} are identity partition columns "
@@ -2211,13 +2070,58 @@ def delete_iceberg_eq_dv(
     new_dvs = _dv_positions_for_keys(spark, meta, datas, keys, on)
     if not new_dvs:
         return meta["current-snapshot-id"]
-    superseded = _dv_union_supersede(spark, new_dvs, deletes)
     cur = _current_metadata(path)
-    seq = cur[1]["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
+    seq, snap_id = _snapshot_ids(cur[1])
     return _commit_dv_snapshot(
-        path, cur, seq, snap_id, [], new_dvs, superseded, "delete"
+        spark, path, cur, seq, snap_id, [], new_dvs,
+        _current_manifests(cur[1]), {"operation": "delete"},
     )
+
+
+def _merge_prelude(
+    path: str, source: DataFrame, on: list[str]
+) -> tuple[tuple[int, dict], int, int, list[tuple]]:
+    """The shared first half of both MERGE verbs: refuse merge keys on
+    identity partition columns and a source whose schema is not exactly
+    the table's, draw the snapshot's ids, and stage the source rows as
+    data files under the table's own spec (identity or hidden
+    transforms), with row ids on a lineage table. Returns (current
+    metadata, seq, snapshot id, [data manifest row] or [])."""
+    cur = _current_metadata(path)
+    if cur is None:
+        raise FileNotFoundError(f"no Iceberg metadata under {path}")
+    meta = cur[1]
+    bad = sorted(set(on) & _identity_cols(meta))
+    if bad:
+        raise ValueError(
+            f"merge keys {bad} are identity partition columns "
+            "(metadata-only values); key on data columns"
+        )
+    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
+    incoming = {f["name"]: f["type"] for f in _ice_schema(source.schema)}
+    if incoming != {f["name"]: f["type"] for f in schema_fields}:
+        raise ValueError("merge source schema must match the table schema")
+    seq, snap_id = _snapshot_ids(meta)
+    by_name = {f["name"]: f for f in schema_fields}
+    part_fields = _spec_part_fields(meta, schema_fields)
+    entries = _stage_data_files(
+        source.select(*by_name), path, part_fields, by_name, schema_fields,
+        snap_id, seq,
+    )
+    if not entries:
+        return cur, seq, snap_id, []
+    _assign_row_ids(meta, entries)
+    # the data manifest carries the table's partition struct + summaries
+    # (manifest-list pruning)
+    row = _manifest_row(
+        path,
+        _manifest_entry_schema(part_fields),
+        entries,
+        snap_id,
+        seq,
+        partitions=_partition_summaries(part_fields, entries),
+    )
+    return cur, seq, snap_id, [row]
 
 
 def merge_iceberg(
@@ -2237,106 +2141,31 @@ def merge_iceberg(
     partition-agnostic — but the merge keys must be DATA columns (an
     identity partition column's values are metadata-only, invisible to
     the read-side anti-join). Exact schema match."""
-
-    cur = _current_metadata(path)
-    if cur is None:
-        raise FileNotFoundError(f"no Iceberg metadata under {path}")
-    meta = cur[1]
-    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    part_fields = _spec_part_fields(meta, schema_fields)
-    ident_pcols = {
-        pf["name"] for pf in part_fields if pf["transform"] == "identity"
-    }
-    bad = sorted(set(on) & ident_pcols)
-    if bad:
-        raise ValueError(
-            f"merge keys {bad} are identity partition columns "
-            "(metadata-only values); key on data columns"
-        )
-    incoming = {f["name"]: f["type"] for f in _ice_schema(source.schema)}
-    existing = {f["name"]: f["type"] for f in schema_fields}
-    if incoming != existing:
-        raise ValueError("merge source schema must match the table schema")
+    cur, seq, snap_id, rows = _merge_prelude(path, source, on)
+    schema_fields = cur[1]["schemas"][cur[1]["current-schema-id"]]["fields"]
     by_name = {f["name"]: f["id"] for f in schema_fields}
-    eq_ids = [by_name[c] for c in on]
-    seq = meta["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
-
-    ordered = [f["name"] for f in schema_fields]
-    by_fname = {f["name"]: f for f in schema_fields}
-    data_entries, _added = _stage_data_files(
-        source.select(*ordered),
-        path,
-        part_fields,
-        by_fname,
-        schema_fields,
-        snap_id,
-        seq,
+    del_entries = _stage_delete_files(
+        path, source.select(*on).distinct(), snap_id, seq, 2,
+        [by_name[c] for c in on],
     )
-    del_entries, _n_del = _stage_delete_files(
-        path, source.select(*on).distinct(), snap_id, seq, 2, eq_ids
-    )
-    # data manifest carries the table's partition struct + summaries
-    # (manifest-list pruning); the delete manifest is partition-less and
-    # never pruned
-    summaries = _partition_summaries(part_fields, data_entries)
-    rows = []
-    for content, entries, espec, esumm in (
-        (0, data_entries, part_fields, summaries),
-        (1, del_entries, [], None),
-    ):
-        if not entries:
-            continue
-        man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-        man_len = _write_avro_file(man_path, _manifest_entry_schema(espec), entries)
+    # the delete manifest is partition-less and never pruned
+    if del_entries:
         rows.append(
-            (
-                man_path,
-                man_len,
-                0,
-                content,
-                seq,
-                seq,
-                snap_id,
-                len(entries),
-                0,
-                0,
-                sum(e[4]["record_count"] for e in entries),
-                0,
-                0,
-                esumm,
-            )
+            _manifest_row(path, _manifest_entry_schema([]), del_entries, snap_id, seq)
         )
-    cur_snap = next(
-        s
-        for s in meta["snapshots"]
-        if s["snapshot-id"] == meta["current-snapshot-id"]
+    return _commit_snapshot(
+        path, cur, seq, snap_id, rows, _current_manifests(cur[1]),
+        {"operation": "overwrite"},
     )
-    _, prior = parse_container(open(cur_snap["manifest-list"], "rb").read())
-    mlist_path = os.path.join(
-        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    _write_avro_file(mlist_path, _MANIFEST_FILE_SCHEMA, rows + list(prior))
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": mlist_path,
-        "summary": {"operation": "overwrite"},
-        "schema-id": meta["current-schema-id"],
-    }
-    _append_snapshot_commit(path, cur, snapshot, seq)
-    return snap_id
 
 
 def merge_iceberg_dv(
     spark: SparkSession, path: str, source: DataFrame, on: list[str]
 ) -> int:
-    """MERGE (upsert) NATIVE to Iceberg v3 (VERDICT r8 "next" #2):
-    matched rows in existing data files are tombstoned as
-    deletion-vector Puffin blobs — never an equality- or position-delete
-    file — and the source rows land as new data files, all in ONE atomic
-    snapshot. A v3 table merged this way stays pure-DV, so it never
+    """MERGE (upsert) NATIVE to Iceberg v3: matched rows in existing
+    data files are tombstoned as deletion-vector Puffin blobs — never an
+    equality- or position-delete file — and the source rows land as new
+    data files, all in ONE atomic snapshot. A v3 table merged this way stays pure-DV, so it never
     trips the v2-coexistence refusal that merge_iceberg's equality
     deletes would set up for a later delete_iceberg_dv.
 
@@ -2354,84 +2183,12 @@ def merge_iceberg_dv(
     data_seq <= merge_seq but reference only PRE-merge files, so the
     same-snapshot source rows are untouched. Merge keys must be DATA
     columns; exact schema match required."""
-    cur = _current_metadata(path)
-    if cur is None:
-        raise FileNotFoundError(f"no Iceberg metadata under {path}")
-    meta, datas, deletes = iceberg_live_state(path)
-    schema_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    part_fields = _spec_part_fields(meta, schema_fields)
-    ident_pcols = {
-        pf["name"] for pf in part_fields if pf["transform"] == "identity"
-    }
-    bad = sorted(set(on) & ident_pcols)
-    if bad:
-        raise ValueError(
-            f"merge keys {bad} are identity partition columns "
-            "(metadata-only values); key on data columns"
-        )
-    incoming = {f["name"]: f["type"] for f in _ice_schema(source.schema)}
-    existing = {f["name"]: f["type"] for f in schema_fields}
-    if incoming != existing:
-        raise ValueError("merge source schema must match the table schema")
-    seq = cur[1]["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
-    ordered = [f["name"] for f in schema_fields]
-    by_fname = {f["name"]: f for f in schema_fields}
-    data_entries, _added = _stage_data_files(
-        source.select(*ordered),
-        path,
-        part_fields,
-        by_fname,
-        schema_fields,
-        snap_id,
-        seq,
-    )
-    data_rows: list[tuple] = []
-    added_rows = 0
-    if data_entries:
-        if "next-row-id" in cur[1]:
-            # row-lineage table (v3): the merge's new data files take row
-            # ids exactly like write_iceberg's append path — file N's
-            # first_row_id = table next-row-id + rows in files before it;
-            # _commit_dv_snapshot stamps the snapshot's first-row-id and
-            # bumps next-row-id from added_rows (ADVICE r9 #1: without
-            # this, DV-merged files landed with null lineage ids).
-            first_row = int(cur[1]["next-row-id"])
-            off = 0
-            for e in data_entries:
-                e[4]["first_row_id"] = first_row + off
-                off += int(e[4]["record_count"])
-        added_rows = sum(int(e[4]["record_count"]) for e in data_entries)
-        summaries = _partition_summaries(part_fields, data_entries)
-        man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-        man_len = _write_avro_file(
-            man_path, _manifest_entry_schema(part_fields), data_entries
-        )
-        data_rows.append(
-            (
-                man_path,
-                man_len,
-                0,
-                0,  # content: DATA
-                seq,
-                seq,
-                snap_id,
-                len(data_entries),
-                0,
-                0,
-                sum(e[4]["record_count"] for e in data_entries),
-                0,
-                0,
-                summaries,
-            )
-        )
-    new_dvs = _dv_positions_for_keys(
-        spark, meta, datas, source.select(*on), on
-    )
-    superseded = _dv_union_supersede(spark, new_dvs, deletes)
+    cur, seq, snap_id, rows = _merge_prelude(path, source, on)
+    meta, datas, _ = iceberg_live_state(path)
+    new_dvs = _dv_positions_for_keys(spark, meta, datas, source.select(*on), on)
     return _commit_dv_snapshot(
-        path, cur, seq, snap_id, data_rows, new_dvs, superseded, "overwrite",
-        added_rows=added_rows,
+        spark, path, cur, seq, snap_id, rows, new_dvs,
+        _current_manifests(cur[1]), {"operation": "overwrite"},
     )
 
 
@@ -2736,28 +2493,17 @@ def remove_orphan_files(path: str, older_than_ms: int = 3 * 86_400_000) -> list[
     return deleted
 
 
-def _uniform_manifest_from_delta(
-    path: str,
-    adds: list[dict],
-    by_name: dict,
-    pcols: list[str],
-    part_fields: list[dict],
-    snap_id: int,
-    seq: int,
-    extra_rows: list | None = None,
-) -> tuple[str, int]:
-    """Write ONE Iceberg manifest + manifest list over a Delta live file
-    set (typed partition values, field-id bounds where the Delta stats
-    allow) — the shared tail of the initial UniForm publish and every
-    subsequent sync. Returns (manifest-list path, row count)."""
+def _uniform_data_entries(
+    path: str, adds: list[dict], by_name: dict, pcols: list[str], snap_id: int, seq: int
+) -> list[tuple]:
+    """ADDED Iceberg manifest entries over Delta add actions: typed
+    partition values, record counts and field-id bounds where the Delta
+    stats allow."""
     import urllib.parse as up
 
     entries: list[tuple] = []
-    added_rows = 0
     for a in adds:
         st = json.loads(a.get("stats") or "{}")
-        nrec = int(st.get("numRecords", 0))
-        added_rows += nrec
         pv = {
             c: _encode_part_value(
                 (a.get("partitionValues") or {}).get(c),
@@ -2802,54 +2548,25 @@ def _uniform_manifest_from_delta(
                     "file_path": os.path.join(path, up.unquote(a["path"])),
                     "file_format": "PARQUET",
                     "partition": pv,
-                    "record_count": nrec,
+                    "record_count": int(st.get("numRecords", 0)),
                     "file_size_in_bytes": a.get("size", 0),
                     "lower_bounds": lowers or None,
                     "upper_bounds": uppers or None,
                 },
             )
         )
-    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    man_len = _write_avro_file(
-        man_path, _manifest_entry_schema(part_fields), entries
-    )
-    new_manifest_row = (
-        man_path,
-        man_len,
-        0,
-        0,
-        seq,
-        seq,
-        snap_id,
-        len(entries),
-        0,
-        0,
-        added_rows,
-        0,
-        0,
-        None,
-    )
-    mlist_path = os.path.join(
-        _meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    _write_avro_file(
-        mlist_path,
-        _MANIFEST_FILE_SCHEMA,
-        [new_manifest_row] + list(extra_rows or []),
-    )
-    return mlist_path, added_rows
+    return entries
 
 
-def _uniform_delete_manifest(
+def _uniform_delete_entries(
     spark: SparkSession, path: str, dv_adds: list[dict], snap_id: int, seq: int
-):
-    """Delta deletion vectors → ONE Iceberg positional-delete manifest
-    row (manifest_file.content=1): the DV positions expand on executors
-    and stage as spec-sorted (file_path, pos) parquet delete files with
-    the SAME sequence number as the data manifest (positional deletes
-    apply at data_seq <= delete_seq), so Iceberg readers subtract
-    exactly the rows Delta readers mask — real UniForm's DV bridge.
-    Returns the manifest row, or None when the DVs are empty."""
+) -> list[tuple]:
+    """Delta deletion vectors → ADDED Iceberg v2 positional-delete
+    entries: the DV positions expand on executors and stage as
+    spec-sorted (file_path, pos) parquet delete files with the SAME
+    sequence number as the snapshot's data (positional deletes apply at
+    data_seq <= delete_seq), so Iceberg readers subtract exactly the
+    rows Delta readers mask — real UniForm's DV bridge."""
     from atlas_migration_repo_spark.sources.delta_interop import _dv_expand_df
 
     del_df = (
@@ -2861,29 +2578,7 @@ def _uniform_delete_manifest(
         .repartitionByRange(4, "file_path", "pos")
         .sortWithinPartitions("file_path", "pos")
     )
-    entries, n_del = _stage_delete_files(
-        path, del_df, snap_id, seq, content=1, equality_ids=None
-    )
-    if not entries:
-        return None
-    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    man_len = _write_avro_file(man_path, _manifest_entry_schema([]), entries)
-    return (
-        man_path,
-        man_len,
-        0,
-        1,  # content: DELETES
-        seq,
-        seq,
-        snap_id,
-        len(entries),
-        0,
-        0,
-        n_del,
-        0,
-        0,
-        None,
-    )
+    return _stage_delete_files(path, del_df, snap_id, seq, content=1, equality_ids=None)
 
 
 # ---------------------------------------------------------------------------
@@ -3023,36 +2718,18 @@ def _manifest_entry_schema_v3() -> dict:
     return base
 
 
-def _uniform_delete_manifest_v3(
-    spark: SparkSession, path: str, dv_adds: list[dict], snap_id: int, seq: int
-):
-    """Delta deletion vectors → Iceberg v3 DELETION VECTORS: the DV
-    position sets are copied (bit-exact — same portable roaring payload)
-    into ONE Puffin file, one deletion-vector-v1 blob per referenced
-    data file, and a delete manifest (content=1) records each blob with
-    file_format=PUFFIN + referenced_data_file + content_offset/size —
-    the v3 replacement for the v2 positional-delete parquet bridge.
-    Returns the manifest row, or None when the DVs are empty."""
-    import urllib.parse as up
-
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        _dv_read_positions,
+def _puffin_entries(
+    path: str, dvs: dict[str, set[int]], snap_id: int, seq: int
+) -> list[tuple]:
+    """Write `dvs` (referenced data file → positions) as ONE Puffin file
+    and return its ADDED v3 delete-manifest entries: one per blob, with
+    file_format=PUFFIN, referenced_data_file and the blob's
+    content_offset/size."""
+    puffin, blobs_meta = _write_puffin_dvs(
+        path, sorted((ref, sorted(ps)) for ref, ps in dvs.items()), snap_id, seq
     )
-
-    dvs: list[tuple[str, list[int]]] = []
-    for a in dv_adds:
-        positions = _dv_read_positions(path, a["deletionVector"])
-        if not positions:
-            continue
-        ref = os.path.abspath(
-            os.path.join(path, up.unquote(a["path"]))
-        )
-        dvs.append((ref, positions))
-    if not dvs:
-        return None
-    puffin, blobs_meta = _write_puffin_dvs(path, dvs, snap_id, seq)
     size = os.path.getsize(puffin)
-    entries = [
+    return [
         (
             1,  # status ADDED
             snap_id,
@@ -3068,34 +2745,13 @@ def _uniform_delete_manifest_v3(
                 "lower_bounds": None,
                 "upper_bounds": None,
                 "equality_ids": None,
-                "referenced_data_file": bm["properties"][
-                    "referenced-data-file"
-                ],
+                "referenced_data_file": bm["properties"]["referenced-data-file"],
                 "content_offset": bm["offset"],
                 "content_size_in_bytes": bm["length"],
             },
         )
         for bm in blobs_meta
     ]
-    n_del = sum(e[4]["record_count"] for e in entries)
-    man_path = os.path.join(_meta_dir(path), f"{uuid.uuid4().hex}-m0.avro")
-    man_len = _write_avro_file(man_path, _manifest_entry_schema_v3(), entries)
-    return (
-        man_path,
-        man_len,
-        0,
-        1,  # content: DELETES
-        seq,
-        seq,
-        snap_id,
-        len(entries),
-        0,
-        0,
-        n_del,
-        0,
-        0,
-        None,
-    )
 
 
 def publish_iceberg_metadata_from_delta(
@@ -3104,140 +2760,53 @@ def publish_iceberg_metadata_from_delta(
     """UniForm-style dual publish (the public Delta Universal Format
     idea): give an existing DELTA table an ICEBERG metadata tree over
     the SAME data files — one copy of the data, two protocol front
-    doors. The current Delta snapshot becomes Iceberg snapshot 1: one
-    manifest whose entries carry the Delta adds' partition values
-    (typed), record counts and, where the Delta stats allow, field-id
-    bounds. Refuses if an Iceberg metadata tree already exists. Returns
-    the snapshot id.
+    doors. The publish is the table's first sync: the current Delta
+    snapshot becomes Iceberg snapshot 1, one manifest whose entries
+    carry the Delta adds' partition values (typed), record counts and,
+    where the Delta stats allow, field-id bounds. Refuses if an Iceberg
+    metadata tree already exists. Returns the snapshot id.
 
-    `dv_format` picks how live Delta deletion vectors bridge:
-    "parquet" (default) expands them into v2 positional-delete parquet
-    files; "puffin" copies the roaring payloads bit-exactly into a v3
-    Puffin deletion-vector file and stamps format-version 3."""
+    Live Delta deletion vectors bridge in the table's DV format, and
+    `dv_format` sets it: "parquet" (default) keeps a v2 table and
+    expands them into positional-delete parquet files; "puffin" stamps
+    format-version 3 and copies the roaring payloads bit-exactly into a
+    Puffin deletion-vector file. Every later sync keeps the format."""
     if dv_format not in ("parquet", "puffin"):
         raise ValueError(f"dv_format must be parquet|puffin: {dv_format}")
-    import urllib.parse as up
-
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        _replay as _delta_replay,
-        delta_live_files,
-    )
+    from atlas_migration_repo_spark.sources.delta_interop import _replay
 
     if os.path.exists(os.path.join(_meta_dir(path), "version-hint.text")):
         raise FileExistsError(f"{_meta_dir(path)} already holds Iceberg metadata")
-    delta_v, dmeta, _ = _delta_replay(path)
-    adds = delta_live_files(path)
-    dv_adds = [a for a in adds if a.get("deletionVector")]
-    spark_schema = T.StructType.fromJson(json.loads(dmeta["schemaString"]))
-    schema_fields = _ice_schema(spark_schema)
-    by_name = {f["name"]: f for f in schema_fields}
-    pcols = dmeta.get("partitionColumns") or []
-    part_fields = [
-        {
-            "name": c,
-            "field_id": 1000 + i,
-            "source_id": by_name[c]["id"],
-            "ice_type": by_name[c]["type"],
-        }
-        for i, c in enumerate(pcols)
-    ]
-    os.makedirs(_meta_dir(path), exist_ok=True)
-    seq = 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
-    # live deletion vectors ride along as an Iceberg delete manifest
-    # over the same snapshot — an Iceberg manifest over the raw files
-    # alone would RESURRECT the DV-masked rows. v2 expands to
-    # positional-delete parquet; v3 copies the roaring payloads into a
-    # Puffin deletion-vector file.
-    del_row = None
-    if dv_adds and dv_format == "puffin":
-        del_row = _uniform_delete_manifest_v3(
-            spark, path, dv_adds, snap_id, seq
-        )
-    elif dv_adds:
-        del_row = _uniform_delete_manifest(spark, path, dv_adds, snap_id, seq)
-    mlist_path, added_rows = _uniform_manifest_from_delta(
+    delta = _replay(path)
+    cur = _new_table_meta(
         path,
-        adds,
-        by_name,
-        pcols,
-        part_fields,
-        snap_id,
-        seq,
-        extra_rows=[del_row] if del_row else None,
+        _ice_schema(T.StructType.fromJson(json.loads(delta[1]["schemaString"]))),
+        delta[1].get("partitionColumns") or [],
+        {"write.metadata.converted-from": "delta"},
     )
-    now_ms = int(time.time() * 1000)
-    meta = {
-        # puffin DVs are a v3 feature; plain/positional tables stay v2
-        "format-version": 3 if dv_format == "puffin" else 2,
-        "table-uuid": str(uuid.uuid4()),
-        "location": path,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": max(f["id"] for f in schema_fields),
-        "schemas": [{"type": "struct", "schema-id": 0, "fields": schema_fields}],
-        "current-schema-id": 0,
-        "partition-specs": [
-            {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "name": pf["name"],
-                        "transform": "identity",
-                        "source-id": pf["source_id"],
-                        "field-id": pf["field_id"],
-                    }
-                    for pf in part_fields
-                ],
-            }
-        ],
-        "default-spec-id": 0,
-        "last-partition-id": max(
-            [pf["field_id"] for pf in part_fields], default=999
-        ),
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        "properties": {"write.metadata.converted-from": "delta"},
-        "snapshots": [
-            {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist_path,
-                "summary": {
-                    "operation": "append",
-                    "delta-version": str(delta_v),
-                },
-                "schema-id": 0,
-            }
-        ],
-        "current-snapshot-id": snap_id,
-        "snapshot-log": [{"snapshot-id": snap_id, "timestamp-ms": now_ms}],
-        "metadata-log": [],
-    }
+    if dv_format == "puffin":
+        cur[1]["format-version"] = 3  # puffin DVs are a v3 feature
+    os.makedirs(_meta_dir(path), exist_ok=True)
     # put-if-absent via the shared LogStore seam: two racing UniForm
     # publishers both passing the exists-check above still get exactly
     # one v1 winner (the loser raises instead of clobbering)
-    _publish_metadata(path, 1, meta)
-    return snap_id
+    return _sync_from_delta(spark, path, cur, delta)
 
 
 def sync_iceberg_metadata_from_delta(spark: SparkSession, path: str) -> int:
     """Keep a UniForm table's Iceberg metadata CURRENT: Delta commits
     made after the initial publish don't exist for Iceberg readers until
-    this runs. Each sync appends one Iceberg snapshot whose single
-    manifest covers the Delta table's current live file set (overwrite
-    semantics — the snapshot's manifest list fully defines its content),
-    with the synced Delta version recorded in the snapshot summary so a
-    repeat sync is a NO-OP, not a duplicate snapshot. Additive Delta
-    schema evolution lands as a new Iceberg schema (positional field ids
-    are stable because the Delta side refuses non-additive changes).
-    Metadata-only: no data file is read or written. Returns the current
+    this runs. Each sync appends one Iceberg snapshot over the Delta
+    table's current live file set, with the synced Delta version
+    recorded in the snapshot summary so a repeat sync is a NO-OP, not a
+    duplicate snapshot. Additive Delta schema evolution lands as a new
+    Iceberg schema (positional field ids are stable because the Delta
+    side refuses non-additive changes). Live deletion vectors bridge in
+    the table's own DV format — Puffin on a format-version 3 table,
+    positional-delete parquet on v2 — and the snapshot holds exactly
+    the live DVs. No data file is read or written. Returns the current
     snapshot id."""
-    from atlas_migration_repo_spark.sources.delta_interop import (
-        _replay as _delta_replay,
-        delta_live_files,
-    )
+    from atlas_migration_repo_spark.sources.delta_interop import _replay
 
     cur = _current_metadata(path)
     if cur is None:
@@ -3245,84 +2814,106 @@ def sync_iceberg_metadata_from_delta(spark: SparkSession, path: str) -> int:
             f"{_meta_dir(path)} holds no Iceberg metadata; run "
             "publish_iceberg_metadata_from_delta first"
         )
-    v, meta = cur
-    delta_v, dmeta, _ = _delta_replay(path)
-    snaps = meta["snapshots"]
-    last = next(
-        s for s in snaps if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    if int(last.get("summary", {}).get("delta-version", -1)) >= delta_v:
-        return last["snapshot-id"]
-    adds = delta_live_files(path)
-    dv_adds = [a for a in adds if a.get("deletionVector")]
-    spark_schema = T.StructType.fromJson(json.loads(dmeta["schemaString"]))
-    schema_fields = _ice_schema(spark_schema)
-    by_name = {f["name"]: f for f in schema_fields}
-    pcols = dmeta.get("partitionColumns") or []
-    cur_fields = meta["schemas"][meta["current-schema-id"]]["fields"]
-    meta = json.loads(json.dumps(meta))
-    if schema_fields != cur_fields:
-        sid = len(meta["schemas"])
-        meta["schemas"].append(
-            {"type": "struct", "schema-id": sid, "fields": schema_fields}
-        )
-        meta["current-schema-id"] = sid
-        meta["last-column-id"] = max(f["id"] for f in schema_fields)
-    part_fields = _spec_part_fields(meta, schema_fields)
-    seq = meta["last-sequence-number"] + 1
-    snap_id = int(time.time() * 1000) * 1000 + seq
-    del_row = (
-        _uniform_delete_manifest(spark, path, dv_adds, snap_id, seq)
-        if dv_adds
-        else None
-    )
-    # O(delta) fast path: when every file the Iceberg side already
-    # tracks is STILL live on the Delta side (append-only history since
-    # the last sync), write one manifest over only the NEW files and
-    # carry the prior manifests forward — metadata cost scales with the
-    # sync's delta, not the table. Any removal (overwrite, delete,
-    # OPTIMIZE) falls back to a full overwrite-style manifest.
-    _, ice_files = iceberg_live_files(path)
-    ice_paths = {f["file_path"] for f in ice_files}
+    return _sync_from_delta(spark, path, cur, _replay(path))
+
+
+def _sync_from_delta(
+    spark: SparkSession,
+    path: str,
+    cur: tuple[int, dict],
+    delta: tuple[int, dict, list[dict]],
+) -> int:
+    """One UniForm sync: commit the Delta state `delta` (version,
+    metaData, live adds) as the next snapshot of `cur`, unless `cur`'s
+    current snapshot already records that Delta version.
+
+    O(delta) fast path: when every data file the Iceberg side already
+    tracks is STILL live on the Delta side (append-only history since
+    the last sync, or no snapshot yet), one manifest over only the NEW
+    files lands ahead of the carried manifests — metadata cost scales
+    with the sync's delta, not the table. Any removal (overwrite,
+    delete, OPTIMIZE) writes one manifest over the whole live set and
+    carries nothing. Live DVs ride the same snapshot (an Iceberg
+    manifest over the raw files alone would RESURRECT the DV-masked
+    rows), so that it holds exactly the live DVs: a v3 table takes
+    them as Puffin DVs through the DV commit, superseding the carried
+    ones by union; a v2 table re-stages them as positional-delete
+    parquet and drops the carried delete manifests — a v2 delete file
+    may reference many data files, so it cannot be superseded one
+    file at a time."""
     import urllib.parse as up
 
-    cur_by_abs = {
-        os.path.join(path, up.unquote(a["path"])): a for a in adds
+    from atlas_migration_repo_spark.sources.delta_interop import _dv_read_positions
+
+    delta_v, dmeta, adds = delta
+    _, meta = cur
+    last = next(
+        (s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]),
+        None,
+    )
+    if last and int(last.get("summary", {}).get("delta-version", -1)) >= delta_v:
+        return last["snapshot-id"]
+    schema_fields = _ice_schema(
+        T.StructType.fromJson(json.loads(dmeta["schemaString"]))
+    )
+    patch = _schema_patch(meta, schema_fields)
+    seq, snap_id = _snapshot_ids(meta)
+    by_abs = {os.path.join(path, up.unquote(a["path"])): a for a in adds}
+    prior = _current_manifests(meta)
+    tracked = {
+        e[4]["file_path"]
+        for m in prior
+        if m[3] == 0
+        for e in parse_container(open(m[0], "rb").read())[1]
+        if e[0] != 2
     }
-    op = "overwrite"
-    sync_adds = adds
-    prior_rows: list = []
-    if ice_paths and ice_paths <= set(cur_by_abs):
-        new_abs = sorted(set(cur_by_abs) - ice_paths)
-        sync_adds = [cur_by_abs[p_] for p_ in new_abs]
-        _, prior = parse_container(open(last["manifest-list"], "rb").read())
-        prior_rows = list(prior)
-        op = "append"
-    extra = ([del_row] if del_row else []) + prior_rows
-    mlist_path, total_rows = _uniform_manifest_from_delta(
+    append = tracked <= set(by_abs)
+    if not append:
+        tracked, prior = set(), []
+    entries = _uniform_data_entries(
         path,
-        sync_adds,
-        by_name,
-        pcols,
-        part_fields,
+        [a for p_, a in by_abs.items() if p_ not in tracked],
+        {f["name"]: f for f in schema_fields},
+        dmeta.get("partitionColumns") or [],
         snap_id,
         seq,
-        extra_rows=extra or None,
     )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "parent-snapshot-id": last["snapshot-id"],
-        "sequence-number": seq,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": mlist_path,
-        "summary": {
-            "operation": op,
-            "delta-version": str(delta_v),
-        },
-        "schema-id": meta["current-schema-id"],
+    rows = [
+        _manifest_row(
+            path,
+            _manifest_entry_schema(_spec_part_fields(meta, schema_fields)),
+            entries,
+            snap_id,
+            seq,
+        )
+    ]
+    summary = {
+        "operation": "append" if append else "overwrite",
+        "delta-version": str(delta_v),
     }
-    _append_snapshot_commit(path, (v, meta), snapshot, seq)
-    return snap_id
+    if meta["format-version"] >= 3:
+        dvs = {
+            os.path.abspath(p_): set(_dv_read_positions(path, a["deletionVector"]))
+            for p_, a in by_abs.items()
+            if a.get("deletionVector")
+        }
+        return _commit_dv_snapshot(
+            spark, path, cur, seq, snap_id, rows,
+            {ref: ps for ref, ps in dvs.items() if ps}, prior, summary, patch,
+        )
+    dv_adds = [a for a in adds if a.get("deletionVector")]
+    if dv_adds:
+        del_entries = _uniform_delete_entries(spark, path, dv_adds, snap_id, seq)
+        if del_entries:
+            rows.append(
+                _manifest_row(
+                    path, _manifest_entry_schema([]), del_entries, snap_id, seq
+                )
+            )
+    return _commit_snapshot(
+        path, cur, seq, snap_id, rows, [m for m in prior if m[3] == 0],
+        summary, patch,
+    )
 
 
 # ---------------------------------------------------------------------------

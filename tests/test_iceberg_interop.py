@@ -2169,3 +2169,213 @@ def test_dv_supersede_union_guard_and_visibility(spark):
     delete_iceberg_where(spark, root, "k", 100, 120)
     with _pytest.raises(ValueError, match="position-delete"):
         delete_iceberg_dv(spark, root, "k", 110, 130)
+
+
+# ---------------------------------------------------------------------------
+# UniForm sync: deletion vectors in the table's own format
+# ---------------------------------------------------------------------------
+def _dv_frame(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id"), (F.col("id") % 7).alias("grp"), (F.col("id") * 2.0).alias("v")
+    )
+
+
+def _delta_deleted_rows(root):
+    from atlas_migration_repo_spark.sources.delta_interop import delta_live_files
+
+    return sum(
+        int(a["deletionVector"]["cardinality"])
+        for a in delta_live_files(root)
+        if a.get("deletionVector")
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_uniform_append_syncs_hold_exactly_the_live_dvs(spark):
+    """An append-only sync carries the prior data manifests and bridges
+    the live DVs once: after two append syncs the live delete files
+    count exactly the rows Delta's DVs delete, not one copy per sync."""
+    import atlas_migration_repo_spark.sources.iceberg_interop as I
+    from atlas_migration_repo_spark.sources.delta_interop import (
+        delete_delta_dv,
+        read_delta,
+        write_delta,
+    )
+
+    root = _fresh("ut_uniform_sync_dv")
+    write_delta(_dv_frame(spark, 0, 1000).repartition(3), root)
+    delete_delta_dv(spark, root, "grp = 3")
+    I.publish_iceberg_metadata_from_delta(spark, root)
+    for lo in (1000, 1100):
+        write_delta(_dv_frame(spark, lo, lo + 100), root, mode="append")
+        snap = I.sync_iceberg_metadata_from_delta(spark, root)
+        _, meta = I._current_metadata(root)
+        assert meta["snapshots"][-1]["snapshot-id"] == snap
+        assert meta["snapshots"][-1]["summary"]["operation"] == "append"
+    _, _, dels = I.iceberg_live_state(root)
+    assert _delta_deleted_rows(root) == 143
+    assert sum(d["data_file"]["record_count"] for d in dels) == 143
+    assert _rows(read_iceberg(spark, root)) == _rows(read_delta(spark, root))
+
+
+def test_uniform_sync_of_a_puffin_table_bridges_puffin_dvs(spark):
+    """A table published with Puffin DVs (format-version 3) keeps them
+    through every sync: a DV on an already-bridged file supersedes its
+    Puffin DV by union, no v2 position-delete parquet lands, and a
+    native delete_iceberg_dv afterwards succeeds."""
+    import atlas_migration_repo_spark.sources.iceberg_interop as I
+    from atlas_migration_repo_spark.sources.delta_interop import (
+        delete_delta_dv,
+        delta_live_files,
+        read_delta,
+        write_delta,
+    )
+
+    root = _fresh("ut_uniform_sync_dv3")
+    write_delta(_dv_frame(spark, 0, 1000).repartition(3), root)
+    delete_delta_dv(spark, root, "grp = 3")
+    I.publish_iceberg_metadata_from_delta(spark, root, dv_format="puffin")
+    write_delta(_dv_frame(spark, 1000, 1100), root, mode="append")
+    delete_delta_dv(spark, root, "grp = 5")
+    I.sync_iceberg_metadata_from_delta(spark, root)
+
+    def live_deletes():
+        _, _, dels = I.iceberg_live_state(root)
+        return [d["data_file"] for d in dels]
+
+    dels = live_deletes()
+    assert {f["file_format"] for f in dels} == {"PUFFIN"}
+    refs = [f["referenced_data_file"] for f in dels]
+    dv_files = [a for a in delta_live_files(root) if a.get("deletionVector")]
+    assert len(refs) == len(set(refs)) == len(dv_files)  # one live DV per file
+    assert sum(f["record_count"] for f in dels) == _delta_deleted_rows(root)
+    delta_rows = _rows(read_delta(spark, root))
+    assert _rows(read_iceberg(spark, root)) == delta_rows
+
+    I.delete_iceberg_dv(spark, root, "id", 0, 50)
+    assert {f["file_format"] for f in live_deletes()} == {"PUFFIN"}
+    assert _rows(read_iceberg(spark, root)) == [r for r in delta_rows if r[0] > 50]
+
+
+# ---------------------------------------------------------------------------
+# manifest-list invariants of every committing verb
+# ---------------------------------------------------------------------------
+def _ice_base(spark, root):
+    return write_iceberg(_dv_frame(spark, 0, 300).repartitionByRange(3, "id"), root)
+
+
+def _uniform_base(spark, root, dv_format):
+    from atlas_migration_repo_spark.sources.delta_interop import (
+        delete_delta_dv,
+        write_delta,
+    )
+    from atlas_migration_repo_spark.sources.iceberg_interop import (
+        publish_iceberg_metadata_from_delta,
+    )
+
+    write_delta(_dv_frame(spark, 0, 300).repartitionByRange(3, "id"), root)
+    delete_delta_dv(spark, root, "grp = 3")
+    return publish_iceberg_metadata_from_delta(spark, root, dv_format=dv_format)
+
+
+def _uniform_sync(spark, root, dv_format):
+    from atlas_migration_repo_spark.sources.delta_interop import (
+        delete_delta_dv,
+        write_delta,
+    )
+    from atlas_migration_repo_spark.sources.iceberg_interop import (
+        sync_iceberg_metadata_from_delta,
+    )
+
+    _uniform_base(spark, root, dv_format)
+    write_delta(_dv_frame(spark, 300, 400), root, mode="append")
+    delete_delta_dv(spark, root, "grp = 5")
+    return sync_iceberg_metadata_from_delta(spark, root)
+
+
+def _commit_verbs():
+    import atlas_migration_repo_spark.sources.iceberg_interop as I
+
+    def then(setup, verb):
+        def run(spark, root):
+            setup(spark, root)
+            return verb(spark, root)
+
+        return run
+
+    keys = lambda spark: _dv_frame(spark, 0, 300).where("id % 10 = 0")
+    upsert = lambda spark: _dv_frame(spark, 250, 350).withColumn("v", F.lit(-1.0))
+    dv_twice = lambda spark, root: (
+        I.delete_iceberg_dv(spark, root, "id", 10, 120),
+        I.delete_iceberg_dv(spark, root, "id", 100, 200),
+    )[-1]
+    return {
+        "write_create": _ice_base,
+        "write_append": then(
+            _ice_base,
+            lambda s, r: write_iceberg(_dv_frame(s, 300, 360), r, mode="append"),
+        ),
+        "write_overwrite": then(
+            _ice_base, lambda s, r: write_iceberg(_dv_frame(s, 0, 50), r)
+        ),
+        "delete_where": then(
+            _ice_base, lambda s, r: I.delete_iceberg_where(s, r, "id", 10, 120)
+        ),
+        "delete_eq": then(
+            _ice_base, lambda s, r: I.delete_iceberg_eq(s, r, keys(s), ["id"])
+        ),
+        "delete_dv": then(_ice_base, dv_twice),
+        "delete_eq_dv": then(
+            then(_ice_base, lambda s, r: I.delete_iceberg_dv(s, r, "id", 0, 30)),
+            lambda s, r: I.delete_iceberg_eq_dv(s, r, keys(s), ["id"]),
+        ),
+        "merge": then(_ice_base, lambda s, r: I.merge_iceberg(s, r, upsert(s), ["id"])),
+        "merge_dv": then(
+            then(_ice_base, lambda s, r: I.delete_iceberg_dv(s, r, "id", 260, 280)),
+            lambda s, r: I.merge_iceberg_dv(s, r, upsert(s), ["id"]),
+        ),
+        "rewrite": then(
+            then(_ice_base, lambda s, r: I.delete_iceberg_where(s, r, "id", 0, 99)),
+            I.rewrite_iceberg,
+        ),
+        "uniform_publish": lambda s, r: _uniform_base(s, r, "parquet"),
+        "uniform_publish_puffin": lambda s, r: _uniform_base(s, r, "puffin"),
+        "uniform_sync": lambda s, r: _uniform_sync(s, r, "parquet"),
+        "uniform_sync_puffin": lambda s, r: _uniform_sync(s, r, "puffin"),
+    }
+
+
+import pytest as _pytest  # noqa: E402
+
+
+@_pytest.mark.parametrize("verb", sorted(_commit_verbs()))
+def test_manifest_list_rows_match_their_manifests(spark, verb):
+    """Every manifest-list row of the committed snapshot agrees with its
+    manifest: added/existing/deleted file and row counts are its
+    entries' by status, its content is its entries' (0 data, 1 deletes),
+    its status-1 entries carry its added_snapshot_id, and a row this
+    commit wrote carries the committing snapshot's id."""
+    from atlas_migration_repo_spark.sources.iceberg_interop import _current_metadata
+
+    root = _fresh(f"ut_ice_invariant_{verb}")
+    snap_id = _commit_verbs()[verb](spark, root)
+    _, meta = _current_metadata(root)
+    assert meta["current-snapshot-id"] == snap_id
+    snaps = sorted(meta["snapshots"], key=lambda s: s["sequence-number"])
+    manifest_list = lambda s: parse_container(open(s["manifest-list"], "rb").read())[1]
+    parent_rows = {m[0] for m in manifest_list(snaps[-2])} if len(snaps) > 1 else set()
+    new_rows = 0
+    for m in manifest_list(snaps[-1]):
+        _, entries = parse_container(open(m[0], "rb").read())
+        by_status = [[e[4]["record_count"] for e in entries if e[0] == s] for s in (1, 0, 2)]
+        assert list(m[7:10]) == [len(x) for x in by_status], verb
+        assert list(m[10:13]) == [sum(x) for x in by_status], verb
+        assert {int(e[4]["content"] != 0) for e in entries} <= {m[3]}, verb
+        assert all(e[1] == m[6] for e in entries if e[0] == 1), verb
+        if m[0] not in parent_rows:
+            new_rows += 1
+            assert m[6] == snap_id, verb
+    assert new_rows >= 1, verb

@@ -371,6 +371,34 @@ def test_delta_reads_replay_the_log_once(spark, tmp_path, monkeypatch):
     assert counts == dict.fromkeys(ops, 1)
 
 
+def test_delta_append_resolves_the_log_once(spark, tmp_path, monkeypatch):
+    """An append to an existing table resolves the log once for its
+    metaData, prior files and txn marks; a txn= append adds only the
+    commit's own mark re-check before it publishes."""
+    from atlas_migration_repo_spark.sources import delta_interop as D
+
+    root = str(tmp_path / "append")
+    write_delta(spark.range(0, 10), root)
+    calls = []
+    real = D._raw_actions
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(D, "_raw_actions", counting)
+    write_delta(spark.range(10, 20), root, mode="append")
+    assert len(calls) == 1
+    calls.clear()
+    write_delta(spark.range(20, 30), root, mode="append", txn=("app", 1))
+    assert len(calls) == 2
+    calls.clear()
+    # a replayed mark is a no-op answered from the same single resolve
+    assert write_delta(spark.range(20, 30), root, mode="append", txn=("app", 1)) == 2
+    assert len(calls) == 1
+    assert read_delta(spark, root).count() == 30
+
+
 def test_old_tablelog_logs_decode_raw_partition_dirs(spark, tmp_path):
     """A TableLog log written before partition values were decoded holds
     the raw hive dir strings (`a%2Fb`, `__HIVE_DEFAULT_PARTITION__`).
